@@ -12,49 +12,21 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Importing these modules populates the registry.
+# Importing these modules populates the registry. Unconditional on
+# purpose: a broken module must fail the import, not silently drop its
+# queries from queries().
 from sentiment_analysis_data_engineering_spark.plans import registry
-from sentiment_analysis_data_engineering_spark.plans import parity_queries  # noqa: F401
-
-try:  # extension queries land incrementally; never break the contract
-    from sentiment_analysis_data_engineering_spark.plans import extension_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import analytics_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import warehouse_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import curation_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import behavior_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import sketch_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import graph_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    from sentiment_analysis_data_engineering_spark.plans import stats_queries  # noqa: F401
-except ImportError:
-    pass
+from sentiment_analysis_data_engineering_spark.plans import (  # noqa: F401
+    parity_queries,
+    extension_queries,
+    analytics_queries,
+    warehouse_queries,
+    curation_queries,
+    behavior_queries,
+    sketch_queries,
+    graph_queries,
+    stats_queries,
+)
 
 SF0001 = "/root/testdata/sf0.001"
 

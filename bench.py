@@ -1,7 +1,13 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py                 # every HEADLINE query
+    python bench.py q1 q2 ...       # only the named queries
+
+Prints the full per-query JSON line, then a compact summary line LAST:
+    {"metric": "...", "value": N, "unit": "sec", "n_queries": N,
+     "queries": {...}, "sf": ...}
+and writes the complete record (timings, Spark jobs per query, failed
+queries) to $SPARK_GRAFT_BENCH_PQ_OUT (default bench_per_query.json).
 
 Each query executes via the noop sink (full plan execution, no driver
 collect), after a warm-up pass that triggers JVM/codegen warm-up on the
@@ -9,6 +15,9 @@ smallest table. Timings are per-query wall clock, MIN of
 $SPARK_GRAFT_BENCH_RUNS runs (default 3) — sub-second queries jitter
 ±40-50% run-to-run locally, and min-of-n reads steady-state throughput
 through that noise.
+
+:func:`measure` is the one timing loop in the repo; the scaling reports
+in ``tools/`` call it too.
 """
 
 from __future__ import annotations
@@ -17,10 +26,21 @@ import json
 import os
 import sys
 import time
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Python WORKERS must import the package too (pandas UDF closures are
+# pickled by reference): pin PYTHONPATH so the run does not depend on
+# the launch directory.
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# n runs per query, report the MIN: sub-second queries jitter up to
+# ±40-50% run-to-run on a busy local JVM (GC, codegen cache churn),
+# and min-of-n is the standard way to read steady-state throughput
+# through that noise so real regressions stand out.
+RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
 #: Headline queries: the flagship analytics + every operator family that
 #: matters at scale (joins, anti-join, windows, sessionization, text/dedup
@@ -198,28 +218,31 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    from sentiment_analysis_data_engineering_spark.session import get_spark
+def measure(spark, qs, names, sf_dir, *, warm_dir, runs) -> dict:
+    """Time ``qs[name](spark, sf_dir)`` through the noop sink for every
+    name: MIN of ``runs`` wall-clock runs after one warm-up pass over
+    all names at ``warm_dir``.
 
-    import __spark_entry__ as entrymod
+    Returns ``{"queries": {name: sec}, "jobs": {name: n},
+    "failed": {name: error}}``. ``jobs`` is the fewest Spark jobs one
+    timed run scheduled, read outside the timed region. A query that
+    raises in a timed run is reported on stderr, recorded in
+    ``failed`` and skipped; the run goes on. An unknown name raises
+    ``KeyError`` before any work starts.
+    """
+    from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
+    from sentiment_analysis_data_engineering_spark.operators.observe import spark_job_count
 
-    spark = get_spark("bench")
-    qs = entrymod.queries()
+    fns = {name: qs[name] for name in names}
 
-    # Warm-up: run every headline query once at the smallest scale
-    # factor (sf0.001). Query shapes are identical, so this compiles
-    # and JITs the same whole-stage-codegen classes the timed pass
-    # uses (codegen cache is keyed on generated source) — the timed
-    # numbers then measure steady-state throughput, not one-time JVM
+    # Warm-up: run every query once at warm_dir (bench: the smallest
+    # scale factor). Query shapes are identical, so this compiles and
+    # JITs the same whole-stage-codegen classes the timed pass uses
+    # (codegen cache is keyed on generated source) — the timed numbers
+    # then measure steady-state throughput, not one-time JVM
     # compilation. This mirrors how a long-lived cluster runs: codegen
     # compile cost is paid once per query shape, not per batch.
-    from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
-
-    warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
+    for name, fn in fns.items():
         try:
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
         except Exception as exc:  # warm-up must never sink the bench...
@@ -229,27 +252,31 @@ def main() -> None:
         finally:
             release_pinned()
 
-    # n runs per query, report the MIN: sub-second queries jitter up to
-    # ±40-50% run-to-run on a busy local JVM (GC, codegen cache churn),
-    # and min-of-n is the standard way to read steady-state throughput
-    # through that noise so real regressions stand out.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        best = None
-        for _ in range(n_runs):
-            t0 = time.time()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            # dedup/LSH queries pin signature frames for intra-query
-            # reuse; drain between runs so storage stays flat
-            release_pinned()
-        timings[name] = round(best, 3)
+    out: dict[str, dict] = {"queries": {}, "jobs": {}, "failed": {}}
+    for name, fn in fns.items():
+        best = jobs = None
+        try:
+            for _ in range(runs):
+                before = spark_job_count(spark)
+                try:
+                    t0 = time.time()
+                    df = fn(spark, sf_dir)
+                    df.write.format("noop").mode("overwrite").save()
+                    dt = time.time() - t0
+                    n = spark_job_count(spark) - before
+                finally:
+                    # dedup/LSH queries pin signature frames for
+                    # intra-query reuse; drain between runs so storage
+                    # stays flat
+                    release_pinned()
+                best = dt if best is None else min(best, dt)
+                jobs = n if jobs is None else min(jobs, n)
+        except Exception as exc:
+            out["failed"][name] = f"{type(exc).__name__}: {exc}"
+            print(f"FAIL {name}:\n{traceback.format_exc()}", file=sys.stderr)
+        else:
+            out["queries"][name] = round(best, 3)
+            out["jobs"][name] = jobs
         # Between queries (OUTSIDE the timed section): drop any cached
         # relations and force a driver GC. Spark's ContextCleaner only
         # releases finished queries' broadcast/shuffle state when the
@@ -261,6 +288,20 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
         except Exception:
             pass
+    return out
+
+
+def main() -> None:
+    from sentiment_analysis_data_engineering_spark.session import get_spark
+
+    import __spark_entry__ as entrymod
+
+    spark = get_spark("bench")
+    record = measure(
+        spark, entrymod.queries(), sys.argv[1:] or HEADLINE, SF_DIR,
+        warm_dir=entrymod.SF0001, runs=RUNS,
+    )
+    timings = record["queries"]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -273,10 +314,7 @@ def main() -> None:
     # (the closeout protocol points it at bench_per_query_r{N}.json and
     # commits the result at final HEAD).
     pq_out = os.environ.get(
-        "SPARK_GRAFT_BENCH_PQ_OUT",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_per_query.json"
-        ),
+        "SPARK_GRAFT_BENCH_PQ_OUT", os.path.join(ROOT, "bench_per_query.json")
     )
     # write-temp-then-rename: a crash mid-dump must never leave a
     # truncated file at the final path (the closeout protocol commits
@@ -290,6 +328,8 @@ def main() -> None:
                 "unit": "sec",
                 "n_queries": len(timings),
                 "queries": timings,
+                "jobs": record["jobs"],
+                "failed": record["failed"],
                 "sf": sf_val,
             },
             f,

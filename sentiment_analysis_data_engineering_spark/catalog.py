@@ -10,7 +10,7 @@ surface is Spark SQL DDL over parquet tables partitioned on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from .schemas import WAREHOUSE_SCHEMAS
@@ -24,13 +24,6 @@ __all__ = [
     "drop_database",
     "drop_table",
     "list_tables",
-    "register_parquet_views",
-]
-
-#: Driver fixture tables (TESTDATA.md) registerable as views.
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
 
@@ -105,21 +98,6 @@ def create_warehouse(spark: SparkSession, database: str = "warehouse") -> None:
     create_database(spark, database)
     for table, (schema, part_cols) in WAREHOUSE_SCHEMAS.items():
         create_table(spark, f"{database}.{table}", schema, part_cols)
-
-
-def register_parquet_views(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """Register the driver's parquet fixtures as temp views so both the
-    DataFrame API and ``spark.sql`` can reach them by name."""
-    out: dict[str, DataFrame] = {}
-    for t in tables or TESTDATA_TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out
 
 
 def analyze_table(

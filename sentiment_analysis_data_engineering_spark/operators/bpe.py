@@ -136,11 +136,12 @@ def apply_merges(
 
     Built as ONE outer ``aggregate`` over a literal array of
     (left, right) pairs whose accumulator is the symbol array, with
-    the single-pair greedy fold as the inner lambda — a CONSTANT-size
-    expression tree regardless of rank count (r15, guide §5: the
-    previous ``len(merges)``-deep chain of nested ``_merge_fold``
-    expressions cost O(ranks) driver-side Column construction (py4j
-    round trips per fold) and O(ranks) analyzer depth, overrunning the
+    the single-pair greedy fold as the inner lambda — a CONSTANT-depth
+    expression tree regardless of rank count; only the literal pair
+    array grows, O(ranks) wide (r15, guide §5: the previous
+    ``len(merges)``-deep chain of nested ``_merge_fold`` expressions
+    cost O(ranks) driver-side Column construction (py4j round trips
+    per fold) and O(ranks) analyzer depth, overrunning the
     analyzer's fixed Resolution budget past ~100 ranks — callers had
     to chunk, and a 300-rank table burned ~56 s of pure driver time
     building the tree). Rank order is the literal array's order, so
@@ -155,8 +156,10 @@ def apply_merges(
     was applied unconditionally), construction cost is negligible at
     that depth, and 48 stays safely under the analyzer's
     ~100-iteration Resolution budget. Both forms are pinned
-    token-identical by the test_bpe laws, which exercise 1-50-rank
-    tables (chain) and the 300-rank production table (aggregate)."""
+    token-identical by the test_bpe laws: tables under 48 ranks take
+    the chain, the 300-rank production table takes the aggregate, and
+    a 47-rank table plus one never-occurring pair pins the switch on
+    the same effective table."""
     if not merges:
         return syms
     if len(merges) < 48:

@@ -127,15 +127,15 @@ def register_pinned(df: DataFrame) -> DataFrame:
     :func:`release_pinned` / :func:`pinned_scope` can free its blocks
     deterministically. The checkpoint-heavy index operators
     (operators/similarity.py) route their returned pinned frames here —
-    without registration a long-lived session (gate_sim sweeps, the
+    without registration a long-lived session (oracle sweeps, the
     streaming merge twin) would leave block-manager cleanup to
     nondeterministic GC.
 
     CAVEAT the caller owns: a ``localCheckpoint`` has its lineage
     TRUNCATED, so unlike plain persisted frames it cannot recompute
     after release — only call :func:`release_pinned` once every lazy
-    consumer of the registered frame has been materialized (all four
-    harness call sites — check_oracle, gate_sim, bench, scaling — do
+    consumer of the registered frame has been materialized (both
+    harness call sites — tools/check_oracle.py and bench.measure — do
     exactly that, releasing after each query's output is hashed).
     Registered frames are TAGGED non-recomputable in the registry, and
     :func:`release_pinned` refuses to run inside an active

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .dedup import _spread
 from .observe import checkpoint_with_metrics, write_with_metrics
 
 __all__ = [
@@ -58,24 +59,6 @@ __all__ = [
     "ivfpq_reembed",
     "ivfpq_drift_audit",
 ]
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Repartition on the id ONLY when the input is under-partitioned
-    (fewer partitions than cores — e.g. a single-file bench corpus
-    that would otherwise run the whole signature/cosine compute in ONE
-    task). A well-partitioned 100 TB corpus already has >= parallelism
-    partitions, and inserting an unconditional corpus-wide exchange
-    there costs far more than the small-input skew it cures.
-
-    Note: the probe reads the PLANNED partition count (pre-AQE) — an
-    upstream shuffle planned wide but runtime-coalesced small can slip
-    past it; callers feeding tiny shuffled batches should repartition
-    explicitly."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n, F.col(id_col))
 
 
 def _as_double(vec_col: str) -> Column:

@@ -95,6 +95,29 @@ def test_bpe_counts_non_increasing(spark):
     assert counts == sorted(counts, reverse=True)
 
 
+def test_apply_merges_chain_and_aggregate_agree_at_48_ranks(spark):
+    # apply_merges switches from the per-rank chain to the aggregate
+    # form at 48 ranks. A 48th pair that never occurs leaves the
+    # effective table unchanged, so both forms must give equal tokens.
+    vocab = dict(WORDS)
+    for a in sorted(WORDS):
+        for b in sorted(WORDS):
+            vocab[a + b] = vocab.get(a + b, 0) + min(WORDS[a], WORDS[b])
+    merges = [m[:2] for m in _ref_bpe(vocab, 47)]
+    assert len(merges) == 47
+    words = spark.createDataFrame([(w,) for w in sorted(vocab)], "word string")
+    syms = F.split("word", "")
+    rows = words.select(
+        "word",
+        apply_merges(syms, merges).alias("chain"),
+        apply_merges(syms, merges + [("#", "#")]).alias("agg"),
+    ).collect()
+    assert len(rows) == len(vocab)
+    for r in rows:
+        assert r.chain == r.agg, r.word
+    assert any(len(r.chain) < len(r.word) for r in rows)  # merges applied
+
+
 def test_word_frequencies_one_pass(spark):
     docs = spark.createDataFrame([(" a b  a ",), ("b a",)], "text string")
     got = {r.word: r.freq for r in word_frequencies(docs, "text").collect()}

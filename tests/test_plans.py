@@ -268,8 +268,8 @@ def test_driver_gate_prefix_contract():
 
 def test_bench_headline_names_resolve():
     """Every bench.py HEADLINE name must exist in the registry — the
-    runner silently skips unknown names, so a typo would quietly drop
-    a query from BENCH/SCALING/PLANS artifacts."""
+    harness raises on an unknown name, so a typo would sink the whole
+    BENCH/SCALING run instead of timing anything."""
     import __spark_entry__ as entrymod
     from bench import HEADLINE
 
@@ -277,6 +277,27 @@ def test_bench_headline_names_resolve():
     missing = [n for n in HEADLINE if n not in qs]
     assert not missing, f"bench names not in registry: {missing}"
     assert len(set(HEADLINE)) == len(HEADLINE), "duplicate bench names"
+
+
+def test_bench_measure_records_jobs_and_isolates_failures(spark, sf_dir):
+    """bench.measure times a good query, counts its Spark jobs, and
+    records a raising query as failed without aborting the run."""
+    from bench import measure
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    qs = {"star_join_revenue": QUERIES["star_join_revenue"], "boom": boom}
+    rec = measure(spark, qs, ["star_join_revenue", "boom"], sf_dir,
+                  warm_dir=sf_dir, runs=1)
+    assert set(rec["queries"]) == {"star_join_revenue"}
+    assert rec["queries"]["star_join_revenue"] > 0
+    assert rec["jobs"]["star_join_revenue"] >= 1
+    assert set(rec["failed"]) == {"boom"}
+    assert "boom" in rec["failed"]["boom"]
+
+    with pytest.raises(KeyError):
+        measure(spark, qs, ["no_such_query"], sf_dir, warm_dir=sf_dir, runs=1)
 
 
 def test_crossencoder_rerank_plan_shape(spark, sf_dir):

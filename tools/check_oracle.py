@@ -6,13 +6,22 @@ and compares: row count, sorted column names, dtypes (loose), and
 order-insensitive values (exact after canonicalization; float deltas
 reported on mismatch so rounding gaps are visible).
 
+``--gate N`` runs the driver's gate instead: the FIRST N entries of
+``queries()`` in a VANILLA SparkSession (default 200 shuffle
+partitions, default configs, no timezone pin), as the driver builds
+it. The engine's own session (session.get_spark) tunes shuffle
+partitions, AQE and the timezone, so a query that silently depends on
+one of those configs passes the full sweep and still fails the gate.
+
 Usage:
     python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py --gate N [sf_dir]
 """
 
 from __future__ import annotations
 
-import math
+import argparse
+import os
 import sys
 import time
 import traceback
@@ -21,7 +30,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python WORKERS must import the package too (pandas UDF closures are
+# pickled by reference): pin PYTHONPATH so the sweep does not depend on
+# the launch directory.
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -103,14 +117,41 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def vanilla_session():
+    """The driver's session: master only — no shuffle-partition tuning,
+    no AQE overrides, no timezone pin. GATE_SIM_DRIVER_MEM optionally
+    raises the heap WITHOUT touching any SQL config: at the gated
+    sf0.01 the default (1g) suffices, but full-registry sweeps at sf0.1
+    exhaust a 1g local-mode heap (driver + all 32 executor threads
+    share it) around query ~135 — an environment limit, not a query
+    property; SQL-config independence is the axis the gate tests."""
+    from pyspark.sql import SparkSession
+
+    builder = SparkSession.builder.master("local[32]").appName("check-oracle-gate")
+    mem = os.environ.get("GATE_SIM_DRIVER_MEM")
+    if mem:
+        builder = builder.config("spark.driver.memory", mem)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*", help="only these queries")
+    ap.add_argument("--gate", type=int, metavar="N",
+                    help="first N queries() in a vanilla session")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
 
     import __spark_entry__ as entrymod
     from sentiment_analysis_data_engineering_spark.session import get_spark
 
-    spark = get_spark("check_oracle", shuffle_partitions=8)
+    if args.gate:
+        spark = vanilla_session()
+    else:
+        spark = get_spark("check_oracle", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -119,15 +160,16 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    names = list(qs)[: args.gate] if args.gate else list(qs)
+    if args.queries:
+        names = [n for n in names if n in args.queries]
     n_pass = n_fail = n_rows_only = 0
     from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
 
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             spark_pdf = sdf.toPandas()
         except Exception:
             print(f"FAIL  {name}: spark raised\n{traceback.format_exc()}")
@@ -155,7 +197,7 @@ def main() -> int:
         else:
             n_pass += 1
             print(f"ok    {name}: {len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
-    print(f"\n{n_pass} ok, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} ok, {n_fail} fail, {n_rows_only} rows-only of {len(names)}")
     return 1 if n_fail else 0
 
 

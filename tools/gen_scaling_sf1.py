@@ -29,9 +29,9 @@ WORKLOAD stays realistic (not just the row count):
   vector gaining 9 twins.
 
 Everything is deterministic (no RNG) so repeated generations are
-byte-stable. Output: /root/repo/.scaling_sf1/{lineitem,documents,
+byte-stable. Output: .scaling_sf1/{lineitem,documents,
 embeddings}.parquet (~120 MB total; gitignored — an artifact, not
-source).
+source) at the repo root.
 
     python tools/gen_scaling_sf1.py
 """
@@ -46,7 +46,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.scaling_sf1"
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scaling_sf1")
 N_COPIES = 10
 
 # Offsets comfortably above the sf0.1 max keys (149_999 / 19_999 /

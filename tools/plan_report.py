@@ -4,15 +4,17 @@ For each bench headline query: the executed plan's shape summary
 (exchanges, broadcasts, whole-stage-codegen spans, pushed filters) and
 the full formatted plan. Run after plan-affecting changes:
 
-    python tools/plan_report.py          # writes /root/repo/PLANS.md
+    python tools/plan_report.py          # writes PLANS.md at the repo root
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -63,7 +65,7 @@ def main() -> None:
         details.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
     out = "\n".join(lines) + "\n\n" + "\n".join(details)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out)
     print(f"wrote PLANS.md ({len(details)} plans)")
 

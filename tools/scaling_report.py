@@ -10,73 +10,60 @@ well under 10 — that's headroom, not speedup; ratios meaningfully
 OVER 10 indicate superlinear work growth and are flagged for the
 per-family design ledger (SCALE.md) to explain or fix.
 
-    python tools/scaling_report.py        # writes /root/repo/SCALING.md
+    python tools/scaling_report.py        # writes SCALING.md at the repo root
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+SCALING_MD = os.path.join(ROOT, "SCALING.md")
 
 SFS = [("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1")]
-# default 3: min-of-2-after-one-warmup under-converges heavy iterative
-# queries in a fresh JVM (measured: triangles sf1.0 43.7s min-of-2 vs
-# 28.6s third run) — published ratios from 2-run data are noise
-N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_SCALING_RUNS", "3")))
 #: flagged when the sf0.1 time exceeds ratio-threshold x the sf0.01
 #: time AND is slow enough for the ratio to be signal, not jitter
 RATIO_FLAG = 12.0
 MIN_SECS_FLAG = 1.0
 
 
-def main() -> None:
-    from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
+def measure_per_sf(app: str, names, sfs) -> dict[str, dict[str, float]]:
+    """``{name: {sf: sec}}`` via bench.measure, one call per (query, SF)
+    pair so each pair gets its own discarded same-SF warm-up. Per-QUERY
+    interleaving: sweeping a whole scale factor first lets
+    session/codegen warm-up inflate the small-SF baselines, which
+    deflates every ratio and can hide a genuinely superlinear query
+    from the flag. Failed pairs are left out."""
     from sentiment_analysis_data_engineering_spark.session import get_spark
 
     import __spark_entry__ as entrymod
-    from bench import HEADLINE
+    from bench import RUNS, measure
 
-    spark = get_spark("scaling-report")
+    spark = get_spark(app)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-
-    # Per-QUERY interleaving with a discarded warm-up run: sweeping a
-    # whole scale factor first lets session/codegen warm-up inflate the
-    # small-SF baselines, which deflates every ratio and can hide a
-    # genuinely superlinear query from the flag.
     times: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        for sf, sf_dir in SFS:
-            best = None
-            try:
-                for run in range(N_RUNS + 1):
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.time() - t0
-                    if run == 0:
-                        continue  # warm-up, discarded
-                    best = dt if best is None else min(best, dt)
-            except Exception as ex:  # pragma: no cover - report, don't die
-                print(f"FAIL {name}@{sf}: {ex}", file=sys.stderr)
-                continue
-            finally:
-                release_pinned()
-            times.setdefault(name, {})[sf] = round(best, 3)
-            spark.catalog.clearCache()
+    for name in names:
+        for sf, sf_dir in sfs:
+            rec = measure(spark, qs, [name], sf_dir, warm_dir=sf_dir, runs=RUNS)
+            if name in rec["queries"]:
+                times.setdefault(name, {})[sf] = rec["queries"][name]
+                print(f"{name}@{sf}: {rec['queries'][name]:.3f}s", flush=True)
+    return times
 
+
+def main() -> None:
+    from bench import HEADLINE, RUNS
+
+    times = measure_per_sf("scaling-report", HEADLINE, SFS)
     lines = [
         "# SCALING — measured 10× scale-up behavior "
         "(generated by tools/scaling_report.py)",
         "",
-        f"Min of {N_RUNS} timed runs per query per scale factor after one "
+        f"Min of {RUNS} timed runs per query per scale factor after one "
         "discarded warm-up run, scale factors interleaved per query so "
         "session warm-up cannot bias the small-SF baseline, noop sink.",
         "Reading the ratio (sf0.1 / sf0.01, i.e. 10× the data):",
@@ -111,10 +98,8 @@ def main() -> None:
     ]
     # Preserve the sf0.1 -> sf1.0 iterative-family section maintained by
     # tools/scaling_sf1_report.py — this tool owns only the main table.
-    import re
-
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(SCALING_MD) as f:
             prior = f.read()
         m = re.search(
             r"<!-- sf1-section-start -->.*?<!-- sf1-section-end -->",
@@ -125,7 +110,7 @@ def main() -> None:
             lines += [m.group(0), ""]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(SCALING_MD, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SCALING.md; flagged={flagged}")
 

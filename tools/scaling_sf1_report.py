@@ -25,16 +25,16 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+SCALING_MD = os.path.join(ROOT, "SCALING.md")
 
-SF1_DIR = "/root/repo/.scaling_sf1"
+from bench import RUNS  # noqa: E402
+from scaling_report import measure_per_sf  # noqa: E402
+
+SF1_DIR = os.path.join(ROOT, ".scaling_sf1")
 SFS = [("0.1", "/root/testdata/sf0.1"), ("1.0", SF1_DIR)]
-# default raised 2 -> 3 in r7: min-of-2 after one warm-up demonstrably
-# under-converges the heavy iterative queries in a fresh JVM (triangles
-# at sf1.0: 43.7 s min-of-2 vs 28.6 s steady-state on identical code)
-N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_SCALING_RUNS", "3")))
 RATIO_FLAG = 12.0
 MIN_SECS_FLAG = 1.0
 
@@ -78,43 +78,6 @@ SECTION_START = "<!-- sf1-section-start -->"
 SECTION_END = "<!-- sf1-section-end -->"
 
 
-def measure() -> dict[str, dict[str, float]]:
-    from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
-    from sentiment_analysis_data_engineering_spark.session import get_spark
-
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("scaling-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    times: dict[str, dict[str, float]] = {}
-    for name in ITERATIVE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        for sf, sf_dir in SFS:
-            best = None
-            try:
-                for run in range(N_RUNS + 1):
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.time() - t0
-                    if run == 0:
-                        continue  # warm-up, discarded
-                    best = dt if best is None else min(best, dt)
-            except Exception as ex:  # pragma: no cover
-                print(f"FAIL {name}@{sf}: {ex}", file=sys.stderr)
-                continue
-            finally:
-                release_pinned()
-            times.setdefault(name, {})[sf] = round(best, 3)
-            spark.catalog.clearCache()
-            print(f"{name}@{sf}: {best:.3f}s", flush=True)
-    return times
-
-
 def render(times: dict[str, dict[str, float]]) -> str:
     lines = [
         SECTION_START,
@@ -130,7 +93,7 @@ def render(times: dict[str, dict[str, float]]) -> str:
         "corpus-realistic instead of 90%-duplicate), and "
         "rotation+sign-flip embeddings (cosine to source ≈0, norms "
         "preserved). Same protocol as above: min of "
-        f"{N_RUNS} timed runs after a discarded warm-up, per-query "
+        f"{RUNS} timed runs after a discarded warm-up, per-query "
         "interleaving, noop sink; flag rule ratio > 12 at > 1.0 s.",
         "",
         "| query | sf0.1 s | sf1.0 s | ratio | note |",
@@ -177,7 +140,7 @@ def render(times: dict[str, dict[str, float]]) -> str:
         "under these models with zero flags = the second decade "
         "passes.",
         "",
-        "Protocol note: N_RUNS=3 (SPARK_GRAFT_SCALING_RUNS) for this "
+        f"Protocol note: {RUNS} runs (SPARK_GRAFT_BENCH_RUNS) for this "
         "table — min-of-2 demonstrably under-converges the heavy "
         "iterative queries in a fresh JVM (triangles at sf1.0 "
         "measured 43.7 s on min-of-2 vs 28.6 s steady-state in a "
@@ -200,10 +163,9 @@ def render(times: dict[str, dict[str, float]]) -> str:
 def main() -> None:
     if not os.path.isdir(SF1_DIR):
         raise SystemExit("run tools/gen_scaling_sf1.py first")
-    times = measure()
+    times = measure_per_sf("scaling-sf1", ITERATIVE, SFS)
     section = render(times)
-    path = "/root/repo/SCALING.md"
-    with open(path, encoding="utf-8") as fh:
+    with open(SCALING_MD, encoding="utf-8") as fh:
         doc = fh.read()
     if SECTION_START in doc:
         doc = re.sub(
@@ -214,7 +176,7 @@ def main() -> None:
         )
     else:
         doc = doc.rstrip() + "\n\n" + section + "\n"
-    with open(path, "w", encoding="utf-8") as fh:
+    with open(SCALING_MD, "w", encoding="utf-8") as fh:
         fh.write(doc)
     print(f"SCALING.md sf1 section updated ({len(times)} queries)")
 

@@ -28,11 +28,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ.setdefault("PYTHONPATH", ROOT)
 
 OUT = os.path.join(
-    os.path.dirname(__file__), "..",
+    ROOT,
     "sentiment_analysis_data_engineering_spark", "operators", "clf_model.py",
 )
 
