@@ -24,6 +24,7 @@ Contract notes, pinned by tests/test_observe.py:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 
 __all__ = ["checkpoint_with_metrics", "write_with_metrics", "spark_job_count"]
@@ -36,16 +37,21 @@ def _delivered(obs: Observation, defaults: dict | None) -> dict:
     final plan no longer carries the CollectMetrics node and the
     delivered row is EMPTY — which by construction means the observed
     frame had zero rows, so the caller's zero-row defaults are the
-    exact values. ``getRow()`` blocks until the action completes, the
-    same contract as ``Observation.get``."""
-    if obs._jo.getRow().length() == 0:
+    exact values. ``Observation.get`` blocks until the action completes;
+    on the empty row (it carries no schema) pyspark's row conversion
+    fails a JVM assertion, which is the one failure mapped to
+    ``defaults`` here."""
+    try:
+        return obs.get
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
         if defaults is None:
             raise RuntimeError(
                 "observed metrics were eliminated (empty plan) and no "
                 "zero-row defaults were provided"
-            )
+            ) from exc
         return dict(defaults)
-    return obs.get
 
 
 def checkpoint_with_metrics(

@@ -12,7 +12,13 @@ Scale stance (100 TB):
 - ``anti_join_new_rows`` replaces the reference's per-row existence
   probe loop (``weekly_dag.py:420-427``, self-flagged ``#This is super
   slow``) with ONE left_anti join on key columns only — the probe side
-  is pruned to its keys so the shuffle carries no payload.
+  is pruned to its keys so the shuffle carries no payload. The key is
+  ONE struct-valued column, not N column equalities: Catalyst pushes an
+  anti join below a union of per-ticker frames and infers each branch's
+  literal ``ticker`` into that branch's probe, which turns one probe
+  into N different ones (N scans, N broadcasts). A struct equality
+  yields no per-field literal to infer, so the N probes stay identical
+  and share one reused broadcast.
 - ``multiset_equal`` is two ``exceptAll`` emptiness checks — shuffle on
   all columns, but short-circuits via ``isEmpty`` (first non-empty
   partition wins under AQE).
@@ -110,13 +116,26 @@ def anti_join_new_rows(
 
     Replaces the reference's O(rows) per-row SELECT probe loop
     (``weekly_dag.py:420-427,479-486``) with one left_anti join. The
-    existing side is pruned to key columns + distinct before the join,
-    so at scale the shuffle moves keys only; when the distinct key set
-    is small AQE upgrades it to a broadcast anti join.
+    existing side is pruned to its key columns, so at scale the shuffle
+    moves keys only; when the key set is small AQE upgrades it to a
+    broadcast anti join.
+
+    - The keys are compared as one ``struct`` so that an anti join
+      pushed below a union keeps ONE probe for every branch (see the
+      module docstring). Probe rows with a null key column are dropped:
+      struct equality would match null fields, while a per-column
+      equi-join never matches a null key — so an incoming row with a
+      null key column is always new, as before.
+    - The probe is not de-duplicated: an anti join only asks whether a
+      match exists, so duplicate probe keys cannot change its result,
+      and a ``distinct`` would add a shuffle stage to every probe.
     """
     keys = list(keys)
-    probe = existing.select(*keys).distinct()
-    return incoming.join(probe, on=keys, how="left_anti")
+    probe = existing.where(
+        reduce(lambda acc, k: acc & F.col(k).isNotNull(), keys, F.lit(True))
+    ).select(F.struct(*keys).alias("_key"))
+    key = F.struct(*[incoming[k] for k in keys])
+    return incoming.join(probe, key == probe["_key"], how="left_anti")
 
 
 def multiset_equal(a: DataFrame, b: DataFrame) -> bool:

@@ -3,8 +3,11 @@ re-expressed as lazy single-plan Spark jobs.
 
 Each function takes its *inputs* (payload strings / DataFrames /
 semi-structured dicts) plus an explicit ``as_of`` date, builds ONE
-lazy DataFrame plan, and commits through the engine's writers — no
-per-row probes, no eager intermediates, no wall-clock reads.
+lazy DataFrame plan, and commits it through the engine's writers as
+ONE observed write — no per-row probes, no eager intermediates, no
+wall-clock reads. No task sorts before writing: the partitioned write
+orders rows by (year, month) itself, and no reader depends on row
+order within a file.
 
 Documented divergences from the reference (SURVEY.md §2.11):
 - T2 standardizes on idempotent append; the reference re-appends full
@@ -27,9 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import parse_unit_suffixed, today_parts
-from ..operators.relational import n_way_inner_join, union_all
+from ..operators.relational import union_all
 from ..sources.io import idempotent_append, upsert_partitions
-from ..sources.json_source import timeseries_json
+from ..sources.json_source import TIMESERIES_SCHEMA
 
 __all__ = [
     "load_macro_daily",
@@ -109,7 +112,6 @@ def load_stock_daily(
         unioned.withColumn("year", F.year(d).cast("long"))
         .withColumn("month", F.month(d).cast("long"))
         .withColumn("day", F.dayofmonth(d).cast("long"))
-        .orderBy("date")
         .drop("date")
         .select(
             F.col("open").cast("double"),
@@ -268,24 +270,54 @@ def _load_macro_joined(
     value_types: dict[str, str] | str,
     horizon_year: int = 2020,
 ) -> int:
-    """Shared T7/T8 core: unnest each payload (P7) → N-way inner join on
-    date (J1, broadcast — each side is a few hundred rows) → date parts
+    """Shared T7/T8 core: ONE aggregate replaces the reference's N-way
+    inner join on date (J1, ``weekly_dag.py:382-394``). All payloads
+    are unnested together (P7: ``from_json`` + ``inline`` over one
+    frame) and pivoted by a single ``groupBy("date")`` into one
+    ``value_<NAME>`` column per payload; a date missing from any payload
+    is dropped, which is the inner join's contract. Then date parts
     (F2) → horizon filter (P5/ST5) → ONE anti-join append (ST2).
 
+    The indicator names come from the payload strings already on the
+    driver, so no job runs to read them. A date repeated inside one
+    payload collapses to one row (``max`` of its values) instead of
+    raising, which a ``map_from_entries`` pivot would do under the
+    default ``mapKeyDedupPolicy=EXCEPTION``.
+
     The reference runs one SELECT per row here (``weekly_dag.py:420-427``,
-    ``#This is super slow``); this is the single-plan replacement: two
-    shuffles total (join + anti-join), zero per-row round-trips.
+    ``#This is super slow``); this is the single-plan replacement: one
+    aggregate shuffle plus the anti join's probe, zero per-row
+    round-trips.
     """
-    frames = timeseries_json(spark, payloads, value_type=value_types)
-    wide = n_way_inner_join(frames, on="date", broadcast_all_but_first=True)
-    d = F.to_date("date")
-    monthly = (
-        wide.withColumn("year", F.year(d).cast("long"))
-        .withColumn("month", F.month(d).cast("long"))
-        .orderBy("date")
-        .drop("date")
-        .filter(F.col("year") > horizon_year)
+    names = [json.loads(p)["name"] for p in payloads]
+    types = {
+        n: value_types.get(n, "double") if isinstance(value_types, dict) else value_types
+        for n in names
+    }
+    entries = (
+        spark.createDataFrame([(p,) for p in payloads], "payload string")
+        .select(F.from_json("payload", TIMESERIES_SCHEMA).alias("p"))
+        .select("p.name", F.inline("p.data"))
     )
+    wide = (
+        entries.groupBy("date")
+        .agg(
+            F.size(F.collect_set("name")).alias("_n"),
+            *[
+                F.max(
+                    F.when(F.col("name") == n, F.col("value").try_cast(types[n]))
+                ).alias(f"value_{n}")
+                for n in names
+            ],
+        )
+        .filter(F.col("_n") == len(set(names)))
+    )
+    d = F.to_date("date")
+    monthly = wide.select(
+        *[f"value_{n}" for n in names],
+        F.year(d).cast("long").alias("year"),
+        F.month(d).cast("long").alias("month"),
+    ).filter(F.col("year") > horizon_year)
     # partition layout must match the registry's declared (year, month)
     # (schemas.WAREHOUSE_SCHEMAS) — a year=-only layout would raise on
     # the managed table and silently break month pruning on paths

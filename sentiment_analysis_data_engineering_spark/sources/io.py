@@ -9,6 +9,8 @@ The reference's storage contract, re-expressed on partitioned parquet:
                          ONE left_anti join instead of the reference's
                          per-row probe loop (``weekly_dag.py:420-427``,
                          ``#This is super slow``).
+- ``upsert_partitions``  ST3 intent: rewrite only the partitions whose
+                         content changed.
 - ``replace_partition``  ST3: the delete+insert upsert
                          (``weekly_dag.py:131-147``) as dynamic
                          partition overwrite — only the (year, month)
@@ -18,6 +20,16 @@ The reference's storage contract, re-expressed on partitioned parquet:
 Divergence documented per SURVEY.md §2.11: the reference's fact_table
 path re-appends full history every run with no dedup (``daily_dag.py:92,117``);
 this engine standardizes on ``idempotent_append`` for that path.
+
+Both incremental writers commit as ONE observed write, with no extra
+driver round trip: the target is probed for existence on the Hadoop
+FileSystem (no failed read), read back with the incoming frame's
+declared schema (no schema-inference job; partition columns come back
+with the incoming types), and the rows written are counted by an
+``Observation`` riding the write itself
+(``operators.observe.write_with_metrics``) — no cache, no separate
+count action. A write that turns out to hold zero rows leaves no data
+file behind.
 """
 
 from __future__ import annotations
@@ -26,7 +38,9 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..operators.observe import write_with_metrics
 from ..operators.relational import anti_join_new_rows
 
 __all__ = [
@@ -54,16 +68,26 @@ def scan(
     *,
     predicate: Column | None = None,
     columns: list[str] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """S1 — read a parquet path or catalog table with optional predicate
     and projection. Both are declared on the lazy plan, so Catalyst
     pushes them into the scan (``PushedFilters`` / pruned ``ReadSchema``)
     rather than filtering post-read — unlike the reference's local
-    re-filter after ``read_gbq`` (``daily_dag.py:82``)."""
-    if path_or_table.endswith(".parquet") or "/" in path_or_table:
-        df = spark.read.parquet(path_or_table)
+    re-filter after ``read_gbq`` (``daily_dag.py:82``).
+
+    ``schema`` declares the columns to read and their types: a parquet
+    path is then read without the schema-inference job, and partition
+    columns parse their directory values into the declared types; a
+    catalog table (whose schema the catalog already holds) is cast to
+    it."""
+    if _is_path(path_or_table):
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path_or_table)
     else:
         df = spark.table(path_or_table)
+        if schema is not None:
+            df = df.select(*[F.col(f.name).cast(f.dataType) for f in schema])
     if predicate is not None:
         df = df.filter(predicate)
     if columns:
@@ -71,38 +95,67 @@ def scan(
     return df
 
 
+def _is_path(path_or_table: str) -> bool:
+    return path_or_table.endswith(".parquet") or "/" in path_or_table
+
+
 def scan_or_none(
     spark: SparkSession,
     path_or_table: str,
     *,
-    columns: list[str] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame | None:
     """``scan`` that returns None ONLY when the target does not exist
-    yet — the first-write probe every incremental writer needs. Any
-    other failure (permissions, corrupt footers) re-raises: treating a
-    transient read error as "no data yet" would make the caller
-    silently rebuild the table from one batch and drop history."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import AnalysisException
+    yet — the first-write probe every incremental writer needs.
 
-    try:
-        return scan(spark, path_or_table, columns=columns)
-    except AnalysisException as exc:
-        get_cls = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", lambda: None
-        )
-        cls = get_cls() or ""
-        if (
-            "PATH_NOT_FOUND" in cls
-            or "TABLE_OR_VIEW_NOT_FOUND" in cls
-            or (not cls and "Path does not exist" in str(exc))
-        ):
-            return None
-        raise
-    except Py4JJavaError as exc:  # pragma: no cover - JVM-path variant
-        if "FileNotFoundException" in str(exc.java_exception):
-            return None
-        raise
+    Existence is asked of the Hadoop FileSystem (or the catalog), not
+    inferred from a caught read failure: a failed read is reported to
+    every query-execution listener as an error, and once an
+    ``Observation`` has been used on the session that listener logs it
+    at ERROR. Any failure to READ an existing target (permissions,
+    corrupt footers) raises: treating it as "no data yet" would make
+    the caller silently rebuild the table from one batch and drop
+    history."""
+    if _is_path(path_or_table):
+        _, fs, P = _swap_fs(spark, path_or_table)
+        exists = fs.exists(P(path_or_table))
+    else:
+        exists = spark.catalog.tableExists(path_or_table)
+    return scan(spark, path_or_table, schema=schema) if exists else None
+
+
+def _visible_files(spark: SparkSession, target: str) -> set[str]:
+    """Names of the data files directly under a path target (hidden
+    ``_``/``.`` entries and directories excluded); empty for a missing
+    path or a catalog table."""
+    if not _is_path(target):
+        return set()
+    _, fs, P = _swap_fs(spark, target)
+    root = P(target)
+    if not fs.exists(root):
+        return set()
+    return {
+        st.getPath().getName()
+        for st in fs.listStatus(root)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    }
+
+
+def _counted_write(spark: SparkSession, df: DataFrame, target: str, write) -> int:
+    """Run ``write(observed_df)`` and return the number of rows it
+    wrote, counted inside the write job itself (no cache, no second
+    action). Spark's unpartitioned writer commits one file from its
+    first task even when that task has no rows, so a write that counted
+    zero rows deletes the data files it added — a re-run with nothing
+    new (e.g. a replayed micro-batch) leaves the target as it was.
+    Partitioned writes of zero rows add no file in the first place."""
+    before = _visible_files(spark, target)
+    n = write_with_metrics(df, write, defaults={"n": 0}, n=F.count(F.lit(1)))["n"]
+    if n == 0:
+        _, fs, P = _swap_fs(spark, target)
+        for name in _visible_files(spark, target) - before:
+            fs.delete(P(f"{target.rstrip('/')}/{name}"), False)
+    return n
 
 
 def scan_csv(
@@ -194,24 +247,22 @@ def idempotent_append(
 ) -> int:
     """ST1/ST2 — append only rows whose key tuple is not yet in target.
 
-    Returns the number of rows appended. The existing side is pruned to
-    key columns before the anti join, so the probe reads only the key
-    columns from parquet (column pruning) and, when the keys are the
-    partition columns, only partition metadata-sized data moves.
+    Returns the number of rows appended. The target is read with the
+    key columns of ``df``'s schema only, so the probe reads just the
+    key columns from parquet (column pruning, no schema inference) and,
+    when the keys are the partition columns, only partition
+    metadata-sized data moves. The anti join and the append are ONE
+    observed write: the returned count rides the write job, nothing is
+    cached, and an append with no new rows leaves no file.
     """
     keys = list(keys)
-    existing = scan_or_none(spark, target, columns=keys)
+    key_schema = T.StructType([df.schema[k] for k in keys])
+    existing = scan_or_none(spark, target, schema=key_schema)
     new_rows = df if existing is None else anti_join_new_rows(df, existing, keys)
-    # Two actions on new_rows (count + write): cache to avoid recompute,
-    # then release. At scale the anti join runs once either way.
-    new_rows = new_rows.cache()
-    try:
-        n = new_rows.count()
-        if n:
-            append(new_rows, target, partition_by=partition_by)
-    finally:
-        new_rows.unpersist()
-    return n
+    return _counted_write(
+        spark, new_rows, target,
+        lambda d: append(d, target, partition_by=partition_by),
+    )
 
 
 def upsert_partitions(
@@ -232,6 +283,14 @@ def upsert_partitions(
     2. partitions whose signature differs (or is new) are overwritten
        via dynamic partition overwrite; identical partitions untouched.
 
+    The stored side is read with ``df``'s schema, so both signatures
+    hash the same types (partition columns included) with no alignment
+    cast and no schema-inference job. The signatures, the semi join and
+    the overwrite are ONE observed write: the returned count rides the
+    write job and nothing is cached. Dynamic overwrite replaces a
+    partition only at job commit, after every task has read the stored
+    rows; when nothing changed, nothing is rewritten.
+
     Returns the number of rows written.
     """
     def sig(d: DataFrame) -> DataFrame:
@@ -243,18 +302,11 @@ def upsert_partitions(
             F.sum(row_hash.cast("decimal(38,0)")).alias("_h"),
         )
 
-    existing = scan_or_none(spark, target)
+    existing = scan_or_none(spark, target, schema=df.schema)
 
     if existing is None:
         changed = df
     else:
-        # Partition columns round-trip through directory names and come
-        # back as INT; xxhash64 is type-sensitive, so align the existing
-        # side to the incoming schema before hashing.
-        incoming_types = dict(df.dtypes)
-        existing = existing.select(
-            *[F.col(c).cast(incoming_types[c]) for c in df.columns]
-        )
         changed_keys = (
             sig(df)
             .join(
@@ -271,14 +323,10 @@ def upsert_partitions(
         )
         changed = df.join(F.broadcast(changed_keys), on=partition_by, how="left_semi")
 
-    changed = changed.cache()
-    try:
-        n = changed.count()
-        if n:
-            replace_partition(spark, changed, target, partition_by)
-    finally:
-        changed.unpersist()
-    return n
+    return _counted_write(
+        spark, changed, target,
+        lambda d: replace_partition(spark, d, target, partition_by),
+    )
 
 
 def _assert_unique_keys(df: DataFrame, keys: list[str]) -> None:
@@ -359,7 +407,7 @@ def merge_upsert(
         raise ValueError(f"when_new must be insert|ignore, got {when_new!r}")
     keys = list(keys)
 
-    existing = scan_or_none(spark, target)
+    existing = scan_or_none(spark, target, schema=df.schema)
     if existing is None:
         if when_new == "ignore":
             return {"updated": 0, "inserted": 0, "rows_written": 0}
@@ -372,13 +420,6 @@ def merge_upsert(
         finally:
             df.unpersist()
         return {"updated": 0, "inserted": n, "rows_written": n}
-
-    # partition cols round-trip through directory names type-inferred;
-    # align the stored side to the incoming schema
-    incoming_types = dict(df.dtypes)
-    existing = existing.select(
-        *[F.col(c).cast(incoming_types[c]) for c in df.columns]
-    )
 
     df = df.cache()
     try:

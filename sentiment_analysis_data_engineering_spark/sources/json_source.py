@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["scalar_json_lookup", "timeseries_json"]
+__all__ = ["scalar_json_lookup"]
 
 
 def scalar_json_lookup(
@@ -41,7 +41,9 @@ def scalar_json_lookup(
     return out
 
 
-#: Alpha Vantage-shaped payload schema (``weekly_dag.py:367-391``).
+#: Alpha Vantage-shaped payload schema (``weekly_dag.py:367-391``): the
+#: indicator name plus its (date, value) series. ``plans.pipelines``
+#: unnests every payload of a T7/T8 run with it in one frame.
 TIMESERIES_SCHEMA = T.StructType(
     [
         T.StructField("name", T.StringType()),
@@ -58,36 +60,3 @@ TIMESERIES_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def timeseries_json(
-    spark: SparkSession,
-    payloads: list[str],
-    *,
-    value_type: str | dict[str, str] = "double",
-) -> list[DataFrame]:
-    """S4+P7 — unnest each time-series payload into a two-column frame
-    ``(date string, value_<NAME> <type>)``, the exact input shape of the
-    reference's 9-way join (``weekly_dag.py:382-394``).
-
-    The explicit Python loop of the reference collapses to
-    ``from_json`` + ``explode`` per payload — the array never touches
-    the driver row-by-row.
-    """
-    out: list[DataFrame] = []
-    for payload in payloads:
-        df = (
-            spark.createDataFrame([(payload,)], "payload string")
-            .select(F.from_json("payload", TIMESERIES_SCHEMA).alias("p"))
-            .select(F.col("p.name").alias("name"), F.explode("p.data").alias("e"))
-        )
-        # one collectable scalar: the indicator name (tiny, driver-side OK)
-        name = df.select("name").first()["name"]
-        vt = value_type.get(name, "double") if isinstance(value_type, dict) else value_type
-        out.append(
-            df.select(
-                F.col("e.date").alias("date"),
-                F.col("e.value").try_cast(vt).alias(f"value_{name}"),
-            )
-        )
-    return out

@@ -51,6 +51,36 @@ def test_idempotent_append_first_write(spark, tmp_table_dir):
     assert scan(spark, target).count() == 1
 
 
+def _data_files(root):
+    import os
+
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root)
+        for f in fs if f.endswith(".parquet")
+    )
+
+
+def test_idempotent_append_rerun_adds_no_file(spark, tmp_table_dir):
+    """Re-running a batch that is already stored writes zero rows and
+    must leave no (empty) data file behind — on a partitioned target
+    and on an unpartitioned one, whose writer commits a file from its
+    first task even when that task has no rows (the streaming replay
+    sink appends unpartitioned on every micro-batch)."""
+    batch = _mk(spark, [(2023, 5, 1, 1.0), (2023, 6, 1, 2.0)])
+    for name, partition_by in (("t_rerun_part", ["year", "month"]),
+                               ("t_rerun_flat", None)):
+        target = str(tmp_table_dir / name)
+        keys = ["year", "month", "day"]
+        assert idempotent_append(spark, batch, target, keys,
+                                 partition_by=partition_by) == 2
+        files = _data_files(target)
+        assert files
+        assert idempotent_append(spark, batch, target, keys,
+                                 partition_by=partition_by) == 0
+        assert _data_files(target) == files, name
+        assert scan(spark, target).count() == 2
+
+
 def test_replace_partition_touches_only_incoming(spark, tmp_table_dir):
     """ST3 — dynamic partition overwrite as the safe form of the
     reference's DELETE+append upsert (weekly_dag.py:131-147)."""

@@ -121,3 +121,74 @@ def test_t8_macro_quarterly(spark, tmp_table_dir):
     out = scan(spark, target)
     assert {r.month for r in out.select("month").distinct().collect()} == {1, 4, 7, 10}
     assert pl.load_macro_quarterly(spark, payloads, target) == 0
+
+
+def test_t7_inner_join_drops_date_missing_from_one_payload(spark, tmp_table_dir):
+    """The one-aggregate pivot keeps the N-way inner join's contract: a
+    date absent from ANY payload yields no row."""
+    import json
+
+    target = str(tmp_table_dir / "macro_data_monthly_gap")
+    payloads = [fx.indicator_json(n) for n in fx.MONTHLY_INDICATORS]
+    gap = json.loads(payloads[1])
+    gap["data"] = [e for e in gap["data"] if e["date"] != "2022-03-01"]
+    payloads[1] = json.dumps(gap)
+    assert pl.load_macro_monthly(spark, payloads, target) == 35
+    out = scan(spark, target)
+    assert out.filter((F.col("year") == 2022) & (F.col("month") == 3)).count() == 0
+    assert out.filter(F.col("year") == 2022).count() == 11
+
+
+def _jobs(spark, task):
+    """(task's return value, Spark jobs it launched)."""
+    from sentiment_analysis_data_engineering_spark.operators.observe import spark_job_count
+
+    before = spark_job_count(spark)
+    n = task()
+    return n, spark_job_count(spark) - before
+
+
+def _horizon_cut(payload: str, last_year: int) -> str:
+    import json
+
+    p = json.loads(payload)
+    p["data"] = [e for e in p["data"] if int(e["date"][:4]) <= last_year]
+    return json.dumps(p)
+
+
+def test_pipeline_tasks_commit_within_job_budgets(spark, tmp_table_dir):
+    """Each task against an existing target is one observed write: no
+    count or cache action, no schema-inference job, one shared anti-join
+    probe (T2's 9 union branches), one aggregate for T7/T8."""
+    got = {}
+    t1 = str(tmp_table_dir / "budget_macro_daily")
+    pl.load_macro_daily(spark, *fx.spot_price_json(2023, 5, 12), "2023-05-12", t1)
+    got["T1"] = _jobs(spark, lambda: pl.load_macro_daily(
+        spark, *fx.spot_price_json(2023, 5, 13), "2023-05-13", t1))
+
+    t2 = str(tmp_table_dir / "budget_fact")
+    pl.load_stock_daily(spark, fx.ohlcv_history(spark, ["D05.SI", "U11.SI"]), t2)
+    history = fx.ohlcv_history(spark)  # all 9 tickers, 2 already stored
+    got["T2"] = _jobs(spark, lambda: pl.load_stock_daily(spark, history, t2))
+
+    t3 = str(tmp_table_dir / "budget_ratio")
+    pl.load_financial_ratio(spark, fx.company_stats((2023, 5, 12)), "2023-05-12", t3)
+    # changed stats in the stored month: both signatures, one rewrite
+    got["T3"] = _jobs(spark, lambda: pl.load_financial_ratio(
+        spark, fx.company_stats((2023, 5, 19)), "2023-05-19", t3))
+
+    t7 = str(tmp_table_dir / "budget_monthly")
+    monthly = [fx.indicator_json(n) for n in fx.MONTHLY_INDICATORS]
+    pl.load_macro_monthly(spark, [_horizon_cut(p, 2021) for p in monthly], t7)
+    got["T7"] = _jobs(spark, lambda: pl.load_macro_monthly(spark, monthly, t7))
+
+    t8 = str(tmp_table_dir / "budget_quarterly")
+    quarterly = [fx.indicator_json(n, monthly=False) for n in fx.QUARTERLY_INDICATORS]
+    pl.load_macro_quarterly(spark, [_horizon_cut(p, 2021) for p in quarterly], t8)
+    got["T8"] = _jobs(spark, lambda: pl.load_macro_quarterly(spark, quarterly, t8))
+
+    rows = {task: n for task, (n, _) in got.items()}
+    assert rows == {"T1": 1, "T2": 7 * 36 * 4, "T3": 9, "T7": 24, "T8": 8}
+    budget = {"T1": 2, "T2": 3, "T3": 5, "T7": 3, "T8": 3}
+    over = {task: j for task, (_, j) in got.items() if j > budget[task]}
+    assert not over, f"jobs over budget {budget}: {over}"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from sentiment_analysis_data_engineering_spark.operators.relational import (
@@ -57,6 +59,48 @@ def test_anti_join_new_rows(spark):
     )
     out = anti_join_new_rows(incoming, existing, ["year", "month"])
     assert [(r.year, r.month) for r in out.collect()] == [(2023, 7)]
+
+
+def test_anti_join_null_incoming_key_is_always_new(spark):
+    """The struct-valued key keeps equi-join null semantics: a key with
+    a null column never matches, even a stored key with the same null."""
+    incoming = spark.createDataFrame(
+        [(None, 5, 1.0), (2023, 5, 2.0), (2023, None, 3.0)],
+        "year int, month int, v double",
+    )
+    existing = spark.createDataFrame(
+        [(None, 5, 9.0), (2023, 5, 9.0), (2023, None, 9.0)],
+        "year int, month int, v double",
+    )
+    out = anti_join_new_rows(incoming, existing, ["year", "month"])
+    assert sorted(r.v for r in out.collect()) == [1.0, 3.0]
+
+
+def test_anti_join_below_union_plans_one_probe(spark, tmp_path):
+    """T2's shape: 9 per-ticker frames with a literal ticker, unioned,
+    anti-joined against a stored table. Catalyst pushes the anti join
+    into every union branch; the probe must stay one broadcast that the
+    other 8 branches reuse, not 9 ticker-filtered probes."""
+    stored = str(tmp_path / "fact")
+    spark.createDataFrame(
+        [(f"T{i}", d) for i in range(9) for d in range(3)],
+        "ticker string, day long",
+    ).write.parquet(stored)
+    frames = [
+        spark.createDataFrame([(d,) for d in range(5)], "day long")
+        .withColumn("ticker", F.lit(f"T{i}"))
+        for i in range(9)
+    ]
+    out = anti_join_new_rows(
+        union_all(frames), spark.read.parquet(stored), ["ticker", "day"]
+    )
+    assert len(out.collect()) == 9 * 2
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # a ReusedExchange line names the exchange it reuses, by plan_id
+    broadcasts = set(re.findall(r"BroadcastExchange .*\[plan_id=(\d+)\]", final))
+    assert len(broadcasts) == 1, final
+    assert final.count("ReusedExchange") == 8, final
 
 
 def test_multiset_equal(spark):
