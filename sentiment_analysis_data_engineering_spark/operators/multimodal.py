@@ -4,10 +4,11 @@ columns with typed metadata.
 Extension layer (no reference counterpart). Decode support:
 
 - **BMP (24-bit uncompressed BI_RGB) decodes for real** — a
-  dependency-free header+pixel parser implemented right in the
-  ``mapInPandas`` batch fn (`_decode_bmp`), plus an `encode_bmp`
-  counterpart so fixtures carry genuine encoded bytes and tests can
-  assert decode(encode(x)) == x.
+  dependency-free header+pixel parser (`_decode_bmp`), plus an
+  `encode_bmp` counterpart so fixtures carry genuine encoded bytes and
+  tests can assert decode(encode(x)) == x. The DIB info header and the
+  padded bottom-up BGR pixel array (`_dib_info_header`, `_dib_rows`,
+  `_dib_pixels`) are shared with the AVI frame path.
 - **WAV (PCM mono 16-bit) decodes for real** — RIFF chunk walk +
   signal features (`_decode_wav`/`decode_audio`), with `encode_wav`
   as the round-trip counterpart.
@@ -18,17 +19,22 @@ Extension layer (no reference counterpart). Decode support:
 - Compressed formats (JPEG/PNG/MP3/H.264/...) still stub: the
   container ships no codecs, so those payloads take the
   deterministic-fake or NotImplementedError path. Swapping in
-  Pillow/librosa/pyav is a one-function change inside the same batch
-  iterator.
+  Pillow/librosa/pyav is a one-function change inside a row function.
+
+Every decoder and fixture generator crosses into Python through one
+adapter, `_map_rows`: it owns the ``mapInPandas`` batch loop and builds
+each output frame from the declared schema's field names, so an
+operator is only its per-row function.
 
 Design for 100 TB of media:
-- binary payloads never pass through Python row-at-a-time — only
-  Arrow record batches (``mapInPandas``);
+- binary payloads reach Python only as Arrow record batches
+  (``mapInPandas``), never through a per-row UDF call;
 - metadata (width/height/codec/duration) lives in a sibling struct so
   filters on it prune BEFORE any decode;
-- feature extraction yields fixed-width vectors → downstream joins and
-  ANN run on columnar data, payload column dropped as early as
-  possible (column pruning does this for free when callers select).
+- decoders emit fixed-width feature rows (dims, means, RMS) →
+  downstream joins run on columnar data, payload column dropped as
+  early as possible (column pruning does this for free when callers
+  select).
 """
 
 from __future__ import annotations
@@ -52,9 +58,6 @@ __all__ = [
     "encode_avi",
     "encode_bmp",
     "encode_wav",
-    "extract_features",
-    "resize_image",
-    "sample_frames",
     "synthesize_avi_media",
     "synthesize_bmp_media",
     "synthesize_wav_media",
@@ -83,6 +86,45 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
+def _map_rows(df: DataFrame, schema: T.StructType, row_fn) -> DataFrame:
+    """The module's one Arrow crossing. ``row_fn`` takes one input row's
+    values, in ``df``'s column order, and yields output tuples in
+    ``schema``'s field order (none, one or many per input row)."""
+    cols = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                out
+                for vals in zip(*(pdf[c] for c in pdf.columns))
+                for out in row_fn(*vals)
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(batches, schema)
+
+
+#: what the fixture generators emit: (media_id, content binary)
+_MEDIA_BLOB = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("content", T.BinaryType(), False),
+    ]
+)
+
+
+def _synthesize(df: DataFrame, id_col: str, blob_fn) -> DataFrame:
+    """Fixture-generator body: one ``blob_fn(media_id)`` payload per id."""
+
+    def row(mid):
+        mid = int(mid)
+        yield mid, blob_fn(mid)
+
+    return _map_rows(
+        df.select(F.col(id_col).cast("long").alias("media_id")), _MEDIA_BLOB, row
+    )
+
+
 def attach_media_metadata(df: DataFrame, kind: str, mime: str) -> DataFrame:
     """Wrap a (media_id, content binary) frame into the media contract
     with constant kind/mime and size-derived placeholder metadata."""
@@ -109,44 +151,73 @@ def _fake_decode(payload: bytes) -> np.ndarray:
     return rng.reshape(8, 8).astype(np.float32) / 255.0
 
 
-def encode_bmp(width: int, height: int, pixel_bytes: bytes) -> bytes:
-    """Assemble a real 24-bit uncompressed (BI_RGB) BMP file.
+def _row_size(width: int) -> int:
+    """Bytes per stored DIB row: 3 per pixel, padded to 4 bytes."""
+    return (width * 3 + 3) & ~3
 
-    ``pixel_bytes`` is row-major top-down RGB, length = width*height*3.
-    BMP stores rows bottom-up, BGR, padded to 4-byte boundaries — this
-    writer performs that transform, and `_decode_bmp` inverts it."""
-    if len(pixel_bytes) != width * height * 3:
-        raise ValueError("pixel_bytes must be width*height*3 long")
-    px = np.frombuffer(pixel_bytes, dtype=np.uint8).reshape(height, width, 3)
-    bgr = px[::-1, :, ::-1]  # bottom-up rows, RGB→BGR
-    row_size = (width * 3 + 3) & ~3
-    pad = row_size - width * 3
-    rows = []
-    for r in range(height):
-        rows.append(bgr[r].tobytes() + b"\x00" * pad)
-    pixel_data = b"".join(rows)
-    dib = (
+
+def _dib_info_header(width: int, height: int) -> bytes:
+    """The 40-byte BITMAPINFOHEADER of a 24-bit BI_RGB bottom-up DIB —
+    the same header a BMP file and an AVI 'strf' chunk carry."""
+    return (
         (40).to_bytes(4, "little")
         + width.to_bytes(4, "little", signed=True)
         + height.to_bytes(4, "little", signed=True)  # positive: bottom-up
         + (1).to_bytes(2, "little")
         + (24).to_bytes(2, "little")
         + (0).to_bytes(4, "little")  # BI_RGB
-        + len(pixel_data).to_bytes(4, "little")
+        + (_row_size(width) * height).to_bytes(4, "little")
         + (2835).to_bytes(4, "little") * 2
         + (0).to_bytes(4, "little") * 2
     )
+
+
+def _dib_rows(width: int, height: int, pixel_bytes: bytes) -> bytes:
+    """Row-major top-down RGB → the DIB pixel array: rows bottom-up,
+    BGR, each padded to a 4-byte boundary (`_dib_pixels` inverts it)."""
+    if len(pixel_bytes) != width * height * 3:
+        raise ValueError("pixel data must be width*height*3 bytes long")
+    px = np.frombuffer(pixel_bytes, dtype=np.uint8).reshape(height, width, 3)
+    out = np.zeros((height, _row_size(width)), dtype=np.uint8)
+    out[:, : width * 3] = px[::-1, :, ::-1].reshape(height, width * 3)
+    return out.tobytes()
+
+
+def _dib_pixels(buf: bytes, width: int, height: int, offset: int = 0) -> np.ndarray:
+    """Parse a 24-bit DIB pixel array into (|height|, width, 3) float64
+    RGB in [0, 1]; a negative ``height`` means top-down rows."""
+    bottom_up = height > 0
+    height = abs(height)
+    row_size = _row_size(width)
+    data = np.frombuffer(
+        buf, dtype=np.uint8, count=row_size * height, offset=offset
+    ).reshape(height, row_size)
+    bgr = data[:, : width * 3].reshape(height, width, 3)
+    if bottom_up:
+        bgr = bgr[::-1]
+    # float64 so v/255.0 and downstream means are the exact IEEE ops a
+    # double-based SQL oracle performs
+    return bgr[:, :, ::-1].astype(np.float64) / 255.0
+
+
+def encode_bmp(width: int, height: int, pixel_bytes: bytes) -> bytes:
+    """Assemble a real 24-bit uncompressed (BI_RGB) BMP file.
+
+    ``pixel_bytes`` is row-major top-down RGB, length = width*height*3.
+    BMP stores rows bottom-up, BGR, padded to 4-byte boundaries — this
+    writer performs that transform, and `_decode_bmp` inverts it."""
+    pixel_data = _dib_rows(width, height, pixel_bytes)
     header = (
         b"BM"
         + (14 + 40 + len(pixel_data)).to_bytes(4, "little")
         + (0).to_bytes(4, "little")
         + (14 + 40).to_bytes(4, "little")
     )
-    return header + dib + pixel_data
+    return header + _dib_info_header(width, height) + pixel_data
 
 
 def _decode_bmp(payload: bytes) -> np.ndarray:
-    """Parse a 24-bit uncompressed BMP into (height, width, 3) float32
+    """Parse a 24-bit uncompressed BMP into (height, width, 3) float64
     RGB in [0, 1]. Raises ValueError on anything but BI_RGB 24bpp."""
     if payload[:2] != b"BM" or len(payload) < 54:
         raise ValueError("not a BMP payload")
@@ -157,19 +228,7 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     compression = int.from_bytes(payload[30:34], "little")
     if bpp != 24 or compression != 0:
         raise ValueError(f"unsupported BMP variant (bpp={bpp}, comp={compression})")
-    bottom_up = height > 0
-    height = abs(height)
-    row_size = (width * 3 + 3) & ~3
-    data = np.frombuffer(
-        payload, dtype=np.uint8, count=row_size * height, offset=offset
-    ).reshape(height, row_size)
-    bgr = data[:, : width * 3].reshape(height, width, 3)
-    if bottom_up:
-        bgr = bgr[::-1]
-    rgb = bgr[:, :, ::-1]
-    # float64 so v/255.0 and downstream means are the exact IEEE ops a
-    # double-based SQL oracle performs
-    return rgb.astype(np.float64) / 255.0
+    return _dib_pixels(payload, width, height, offset)
 
 
 def _decode_any(payload: bytes, strict: bool) -> np.ndarray:
@@ -184,14 +243,6 @@ def _decode_any(payload: bytes, strict: bool) -> np.ndarray:
             "formats need Pillow/libav (not installed)"
         )
     return _fake_decode(payload)[..., np.newaxis]
-
-
-#: BMP, WAV/PCM and uncompressed-DIB AVI decode for real (see
-#: _decode_bmp/_decode_wav/_decode_avi); the compressed formats remain
-#: stubbed behind strict/_fake_decode until codec libraries are
-#: available.
-DECODE_IS_STUBBED = False
-STUBBED_FORMATS = ("jpeg", "png", "compressed-audio", "compressed-video")
 
 
 def decode_image(df: DataFrame, *, strict: bool = False) -> DataFrame:
@@ -214,19 +265,11 @@ def decode_image(df: DataFrame, *, strict: bool = False) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                px = _decode_any(bytes(payload), strict)
-                rows.append(
-                    (int(mid), px.shape[0], px.shape[1], float(px.mean()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "height", "width", "mean_px"]
-            )
+    def row(mid, payload):
+        px = _decode_any(bytes(payload), strict)
+        yield int(mid), px.shape[0], px.shape[1], float(px.mean())
 
-    return df.select("media_id", "content").mapInPandas(batches, out_schema)
+    return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
 def synthesize_bmp_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -237,30 +280,14 @@ def synthesize_bmp_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     predict the decode result without parsing BMP: width = 8 + id % 9,
     height = 8 + id % 7, and pixel byte i of the row-major top-down
     RGB stream is (id*31 + i) % 256. Runs through the same Arrow
-    ``mapInPandas`` seam the decoders use."""
+    adapter the decoders use."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
+    def blob(mid):
+        w, h = 8 + mid % 9, 8 + mid % 7
+        pix = ((mid * 31 + np.arange(w * h * 3)) % 256).astype(np.uint8)
+        return encode_bmp(w, h, pix.tobytes())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h = 8 + mid % 9, 8 + mid % 7
-                n = w * h * 3
-                pix = ((mid * 31 + np.arange(n)) % 256).astype(np.uint8)
-                ids.append(mid)
-                blobs.append(encode_bmp(w, h, pix.tobytes()))
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return df.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        batches, out_schema
-    )
+    return _synthesize(df, id_col, blob)
 
 
 def encode_wav(sample_rate: int, samples: bytes) -> bytes:
@@ -341,51 +368,35 @@ def decode_audio(df: DataFrame, *, strict: bool = False) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                payload = bytes(payload)
-                # Sniff the full RIFF/WAVE signature: a non-WAVE RIFF
-                # container (e.g. an AVI misrouted into the audio table)
-                # must fall through to the strict/fake branch rather
-                # than error out of the promised strict=False path.
-                if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-                    rate, s = _decode_wav(payload)
-                elif strict:
-                    raise NotImplementedError(
-                        "only PCM mono 16-bit WAV decodes in-container; "
-                        "compressed audio needs librosa/libav (not installed)"
-                    )
-                else:
-                    digest = hashlib.sha256(payload).digest()
-                    rate = 8000
-                    s = np.frombuffer(digest * 4, dtype="<i2")
-                sf = s.astype(np.float64)
-                neg = s < 0
-                rows.append(
-                    (
-                        int(mid),
-                        int(rate),
-                        len(s),
-                        len(s) * 1000 // rate,
-                        float(np.sqrt((sf * sf).mean())) if len(s) else 0.0,
-                        int((neg[1:] != neg[:-1]).sum()) if len(s) > 1 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_samples",
-                    "duration_ms",
-                    "rms",
-                    "zero_crossings",
-                ],
+    def row(mid, payload):
+        payload = bytes(payload)
+        # Sniff the full RIFF/WAVE signature: a non-WAVE RIFF container
+        # (e.g. an AVI misrouted into the audio table) must fall through
+        # to the strict/fake branch rather than error out of the
+        # promised strict=False path.
+        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+            rate, s = _decode_wav(payload)
+        elif strict:
+            raise NotImplementedError(
+                "only PCM mono 16-bit WAV decodes in-container; "
+                "compressed audio needs librosa/libav (not installed)"
             )
+        else:
+            digest = hashlib.sha256(payload).digest()
+            rate = 8000
+            s = np.frombuffer(digest * 4, dtype="<i2")
+        sf = s.astype(np.float64)
+        neg = s < 0
+        yield (
+            int(mid),
+            int(rate),
+            len(s),
+            len(s) * 1000 // rate,
+            float(np.sqrt((sf * sf).mean())) if len(s) else 0.0,
+            int((neg[1:] != neg[:-1]).sum()) if len(s) > 1 else 0,
+        )
 
-    return df.select("media_id", "content").mapInPandas(batches, out_schema)
+    return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
 def synthesize_wav_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -398,27 +409,12 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     i = ((id*37 + i*17) % 4001) - 2000 — a full-swing int16-safe
     sawtooth with sign structure an oracle can re-derive."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
+    def blob(mid):
+        n = 800 + (mid % 5) * 160
+        s = ((mid * 37 + np.arange(n) * 17) % 4001 - 2000).astype("<i2")
+        return encode_wav(8000, s.tobytes())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                n = 800 + (mid % 5) * 160
-                s = ((mid * 37 + np.arange(n) * 17) % 4001 - 2000).astype("<i2")
-                ids.append(mid)
-                blobs.append(encode_wav(8000, s.tobytes()))
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return df.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        batches, out_schema
-    )
+    return _synthesize(df, id_col, blob)
 
 
 def _chunk(cid: bytes, body: bytes) -> bytes:
@@ -440,29 +436,8 @@ def encode_avi(
     AVI-native bottom-up BGR padded-row DIB inside '00db' chunks, with a
     spec-shaped hdrl (avih main header + one 'vids'/'DIB ' stream with
     its BITMAPINFOHEADER). `_decode_avi` inverts it."""
-    row_size = (width * 3 + 3) & ~3
-    pad = row_size - width * 3
-    dib_frames = []
-    for fb in frames:
-        if len(fb) != width * height * 3:
-            raise ValueError("each frame must be width*height*3 bytes")
-        px = np.frombuffer(fb, dtype=np.uint8).reshape(height, width, 3)
-        bgr = px[::-1, :, ::-1]
-        dib_frames.append(
-            b"".join(bgr[r].tobytes() + b"\x00" * pad for r in range(height))
-        )
-    frame_bytes = row_size * height
-    bmih = (
-        (40).to_bytes(4, "little")
-        + width.to_bytes(4, "little", signed=True)
-        + height.to_bytes(4, "little", signed=True)  # bottom-up
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")  # BI_RGB
-        + frame_bytes.to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (0).to_bytes(4, "little") * 2
-    )
+    dib_frames = [_dib_rows(width, height, fb) for fb in frames]
+    frame_bytes = _row_size(width) * height
     strh = (
         b"vids"
         + b"DIB "
@@ -480,7 +455,10 @@ def encode_avi(
         + width.to_bytes(2, "little")
         + height.to_bytes(2, "little")
     )
-    strl = _list_chunk(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", bmih))
+    strl = _list_chunk(
+        b"strl",
+        _chunk(b"strh", strh) + _chunk(b"strf", _dib_info_header(width, height)),
+    )
     avih = (
         (1_000_000 // fps).to_bytes(4, "little")  # µs per frame
         + (frame_bytes * fps).to_bytes(4, "little")  # max bytes/sec
@@ -548,19 +526,8 @@ def _decode_avi(payload: bytes) -> tuple[int, int, int, list[np.ndarray]]:
     walk(payload[12:])
     if width is None or height is None:
         raise ValueError("AVI payload missing stream format header")
-    bottom_up = height > 0
-    height = abs(height)
-    row_size = (width * 3 + 3) & ~3
-    frames = []
-    for raw in raw_frames:
-        data = np.frombuffer(raw, dtype=np.uint8, count=row_size * height).reshape(
-            height, row_size
-        )
-        bgr = data[:, : width * 3].reshape(height, width, 3)
-        if bottom_up:
-            bgr = bgr[::-1]
-        frames.append(bgr[:, :, ::-1].astype(np.float64) / 255.0)
-    return width, height, fps, frames
+    frames = [_dib_pixels(raw, width, height) for raw in raw_frames]
+    return width, abs(height), fps, frames
 
 
 def decode_video_frames(
@@ -573,7 +540,10 @@ def decode_video_frames(
     ``strict=True`` raises NotImplementedError from the executor,
     ``strict=False`` emits one deterministic fake frame. Sampling
     happens BEFORE pixel math — skipped frames cost a chunk-size skip,
-    not a decode, which is the point of frame sampling at 100 TB."""
+    not a decode, which is the point of frame sampling at 100 TB.
+    ``every_n`` must be at least 1 (checked before planning)."""
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
 
     out_schema = T.StructType(
         [
@@ -585,32 +555,22 @@ def decode_video_frames(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                payload = bytes(payload)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    w, h, _fps, frames = _decode_avi(payload)
-                    for idx in range(0, len(frames), every_n):
-                        rows.append(
-                            (int(mid), idx, h, w, float(frames[idx].mean()))
-                        )
-                elif strict:
-                    raise NotImplementedError(
-                        "only uncompressed-DIB AVI decodes in-container; "
-                        "compressed video needs pyav/libav (not installed)"
-                    )
-                else:
-                    px = _fake_decode(payload)
-                    rows.append((int(mid), 0, px.shape[0], px.shape[1],
-                                 float(px.mean())))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "height", "width", "mean_px"],
+    def row(mid, payload):
+        payload = bytes(payload)
+        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            w, h, _fps, frames = _decode_avi(payload)
+            for idx in range(0, len(frames), every_n):
+                yield int(mid), idx, h, w, float(frames[idx].mean())
+        elif strict:
+            raise NotImplementedError(
+                "only uncompressed-DIB AVI decodes in-container; "
+                "compressed video needs pyav/libav (not installed)"
             )
+        else:
+            px = _fake_decode(payload)
+            yield int(mid), 0, px.shape[0], px.shape[1], float(px.mean())
 
-    return df.select("media_id", "content").mapInPandas(batches, out_schema)
+    return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
 def synthesize_avi_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -621,118 +581,13 @@ def synthesize_avi_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     8 + id % 3, n_frames = 4 + id % 5, fps = 10, and pixel byte i of
     frame f's row-major top-down RGB stream is (id*31 + f*7 + i) % 256."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
+    def blob(mid):
+        w, h = 8 + mid % 5, 8 + mid % 3
+        n = w * h * 3
+        frames = [
+            ((mid * 31 + f * 7 + np.arange(n)) % 256).astype(np.uint8).tobytes()
+            for f in range(4 + mid % 5)
         ]
-    )
+        return encode_avi(w, h, frames, fps=10)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h = 8 + mid % 5, 8 + mid % 3
-                n = w * h * 3
-                frames = [
-                    ((mid * 31 + f * 7 + np.arange(n)) % 256)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for f in range(4 + mid % 5)
-                ]
-                ids.append(mid)
-                blobs.append(encode_avi(w, h, frames, fps=10))
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return df.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        batches, out_schema
-    )
-
-
-def extract_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
-    """Fixed-width feature vector per media item (deterministic fake:
-    sha256-seeded), Arrow-batched. Output (media_id, features
-    array<float>) feeds directly into similarity.cosine_topk."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, feats = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                digest = hashlib.sha256(bytes(payload)).digest()
-                raw = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4], dtype=np.uint8)
-                vec = (raw.reshape(dim, 4).sum(axis=1).astype(np.float32) / 1020.0)
-                ids.append(int(mid))
-                feats.append(vec.tolist())
-            yield pd.DataFrame({"media_id": ids, "features": feats})
-
-    return df.select("media_id", "content").mapInPandas(batches, out_schema)
-
-
-def sample_frames(df: DataFrame, *, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling STUB: emits the (media_id, frame_ts_ms)
-    schedule from metadata alone — no decode touched. The real frame
-    grab (pyav) plugs into the same mapInPandas seam as decode_image."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def resize_image(
-    df: DataFrame, *, height: int = 4, width: int = 4, strict: bool = False
-) -> DataFrame:
-    """Resize STUB on the same mapInPandas seam as decode_image —
-    (media_id, height, width, pixels array<float>), row-major.
-
-    BMP payloads decode for real (see decode_image) and are resized as
-    grayscale (channel mean) via nearest-neighbor sampling; other
-    formats use the deterministic fake grid, or raise from the
-    executor with ``strict=True``. The real interpolating upgrade
-    (Pillow's ``Image.resize``) swaps into the same batch loop;
-    schema, Arrow batching, and partition behavior are identical."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("pixels", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, pixels = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                px = _decode_any(bytes(payload), strict).mean(axis=2)
-                ys = np.linspace(0, px.shape[0] - 1, height).round().astype(int)
-                xs = np.linspace(0, px.shape[1] - 1, width).round().astype(int)
-                ids.append(int(mid))
-                pixels.append(px[np.ix_(ys, xs)].ravel().tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "height": height,
-                    "width": width,
-                    "pixels": pixels,
-                }
-            )
-
-    return df.select("media_id", "content").mapInPandas(batches, out_schema)
+    return _synthesize(df, id_col, blob)

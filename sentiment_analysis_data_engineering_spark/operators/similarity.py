@@ -20,6 +20,15 @@ are reproducible across runs, and the "model" ships as code.
 MLlib's BucketedRandomProjectionLSH offers the same primitive for
 euclidean distance; this module keeps cosine semantics and
 deterministic planes, staying in pure DataFrame expressions.
+
+The ``engine="arrow"`` sketches, the IVF cell tags and every PQ /
+IVF-PQ encode and query-table pass cross into Python through one
+adapter, `_map_vectors`: it owns the (id, double vector) select, the
+id type of the output schema, the empty-batch skip and the float64
+stacking, so each pass is only its numpy body. Those bodies share one
+copy each of the kernels (`_unit_rows`, `_sq_dists`, `_pq_codes`,
+`_adc_tables`). ``ivfpq_drift_audit`` keeps its own crossing because
+its input is the codes ⋈ corpus join, not an (id, vector) frame.
 """
 
 from __future__ import annotations
@@ -28,6 +37,7 @@ import threading
 from collections import OrderedDict
 from contextlib import contextmanager
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -63,6 +73,68 @@ __all__ = [
 
 def _as_double(vec_col: str) -> Column:
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+
+
+def _map_vectors(
+    df: DataFrame, vec_col: str, id_col: str, schema: str, fn
+) -> DataFrame:
+    """The module's one Arrow crossing for vector batches. Selects
+    (``_id``, ``_v`` as array<double>), fills ``{id_t}`` in ``schema``
+    with the id column's type (string/long/... ids all work), skips
+    empty batches, and calls ``fn(pdf, V)`` with the batch frame and
+    its (rows × dim) float64 matrix; ``fn`` returns the output columns
+    as a dict in ``schema``'s order."""
+    src = df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
+    id_t = df.schema[id_col].dataType.simpleString()
+
+    def batches(it):
+        for pdf in it:
+            if pdf.empty:
+                continue
+            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            yield pd.DataFrame(fn(pdf, V))
+
+    return src.mapInPandas(batches, schema.format(id_t=id_t))
+
+
+def _unit_rows(V):
+    """Rows scaled to unit L2 norm; zero rows stay zero."""
+    norms = np.sqrt((V * V).sum(axis=1, keepdims=True))
+    norms[norms == 0] = 1.0
+    return V / norms
+
+
+def _sq_dists(X, C):
+    """(rows × centroids) squared L2 distances."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+
+
+def _pq_codes(X, B):
+    """Nearest codeword per sub-space: (rows × m) int32 codes of ``X``
+    against the ``m`` (n_codes, sub) codebooks ``B``."""
+    sub = B[0].shape[1]
+    codes = np.empty((len(X), len(B)), dtype=np.int32)
+    for s, Bs in enumerate(B):
+        Xs = X[:, s * sub : (s + 1) * sub]
+        # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant per
+        # row for the argmin, so only the cross and codeword terms
+        d = (Bs * Bs).sum(axis=1)[None, :] - 2.0 * (Xs @ Bs.T)
+        codes[:, s] = d.argmin(axis=1)
+    return codes
+
+
+def _adc_tables(X, B):
+    """Flattened ADC lookup tables, ``[s * n_codes + c] = ||x_s -
+    B[s][c]||²`` per row of ``X``."""
+    sub = B[0].shape[1]
+    return np.concatenate(
+        [
+            ((X[:, s * sub : (s + 1) * sub][:, None, :] - Bs[None, :, :]) ** 2)
+            .sum(axis=2)
+            for s, Bs in enumerate(B)
+        ],
+        axis=1,
+    )
 
 
 def _norm(v: Column) -> Column:
@@ -159,8 +231,6 @@ def _plane_matrix(num_planes: int, dim: int):
     """The deterministic ±1 hyperplanes as a (dim, num_planes) numpy
     matrix — same ``_plane_component`` values the expression form bakes
     into literals, just materialized once for BLAS."""
-    import numpy as np
-
     return np.array(
         [[_plane_component(p, d) for p in range(num_planes)] for d in range(dim)],
         dtype=np.float64,
@@ -191,37 +261,21 @@ def signatures_arrow(
 
     Narrow map, no shuffle; scales to any corpus size batch-by-batch.
     """
-    import numpy as np
-    import pandas as pd
-
     M = _plane_matrix(num_planes, dim)
     weights = (1 << np.arange(num_planes, dtype=np.int64)).astype(np.int64)
-    src = df.select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
-    )
     keep_vec = vec_out is not None
-    # id dtype follows the input (string/long/... ids all work)
-    id_t = df.schema[id_col].dataType.simpleString()
-    schema = (
-        f"_id {id_t}, {vec_out} array<double>, _sig long"
-        if keep_vec
-        else f"_id {id_t}, _sig long"
-    )
+    vec_field = f"{vec_out} array<double>, " if keep_vec else ""
+    schema = "_id {id_t}, " + vec_field + "_sig long"
 
-    def tag(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            bits = (V @ M) >= 0.0
-            sig = (bits.astype(np.int64) * weights[None, :]).sum(axis=1)
-            out = {"_id": pdf["_id"].to_numpy()}
-            if keep_vec:
-                out[vec_out] = pdf["_v"]
-            out["_sig"] = sig
-            yield pd.DataFrame(out)
+    def tag(pdf, V):
+        bits = (V @ M) >= 0.0
+        out = {"_id": pdf["_id"].to_numpy()}
+        if keep_vec:
+            out[vec_out] = pdf["_v"]
+        out["_sig"] = (bits.astype(np.int64) * weights[None, :]).sum(axis=1)
+        return out
 
-    return src.mapInPandas(tag, schema)
+    return _map_vectors(df, vec_col, id_col, schema, tag)
 
 
 def _ivf_tag_arrow(
@@ -242,69 +296,44 @@ def _ivf_tag_arrow(
     the partition (only the id crosses back over the Arrow boundary,
     guide §4: pass only the columns the function needs);
     ``role="query"`` emits one row per probe, the ``n_probe``
-    highest-scoring cells. Narrow map — the centroid matrix rides the
+    highest-scoring cells (all of them when there are fewer cells than
+    ``n_probe``). Narrow map — the centroid matrix rides the
     task closure, no shuffle, no collect."""
-    import numpy as np
-    import pandas as pd
-
     C = np.array(cents, dtype=np.float64).T  # (dim, n_cells)
-    src = df.select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
-    )
-    id_t = df.schema[id_col].dataType.simpleString()
     if role == "assign":
-        schema = f"neighbor_id {id_t}, cell long"
+        schema = "neighbor_id {id_t}, cell long"
 
-        def tag(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": pdf["_id"].to_numpy(),
-                        "cell": (V @ C).argmax(axis=1),
-                    }
-                )
+        def tag(pdf, V):
+            return {
+                "neighbor_id": pdf["_id"].to_numpy(),
+                "cell": (V @ C).argmax(axis=1),
+            }
 
     elif role == "corpus":
-        schema = f"neighbor_id {id_t}, _cv array<double>, _cn double, cell long"
+        schema = "neighbor_id {id_t}, _cv array<double>, _cn double, cell long"
 
-        def tag(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": pdf["_id"].to_numpy(),
-                        "_cv": pdf["_v"],
-                        "_cn": np.sqrt((V * V).sum(axis=1)),
-                        "cell": (V @ C).argmax(axis=1),
-                    }
-                )
+        def tag(pdf, V):
+            return {
+                "neighbor_id": pdf["_id"].to_numpy(),
+                "_cv": pdf["_v"],
+                "_cn": np.sqrt((V * V).sum(axis=1)),
+                "cell": (V @ C).argmax(axis=1),
+            }
 
     else:
-        schema = f"query_id {id_t}, _qv array<double>, _qn double, cell long"
+        schema = "query_id {id_t}, _qv array<double>, _qn double, cell long"
 
-        def tag(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                probes = np.argsort(-(V @ C), axis=1, kind="stable")[:, :n_probe]
-                n = len(pdf)
-                idx = np.repeat(np.arange(n), n_probe)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["_id"].to_numpy()[idx],
-                        "_qv": pdf["_v"].to_numpy()[idx],
-                        "_qn": np.sqrt((V * V).sum(axis=1))[idx],
-                        "cell": probes.reshape(-1),
-                    }
-                )
+        def tag(pdf, V):
+            probes = np.argsort(-(V @ C), axis=1, kind="stable")[:, :n_probe]
+            idx = np.repeat(np.arange(len(pdf)), probes.shape[1])
+            return {
+                "query_id": pdf["_id"].to_numpy()[idx],
+                "_qv": pdf["_v"].to_numpy()[idx],
+                "_qn": np.sqrt((V * V).sum(axis=1))[idx],
+                "cell": probes.reshape(-1),
+            }
 
-    return src.mapInPandas(tag, schema)
+    return _map_vectors(df, vec_col, id_col, schema, tag)
 
 
 def ivf_cosine_topk(
@@ -532,13 +561,11 @@ def _lloyd(X, k: int, iters: int):
     ``k`` rows, empty clusters re-seed from the worst-quantized points
     (farthest-point heuristic), ties to the lowest index — no RNG, so
     the trained model is bit-replayable. Returns a (k, dim) ndarray."""
-    import numpy as np
-
     C = X[: min(k, len(X))].copy()
     if len(C) < k:  # tiny corpus: pad by repeating
         C = np.resize(C, (k, X.shape[1]))
     for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        d = _sq_dists(X, C)
         assign = d.argmin(axis=1)
         errs = d[np.arange(len(X)), assign]
         order = np.argsort(-errs, kind="stable")  # worst-fit first
@@ -583,8 +610,6 @@ def _sample_normalized(
 
     Cost shape identical either way: a global top-``train_rows``
     (TakeOrdered), one bounded collect."""
-    import numpy as np
-
     if sample_order not in ("id", "hash"):
         raise ValueError(f"sample_order must be 'id' or 'hash', got {sample_order!r}")
     order = (
@@ -600,12 +625,9 @@ def _sample_normalized(
     )
     if not sample:
         raise ValueError("empty corpus")
-    V = np.array(
-        [[float(x) for x in r[vec_col]] for r in sample], dtype=np.float64
+    return _unit_rows(
+        np.array([[float(x) for x in r[vec_col]] for r in sample], dtype=np.float64)
     )
-    norms = np.sqrt((V * V).sum(axis=1, keepdims=True))
-    norms[norms == 0] = 1.0
-    return V / norms
 
 
 def _pq_codebooks(
@@ -617,7 +639,7 @@ def _pq_codebooks(
     n_codes: int,
     train_rows: int = 256,
     iters: int = 10,
-) -> list[list[list[float]]]:
+) -> list:
     """Per-subspace codebooks: deterministic Lloyd k-means over a
     bounded corpus sample, driver-side.
 
@@ -636,23 +658,21 @@ def _pq_codebooks(
     the worst-quantized points (farthest-point heuristic), ties resolve
     to the lowest index, so the model is bit-replayable. At 100 TB this
     stays a ~256-row collect; MLlib KMeans per subspace is the drop-in
-    when the training sample itself must be distributed."""
+    when the training sample itself must be distributed. Returns ``m``
+    (n_codes, dim/m) float64 arrays."""
     V = _sample_normalized(corpus, vec_col, id_col, train_rows)
     dim = V.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
-    return [
-        [list(map(float, row)) for row in _lloyd(V[:, s * sub : (s + 1) * sub], n_codes, iters)]
-        for s in range(m)
-    ]
+    return [_lloyd(V[:, s * sub : (s + 1) * sub], n_codes, iters) for s in range(m)]
 
 
 def _pq_encode_arrow(
     corpus: DataFrame,
     vec_col: str,
     id_col: str,
-    books: list[list[list[float]]],
+    books: list,
 ) -> DataFrame:
     """Encode every corpus vector to its ``m`` nearest-codeword ids in
     one Arrow pass: per subspace one (batch × n_codes) distance matmul,
@@ -660,38 +680,15 @@ def _pq_encode_arrow(
     (neighbor_id, codes array<int>), 8 small ints instead of 64 doubles,
     which is the entire point of PQ at 100 TB: the ADC scan streams
     codes at ~1/30th the bytes of raw vectors."""
-    import numpy as np
-    import pandas as pd
+    def enc(pdf, V):
+        return {
+            "neighbor_id": pdf["_id"].to_numpy(),
+            "codes": list(_pq_codes(_unit_rows(V), books)),
+        }
 
-    B = [np.array(b, dtype=np.float64) for b in books]  # m × (n_codes, sub)
-    m = len(B)
-    sub = B[0].shape[1]
-    src = corpus.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
-    id_t = corpus.schema[id_col].dataType.simpleString()
-
-    def enc(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            norms = np.sqrt((V * V).sum(axis=1, keepdims=True))
-            norms[norms == 0] = 1.0
-            V = V / norms
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                Vs = V[:, s * sub : (s + 1) * sub]
-                # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant per
-                # row for the argmin, so only the cross and codeword terms
-                d = (B[s] * B[s]).sum(axis=1)[None, :] - 2.0 * (Vs @ B[s].T)
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["_id"].to_numpy(),
-                    "codes": list(codes),
-                }
-            )
-
-    return src.mapInPandas(enc, f"neighbor_id {id_t}, codes array<int>")
+    return _map_vectors(
+        corpus, vec_col, id_col, "neighbor_id {id_t}, codes array<int>", enc
+    )
 
 
 def pq_cosine_topk(
@@ -728,7 +725,6 @@ def pq_cosine_topk(
     codebooks here are the deterministic sampled kind (see
     ``_pq_codebooks``) so results are replay-stable with no RNG."""
     books = _pq_codebooks(corpus, vec_col, id_col, m=m, n_codes=n_codes)
-    sub = len(books[0][0])
     enc = _pq_encode_arrow(_spread(corpus, id_col), vec_col, id_col, books)
 
     # query side: normalize, then build the flattened ADC table
@@ -738,41 +734,17 @@ def pq_cosine_topk(
     # here) and pays seconds of analysis/codegen before any row moves —
     # measured 21 s → 3 s for the whole query by keeping the plan
     # constant-size, same trade ``_ivf_tag_arrow`` documents.
-    import numpy as np
-    import pandas as pd
+    def qtab_gen(pdf, V):
+        V = _unit_rows(V)
+        return {
+            "query_id": pdf["_id"].to_numpy(),
+            "_qv": list(V),
+            "_tab": list(_adc_tables(V, books)),
+        }
 
-    Bs = [np.array(b, dtype=np.float64) for b in books]
-    id_t = queries.schema[id_col].dataType.simpleString()
-    qsrc = queries.select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
-    )
-
-    def qtab_gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            norms = np.sqrt((V * V).sum(axis=1, keepdims=True))
-            norms[norms == 0] = 1.0
-            V = V / norms
-            tabs = np.concatenate(
-                [
-                    ((V[:, s * sub : (s + 1) * sub][:, None, :] - Bs[s][None, :, :]) ** 2).sum(axis=2)
-                    for s in range(m)
-                ],
-                axis=1,
-            )  # (batch, m * n_codes)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["_id"].to_numpy(),
-                    "_qv": list(V),
-                    "_tab": list(tabs),
-                }
-            )
-
-    qtab = qsrc.mapInPandas(
-        qtab_gen,
-        f"query_id {id_t}, _qv array<double>, _tab array<double>",
+    qtab = _map_vectors(
+        queries, vec_col, id_col,
+        "query_id {id_t}, _qv array<double>, _tab array<double>", qtab_gen,
     )
 
     # ADC scan: m element_at lookups per (query, corpus) pair.
@@ -879,8 +851,7 @@ def _ivfpq_train_model(
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
     C = _lloyd(V, n_cells, iters)  # coarse centroids (n_cells, dim)
-    d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    R = V - C[d2.argmin(axis=1)]
+    R = V - C[_sq_dists(V, C).argmin(axis=1)]
     books = [
         _lloyd(R[:, s * sub : (s + 1) * sub], n_codes, iters)
         for s in range(m)
@@ -896,43 +867,22 @@ def _ivfpq_encode(
     array<int>). Narrow map — the model rides the closure; output is
     ~m bytes of codes instead of 4·dim of floats, which is the PQ
     bandwidth win at 100 TB."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(books)
-    sub = books[0].shape[1] if hasattr(books[0], "shape") else len(books[0][0])
     B = [np.asarray(b, dtype=np.float64) for b in books]
     Cm = np.asarray(C, dtype=np.float64)
-    id_t = corpus.schema[id_col].dataType.simpleString()
 
-    def enc_gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            norms = np.sqrt((X * X).sum(axis=1, keepdims=True))
-            norms[norms == 0] = 1.0
-            X = X / norms
-            cells = (
-                ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-            )
-            Rx = X - Cm[cells]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                Rs = Rx[:, s * sub : (s + 1) * sub]
-                d = (B[s] * B[s]).sum(axis=1)[None, :] - 2.0 * (Rs @ B[s].T)
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["_id"].to_numpy(),
-                    "cell": cells.astype(np.int64),
-                    "codes": list(codes),
-                }
-            )
+    def enc_gen(pdf, V):
+        X = _unit_rows(V)
+        cells = _sq_dists(X, Cm).argmin(axis=1)
+        return {
+            "neighbor_id": pdf["_id"].to_numpy(),
+            "cell": cells.astype(np.int64),
+            "codes": list(_pq_codes(X - Cm[cells], B)),
+        }
 
-    return _spread(corpus, id_col).select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
-    ).mapInPandas(enc_gen, f"neighbor_id {id_t}, cell long, codes array<int>")
+    return _map_vectors(
+        _spread(corpus, id_col), vec_col, id_col,
+        "neighbor_id {id_t}, cell long, codes array<int>", enc_gen,
+    )
 
 
 def _ivfpq_query_tables(
@@ -942,56 +892,27 @@ def _ivfpq_query_tables(
     ``n_probe`` nearest coarse cells and precomputes the per-(query,
     cell) ADC lookup table on its residual IN that cell — (query_id,
     cell, _qv unit-norm vector, _tab m·n_codes distances)."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(books)
     B = [np.asarray(b, dtype=np.float64) for b in books]
-    sub = B[0].shape[1]
     Cm = np.asarray(C, dtype=np.float64)
-    id_t = queries.schema[id_col].dataType.simpleString()
 
-    def qtab_gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            norms = np.sqrt((X * X).sum(axis=1, keepdims=True))
-            norms[norms == 0] = 1.0
-            X = X / norms
-            dcell = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
-            probes = np.argsort(dcell, axis=1, kind="stable")[:, :n_probe]
-            out_id, out_cell, out_qv, out_tab = [], [], [], []
-            for i in range(len(pdf)):
-                for cell in probes[i]:
-                    r = X[i] - Cm[cell]  # query residual IN this cell
-                    tab = np.concatenate(
-                        [
-                            (
-                                (r[s * sub : (s + 1) * sub][None, :] - B[s])
-                                ** 2
-                            ).sum(axis=1)
-                            for s in range(m)
-                        ]
-                    )
-                    out_id.append(pdf["_id"].iloc[i])
-                    out_cell.append(int(cell))
-                    out_qv.append(X[i])
-                    out_tab.append(tab)
-            yield pd.DataFrame(
-                {
-                    "query_id": out_id,
-                    "cell": out_cell,
-                    "_qv": out_qv,
-                    "_tab": out_tab,
-                }
-            )
+    def qtab_gen(pdf, V):
+        X = _unit_rows(V)
+        dcell = _sq_dists(X, Cm)
+        probes = np.argsort(dcell, axis=1, kind="stable")[:, :n_probe]
+        idx = np.repeat(np.arange(len(X)), probes.shape[1])
+        cells = probes.reshape(-1)
+        return {
+            "query_id": pdf["_id"].to_numpy()[idx],
+            "cell": cells,
+            "_qv": list(X[idx]),
+            # each query's residual IN each probed cell
+            "_tab": list(_adc_tables(X[idx] - Cm[cells], B)),
+        }
 
-    return queries.select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
-    ).mapInPandas(
+    return _map_vectors(
+        queries, vec_col, id_col,
+        "query_id {id_t}, cell long, _qv array<double>, _tab array<double>",
         qtab_gen,
-        f"query_id {id_t}, cell long, _qv array<double>, _tab array<double>",
     )
 
 
@@ -1316,8 +1237,6 @@ def ivfpq_read_model(spark, path: str, *, use_cache: bool = True):
     already does — encode/audit copy before mutating). Self-heals a
     crashed writer's interrupted swap first
     (:func:`_maybe_heal_for_read`)."""
-    import numpy as np
-
     _maybe_heal_for_read(spark, path)
     fp = _model_fingerprint(spark, path) if use_cache else None
     if use_cache:
@@ -2539,9 +2458,6 @@ def ivfpq_drift_audit(
     maintainer price a drift check per micro-batch."""
     if scope not in ("index", "corpus"):
         raise ValueError(f"scope must be 'index' or 'corpus', got {scope!r}")
-    import numpy as np
-    import pandas as pd
-
     C, books, meta = ivfpq_read_model(spark, path)
     m, sub = meta["m"], meta["dim"] // meta["m"]
     B = [np.asarray(b, dtype=np.float64) for b in books]
@@ -2584,12 +2500,10 @@ def ivfpq_drift_audit(
             ).to_numpy()
             qerr = np.zeros(len(pdf), dtype=np.int64)
             if matched.any():
-                X = np.stack(pdf["_v"].to_numpy()[matched]).astype(
-                    np.float64
+                # the encode normalizes; the audit must too
+                X = _unit_rows(
+                    np.stack(pdf["_v"].to_numpy()[matched]).astype(np.float64)
                 )
-                norms = np.sqrt((X * X).sum(axis=1, keepdims=True))
-                norms[norms == 0] = 1.0
-                X = X / norms  # the encode normalizes; the audit must too
                 mc = cells[matched]
                 codes_m = np.stack(
                     pdf["codes"].to_numpy()[matched]
@@ -2900,16 +2814,12 @@ def semantic_dedup(
             init_mode="random", fit_sample_rows=None,
         )
     else:
-        import numpy as np
-
         V = _sample_normalized(
             df, vec_col, id_col, max(fit_sample_rows, 32 * k),
             sample_order="hash",
         )
-        C = np.asarray(_lloyd(V, k, 10), dtype=np.float64)
-        norms = np.sqrt((C * C).sum(axis=1, keepdims=True))
-        norms[norms == 0] = 1.0
-        cents = [list(map(float, row)) for row in C / norms]
+        C = _unit_rows(np.asarray(_lloyd(V, k, 10), dtype=np.float64))
+        cents = [list(map(float, row)) for row in C]
         assign = _ivf_tag_arrow(
             df, vec_col, id_col, cents, role="assign"
         ).select(
@@ -3047,8 +2957,6 @@ def crossencoder_rerank_topk(
     depth), independent of corpus size — the whole point of the
     two-stage architecture. Output: (query_id, neighbor_id, ce_score
     rounded to 6dp, rank)."""
-    import numpy as np
-
     qv = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
     )

@@ -396,3 +396,40 @@ def test_wav_empty_sample_stream(spark):
     )
     (r,) = mm.decode_audio(df, strict=True).collect()
     assert (r.n_samples, r.duration_ms, r.rms, r.zero_crossings) == (0, 0, 0.0, 0)
+
+
+def test_media_decoders_empty_frame(spark):
+    """An empty media frame decodes to zero rows with each decoder's
+    declared schema."""
+    from sentiment_analysis_data_engineering_spark.operators import multimodal as mm
+
+    media = spark.createDataFrame(
+        [(1, bytearray(b"x"))], "media_id long, content binary"
+    ).filter(F.col("media_id") < 0)
+    for decode, cols in (
+        (mm.decode_image, ["media_id", "height", "width", "mean_px"]),
+        (mm.decode_audio, ["media_id", "sample_rate", "n_samples",
+                           "duration_ms", "rms", "zero_crossings"]),
+        (mm.decode_video_frames, ["media_id", "frame_idx", "height",
+                                  "width", "mean_px"]),
+    ):
+        out = decode(media)
+        assert out.columns == cols
+        assert out.collect() == []
+
+
+def test_ann_empty_query_frame(spark):
+    """An empty query frame yields zero neighbours, not an error."""
+    from sentiment_analysis_data_engineering_spark.operators import similarity as sim
+
+    corpus = spark.createDataFrame(
+        [(i, [float((i * j) % 5 - 2) for j in range(8)]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = corpus.filter(F.col("vec_id") < 0)
+    for out in (
+        sim.ivf_cosine_topk(queries, corpus, k=3, n_centroids=4, n_probe=2),
+        sim.pq_cosine_topk(queries, corpus, k=3, m=4, n_codes=4, n_rerank=8),
+    ):
+        assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+        assert out.collect() == []

@@ -43,45 +43,6 @@ def test_decode_image_strict_raises(media):
     assert "NotImplementedError" in str(exc.value) or "codecs" in str(exc.value)
 
 
-def test_extract_features_shape(media):
-    out = mm.extract_features(media, dim=16).collect()
-    assert len(out) == 10
-    assert all(len(r.features) == 16 for r in out)
-    assert all(all(0.0 <= v <= 1.0 for v in r.features) for r in out)
-
-
-def test_sample_frames_schedule(spark):
-    rows = [(1, "video", b"x", ("video/mp4", None, None, 3500, "h264"))]
-    schema = ("media_id long, kind string, content binary, "
-              "meta struct<mime:string,width:int,height:int,duration_ms:long,codec:string>")
-    df = spark.createDataFrame(rows, schema)
-    out = mm.sample_frames(df, every_ms=1000).collect()
-    assert [r.frame_ts_ms for r in out] == [0, 1000, 2000, 3000]
-
-
-def test_resize_image_shape_and_determinism(spark, media):
-    from sentiment_analysis_data_engineering_spark.operators import multimodal as mm
-
-    out = mm.resize_image(media, height=4, width=4)
-    rows = out.collect()
-    assert all(len(r.pixels) == 16 for r in rows)
-    assert all(r.height == 4 and r.width == 4 for r in rows)
-    again = {r.media_id: r.pixels for r in mm.resize_image(media, height=4, width=4).collect()}
-    assert {r.media_id: r.pixels for r in rows} == again
-    # resized pixels are a subsample of the decoded grid's value range
-    assert all(0.0 <= p <= 1.0 for r in rows for p in r.pixels)
-
-
-def test_resize_image_strict_raises(spark, media):
-    import pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import PythonException
-    from sentiment_analysis_data_engineering_spark.operators import multimodal as mm
-
-    with pytest.raises((PythonException, Py4JJavaError)):
-        mm.resize_image(media, strict=True).collect()
-
-
 # --------------------------------------------------------------------------
 # Real BMP decode (round 2): dependency-free 24-bit BI_RGB codec
 # --------------------------------------------------------------------------
@@ -134,24 +95,6 @@ def test_decode_image_non_bmp_still_strict_raises(media):
     with pytest.raises(Exception) as exc:
         mm.decode_image(media, strict=True).collect()
     assert "NotImplementedError" in str(exc.value) or "BMP" in str(exc.value)
-
-
-def test_resize_real_bmp_grayscale_subsample(spark):
-    import numpy as np
-
-    ids = spark.createDataFrame([(3,)], "media_id long")
-    media = mm.attach_media_metadata(
-        mm.synthesize_bmp_media(ids), kind="image", mime="image/bmp"
-    )
-    (row,) = mm.resize_image(media, height=2, width=2, strict=True).collect()
-    w, h = 8 + 3 % 9, 8 + 3 % 7
-    n = w * h * 3
-    full = (np.array([(3 * 31 + j) % 256 for j in range(n)])
-            .reshape(h, w, 3) / 255.0).mean(axis=2)
-    ys = np.linspace(0, h - 1, 2).round().astype(int)
-    xs = np.linspace(0, w - 1, 2).round().astype(int)
-    expect = full[np.ix_(ys, xs)].ravel()
-    assert np.allclose(row.pixels, expect, atol=1e-6)
 
 
 # ---------------------------------------------------------------------------
@@ -251,6 +194,16 @@ def test_decode_video_frames_samples_every_nth(spark):
         assert sorted(idxs) == list(range(0, n_frames, 2))
         w, h = 8 + mid % 5, 8 + mid % 3
         assert all(r.width == w and r.height == h for r in rows if r.media_id == mid)
+
+
+def test_decode_video_frames_rejects_every_n_below_one(spark):
+    """A sampling step below 1 is refused when the frame is built,
+    before any job runs: 0 would fail inside the executor and a negative
+    step would silently sample nothing."""
+    media = spark.createDataFrame([], "media_id long, content binary")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="every_n"):
+            mm.decode_video_frames(media, every_n=bad)
 
 
 def test_decode_video_strict_raises_on_compressed(spark):

@@ -168,6 +168,8 @@ def test_lsh_ivf_engines_agree(spark):
     for fn, kw in (
         (sim.lsh_cosine_topk, dict(k=3, num_planes=12, bands=6, dim=64)),
         (sim.ivf_cosine_topk, dict(k=3, n_centroids=8, n_probe=3)),
+        # more probes than cells: each query probes every cell
+        (sim.ivf_cosine_topk, dict(k=3, n_centroids=2, n_probe=4)),
     ):
         a = fn(q, emb, vec_col="embedding", id_col="vec_id", engine="arrow", **kw)
         s = fn(q, emb, vec_col="embedding", id_col="vec_id", engine="sql", **kw)
