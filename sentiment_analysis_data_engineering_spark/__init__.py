@@ -22,8 +22,8 @@ Layout
                  similarity search, text analysis, multimodal plumbing.
 - ``plans``      The reference's eight pipeline tasks re-expressed as lazy
                  single-plan Spark jobs, plus analytical star-schema queries.
-- ``streaming``  Structured Streaming over the events table: watermarks,
-                 tumbling/sliding/session windows, stateful dedup.
+- ``streaming``  Structured Streaming maintenance of a persisted IVF-PQ
+                 index: foreachBatch merge, auto-compaction, auto-retrain.
 
 Everything here derives from public knowledge only: the Apache Spark API,
 the reference repo, and published papers (MinHash/LSH, SimHash).

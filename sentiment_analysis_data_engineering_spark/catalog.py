@@ -89,8 +89,14 @@ def alter_table_add_columns(
 
 def list_tables(spark: SparkSession, database: str) -> list[str]:
     """S9 — dataset listing (``BigQueryGetDatasetTablesOperator``,
-    ``daily_dag.py:17``, imported-but-unused)."""
-    return [r.tableName for r in spark.sql(f"SHOW TABLES IN {database}").collect()]
+    ``daily_dag.py:17``, imported-but-unused). ``SHOW TABLES IN db``
+    also lists the session's temporary views; they are not tables of
+    the database and are dropped here."""
+    return [
+        r.tableName
+        for r in spark.sql(f"SHOW TABLES IN {database}").collect()
+        if not r.isTemporary
+    ]
 
 
 def create_warehouse(spark: SparkSession, database: str = "warehouse") -> None:

@@ -128,7 +128,7 @@ def register_pinned(df: DataFrame) -> DataFrame:
     deterministically. The checkpoint-heavy index operators
     (operators/similarity.py) route their returned pinned frames here —
     without registration a long-lived session (oracle sweeps, the
-    streaming merge twin) would leave block-manager cleanup to
+    streaming index maintainer) would leave block-manager cleanup to
     nondeterministic GC.
 
     CAVEAT the caller owns: a ``localCheckpoint`` has its lineage

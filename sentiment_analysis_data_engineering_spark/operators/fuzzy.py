@@ -19,55 +19,10 @@ stable token as used by the registered query). Within-block cost is
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["fuzzy_match_pairs", "jaro_winkler_pairs"]
-
-
-def _blocked_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    block_col: Column,
-    max_block_size: int,
-) -> DataFrame:
-    """Shared blocking scaffolding for every matcher in this module:
-    project (id, text, block) once, drop oversized blocks BEFORE
-    pairing (window count, no collect), self-equi-join on the block
-    key with id_a < id_b. Returns (id_a, id_b, text_a, text_b)."""
-    from pyspark.sql import Window
-
-    keyed = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_text"),
-        block_col.alias("_block"),
-    )
-    guarded = (
-        keyed.withColumn(
-            "_bn", F.count("*").over(Window.partitionBy("_block"))
-        )
-        .filter(F.col("_bn") <= max_block_size)
-        .drop("_bn")
-    )
-    a = guarded.select(
-        F.col("_id").alias("id_a"),
-        F.col("_text").alias("text_a"),
-        F.col("_block").alias("_block"),
-    )
-    b = guarded.select(
-        F.col("_id").alias("id_b"),
-        F.col("_text").alias("text_b"),
-        F.col("_block").alias("_block_b"),
-    )
-    return (
-        a.join(b, (F.col("_block") == F.col("_block_b"))
-               & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b", "text_a", "text_b")
-    )
-
+__all__ = ["fuzzy_match_pairs"]
 
 
 def fuzzy_match_pairs(
@@ -92,98 +47,30 @@ def fuzzy_match_pairs(
 
     Returns ``id_a, id_b, text_a, text_b, distance``.
     """
+    keyed = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(text_col).alias("_text"),
+        block_col.alias("_block"),
+    )
+    guarded = (
+        keyed.withColumn("_bn", F.count("*").over(Window.partitionBy("_block")))
+        .filter(F.col("_bn") <= max_block_size)
+        .drop("_bn")
+    )
+    a = guarded.select(
+        F.col("_id").alias("id_a"),
+        F.col("_text").alias("text_a"),
+        F.col("_block").alias("_block"),
+    )
+    b = guarded.select(
+        F.col("_id").alias("id_b"),
+        F.col("_text").alias("text_b"),
+        F.col("_block").alias("_block_b"),
+    )
     return (
-        _blocked_candidate_pairs(
-            df, text_col, id_col,
-            block_col=block_col, max_block_size=max_block_size,
-        )
+        a.join(b, (F.col("_block") == F.col("_block_b"))
+               & (F.col("id_a") < F.col("id_b")))
+        .select("id_a", "id_b", "text_a", "text_b")
         .withColumn("distance", F.levenshtein("text_a", "text_b"))
         .filter(F.col("distance") <= max_distance)
-    )
-
-
-def _jaro_winkler(s1: str, s2: str) -> float:
-    """Textbook Jaro-Winkler similarity (prefix scale 0.1, boost
-    threshold 0.7), matching DuckDB's ``jaro_winkler_similarity``
-    bit-for-bit on every probe the tests throw at both — including the
-    convention that ANY empty side scores 0.0 (even "" vs "")."""
-    l1, l2 = len(s1), len(s2)
-    if not l1 or not l2:
-        return 0.0
-    if s1 == s2:
-        return 1.0
-    window = max(l1, l2) // 2 - 1
-    if window < 0:
-        window = 0
-    m1 = [False] * l1
-    m2 = [False] * l2
-    m = 0
-    for i, c in enumerate(s1):
-        lo, hi = max(0, i - window), min(l2, i + window + 1)
-        for j in range(lo, hi):
-            if not m2[j] and s2[j] == c:
-                m1[i] = m2[j] = True
-                m += 1
-                break
-    if m == 0:
-        return 0.0
-    t = 0
-    k = 0
-    for i in range(l1):
-        if m1[i]:
-            while not m2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                t += 1
-            k += 1
-    t //= 2
-    j = (m / l1 + m / l2 + (m - t) / m) / 3.0
-    if j > 0.7:
-        l = 0
-        for a, b in zip(s1[:4], s2[:4]):
-            if a != b:
-                break
-            l += 1
-        j = j + l * 0.1 * (1.0 - j)
-    return j
-
-
-def jaro_winkler_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    block_col: Column,
-    min_similarity: float,
-    max_block_size: int = 1000,
-) -> DataFrame:
-    """All (id_a < id_b) in-block pairs with Jaro-Winkler similarity ≥
-    ``min_similarity`` — the name-matching refinement record linkage
-    uses where Levenshtein over-penalizes transpositions and length
-    (Winkler's census lineage; public algorithm).
-
-    Same blocked shape as :func:`fuzzy_match_pairs` (equi-join on the
-    block key, oversized blocks dropped BEFORE pairing). Spark has no
-    built-in Jaro-Winkler, so the refine step is an Arrow-batched
-    pandas UDF over the CANDIDATE pairs only — Python cost is
-    Σ|block|² comparisons, bounded by the block guard, never corpus².
-
-    Returns ``id_a, id_b, text_a, text_b, similarity`` (round before
-    hashing across engines).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def jw(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_jaro_winkler(x or "", y or "") for x, y in zip(a, b)]
-        )
-
-    return (
-        _blocked_candidate_pairs(
-            df, text_col, id_col,
-            block_col=block_col, max_block_size=max_block_size,
-        )
-        .withColumn("similarity", jw(F.col("text_a"), F.col("text_b")))
-        .filter(F.col("similarity") >= min_similarity)
     )

@@ -29,12 +29,9 @@ from ..sources.io import replace_partition, scan_or_none
 
 __all__ = [
     "merge_rollup",
-    "distinct_sketch",
-    "merged_distinct_estimate",
     "snapshot_diff",
     "scd2_apply",
     "merge_join_view",
-    "sketch_intersection_estimate",
 ]
 
 #: measure name → (partial expr builder, merge expr builder)
@@ -106,44 +103,6 @@ def merge_rollup(
         )
 
     replace_partition(spark, merged, target, [partition_col])
-
-
-def distinct_sketch(
-    df: DataFrame, col: str, *, by: list[str] | None = None, lg_k: int = 12
-) -> DataFrame:
-    """Mergeable distinct-count sketch (Datasketches HLL via Spark's
-    ``hll_sketch_agg``): one binary sketch per group — the persistable
-    form of a distinct count. Store it next to each batch/partition;
-    :func:`merged_distinct_estimate` unions sketches later WITHOUT
-    touching the underlying rows. That turns "distinct users ever" —
-    normally a full-history re-scan per refresh at 100 TB — into a
-    merge over kilobyte sketches, the same maintenance shape as
-    merge_rollup's partial aggregates.
-
-    The sketch is deterministic for fixed input, so piecewise-built
-    unions estimate EXACTLY what a whole-corpus sketch estimates
-    (pytest-pinned), and estimates carry HLL's standard ~1.6%/sqrt(2^
-    (lg_k-12)) relative error versus the true distinct count."""
-    keys = [F.col(k) for k in (by or [])]
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(col, F.lit(lg_k)).alias("sketch")
-    )
-
-
-def merged_distinct_estimate(
-    sketches: DataFrame, *, by: list[str] | None = None
-) -> DataFrame:
-    """Union previously-stored sketches (per group if ``by`` given) and
-    return the distinct estimate — rows never re-read."""
-    keys = [F.col(k) for k in (by or [])]
-    return (
-        sketches.groupBy(*keys)
-        .agg(F.hll_union_agg("sketch").alias("_u"))
-        .select(
-            *(by or []),
-            F.hll_sketch_estimate("_u").alias("n_distinct_est"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -237,12 +196,11 @@ def scd2_apply(
     - ``history`` holds one row per (key, version): ``tracked`` value
       columns plus ``valid_from``/``valid_to`` (string timestamps,
       ``valid_to`` NULL = open version) and ``is_current``;
-    - ``changes`` holds AT MOST one row per key (raises otherwise —
-      same validate-and-raise stance as ``sources/io.py::merge_upsert``)
-      with the new tracked values; the check is one eager Spark job, so
-      callers whose batch is unique BY CONSTRUCTION (e.g. the output of
-      a ``groupBy(keys)`` — the streaming sink's collapse) pass
-      ``assume_unique_keys=True`` to skip recomputing the batch;
+    - ``changes`` holds AT MOST one row per key (raises otherwise)
+      with the new tracked values; the check is one eager Spark job,
+      so callers whose batch is unique BY CONSTRUCTION (e.g. the
+      output of a ``groupBy(keys)``) pass ``assume_unique_keys=True``
+      to skip recomputing the batch;
     - a NULL ``is_current`` is treated as False (a closed historical
       row passes through untouched) — never silently dropped;
     - a change row whose tracked values differ (null-safely) from the
@@ -422,39 +380,3 @@ def merge_join_view(
     install(left_delta, left_path)
     if rd is not None:
         install(rd, right_path)
-
-
-def sketch_intersection_estimate(
-    sketches_a: DataFrame, sketches_b: DataFrame
-) -> DataFrame:
-    """Estimate |A ∩ B| from two stored HLL sketch frames WITHOUT
-    re-reading rows: inclusion-exclusion over mergeable sketches
-    (|A∩B| = |A| + |B| - |A∪B|, the standard HLL composition — union
-    is exact sketch algebra, intersection inherits ~3× the union's
-    relative error, so treat small intersections as noisy).
-
-    One row out: (n_a, n_b, n_union, n_intersection_est). The overlap
-    question ("how many users did BOTH campaigns touch this year")
-    normally costs two full scans + a join; against stored per-batch
-    sketches it costs kilobytes.
-    """
-    ua = sketches_a.agg(F.hll_union_agg("sketch").alias("_ua"))
-    ub = sketches_b.agg(F.hll_union_agg("sketch").alias("_ub"))
-    return (
-        ua.crossJoin(F.broadcast(ub))
-        .select(
-            F.hll_sketch_estimate("_ua").alias("n_a"),
-            F.hll_sketch_estimate("_ub").alias("n_b"),
-            F.hll_sketch_estimate(
-                F.hll_union("_ua", "_ub")
-            ).alias("n_union"),
-        )
-        .select(
-            "n_a",
-            "n_b",
-            "n_union",
-            F.greatest(
-                F.col("n_a") + F.col("n_b") - F.col("n_union"), F.lit(0)
-            ).alias("n_intersection_est"),
-        )
-    )

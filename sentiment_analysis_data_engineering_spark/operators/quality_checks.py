@@ -31,8 +31,6 @@ __all__ = [
     "orphan_count",
     "range_violations",
     "quality_summary",
-    "with_observed_gate",
-    "quarantine_split_write",
 ]
 
 
@@ -135,73 +133,3 @@ def quality_summary(parts: dict[str, DataFrame]) -> DataFrame:
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-def with_observed_gate(df: DataFrame, checks: dict[str, "Column"]):
-    """Attach violation counters to the frame itself via
-    ``DataFrame.observe`` — the metrics are computed DURING whatever
-    action the caller already runs (typically the write), so the gate
-    costs ZERO extra scans; the aggregate gates above each cost one.
-    This is how a 100 TB load validates itself: write once, read the
-    observation, quarantine the batch if a counter is non-zero.
-
-    ``checks`` maps name → predicate that must HOLD (nulls violate).
-    Returns ``(df, observation)``; call ``observation.get`` AFTER an
-    action has run on the returned frame. Each Observation is
-    single-use — attach a fresh one per action.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    exprs = [
-        F.count_if(~F.coalesce(pred, F.lit(False))).alias(name)
-        for name, pred in checks.items()
-    ]
-    exprs.append(F.count(F.lit(1)).alias("n_rows"))
-    return df.observe(obs, *exprs), obs
-
-
-def quarantine_split_write(
-    df: DataFrame,
-    path: str,
-    checks: dict[str, "Column"],
-    *,
-    partition_by: list[str] | None = None,
-) -> dict[str, int]:
-    """ONE-pass validate-and-split load: rows failing any check land in
-    the ``_quarantined=true`` partition, clean rows in
-    ``_quarantined=false`` — a single scan and a single write (the
-    split rides dynamic partitioning; no second pass over 100 TB to
-    separate the failures), with violation counts observed during that
-    same write. Readers point at ``path/_quarantined=false``; the
-    quarantine partition keeps the bad rows inspectable instead of
-    dropped.
-
-    Returns the observed counters: one per check plus ``n_rows`` and
-    ``n_quarantined``.
-    """
-    from pyspark.sql import Observation
-
-    ok = F.lit(True)
-    for pred in checks.values():
-        ok = ok & F.coalesce(pred, F.lit(False))
-    tagged = df.withColumn("_quarantined", ~ok)
-    obs = Observation()
-    exprs = [
-        F.count_if(~F.coalesce(pred, F.lit(False))).alias(name)
-        for name, pred in checks.items()
-    ]
-    exprs.append(F.count(F.lit(1)).alias("n_rows"))
-    exprs.append(F.count_if(F.col("_quarantined")).alias("n_quarantined"))
-    (
-        tagged.observe(obs, *exprs)
-        .write.mode("overwrite")
-        # force STATIC overwrite per-write: under a session with
-        # dynamic partition overwrite, a clean re-load would leave the
-        # previous run's _quarantined=true partition on disk while the
-        # returned counters claim zero quarantined rows
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(*(["_quarantined"] + (partition_by or [])))
-        .parquet(path)
-    )
-    return dict(obs.get)

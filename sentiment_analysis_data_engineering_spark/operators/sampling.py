@@ -29,7 +29,6 @@ __all__ = [
     "stratified_hash_sample",
     "mixture_weighted_sample",
     "epoch_shuffle",
-    "write_epoch_shards",
 ]
 
 _BUCKETS = 10_000
@@ -232,61 +231,3 @@ def epoch_shuffle(
     return df.withColumn("shuffle_pos", pos).withColumn(
         "shard", F.pmod(F.col("shuffle_pos"), F.lit(n_shards)).cast("int")
     )
-
-
-def write_epoch_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    *,
-    epoch: int,
-    n_shards: int,
-    modulus: int = _SHUFFLE_MOD,
-    hash_ids: bool = False,
-) -> dict:
-    """Materialize one training epoch as sharded, order-ready parquet —
-    the write `epoch_shuffle`'s docstring promises, performed with the
-    ONE exchange any sharded write needs: ``repartition(n_shards,
-    shard)`` clusters each shard's rows into a task,
-    ``sortWithinPartitions(shard, shuffle_pos, id)`` lays them down in
-    epoch order (the ``(pos, id)`` tie-break makes the order total
-    even under ``hash_ids`` collisions; ``shard`` LEADS the sort so it
-    satisfies the partitioned writer's required ordering — otherwise
-    FileFormatWriter inserts its own local sort on the partition
-    column alone and scrambles the epoch order), and
-    ``partitionBy("shard")`` splits directories so a training loader
-    reads exactly ``shard=K/`` for rank K — no cross-shard bytes, and
-    rows stream off parquet already in consumption order (parquet
-    preserves task row order within each written file, asserted by the
-    order law in tests/test_dedup.py).
-
-    Writes to ``{path}/epoch={epoch}`` so successive epochs land side
-    by side without rewriting earlier ones. Everything upstream of the
-    single exchange is the narrow `epoch_shuffle` projection, so the
-    write is retry-safe and deterministic: re-running it produces
-    byte-identical shard contents in the same order. Hash-partitioning
-    n_shards keys into n_shards tasks leaves some tasks holding two
-    shards and some none (directory split keeps correctness; file
-    count stays one per non-empty (task, shard)) — at production scale
-    use more write tasks than shards and the collision disappears.
-
-    Returns ``{"n_rows", "n_shards_written"}`` from a post-write audit
-    read."""
-    spark = df.sparkSession
-    target = f"{path}/epoch={epoch}"
-    out = epoch_shuffle(
-        df, id_col,
-        epoch=epoch, n_shards=n_shards, modulus=modulus, hash_ids=hash_ids,
-    )
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "shuffle_pos", F.col(id_col))
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(target)
-    )
-    written = spark.read.parquet(target)
-    audit = written.agg(
-        F.count("*").alias("n"), F.countDistinct("shard").alias("ns")
-    ).first()
-    return {"n_rows": audit.n, "n_shards_written": audit.ns}

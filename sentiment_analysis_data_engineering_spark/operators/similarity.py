@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..sources.io import _hadoop_fs
 from .dedup import _spread
 from .observe import checkpoint_with_metrics, write_with_metrics
 
@@ -1054,7 +1055,7 @@ def ivfpq_write_index(
     checkpoints its membership semi-join for exactly this reason).
     Returns ``{"n_indexed", "n_cells", "m", "n_codes", "dim"}``."""
     spark = corpus.sparkSession
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     rebuild = fs.exists(jpath(f"{path}/codes"))
     if rebuild:
         # heal any interrupted maintenance before measuring what exists
@@ -1183,7 +1184,7 @@ def _model_fingerprint(spark, path: str) -> tuple:
     swap renames freshly-written directories in, so its files carry
     new mtimes and the fingerprint changes; merge/compact/delete touch
     only ``codes`` and leave it alone."""
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     fp = []
     for art in ("centroids", "codebooks"):
         try:
@@ -1384,7 +1385,7 @@ def ivfpq_merge_index(
     # item 1 — previously a localCheckpoint + count pair, two more
     # driver jobs). An all-duplicate batch stages zero rows and the
     # live cells are never touched, as before.
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     stage = f"{path}/codes_append_staging"
     fs.delete(jpath(stage), True)  # stale remnants from a crash
     n_added = int(
@@ -1452,11 +1453,9 @@ def ivfpq_cell_file_counts(spark, path: str) -> dict:
     what lets a streaming maintainer check fragmentation after EVERY
     micro-batch without scanning the index. Hidden/_SUCCESS files are
     ignored. Returns ``{cell: n_files}``."""
-    sc = spark.sparkContext
-    root = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jpath = _hadoop_fs(spark, path)
     counts: dict[int, int] = {}
-    for st in fs.listStatus(root):
+    for st in fs.listStatus(jpath(f"{path}/codes")):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith("cell=")):
             continue
@@ -1467,17 +1466,6 @@ def ivfpq_cell_file_counts(spark, path: str) -> dict:
         )
         counts[int(name.split("=", 1)[1])] = n
     return counts
-
-
-def _index_fs(spark, path: str):
-    """(FileSystem, Path-constructor) for an index root — every swap /
-    recovery metadata operation below goes through the Hadoop
-    FileSystem API, so the same code runs on local/HDFS/S3A."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    return fs, jpath
 
 
 def _must_rename(fs, src, dst) -> None:
@@ -1717,7 +1705,7 @@ def _fence_commit(spark, path: str) -> None:
     token = _HELD_LOCKS.get(_lock_key(path))
     if token is None:
         return
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     prev = None
     stable_foreign = False
     saw_foreign = False
@@ -1780,7 +1768,7 @@ def _try_acquire_index_lock(spark, path: str, *, lease_sec=None) -> bool:
 
     if lease_sec is None:
         lease_sec = INDEX_LOCK_LEASE_SEC
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     lock = jpath(f"{path}/{_LOCK_FILE}")
     with _path_mutex(path):
         if fs.exists(lock):
@@ -1876,7 +1864,7 @@ def _release_index_lock(spark, path: str) -> None:
         if token is None:
             return  # this thread holds nothing here — never delete blind
         try:
-            fs, jpath = _index_fs(spark, path)
+            fs, jpath = _hadoop_fs(spark, path)
             lock = jpath(f"{path}/{_LOCK_FILE}")
             if _read_lock_token(spark, fs, jpath, path) != token:
                 return  # definitely not ours anymore — never touch it
@@ -1974,7 +1962,7 @@ def _maybe_heal_for_read(spark, path: str) -> bool:
     recovery ran."""
     if _this_thread_holds(path):
         return False  # we ARE the writer — it already ran recovery
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     if not any(
         fs.exists(jpath(f"{path}/{m}")) for m in _RECOVERY_MARKERS
     ):
@@ -2005,7 +1993,7 @@ def _swap_rebuild(spark, path: str) -> None:
     first. A lease-broken zombie rebuild aborts at the fence HERE,
     before any artifact rename (r12 verdict item 1)."""
     _fence_commit(spark, path)
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     trash = jpath(f"{path}/_rebuild_trash")
     fs.mkdirs(trash)
     for art in _INDEX_ARTIFACTS:
@@ -2063,7 +2051,7 @@ def ivfpq_recover_index(spark, path: str) -> dict:
     import time as _time
 
     _fence_commit(spark, path)  # recovery mutates — zombies abort first
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     try:
         for st in fs.listStatus(jpath(path)):
             name = st.getPath().getName()
@@ -2171,7 +2159,7 @@ def _swap_staged_cells(spark, path: str, cells) -> None:
     old-or-new state a crash leaves, healed by
     :func:`ivfpq_recover_index`."""
     _fence_commit(spark, path)
-    fs, jpath = _index_fs(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     trash_dir = jpath(f"{path}/codes_trash")
     fs.mkdirs(trash_dir)
     for i, c in enumerate(cells):
@@ -2252,7 +2240,7 @@ def ivfpq_compact_index(spark, path: str) -> dict:
         # fragmented cells that read back ZERO rows: nothing sane to
         # swap in (the old readback validation would have failed here
         # too) — discard the stage and fail loudly, live index intact
-        fs, jpath = _index_fs(spark, path)
+        fs, jpath = _hadoop_fs(spark, path)
         fs.delete(jpath(staging), True)
         raise IOError(
             f"compact read 0 rows from {len(fragmented)} fragmented "
@@ -2261,7 +2249,7 @@ def ivfpq_compact_index(spark, path: str) -> dict:
     n_staged = spark.read.parquet(staging).count()
     if n_staged != n_rows:
         # live index untouched — discard the bad stage and fail loudly
-        fs, jpath = _index_fs(spark, path)
+        fs, jpath = _hadoop_fs(spark, path)
         fs.delete(jpath(staging), True)
         raise IOError(
             f"compact staging validation failed: staged {n_staged} rows, "
@@ -2367,7 +2355,7 @@ def ivfpq_delete_ids(
             .first()
         )
         if back._n != n_survivors:
-            fs, jpath = _index_fs(spark, path)
+            fs, jpath = _hadoop_fs(spark, path)
             fs.delete(jpath(staging), True)
             raise IOError(
                 f"delete staging validation failed: staged {back._n} "

@@ -320,8 +320,7 @@ def cms_build(
     This is the relational representation of the classic depth×width
     counter matrix: build per batch/partition-of-history, persist next
     to the data, and :func:`cms_merge` unions matrices by cell-wise sum
-    without re-reading rows — the frequency-count twin of
-    ``incremental.py::distinct_sketch``'s HLL maintenance.
+    without re-reading rows.
 
     One narrow explode (depth cells per row) + one map-side-combining
     hash agg whose key space is depth×width — shuffle rows are

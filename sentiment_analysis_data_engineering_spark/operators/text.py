@@ -11,7 +11,6 @@ Operators:
 - ``quality_score``              composite [0,1] quality score
 - ``lang_id``                    stopword-overlap language heuristic
 - ``fingerprint_md5``            normalized-text content fingerprint
-- ``fingerprint_xxh64``          64-bit fingerprint for dedup keys
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ __all__ = [
     "quality_score",
     "lang_id",
     "fingerprint_md5",
-    "fingerprint_xxh64",
     "normalize_text",
     "tfidf_top_terms",
     "clean_text",
@@ -161,13 +159,6 @@ def fingerprint_md5(col: Column | str) -> Column:
     """Content fingerprint: md5 hex of the normalized text. md5 is
     identical across engines, so this one is oracle-checkable."""
     return F.md5(normalize_text(col).cast("binary"))
-
-
-def fingerprint_xxh64(col: Column | str) -> Column:
-    """64-bit xxHash fingerprint of normalized text — the cheap dedup /
-    shuffle key (long, not hex string). Spark-specific hash; paired
-    queries are rows-only in the oracle gate."""
-    return F.xxhash64(normalize_text(col))
 
 
 def tfidf_top_terms(

@@ -767,7 +767,7 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Event-time sliding window (batch form of streaming sliding_window_agg)
+# Event-time sliding window
 # --------------------------------------------------------------------------
 
 
@@ -791,8 +791,7 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_sliding_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding event-time window (6 h length, 3 h slide) — the batch
-    equivalent of streaming/events.py's sliding_window_agg. Each event
+    """Sliding event-time window (6 h length, 3 h slide). Each event
     lands in exactly length/slide = 2 windows; ``F.window`` explodes
     those assignments and the aggregate is one partial+final hash agg
     keyed on (window, type). The window key is reported as epoch

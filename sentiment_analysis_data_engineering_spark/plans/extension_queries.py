@@ -18,6 +18,10 @@ Oracle notes:
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -663,6 +667,21 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTERED_K, _CLUSTERED_DIM, _CLUSTERED_NOISE = 16, 32, 0.08
 
 
+@contextmanager
+def _scratch_index(prefix: str):
+    """Path of an IVF-PQ index in a fresh temp dir (siblings such as
+    ``f"{path}_landing"`` live in the same dir). On exit the index's
+    cached model is evicted and the dir removed, so a query that pins
+    its result before leaving the block leaves nothing behind."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    path = f"{tmp}/idx"
+    try:
+        yield path
+    finally:
+        sim.evict_model_cache(path)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _clustered_centers():
     import numpy as np
 
@@ -747,9 +766,6 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis, build, probe and exact baseline are all the operators
     the persisted-index family already gates, so this row isolates
     exactly one new claim: IVF-PQ pays off on clustered data."""
-    import shutil
-    import tempfile
-
     planted = _planted_cluster_embeddings(spark, sf_dir).localCheckpoint(
         eager=True
     )
@@ -764,9 +780,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_exact = exact.count()
     n_queries = queries_df.count()
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_clustered_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_clustered_") as path:
         sim.ivfpq_write_index(
             planted, path, vec_col="embedding", id_col="vec_id",
             n_cells=16, m=8, n_codes=64,
@@ -789,9 +803,6 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         n_results8, hits8 = probe_hits(8)
         _, hits2 = probe_hits(2)
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     planted.unpersist()
     exact.unpersist()
     return spark.createDataFrame(
@@ -970,18 +981,13 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-scaled work is an Arrow encode pass + a cell-pruned probe —
     so the sf0.01→sf0.1 scaling ratio, not the absolute seconds, is
     the number that reflects the design."""
-    import shutil
-    import tempfile
-
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     base = embeddings.filter(F.col("vec_id") % 5 != 0)
     delta = embeddings.filter(F.col("vec_id") % 5 == 0)
     queries_df = embeddings.filter(F.col("vec_id") < 10)
     n_corpus = _table_rowcount(spark, sf_dir, "embeddings")
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_idx_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_idx_") as path:
         sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
         m1 = sim.ivfpq_merge_index(
             spark, path, delta, vec_col="embedding", id_col="vec_id"
@@ -1037,9 +1043,6 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # it after the harness hashes the result
         probe.unpersist()
         dd.register_pinned(out)
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1101,18 +1104,13 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus appends into its cells. Nothing here reads the full index
     width. Same fixed-overhead bench shape as ann_index_lifecycle —
     ~a dozen sequential lifecycle actions dominate at test SF."""
-    import shutil
-    import tempfile
-
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     corpus = embeddings.select("vec_id", "embedding")
     victims = corpus.filter(F.col("vec_id") % 7 == 3)
     queries_df = corpus.filter(F.col("vec_id") < 10)
     n_corpus = _table_rowcount(spark, sf_dir, "embeddings")
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_scd_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_scd_") as path:
         sim.ivfpq_write_index(
             corpus, path, vec_col="embedding", id_col="vec_id"
         )
@@ -1164,9 +1162,6 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)  # pin before the scratch dir dies
         probe.unpersist()
         dd.register_pinned(out)
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1223,17 +1218,12 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (operator docstring); the audit output is 2 rows, and
     the boolean comparison consumes that bounded collect — the same
     model-state class as the merge stats themselves."""
-    import shutil
-    import tempfile
-
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     corpus = embeddings.select("vec_id", "embedding")
     base = corpus.filter(F.col("vec_id") % 5 != 0)
     delta = corpus.filter(F.col("vec_id") % 5 == 0)
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_drift_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_drift_") as path:
         build_meta = sim.ivfpq_write_index(
             base, path, vec_col="embedding", id_col="vec_id"
         )
@@ -1251,9 +1241,6 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 vec_col="embedding", id_col="vec_id", segment_col="segment",
             ).collect()  # 2 rows — bounded model-state class
         }
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     b, g = audit["base"], audit["merged"]
     # from the build's own stats (== the persisted artifacts'
     # ivfpq_read_model meta) — never a re-hardcoded default
@@ -1325,9 +1312,6 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(merges since last manual compact) into O(1). Bench shape is
     fixed streaming overhead (3 micro-batch round-trips + writes), not
     data-scaled work."""
-    import shutil
-    import tempfile
-
     from ..streaming.events import run_ivfpq_merge_stream
 
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
@@ -1335,11 +1319,9 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = corpus.filter(~(F.col("vec_id") % 5).isin([0, 2, 3]))
     n_corpus = _table_rowcount(spark, sf_dir, "embeddings")
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_ac_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_ac_") as path:
         sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
-        landing = f"{tmp}/landing"
+        landing = f"{path}_landing"
         for k in (0, 2, 3):  # three single-file micro-batches
             corpus.filter(F.col("vec_id") % 5 == k).coalesce(1).write.parquet(
                 landing, mode="append"
@@ -1350,7 +1332,7 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(landing)
         )
         stats = run_ivfpq_merge_stream(
-            stream, path, checkpoint=f"{tmp}/ckpt",
+            stream, path, checkpoint=f"{path}_ckpt",
             vec_col="embedding", id_col="vec_id",
             auto_compact_max_files=3,
         )
@@ -1359,9 +1341,6 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [(
             len(stats),
@@ -1427,9 +1406,6 @@ def ann_index_retrain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly why it wants a measured trigger (the drift audit)
     instead of a schedule guess. Same fixed-overhead bench shape as
     the other lifecycle queries."""
-    import shutil
-    import tempfile
-
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     corpus = embeddings.select("vec_id", "embedding")
     base = corpus.filter(F.col("vec_id") % 5 != 0)
@@ -1450,9 +1426,7 @@ def ann_index_retrain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()  # 2 rows — bounded model-state class
         }
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_rt_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_rt_") as path:
         sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
         sim.ivfpq_merge_index(
             spark, path, delta, vec_col="embedding", id_col="vec_id"
@@ -1498,9 +1472,6 @@ def ann_index_retrain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         probe.unpersist()
         dd.register_pinned(out)
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1570,9 +1541,6 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     injected drift); the retrain is the priced-in expensive verb the
     measured trigger exists to schedule. Fixed multi-action overhead
     bench shape, like the other lifecycle queries."""
-    import shutil
-    import tempfile
-
     from ..streaming.events import run_ivfpq_merge_stream
 
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
@@ -1597,14 +1565,12 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_copies = copies.count()
     n_ood = ood.count()
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_ar_")
-    path = f"{tmp}/idx"
-    try:
+    with _scratch_index("spark_graft_ivfpq_ar_") as path:
         sim.ivfpq_write_index(
             corpus0, path, vec_col="embedding", id_col="vec_id",
             n_cells=16, m=8, n_codes=128, train_rows=512,
         )
-        landing = f"{tmp}/landing"
+        landing = f"{path}_landing"
 
         def run_one(batch_df):
             batch_df.coalesce(1).write.parquet(landing, mode="append")
@@ -1614,7 +1580,7 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(landing)
             )
             return run_ivfpq_merge_stream(
-                stream, path, checkpoint=f"{tmp}/ckpt",
+                stream, path, checkpoint=f"{path}_ckpt",
                 vec_col="embedding", id_col="vec_id",
                 auto_retrain_drift_ratio=1.5,
                 retrain_corpus=retrain_corpus,
@@ -1638,9 +1604,6 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
-    finally:
-        sim.evict_model_cache(path)  # temp-dir index: no stale cache entry
-        shutil.rmtree(tmp, ignore_errors=True)
     n_total = n_corpus + n_copies + n_ood
     return spark.createDataFrame(
         [(

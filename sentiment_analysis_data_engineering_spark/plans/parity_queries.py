@@ -724,7 +724,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Event-time tumbling window (batch form of the streaming extension)
+# Event-time tumbling window
 # --------------------------------------------------------------------------
 
 
@@ -740,9 +740,8 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window over the events table — the batch
-    equivalent of streaming/events.py's windowed aggregation (same
-    logical result as ``F.window(ts, '1 day')``)."""
+    """Tumbling event-time window over the events table (same logical
+    result as ``F.window(ts, '1 day')``)."""
     (events,) = load_tables(spark, sf_dir, "events")
     return (
         events.groupBy(
@@ -787,9 +786,8 @@ def window_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization — lag(ts) gap detection + running sum, the batch
-    twin of streaming session_window (pyspark guide 'Common OLAP
-    patterns'). 30-minute inactivity gap."""
+    """Sessionization — lag(ts) gap detection + running sum (pyspark
+    guide 'Common OLAP patterns'). 30-minute inactivity gap."""
     (events,) = load_tables(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     # Microsecond precision on both sides: the DuckDB oracle compares

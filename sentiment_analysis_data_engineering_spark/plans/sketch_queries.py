@@ -169,8 +169,7 @@ def cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sketch frames are ≤ depth×width rows however large the
     log; maintenance cost per batch is one narrow explode + one
     sketch-bounded agg, and "frequency of X over all history" becomes
-    a broadcast probe of kilobytes — the frequency twin of the HLL
-    distinct sketches in operators/incremental.py."""
+    a broadcast probe of kilobytes."""
     from ..operators.sketches import cms_build, cms_estimate, cms_merge
 
     (events,) = load_tables(spark, sf_dir, "events")

@@ -17,9 +17,12 @@ planner broadcasts, never driver-side collects.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import register_pinned
 from .registry import load_tables, query
 
 
@@ -842,8 +845,6 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     key); untouched history is never re-read — the exact property the
     reference's full-reload tasks (weekly_dag.py T2/T4) lack and
     SURVEY §2.11 standardizes on."""
-    import tempfile
-
     from ..operators.incremental import merge_rollup
 
     (events,) = load_tables(spark, sf_dir, "events")
@@ -858,26 +859,28 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_value": ("sum", "value"),
         "max_value": ("max", "value"),
     }
-    # fresh NON-existent path: merge_rollup's first-run detection is
-    # "target does not exist", and an empty-but-present dir is neither
-    # a rollup nor absent
-    target = tempfile.mkdtemp(prefix="rollup_merge_") + "/rollup"
-    for parity in (0, 1):
-        merge_rollup(
-            spark,
-            rows.filter(F.col("event_id") % 2 == parity).drop("event_id"),
-            target,
-            keys=["day", "event_type"],
-            partition_col="day",
-            measures=measures,
-        )
-    return spark.read.parquet(target).select(
-        F.col("day").cast("string").alias("day"),
-        "event_type",
-        "n_events",
-        F.round("total_value", 2).alias("total_value"),
-        "max_value",
-    )
+    with tempfile.TemporaryDirectory(prefix="rollup_merge_") as tmp:
+        # fresh NON-existent path: merge_rollup's first-run detection is
+        # "target does not exist", and an empty-but-present dir is
+        # neither a rollup nor absent
+        target = f"{tmp}/rollup"
+        for parity in (0, 1):
+            merge_rollup(
+                spark,
+                rows.filter(F.col("event_id") % 2 == parity).drop("event_id"),
+                target,
+                keys=["day", "event_type"],
+                partition_col="day",
+                measures=measures,
+            )
+        out = spark.read.parquet(target).select(
+            F.col("day").cast("string").alias("day"),
+            "event_type",
+            "n_events",
+            F.round("total_value", 2).alias("total_value"),
+            "max_value",
+        ).localCheckpoint(eager=True)  # pin before the scratch dir dies
+    return register_pinned(out)
 
 
 # --------------------------------------------------------------------------
@@ -908,8 +911,6 @@ def join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference re-derives joined frames wholesale every run
     (weekly_dag.py's monthly pipeline re-joins everything); this is
     the engine-grade alternative its BigQuery tier never offered."""
-    import tempfile
-
     from ..operators.incremental import merge_join_view
 
     orders, customer = load_tables(spark, sf_dir, "orders", "customer")
@@ -919,21 +920,23 @@ def join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = customer.select(
         F.col("c_custkey").alias("custkey"), "c_nationkey"
     )
-    root = tempfile.mkdtemp(prefix="join_view_") + "/ivm"
-    for parity in (0, 1):
-        merge_join_view(
-            spark,
-            root,
-            o.filter(F.col("o_orderkey") % 2 == parity),
-            c.filter(F.col("custkey") % 2 == parity),
-            on=["custkey"],
-            batch_id=parity,
-        )
-    view = spark.read.parquet(root + "/view")
-    return view.groupBy(F.col("c_nationkey")).agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
+    with tempfile.TemporaryDirectory(prefix="join_view_") as tmp:
+        root = f"{tmp}/ivm"
+        for parity in (0, 1):
+            merge_join_view(
+                spark,
+                root,
+                o.filter(F.col("o_orderkey") % 2 == parity),
+                c.filter(F.col("custkey") % 2 == parity),
+                on=["custkey"],
+                batch_id=parity,
+            )
+        view = spark.read.parquet(root + "/view")
+        out = view.groupBy(F.col("c_nationkey")).agg(
+            F.count("*").alias("n_orders"),
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        ).localCheckpoint(eager=True)  # pin before the scratch dir dies
+    return register_pinned(out)
 
 
 # --------------------------------------------------------------------------

@@ -72,35 +72,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def recommend_shuffle_partitions(
-    input_bytes: int,
-    *,
-    total_cores: int = 32,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Shuffle-partition count for a given input size — the sizing rule
-    the 100 TB stance calls for, as code instead of folklore.
-
-    Two constraints, take the max:
-    - **memory fit**: input_bytes / target (default 128 MiB, the same
-      default as spark.sql.files.maxPartitionBytes) so one shuffle
-      partition's build side fits comfortably in an executor's task
-      memory without spilling;
-    - **parallelism floor**: 2x total cores so every core gets work
-      even with stragglers.
-
-    At 100 TB and 128 MiB targets this says ~800k partitions — far
-    above the 200 default that would OOM, and the reason AQE coalesce
-    (enabled in get_spark) is the complement: overshoot statically,
-    let AQE merge at runtime. Round to the next power of two so
-    repeated runs with similar inputs reuse the same partitioning.
-    """
-    by_size = -(-input_bytes // target_partition_bytes)
-    floor = 2 * total_cores
-    n = max(by_size, floor, 1)
-    p = 1
-    while p < n:
-        p <<= 1
-    return p

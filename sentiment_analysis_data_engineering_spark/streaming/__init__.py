@@ -1,23 +1,3 @@
-from .events import (
-    read_events_stream,
-    run_available_now,
-    run_idempotent_append_stream,
-    run_merge_upsert_stream,
-    run_quarantine_stream,
-    session_window_agg,
-    sliding_window_agg,
-    stream_dedup,
-    tumbling_window_agg,
-)
+from .events import run_ivfpq_merge_stream
 
-__all__ = [
-    "read_events_stream",
-    "tumbling_window_agg",
-    "sliding_window_agg",
-    "session_window_agg",
-    "stream_dedup",
-    "run_available_now",
-    "run_idempotent_append_stream",
-    "run_merge_upsert_stream",
-    "run_quarantine_stream",
-]
+__all__ = ["run_ivfpq_merge_stream"]

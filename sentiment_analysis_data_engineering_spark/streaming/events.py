@@ -1,571 +1,17 @@
-"""Structured Streaming over the events table (extension layer —
-SURVEY.md §2.9: the reference has no streams; its incremental-batch
-semantics map to ``Trigger.AvailableNow`` runs of these queries).
+"""Structured Streaming maintenance of a persisted IVF-PQ index
+(extension layer — SURVEY.md §2.9: the reference has no streams; its
+incremental-batch semantics map to ``Trigger.AvailableNow`` runs).
 
-Event-time correctness at scale:
-- every aggregation takes a watermark so state is bounded (late rows
-  beyond the watermark are dropped, state for closed windows is freed);
-- windows are built with the native ``window``/``session_window``
-  expressions — stateful operators inside Tungsten, not Python;
-- streaming dedup uses ``dropDuplicatesWithinWatermark`` keyed on
-  event_id, the streaming twin of the idempotent-append writer.
-
-The parquet fixture has shipped with ts as TIMESTAMP(NANOS) (read as
-long under nanosAsLong, then rebuilt into a microsecond timestamp) or
-as plain timestamp[us] (read natively): the stream probes the file's
-batch-read schema and adapts, exactly like the batch path
-(plans.registry.load_tables).
+Event-time windows and SCD2 run as batch queries over the events and
+customer tables (``window_tumbling_daily``, ``window_sliding_6h``,
+``scd2_customer_history``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-__all__ = [
-    "read_events_stream",
-    "tumbling_window_agg",
-    "ohlc_window_agg",
-    "sliding_window_agg",
-    "session_window_agg",
-    "stream_dedup",
-    "error_click_interval_join",
-    "run_available_now",
-    "run_idempotent_append_stream",
-    "run_merge_upsert_stream",
-    "run_quarantine_stream",
-    "run_cms_maintenance_stream",
-    "read_cms_sketch",
-    "run_ivfpq_merge_stream",
-]
-
-#: events.parquet with ts as long (read under nanosAsLong).
-_EVENTS_LONG_TS = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.LongType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
-
-
-def read_events_stream(
-    spark: SparkSession,
-    events_path: str,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming read of the events fixture (one file = one micro-batch
-    under AvailableNow; a real deployment points this at a Kafka topic
-    or a landing directory). ``max_files_per_trigger`` caps files per
-    micro-batch — tests use 1 over a time-split directory to force
-    multi-batch runs that exercise cross-batch state boundaries.
-
-    The streaming file source requires a *directory*; the fixture is a
-    single parquet file, so it's staged into a symlink directory under
-    the system temp dir (keyed by source path — stable across calls,
-    no dependency on any particular checkout location).
-    """
-    import hashlib
-    import os
-    import tempfile
-    from pathlib import Path
-
-    src = Path(events_path)
-    if src.is_file():
-        stage = Path(tempfile.gettempdir()) / "sentiment_analysis_data_engineering_spark_streaming" / hashlib.md5(
-            str(src).encode()
-        ).hexdigest()[:12]
-        stage.mkdir(parents=True, exist_ok=True)
-        link = stage / src.name
-        if not link.exists():
-            os.symlink(src, link)
-        events_path = str(stage)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Probe the fixture's encoding with a footer-only batch read: the
-    # nanos fixture surfaces ts as bigint, the micros one as timestamp.
-    batch_schema = spark.read.parquet(events_path).schema
-
-    def reader(schema):
-        r = spark.readStream.schema(schema)
-        if max_files_per_trigger is not None:
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-        return r
-
-    if isinstance(batch_schema["ts"].dataType, T.LongType):
-        return (
-            reader(_EVENTS_LONG_TS)
-            .parquet(events_path)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    # canonical engine event-time type is TIMESTAMP (UTC session), so
-    # the NTZ encoding is cast — value-preserving, and keeps watermarks
-    # and interval-join arithmetic identical across fixture encodings
-    return (
-        reader(batch_schema)
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-
-
-def tumbling_window_agg(
-    events: DataFrame, *, window: str = "1 day", watermark: str = "1 hour"
-) -> DataFrame:
-    """Tumbling event-time window: count + sum(value) per (window,
-    event_type). State per open window only, freed at watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
-
-
-def ohlc_window_agg(
-    events: DataFrame, *, window: str = "1 day", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming twin of the batch ``daily_ohlc_bars`` query: daily
-    open/high/low/close bars per user, built incrementally as ticks
-    arrive. Open/close are min/max over a (ts, event_id, value) struct
-    — the same deterministic lexicographic pick as the batch plan, and
-    a plain orderable aggregate, so streaming state per open (window,
-    user) is two structs + two doubles + a count, merged associatively
-    across micro-batches and freed at the watermark. No
-    flatMapGroupsWithState needed: bar building is pure aggregation."""
-    # Batch-equivalence needs matching DAY semantics: F.window buckets
-    # are epoch(UTC)-aligned while date_format renders in session tz —
-    # pin UTC exactly like the batch path's load_tables does, so the
-    # bucket boundary and its label agree with daily_ohlc_bars in any
-    # caller session.
-    events.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-    pick = F.struct("ts", "event_id", "value")
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "user_id")
-        .agg(
-            F.min(pick).alias("_first"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max(pick).alias("_last"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd").alias("day"),
-            "user_id",
-            F.col("_first.value").alias("open"),
-            "high",
-            "low",
-            F.col("_last.value").alias("close"),
-            "n_events",
-        )
-    )
-
-
-def sliding_window_agg(
-    events: DataFrame,
-    *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding window — each event lands in window/slide overlapping
-    frames (here 4); Spark expands via the window expression, state
-    bounded by watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type", "n_events",
-        )
-    )
-
-
-def session_window_agg(
-    events: DataFrame, *, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Session windows per user: gap-based, the streaming twin of the
-    batch sessionize_events query (lag + cumsum)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            "n_events",
-        )
-    )
-
-
-def stream_dedup(
-    events: DataFrame, *, key: str = "event_id", watermark: str = "1 hour"
-) -> DataFrame:
-    """Exactly-once-per-key within the watermark horizon — the streaming
-    form of idempotent_append (state = one key per event inside the
-    watermark, freed as time advances)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
-
-
-def error_click_interval_join(
-    events: DataFrame,
-    *,
-    horizon: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: for every error event, the same
-    user's click events in the following ``horizon``.
-
-    Both sides carry a watermark and the join condition bounds c_ts to
-    [e_ts, e_ts + horizon], so Spark can expire buffered state on both
-    sides once the watermark passes the interval — state stays
-    O(events inside watermark+horizon), the requirement for running
-    this unbounded. Works identically as a batch interval join when
-    given a batch frame (minus the watermarks' effect)."""
-    errs = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-            F.col("event_id").alias("error_id"),
-        )
-        .withWatermark("e_ts", watermark)
-    )
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    return errs.join(
-        clicks,
-        (F.col("e_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("e_ts"))
-        & (F.col("c_ts") <= F.col("e_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select("error_id", "click_id", F.col("e_user").alias("user_id"))
-
-
-def run_idempotent_append_stream(
-    stream_df: DataFrame,
-    target: str,
-    keys: list[str],
-    *,
-    checkpoint: str,
-) -> None:
-    """Streaming form of the idempotent-append writer (ST1/ST2):
-    ``foreachBatch`` routes each micro-batch through the SAME batch
-    ``idempotent_append`` (left-anti against the target's keys), so a
-    replayed micro-batch — the at-least-once case foreachBatch exposes —
-    inserts nothing the second time. Checkpointing bounds replay; the
-    anti join makes replay harmless. This is the streaming twin of the
-    reference's probe-then-append cron loads.
-    """
-    from ..sources.io import idempotent_append
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(batch_df.sparkSession, batch_df, target, keys)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_merge_upsert_stream(
-    stream_df: DataFrame,
-    target: str,
-    keys: list[str],
-    *,
-    partition_by: list[str],
-    checkpoint: str,
-) -> None:
-    """Streaming MERGE-on-key sink — ST3's streaming twin: each
-    micro-batch routes through the batch ``merge_upsert`` (matched keys
-    replaced, new keys inserted, only touched partitions rewritten).
-
-    Replay safety (foreachBatch is at-least-once): re-merging a replayed
-    micro-batch replaces matched keys with the SAME rows and inserts
-    nothing new — the merge is idempotent per batch content, so a crash
-    between a batch's commit and the checkpoint advance converges to the
-    identical table on restart. Contract shared with the batch writer:
-    incoming rows carry at most one row per key per micro-batch (merge
-    semantics union all matched incoming rows; duplicate in-batch keys
-    would both land).
-    """
-    from ..sources.io import merge_upsert
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch_df.sparkSession, batch_df, target, keys,
-            partition_by=partition_by,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_quarantine_stream(
-    stream_df: DataFrame,
-    target: str,
-    checks: dict,
-    *,
-    checkpoint: str,
-) -> None:
-    """Streaming quality gate: each micro-batch splits valid/quarantined
-    rows in one write via the batch ``quarantine_split_write`` shape —
-    rows failing any check land in the ``_quarantined=true`` partition
-    of the SAME append, clean rows in ``_quarantined=false``; nothing
-    is dropped, and no second pass separates failures.
-
-    Replay safety: the split is a pure row-level tag, so a replayed
-    micro-batch appends duplicate rows exactly as a plain append sink
-    would — compose with stream_dedup / run_idempotent_append_stream
-    upstream when exactly-once content is required.
-    """
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ok = F.lit(True)
-        for pred in checks.values():
-            ok = ok & F.coalesce(pred, F.lit(False))
-        (
-            batch_df.withColumn("_quarantined", ~ok)
-            .write.mode("append")
-            .partitionBy("_quarantined")
-            .parquet(target)
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_available_now(
-    stream_df: DataFrame, query_name: str, *, output_mode: str = "append"
-) -> DataFrame:
-    """Drive a streaming frame to completion over the currently
-    available input (Trigger.AvailableNow → memory sink) and return the
-    materialized result — the engine's batch-driven smoke path and the
-    exact incremental-run semantics the reference's cron loads imply.
-
-    Windowed aggregations should pass ``output_mode='complete'`` when
-    the caller wants every window (append mode withholds windows the
-    watermark hasn't closed yet — correct streaming semantics, but not
-    what a finite smoke comparison wants).
-    """
-    spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def run_scd2_stream(
-    stream_df: DataFrame,
-    history_path: str,
-    keys: list[str],
-    tracked: list[str],
-    *,
-    order_col: str,
-    checkpoint: str,
-) -> None:
-    """Streaming SCD type-2 sink: each micro-batch of dimension change
-    events updates the versioned history table at ``history_path``
-    through the batch ``scd2_apply`` (superseded versions closed, fresh
-    versions opened, identical re-deliveries no-ops).
-
-    A stream, unlike ``scd2_apply``'s batch contract, may carry SEVERAL
-    updates for one key in one micro-batch — the sink collapses them
-    deterministically to the latest by ``order_col`` (max, ties broken
-    by the tracked values themselves via struct ordering) before the
-    apply; intermediate versions inside one micro-batch are not
-    recorded, matching micro-batch semantics (state transitions are
-    observed at batch boundaries).
-
-    Replay safety (foreachBatch is at-least-once): the version
-    timestamp is derived from ``batch_id``, not wall clock, so a
-    replayed batch re-applies with the SAME valid_from and identical
-    values — a no-op. This guarantee is scoped to SAME-CHECKPOINT
-    replays, where Spark re-delivers byte-identical batches with the
-    same ids; reprocessing from a FRESH checkpoint under different
-    batch boundaries (or late cross-batch data) observes different
-    intermediate states and may version them differently — ``order_col``
-    orders updates WITHIN a micro-batch only, it is not compared
-    against already-applied history. Sources that can re-deliver stale
-    updates across batch boundaries need the version ledger of a table
-    format (the documented Delta/Iceberg seam) or an order column
-    persisted into the history schema. History read-modify-write goes
-    through ``overwrite_via_swap`` (the plan reads the same path it
-    replaces). First batch against a missing history seeds it: every
-    key opens its first version.
-
-    Scale: the history table is a dimension (rows ∝ entities ×
-    versions, not events); per batch the open slice joins the
-    collapsed batch once — `scd2_apply`'s cost model — and the swap
-    rewrite is history-sized, the standard trade for a plain-parquet
-    dimension store (a table format's MERGE takes over at the point
-    history itself is huge).
-    """
-    from ..operators.incremental import scd2_apply
-    from ..sources.io import (
-        overwrite_via_swap,
-        recover_interrupted_swap,
-        scan_or_none,
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_ts = f"batch-{batch_id:08d}"
-        latest = batch_df.groupBy(*keys).agg(
-            F.max(F.struct(order_col, *tracked)).alias("_s")
-        )
-        collapsed = latest.select(*keys, *[F.col(f"_s.{c}").alias(c) for c in tracked])
-        # A crash between the swap's two renames leaves the history
-        # momentarily missing; reading "missing" as "first batch" would
-        # re-seed from this batch alone and DROP all history. Roll the
-        # previous good version back first.
-        recover_interrupted_swap(spark, history_path)
-        hist = scan_or_none(spark, history_path)
-        if hist is None:
-            seeded = collapsed.select(
-                *keys,
-                *tracked,
-                F.lit(batch_ts).alias("valid_from"),
-                F.lit(None).cast("string").alias("valid_to"),
-                F.lit(True).alias("is_current"),
-            )
-            seeded.write.mode("overwrite").parquet(history_path)
-            return
-        # collapsed is groupBy(keys) output — unique per key by
-        # construction; skip the validator's extra per-batch job
-        new_hist = scd2_apply(
-            hist, collapsed, keys, tracked, batch_ts=batch_ts,
-            assume_unique_keys=True,
-        )
-        overwrite_via_swap(new_hist, history_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def enrich_stream_with_dim(
-    stream_df: DataFrame,
-    dim_df: DataFrame,
-    on: list[str],
-    *,
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Stream-static enrichment join: attach dimension attributes to a
-    stream — the lookup-table pattern (user → segment, part → type)
-    every event pipeline needs and the one streaming join family not
-    yet covered (stream-stream interval joins live above).
-
-    Spark evaluates the STATIC side fresh per micro-batch (the plan is
-    re-executed, so a dimension table updated between batches is picked
-    up without restarting the query — the documented stream-static
-    semantics). No watermark is needed: the static side holds no
-    streaming state. ``broadcast_dim`` ships the dimension to every
-    task once per batch — the right call for genuinely dimension-sized
-    tables; at 100 TB a fact-sized "dimension" instead wants the
-    stream keyed-partitioned and the hint dropped so AQE picks a
-    shuffled join per batch.
-
-    Only inner/left joins are exposed: a right/full join against a
-    stream would need to emit "dimension rows with no stream match",
-    which is unanswerable over an unbounded stream without a watermark
-    contract and is rejected by Spark itself.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"enrich_stream_with_dim: how={how!r} — only inner/left are "
-            "well-defined against an unbounded stream side"
-        )
-    dim = F.broadcast(dim_df) if broadcast_dim else dim_df
-    return stream_df.join(dim, on, how)
-
-
-def run_cms_maintenance_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    target: str,
-    *,
-    checkpoint: str,
-    depth: int = 3,
-    width: int = 512,
-) -> None:
-    """Streaming Count-Min-Sketch maintenance: each micro-batch's
-    partial sketch (operators/sketches.py::cms_build) lands in the
-    stored sketch table as its OWN ``batch_id`` partition.
-
-    Replay safety — the part that matters: foreachBatch is
-    at-least-once, and CMS merge is ADDITIVE, so naively merging a
-    replayed batch into one accumulated sketch would double-count.
-    Keying the store by batch_id and replacing that partition
-    wholesale makes replay overwrite-idempotent (the same recipe as
-    the SCD2 sink's batch-id-derived versions). The merge is deferred
-    to read time (:func:`read_cms_sketch` — one sketch-bounded agg
-    over ≤ depth×width rows per batch).
-    """
-    from ..operators.sketches import cms_build
-    from ..sources.io import replace_partition
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sketch = cms_build(
-            batch_df, key_col, depth=depth, width=width
-        ).withColumn("batch_id", F.lit(batch_id))
-        replace_partition(batch_df.sparkSession, sketch, target, ["batch_id"])
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_cms_sketch(spark: SparkSession, target: str) -> DataFrame:
-    """Merged view of a streamed CMS store: cell-wise sum across batch
-    partitions — exactly ``cms_merge`` over the per-batch partials, so
-    estimates equal a one-shot sketch of everything streamed so far."""
-    return (
-        spark.read.parquet(target)
-        .groupBy("row_i", "cell")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+__all__ = ["run_ivfpq_merge_stream"]
 
 
 def run_ivfpq_merge_stream(

@@ -634,50 +634,6 @@ def test_cluster_aware_split_no_straddle_and_rehoming(spark):
     assert naives == {"train", "val", "test"}
 
 
-def test_write_epoch_shards_order_and_conservation(spark, tmp_path):
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from sentiment_analysis_data_engineering_spark.operators import sampling as sp
-
-    df = spark.range(0, 3000).withColumnRenamed("id", "doc_id")
-    path = str(tmp_path / "shards")
-    stats = sp.write_epoch_shards(df, path, "doc_id", epoch=0, n_shards=8)
-    assert stats == {"n_rows": 3000, "n_shards_written": 8}
-    written = spark.read.parquet(f"{path}/epoch=0")
-    # conservation: every id exactly once, shard column round-trips
-    agg = written.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("doc_id").alias("nd"),
-        F.countDistinct("shard").alias("ns"),
-    ).first()
-    assert agg.n == agg.nd == 3000 and agg.ns == 8
-    # placement law: the written (id -> shard, pos) equals the narrow
-    # epoch_shuffle projection (the write changed layout, not content)
-    expect = {
-        r.doc_id: (r.shard, r.shuffle_pos)
-        for r in sp.epoch_shuffle(df, "doc_id", epoch=0, n_shards=8).collect()
-    }
-    got = {
-        r.doc_id: (int(r.shard), r.shuffle_pos) for r in written.collect()
-    }
-    assert got == expect
-    # order law: every shard file holds its rows sorted by shuffle_pos
-    # (parquet preserves the sortWithinPartitions task order), so a
-    # loader streams consumption order without sorting
-    import glob as _glob
-
-    files = _glob.glob(f"{path}/epoch=0/shard=*/*.parquet")
-    assert files
-    for f in files:
-        pos = pq.read_table(f, columns=["shuffle_pos"])["shuffle_pos"].to_pylist()
-        assert pos == sorted(pos) and pos
-    # epoch 1 lands beside epoch 0 without disturbing it
-    sp.write_epoch_shards(df, path, "doc_id", epoch=1, n_shards=8)
-    both = spark.read.parquet(path)
-    assert both.count() == 6000
-    assert {r.epoch for r in both.select("epoch").distinct().collect()} == {0, 1}
-
-
 def test_connected_components_pointer_doubling_on_long_chain(spark):
     """The r15 pointer-doubling law: a PATH graph (the worst case for
     plain min-label propagation — diameter rounds) converges in

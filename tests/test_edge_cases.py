@@ -219,35 +219,6 @@ def test_sketch_ops_on_empty_frames(spark):
     assert [r.k for r in bloom_prune(probe, "k", bloom).collect()] == [None]
 
 
-def test_zorder_constant_column_degrades_gracefully(spark, tmp_path):
-    """A constant cluster column collapses every quantile boundary into
-    one bucket — the write must still succeed and cluster the OTHER
-    column."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from sentiment_analysis_data_engineering_spark.sources.io import (
-        write_zorder_clustered,
-    )
-
-    rng = random.Random(3)
-    df = spark.createDataFrame(
-        [(1.0, rng.random()) for _ in range(4000)], "x double, y double"
-    ).repartition(4)
-    path = str(tmp_path / "zconst")
-    write_zorder_clustered(df, path, cluster_cols=["x", "y"], n_files=8)
-    spans = (
-        spark.read.parquet(path)
-        .withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg((F.max("y") - F.min("y")).alias("ys"))
-        .collect()
-    )
-    assert len(spans) > 2
-    assert sum(r.ys for r in spans) / len(spans) < 0.6
-
-
 def test_linear_interpolate_single_observation(spark):
     from sentiment_analysis_data_engineering_spark.operators.temporal import (
         linear_interpolate,
@@ -276,78 +247,29 @@ def test_pagerank_self_loop_only_graph(spark):
     assert got == {1: PR_SCALE // 2, 2: PR_SCALE // 2}
 
 
-def test_jaro_winkler_matches_duckdb_exactly(spark):
-    """The engine's JW scorer must agree with DuckDB's
-    jaro_winkler_similarity bit-for-bit — the cross-engine contract
-    that lets an oracle verify blocked JW matching."""
-    import duckdb
-
-    from sentiment_analysis_data_engineering_spark.operators.fuzzy import _jaro_winkler
-
-    probes = [
-        ("martha", "marhta"), ("dixon", "dicksonx"),
-        ("jellyfish", "smellyfish"), ("abc", "abc"), ("abc", "xyz"),
-        ("a", ""), ("", ""), ("crate", "trace"), ("dwayne", "duane"),
-        ("brennan", "brennen"), ("STANDARD", "STNDRD"), ("ab", "ba"),
-        ("prefixmatch", "prefixmatxh"), ("x", "x"),
-    ]
-    con = duckdb.connect()
-    for s1, s2 in probes:
-        want = con.execute(
-            "SELECT jaro_winkler_similarity(?, ?)", [s1, s2]
-        ).fetchone()[0]
-        assert abs(_jaro_winkler(s1, s2) - want) < 1e-12, (s1, s2)
-
-
-def test_jaro_winkler_pairs_blocked(spark):
+def test_phonetic_blocking_with_soundex_feeds_levenshtein(spark):
+    """Phonetic blocking (F.soundex) composed with the edit-distance
+    refiner — the classic record-linkage pairing: variant spellings
+    land in the same phonetic block, then only in-block pairs are
+    scored."""
     from pyspark.sql import functions as F
 
     from sentiment_analysis_data_engineering_spark.operators.fuzzy import (
-        _jaro_winkler,
-        jaro_winkler_pairs,
-    )
-
-    rows = [
-        (1, "jonathan smith"), (2, "jonathon smith"), (3, "jon smith"),
-        (4, "martha jones"), (5, "marhta jones"), (6, "zzz unrelated"),
-    ]
-    df = spark.createDataFrame(rows, "id long, name string")
-    out = jaro_winkler_pairs(
-        df, "name", "id",
-        block_col=F.split_part(F.col("name"), F.lit(" "), F.lit(2)),
-        min_similarity=0.9,
-    ).collect()
-    got = {(r.id_a, r.id_b): r.similarity for r in out}
-    assert (1, 2) in got and (4, 5) in got
-    assert all(v >= 0.9 for v in got.values())
-    for (ia, ib), v in got.items():
-        ta = dict(rows)[ia]
-        tb = dict(rows)[ib]
-        assert abs(v - _jaro_winkler(ta, tb)) < 1e-12
-
-
-def test_phonetic_blocking_with_soundex_feeds_jw(spark):
-    """Phonetic blocking (F.soundex) composed with the JW refiner —
-    the classic record-linkage pairing: variant spellings land in the
-    same phonetic block, then Jaro-Winkler ranks them."""
-    from pyspark.sql import functions as F
-
-    from sentiment_analysis_data_engineering_spark.operators.fuzzy import (
-        jaro_winkler_pairs,
+        fuzzy_match_pairs,
     )
 
     rows = [(1, "robert"), (2, "rupert"), (3, "rubin"), (4, "ashcraft"),
             (5, "ashcroft"), (6, "tymczak")]
     df = spark.createDataFrame(rows, "id long, name string")
-    out = jaro_winkler_pairs(
+    out = fuzzy_match_pairs(
         df, "name", "id",
         block_col=F.soundex(F.col("name")),
-        min_similarity=0.75,
+        max_distance=2,
     ).collect()
-    got = {(r.id_a, r.id_b) for r in out}
-    # soundex(robert)==soundex(rupert)==R163; ashcraft/ashcroft A261
-    assert (4, 5) in got
-    assert (1, 2) in got
+    got = {(r.id_a, r.id_b): r.distance for r in out}
+    # soundex(robert)==soundex(rupert)==R163, rubin R150 (own block);
+    # ashcraft/ashcroft A261
+    assert got == {(1, 2): 2, (4, 5): 1}
 
 
 def test_brown_single_observation(spark):

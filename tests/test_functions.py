@@ -79,14 +79,3 @@ def test_today_parts_injected(spark):
         parts["year"].alias("y"), parts["month"].alias("m"), parts["day"].alias("d")
     ).first()
     assert (row.y, row.m, row.d) == (2024, 6, 15)
-
-
-def test_recommend_shuffle_partitions_rules():
-    from sentiment_analysis_data_engineering_spark.session import recommend_shuffle_partitions
-
-    # parallelism floor dominates small inputs (2x32 cores → 64)
-    assert recommend_shuffle_partitions(10 * 1024 * 1024) == 64
-    # size rule dominates at scale: 1 TiB / 128 MiB = 8192 (pow2)
-    assert recommend_shuffle_partitions(1 << 40) == 8192
-    # 100 TB → ~819k → next pow2
-    assert recommend_shuffle_partitions(100 * 10**12) == 1 << 20

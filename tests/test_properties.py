@@ -128,8 +128,8 @@ def test_mixture_weighted_sample_solver(spark):
 )
 @settings(max_examples=60, deadline=None)
 def test_ewma_closed_form_matches_recursion(xs, alpha):
-    """The closed form both engines evaluate (ewma_user_value and
-    streaming_ewma) equals the textbook recursion s_i = a*x + (1-a)*s."""
+    """The closed form both engines evaluate (ewma_user_value and its
+    DuckDB oracle) equals the textbook recursion s_i = a*x + (1-a)*s."""
     s = xs[0]
     for x in xs[1:]:
         s = alpha * x + (1.0 - alpha) * s

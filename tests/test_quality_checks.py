@@ -52,35 +52,6 @@ def test_quality_summary_flattens_named_frames(spark):
     assert got == {"t1.m": 3, "t1.n": 4, "t2.z": 7}
 
 
-def test_with_observed_gate_collects_during_the_write(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, -3.0), (3, None)], "k long, v double"
-    )
-    observed, obs = qc.with_observed_gate(
-        df, {"v_nonneg": F.col("v") >= 0, "k_notnull": F.col("k").isNotNull()}
-    )
-    observed.write.mode("overwrite").parquet(str(tmp_path / "gated"))
-    got = obs.get
-    assert got == {"v_nonneg": 2, "k_notnull": 0, "n_rows": 3}
-    # the data itself landed untouched
-    assert spark.read.parquet(str(tmp_path / "gated")).count() == 3
-
-
-def test_quarantine_split_write_one_pass(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, -3.0), (3, None), (4, 7.0)], "k long, v double"
-    )
-    path = str(tmp_path / "load")
-    got = qc.quarantine_split_write(df, path, {"v_nonneg": F.col("v") >= 0})
-    assert got == {"v_nonneg": 2, "n_rows": 4, "n_quarantined": 2}
-    # partition-directory values surface as strings on read-back
-    back = spark.read.parquet(path)
-    clean = back.filter(F.col("_quarantined") == "false")
-    bad = back.filter(F.col("_quarantined") == "true")
-    assert {r.k for r in clean.collect()} == {1, 4}
-    assert {r.k for r in bad.collect()} == {2, 3}
-
-
 def test_gate_names_may_contain_dots(spark):
     df = spark.createDataFrame([(1,), (None,)], "k long")
     got = {r.check: r.n_violations for r in qc.range_violations(

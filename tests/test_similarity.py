@@ -1707,7 +1707,7 @@ def test_zombie_writer_fenced_at_commit_point(
 
     # recoverable: once the successor is done (lock gone), a rerun
     # discards the zombie's staging and compacts to one file per cell
-    fs, jpath = sim._index_fs(spark, path)
+    fs, jpath = sim._hadoop_fs(spark, path)
     fs.delete(jpath(lock), False)
     stats = sim.ivfpq_compact_index(spark, path)
     assert stats["n_cells_compacted"] > 0
@@ -1772,7 +1772,7 @@ def test_release_claims_lock_atomically_and_restores_foreign(
     with open(lock) as f:
         assert json.load(f)["token"] == successor_token[0]
     assert tombstones() == []
-    fs, jpath = sim._index_fs(spark, path)
+    fs, jpath = sim._hadoop_fs(spark, path)
     fs.delete(jpath(lock), False)
 
 
@@ -1865,7 +1865,7 @@ def test_midswap_lease_break_aborts_within_recheck_interval(
 
     # recoverable: lock clears, recovery rolls the lone swapped cell
     # back from trash and discards staging, rerun compacts everything
-    fs, jpath = sim._index_fs(spark, path)
+    fs, jpath = sim._hadoop_fs(spark, path)
     fs.delete(jpath(lock), False)
     stats = sim.ivfpq_compact_index(spark, path)
     assert stats["n_cells_compacted"] >= 2
@@ -1966,7 +1966,7 @@ def test_zombie_release_never_touches_successor_lock(
     t.start()
     t.join(60)
 
-    fs, jpath = sim._index_fs(spark, path)
+    fs, jpath = sim._hadoop_fs(spark, path)
     real_rename = fs.rename
     rename_calls: list = []
 
@@ -1980,7 +1980,7 @@ def test_zombie_release_never_touches_successor_lock(
             return getattr(fs, name)
 
     monkeypatch.setattr(
-        sim, "_index_fs", lambda s, p: (CountingFs(), jpath)
+        sim, "_hadoop_fs", lambda s, p: (CountingFs(), jpath)
     )
     sim._release_index_lock(spark, path)
     assert rename_calls == []  # pre-read mismatch: left untouched
@@ -2078,7 +2078,7 @@ def test_oversized_lock_payload_fails_loudly_but_release_survives(
     path = str(tmp_path / "idx")
     sim.ivfpq_write_index(emb, path)
     lock = f"{path}/_index_write_lock"
-    fs, jpath = sim._index_fs(spark, path)
+    fs, jpath = sim._hadoop_fs(spark, path)
 
     with open(lock, "wb") as f:
         f.write(b"x" * ((1 << 20) + 1))
@@ -2201,7 +2201,7 @@ def test_fence_reports_unstable_foreign_token_evidence(
         sim, "_read_lock_token",
         lambda spark_, fs_, jp_, p_: next(seq, None),
     )
-    monkeypatch.setattr(sim, "_index_fs", lambda s_, p_: (None, None))
+    monkeypatch.setattr(sim, "_hadoop_fs", lambda s_, p_: (None, None))
     try:
         with _pytest.raises(
             sim.IndexWriteLockError, match="unstable"

@@ -1,234 +1,13 @@
-"""Structured Streaming: windowed aggs + dedup driven to completion
-with Trigger.AvailableNow, cross-checked against the batch plans."""
+"""Structured Streaming sinks driven to completion with
+Trigger.AvailableNow: exactly-once restarts of the idempotent-append
+sink and the persisted IVF-PQ index maintainer."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from sentiment_analysis_data_engineering_spark.plans.registry import load_tables
 from sentiment_analysis_data_engineering_spark.streaming import events as st
-
-
-@pytest.fixture(scope="module")
-def events_dir(sf_dir):
-    return f"{sf_dir}/events.parquet"
-
-
-def test_tumbling_window_matches_batch(spark, sf_dir, events_dir):
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        st.tumbling_window_agg(stream), "t_tumble", output_mode="complete"
-    )
-    got = {
-        (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in out.collect()
-    }
-    (events,) = load_tables(spark, sf_dir, "events")
-    batch = (
-        events.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd HH:mm:ss").alias("d"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("v"))
-    )
-    want = {(r.d, r.event_type): (r.n, r.v) for r in batch.collect()}
-    assert got == want
-
-
-def test_sliding_window_counts(spark, events_dir):
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        st.sliding_window_agg(stream, window="2 hours", slide="1 hour"),
-        "t_slide",
-        output_mode="complete",
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    # every event lands in exactly window/slide = 2 sliding windows
-    total = sum(r.n_events for r in rows)
-    n_events = out.sparkSession.read.parquet(events_dir.replace("/events.parquet", "") + "/events.parquet").count()
-    assert total == 2 * n_events
-
-
-def test_session_window_agg(spark, sf_dir, events_dir):
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        st.session_window_agg(stream, gap="30 minutes"), "t_sess",
-        output_mode="complete",
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    # session event counts must sum to the total event count
-    (events,) = load_tables(spark, sf_dir, "events")
-    assert sum(r.n_events for r in rows) == events.count()
-    # and per-user session counts must match the batch sessionizer
-    import __spark_entry__ as entrymod
-
-    batch = {
-        r.user_id: r.n_sessions
-        for r in entrymod.queries()["sessionize_events"](spark, sf_dir).collect()
-    }
-    got = {}
-    for r in rows:
-        got[r.user_id] = got.get(r.user_id, 0) + 1
-    assert got == batch
-
-
-def test_idempotent_append_stream_survives_replay(spark, sf_dir, events_dir, tmp_path):
-    target = str(tmp_path / "events_sink")
-    n_events = spark.read.parquet(events_dir).count()
-
-    # two runs with SEPARATE checkpoints: the second replays the whole
-    # input (worst-case at-least-once) — the anti-join sink must not
-    # duplicate a single row
-    for i in range(2):
-        stream = st.read_events_stream(spark, events_dir)
-        st.run_idempotent_append_stream(
-            stream.select("event_id", "ts", "user_id", "event_type", "value"),
-            target,
-            ["event_id"],
-            checkpoint=str(tmp_path / f"ckpt{i}"),
-        )
-    assert spark.read.parquet(target).count() == n_events
-
-
-def test_stateful_running_totals_match_batch(spark, sf_dir, events_dir):
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        stateful.running_user_stats(stream), "t_stateful", output_mode="update"
-    )
-    # the memory sink keeps every update; the LAST row per user is the
-    # final running total — must equal the batch aggregate
-    import pandas as pd
-
-    pdf = out.toPandas()
-    final = pdf.groupby("user_id").tail(1).set_index("user_id")
-    (events,) = load_tables(spark, sf_dir, "events")
-    batch = (
-        events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("v"))
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(batch)
-    for uid, row in batch.iterrows():
-        assert final.loc[uid, "n_events"] == row["n"]
-        assert abs(final.loc[uid, "total_value"] - row["v"]) < 1e-3
-
-
-def test_stream_dedup_drops_duplicate_ids(spark, events_dir):
-    stream = st.read_events_stream(spark, events_dir)
-    # duplicate the stream by unioning it with itself: same event_ids twice
-    doubled = stream.union(stream)
-    out = st.run_available_now(
-        st.stream_dedup(doubled), "t_dedup", output_mode="append"
-    )
-    n_unique = spark.read.parquet(events_dir).count()
-    assert out.count() == n_unique
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        st.error_click_interval_join(stream), "t_ssjoin", output_mode="append"
-    )
-    got = {(r.error_id, r.click_id) for r in out.collect()}
-
-    (events,) = load_tables(spark, sf_dir, "events")
-    errs = events.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("u"), F.col("ts").alias("e_ts"),
-        F.col("event_id").alias("error_id"),
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("u"), F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    batch = errs.join(
-        clicks,
-        (errs.u == clicks.u)
-        & (F.col("c_ts") >= F.col("e_ts"))
-        & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 30 MINUTES")),
-    )
-    want = {(r.error_id, r.click_id) for r in batch.collect()}
-    assert got  # non-degenerate
-    assert got == want
-
-
-def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
-    """Two micro-batches (maxFilesPerTrigger=1): batch 1 advances the
-    watermark past the 10:00 window; batch 2 carries a LATE 10:05 row,
-    which must be dropped from the already-closed window."""
-    import glob
-    import os
-    import shutil
-    from datetime import datetime
-
-    from pyspark.sql import types as T
-    from sentiment_analysis_data_engineering_spark.streaming.events import (
-        tumbling_window_agg,
-    )
-
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    indir = tmp_path / "in"
-    indir.mkdir()
-
-    def emit(name, rows, mtime):
-        stage = tmp_path / f"stage_{name}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = indir / name
-        shutil.copy(part, dst)
-        os.utime(dst, (mtime, mtime))
-
-    t = lambda h, m: datetime(2024, 1, 1, h, m, 0)
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(str(indir))
-        agg = tumbling_window_agg(stream, window="1 hour", watermark="10 minutes")
-        rows = []
-
-        def sink(batch_df, batch_id):
-            rows.extend(batch_df.collect())
-
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {r.window_start: r.n_events for r in rows}
-
-    # run 1: two in the 10:00 window, one at 12:00 → watermark 11:50,
-    # 10:00 window closes and emits with 2
-    emit("a.parquet", [(1, t(10, 10), "click", 1.0),
-                       (2, t(10, 40), "click", 1.0),
-                       (3, t(12, 0), "click", 1.0)], 1_700_000_000)
-    first = run_once()
-    assert first.get("2024-01-01 10:00:00") == 2
-
-    # run 2 (same checkpoint → watermark persisted): a LATE 10:05 row
-    # must be dropped; the closed window must NOT re-emit or grow
-    emit("b.parquet", [(4, t(10, 5), "click", 1.0),
-                       (5, t(12, 30), "click", 1.0)], 1_700_000_100)
-    second = run_once()
-    assert second.get("2024-01-01 10:00:00", 0) in (0, 2)  # never 3
-    total_10 = first.get("2024-01-01 10:00:00", 0) + second.get(
-        "2024-01-01 10:00:00", 0
-    )
-    assert total_10 == 2  # the late row contributed nowhere
 
 
 def test_checkpointed_restart_exactly_once_across_crash(spark, tmp_path):
@@ -283,404 +62,6 @@ def test_checkpointed_restart_exactly_once_across_crash(spark, tmp_path):
     got = spark.read.parquet(target)
     assert got.count() == 40
     assert got.select("event_id").distinct().count() == 40
-
-
-def test_merge_upsert_stream_updates_and_inserts_across_restart(spark, tmp_path):
-    """Streaming MERGE sink: run 1 seeds the table from a first source
-    batch; run 2 (same checkpoint) merges a second batch that UPDATES
-    half the keys and INSERTS new ones. Final table must equal the
-    batch-merge of the two generations: every key once, updated rows
-    superseding seeds."""
-    from pyspark.sql import functions as F
-
-    from sentiment_analysis_data_engineering_spark.streaming.events import run_merge_upsert_stream
-
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, part long, val string"
-
-    def start():
-        stream = spark.readStream.schema(schema).parquet(src)
-        run_merge_upsert_stream(
-            stream, target, ["k"], partition_by=["part"], checkpoint=ckpt
-        )
-
-    # generation 1: keys 0-9
-    spark.createDataFrame(
-        [(i, i % 2, f"v1-{i}") for i in range(10)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    start()
-    assert spark.read.parquet(target).count() == 10
-
-    # generation 2 (new file, resumed checkpoint): update 0-4, insert 10-12
-    spark.createDataFrame(
-        [(i, i % 2, f"v2-{i}") for i in range(5)]
-        + [(i, i % 2, f"v2-{i}") for i in range(10, 13)],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    start()
-
-    got = {r.k: r.val for r in spark.read.parquet(target).collect()}
-    assert len(got) == 13  # every key exactly once
-    assert all(got[i] == f"v2-{i}" for i in range(5))          # updated
-    assert all(got[i] == f"v1-{i}" for i in range(5, 10))      # untouched
-    assert all(got[i] == f"v2-{i}" for i in range(10, 13))     # inserted
-
-
-def test_streaming_ewma_matches_batch(spark, sf_dir, events_dir):
-    from sentiment_analysis_data_engineering_spark.operators.temporal import ewma_last
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        stateful.streaming_ewma(stream, alpha=0.3), "t_sewma", output_mode="update"
-    )
-    pdf = out.toPandas()
-    final = pdf.groupby("user_id").tail(1).set_index("user_id")
-
-    (events,) = load_tables(spark, sf_dir, "events")
-    batch = ewma_last(
-        events, key_col="user_id", ts_col="ts", value_col="value",
-        tiebreak_col="event_id", alpha=0.3,
-    ).toPandas().set_index("user_id")
-
-    assert len(final) == len(batch)
-    for uid, row in batch.iterrows():
-        assert final.loc[uid, "n_events"] == row["n_events"]
-        assert abs(final.loc[uid, "ewma"] - row["ewma"]) < 1e-9
-
-
-def test_quarantine_stream_splits_and_keeps_everything(spark, events_dir, tmp_path):
-    stream = st.read_events_stream(spark, events_dir)
-    target = str(tmp_path / "q_sink")
-    st.run_quarantine_stream(
-        stream,
-        target,
-        {"value_under_100": F.col("value") < 100.0},
-        checkpoint=str(tmp_path / "q_ckpt"),
-    )
-    back = spark.read.parquet(target)
-    n_total = spark.read.parquet(events_dir).count()
-    assert back.count() == n_total  # nothing dropped
-    n_bad_expected = (
-        spark.read.parquet(events_dir).filter(~(F.col("value") < 100.0)).count()
-    )
-    n_bad = back.filter(F.col("_quarantined") == "true").count()
-    assert n_bad == n_bad_expected and n_bad > 0
-
-
-def test_scd2_stream_versions_replay_and_collapse(spark, tmp_path):
-    """Streaming SCD2 sink: gen-1 seeds the history; gen-2 carries a
-    value change, an identical re-delivery, a brand-new key, AND two
-    updates for one key in the same micro-batch (must collapse to the
-    latest by order_col). A full replay from a fresh checkpoint must
-    leave the history unchanged (batch-id-derived timestamps)."""
-    from sentiment_analysis_data_engineering_spark.streaming.events import run_scd2_stream
-
-    src = str(tmp_path / "src")
-    hist = str(tmp_path / "hist")
-    schema = "k long, seg string, bal long, seq long"
-
-    def start(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src)
-        run_scd2_stream(
-            stream, hist, ["k"], ["seg", "bal"],
-            order_col="seq", checkpoint=str(tmp_path / ckpt),
-        )
-
-    # generation 1: three keys seed the history
-    spark.createDataFrame(
-        [(1, "A", 100, 1), (2, "B", 200, 1), (3, "C", 300, 1)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    start("ckpt")
-    h1 = {(r.k, r.valid_from): r for r in spark.read.parquet(hist).collect()}
-    assert len(h1) == 3 and all(r.is_current for r in h1.values())
-
-    # generation 2: key1 changes twice in-batch (seq 2 then 3 wins),
-    # key2 re-delivered identically (no-op), key4 is new
-    spark.createDataFrame(
-        [(1, "A", 150, 2), (1, "A", 175, 3), (2, "B", 200, 2), (4, "D", 400, 2)],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    start("ckpt")
-    rows = spark.read.parquet(hist).collect()
-    byk = {(r.k, r.is_current): r for r in rows}
-    # k1 closed seed + k1 open + k2 open + k3 open + k4 open
-    assert len(rows) == 5
-    # key 1: closed seed + open v175 (the in-batch intermediate 150 is
-    # never recorded)
-    assert byk[(1, False)].bal == 100 and byk[(1, False)].valid_to is not None
-    assert byk[(1, True)].bal == 175
-    # key 2: single untouched open version
-    assert byk[(2, True)].bal == 200
-    assert (2, False) not in byk
-    # key 4: new open version
-    assert byk[(4, True)].bal == 400
-
-    # full replay, fresh checkpoint: batch-ids regenerate identically, so
-    # every apply is a no-op — history must be byte-identical
-    before = sorted(map(tuple, rows))
-    start("ckpt_replay")
-    after = sorted(map(tuple, spark.read.parquet(hist).collect()))
-    assert after == before
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_dir, tmp_path):
-    """Stream-static broadcast enrichment must produce exactly the rows
-    of the equivalent batch join, and reject join types that are
-    ill-defined against an unbounded stream."""
-    import pytest as _pytest
-
-    from sentiment_analysis_data_engineering_spark.streaming.events import enrich_stream_with_dim
-
-    # dimension: user_id -> tier (derived deterministically; some users
-    # are deliberately absent so the LEFT semantics are exercised)
-    (events,) = load_tables(spark, sf_dir, "events")
-    dim = (
-        events.select("user_id").distinct()
-        .filter(F.col("user_id") % 3 != 0)  # 1/3 of users missing
-        .withColumn("tier", F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd"))
-    )
-    stream = st.read_events_stream(spark, events_dir)
-    enriched = enrich_stream_with_dim(
-        stream.select("event_id", "user_id"), dim, ["user_id"]
-    )
-    got = st.run_available_now(enriched, "t_enrich").toPandas()
-
-    batch = (
-        events.select("event_id", "user_id")
-        .join(F.broadcast(dim), ["user_id"], "left")
-        .toPandas()
-    )
-    assert len(got) == len(batch)
-    got_s = got.sort_values("event_id").reset_index(drop=True)
-    batch_s = batch[got.columns].sort_values("event_id").reset_index(drop=True)
-    assert got_s.equals(batch_s)
-    # absent dimension keys must still stream through (left semantics)
-    assert got["tier"].isna().any()
-
-    with _pytest.raises(ValueError, match="inner/left"):
-        enrich_stream_with_dim(stream, dim, ["user_id"], how="full")
-
-
-def test_streaming_cms_maintenance_matches_batch_and_replays(
-    spark, sf_dir, events_dir, tmp_path
-):
-    from sentiment_analysis_data_engineering_spark.operators.sketches import cms_build
-
-    target = str(tmp_path / "cms_store")
-
-    stream = st.read_events_stream(spark, events_dir)
-    st.run_cms_maintenance_stream(
-        stream, "user_id", target,
-        checkpoint=str(tmp_path / "ckpt1"), depth=3, width=256,
-    )
-    merged = {
-        (r.row_i, r.cell): r.cnt
-        for r in st.read_cms_sketch(spark, target).collect()
-    }
-
-    (events,) = load_tables(spark, sf_dir, "events")
-    whole = {
-        (r.row_i, r.cell): r.cnt
-        for r in cms_build(events, "user_id", depth=3, width=256).collect()
-    }
-    assert merged == whole  # streamed partials merge to the one-shot sketch
-
-    # Replay: a fresh checkpoint re-delivers every batch with the same
-    # batch ids; partition replacement must leave the store unchanged.
-    stream2 = st.read_events_stream(spark, events_dir)
-    st.run_cms_maintenance_stream(
-        stream2, "user_id", target,
-        checkpoint=str(tmp_path / "ckpt2"), depth=3, width=256,
-    )
-    replayed = {
-        (r.row_i, r.cell): r.cnt
-        for r in st.read_cms_sketch(spark, target).collect()
-    }
-    assert replayed == whole
-
-
-def test_streaming_zscore_matches_batch_query(spark, sf_dir, events_dir):
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        stateful.streaming_zscore(stream), "t_szscore", output_mode="append"
-    ).toPandas()
-    got = {
-        (r.user_id, r.event_id): (r.value, r.zscore)
-        for r in out.itertuples()
-    }
-
-    from sentiment_analysis_data_engineering_spark.plans import behavior_queries
-
-    batch = behavior_queries.rolling_zscore_anomalies(spark, sf_dir).toPandas()
-    want = {
-        (r.user_id, r.event_id): (r.value, r.zscore)
-        for r in batch.itertuples()
-    }
-    assert got.keys() == want.keys() and want
-    for k in want:
-        assert abs(got[k][0] - want[k][0]) < 1e-9
-        assert abs(got[k][1] - want[k][1]) < 1e-9
-
-
-def test_streaming_zscore_null_values_match_batch_semantics(spark, tmp_path):
-    """Null values count toward the warm-up ROW count (like the batch
-    count(*)) but are skipped by the moments (like Spark avg/stddev)."""
-    import datetime as dt
-
-    from pyspark.sql import Window
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    vals = [10.0, None, 10.2, 9.9, None, 10.1, 9.8, 10.0, 10.2, 9.9,
-            10.1, 10.0, 50.0]  # the 50 is the anomaly
-    for i, v in enumerate(vals):
-        rows.append((i + 1, base + dt.timedelta(minutes=i), 7, "view", v, "{}"))
-    pdir = str(tmp_path / "nullev")
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string"
-    ).coalesce(1).write.parquet(pdir)
-
-    stream = st.read_events_stream(spark, pdir)
-    out = st.run_available_now(
-        stateful.streaming_zscore(stream, min_obs=10), "t_sznull",
-        output_mode="append",
-    ).toPandas()
-    got = {(r.user_id, r.event_id): r.zscore for r in out.itertuples()}
-
-    batch = spark.read.parquet(pdir)
-    w = (
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(-20, -1)
-    )
-    z = F.round((F.col("value") - F.avg("value").over(w))
-                / F.stddev_samp("value").over(w), 4)
-    want_df = (
-        batch.select(
-            "user_id", "event_id",
-            F.count("*").over(w).alias("n_prev"), z.alias("z"),
-            F.stddev_samp("value").over(w).alias("sd"),
-        )
-        .filter((F.col("n_prev") >= 10) & (F.col("sd") > 0)
-                & (F.abs(F.col("z")) > 2.5))
-    )
-    want = {(r.user_id, r.event_id): r.z for r in want_df.collect()}
-    assert got.keys() == want.keys() and want  # anomaly found both ways
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9
-
-
-def test_ohlc_stream_matches_batch_query(spark, sf_dir, events_dir):
-    from sentiment_analysis_data_engineering_spark.plans.behavior_queries import (
-        daily_ohlc_bars,
-    )
-
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        st.ohlc_window_agg(stream), "t_ohlc", output_mode="complete"
-    )
-    got = {
-        (r.day, r.user_id): (r.open, r.high, r.low, r.close, r.n_events)
-        for r in out.collect()
-    }
-    batch = daily_ohlc_bars(spark, sf_dir)
-    want = {
-        (r.day, r.user_id): (r.open, r.high, r.low, r.close, r.n_events)
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_transform_with_state_matches_groupstate_api(spark, sf_dir, events_dir):
-    # the Spark 4 StatefulProcessor surface must produce the SAME final
-    # running totals as the applyInPandasWithState twin and the batch agg
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state protocol rides protobuf, "
-        "absent in this container (present on standard cluster images)",
-    )
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    stream = st.read_events_stream(spark, events_dir)
-    out = st.run_available_now(
-        stateful.running_user_stats_tws(stream),
-        "t_stateful_tws",
-        output_mode="update",
-    )
-    pdf = out.toPandas()
-    final = pdf.groupby("user_id").tail(1).set_index("user_id")
-    (events,) = load_tables(spark, sf_dir, "events")
-    batch = (
-        events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("v"))
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(batch)
-    for uid, row in batch.iterrows():
-        assert final.loc[uid, "n_events"] == row["n"]
-        assert abs(final.loc[uid, "total_value"] - row["v"]) < 1e-3
-
-
-def test_streaming_transitions_match_batch(spark, sf_dir, events_dir, tmp_path):
-    """Per-user transition increments with the last event type carried
-    across micro-batch boundaries: events split into 3 time-ordered
-    files, streamed one file per micro-batch, summed increments must
-    equal the batch lag-window transition counts — including the pairs
-    that STRADDLE a batch boundary (the whole point of the state)."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import Window as W
-    from sentiment_analysis_data_engineering_spark.streaming import stateful
-
-    t = pq.read_table(events_dir)
-    idx = pc.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    n = t.num_rows
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        path = f"{src}/{i}.parquet"
-        pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
-        os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    stream = st.read_events_stream(spark, src, max_files_per_trigger=1)
-    out = st.run_available_now(
-        stateful.streaming_transitions(stream), "t_trans", output_mode="append"
-    )
-    pdf = out.toPandas()
-    got = (
-        pdf.groupby(["prev_type", "event_type"])["n"].sum().to_dict()
-    )
-
-    (events,) = load_tables(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    want = {
-        (r.prev_type, r.event_type): r.n
-        for r in seq.groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
-    # the split genuinely exercised the boundary: some user emitted
-    # increments in more than one micro-batch run
-    per_user_rows = pdf.groupby("user_id").size()
-    assert (per_user_rows > 1).any()
 
 
 def test_streaming_ivfpq_merge_matches_batch_and_replays(spark, sf_dir, tmp_path):

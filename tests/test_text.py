@@ -52,11 +52,8 @@ def test_fingerprints_stable_under_whitespace(spark):
     df = spark.createDataFrame(
         [("a  B c",), ("A b   C",), ("totally different",)], "text string"
     )
-    out = df.select(
-        tx.fingerprint_md5("text").alias("md5"),
-        tx.fingerprint_xxh64("text").alias("xxh"),
-    ).collect()
-    assert out[0].md5 == out[1].md5 and out[0].xxh == out[1].xxh
+    out = df.select(tx.fingerprint_md5("text").alias("md5")).collect()
+    assert out[0].md5 == out[1].md5
     assert out[0].md5 != out[2].md5
 
 
