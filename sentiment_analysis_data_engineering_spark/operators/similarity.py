@@ -43,8 +43,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
 
-from ..sources.io import _hadoop_fs
+from ..sources.io import _hadoop_fs, scan
 from .dedup import _spread
 from .observe import checkpoint_with_metrics, write_with_metrics
 
@@ -69,6 +70,7 @@ __all__ = [
     "ivfpq_delete_ids",
     "ivfpq_reembed",
     "ivfpq_drift_audit",
+    "CODES_SCHEMA",
 ]
 
 
@@ -999,6 +1001,36 @@ def ivfpq_cosine_topk(
 # At 100 TB the codes table is the only corpus-sized artifact (~m
 # bytes/vector), and every maintenance operation below touches only
 # the partitions its batch lands in.
+#
+# Every artifact is written and read back with the schemas below, so
+# no read-back (probe, merge dedup, staging validation) launches a
+# schema-inference job. Index ids are stored as bigint.
+
+_VEC = T.ArrayType(T.DoubleType())
+_CENTROIDS_SCHEMA = T.StructType([
+    T.StructField("cell", T.LongType()), T.StructField("vec", _VEC),
+])
+_CODEBOOKS_SCHEMA = T.StructType([
+    T.StructField("subspace", T.IntegerType()),
+    T.StructField("code", T.IntegerType()),
+    T.StructField("vec", _VEC),
+])
+#: ``codes/`` and its staging siblings; ``cell`` is the partition column.
+CODES_SCHEMA = T.StructType([
+    T.StructField("neighbor_id", T.LongType()),
+    T.StructField("codes", T.ArrayType(T.IntegerType())),
+    T.StructField("cell", T.LongType()),
+])
+
+
+def _check_index_ids(df: DataFrame, id_col: str) -> None:
+    """Refuse ids the bigint ``neighbor_id`` column cannot hold."""
+    t = df.schema[id_col].dataType
+    if not isinstance(t, T.IntegralType):
+        raise TypeError(
+            f"a persisted IVF-PQ index stores bigint ids; {id_col!r} is "
+            f"{t.simpleString()}"
+        )
 
 
 def _locked_verb(fn):
@@ -1054,6 +1086,7 @@ def ivfpq_write_index(
     lazily read the live codes (the streaming maintainer eagerly
     checkpoints its membership semi-join for exactly this reason).
     Returns ``{"n_indexed", "n_cells", "m", "n_codes", "dim"}``."""
+    _check_index_ids(corpus, id_col)
     spark = corpus.sparkSession
     fs, jpath = _hadoop_fs(spark, path)
     rebuild = fs.exists(jpath(f"{path}/codes"))
@@ -1075,7 +1108,7 @@ def ivfpq_write_index(
     _fence_commit(spark, path)
     spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
-        "cell long, vec array<double>",
+        _CENTROIDS_SCHEMA,
     ).write.mode("overwrite").parquet(f"{base}/centroids")
     spark.createDataFrame(
         [
@@ -1083,7 +1116,7 @@ def ivfpq_write_index(
             for s, book in enumerate(books)
             for c, row in enumerate(book)
         ],
-        "subspace int, code int, vec array<double>",
+        _CODEBOOKS_SCHEMA,
     ).write.mode("overwrite").parquet(f"{base}/codebooks")
     # encode exactly once, DIRECTLY into the clustered write: the
     # n_indexed count rides the write job via Observation (r14 verdict
@@ -1113,7 +1146,7 @@ def ivfpq_write_index(
         )["n"]
     )
     if rebuild:
-        n_staged = spark.read.parquet(f"{base}/codes").count()
+        n_staged = scan(spark, f"{base}/codes", schema=CODES_SCHEMA).count()
         if n_staged != n:
             fs.delete(jpath(base), True)
             raise IOError(
@@ -1247,13 +1280,17 @@ def ivfpq_read_model(spark, path: str, *, use_cache: bool = True):
                 _MODEL_CACHE.move_to_end(path)  # LRU: freshly served
                 MODEL_CACHE_STATS["hits"] += 1
                 return hit[1]
-    cent = spark.read.parquet(f"{path}/centroids").collect()
+    cent = scan(
+        spark, f"{path}/centroids", schema=_CENTROIDS_SCHEMA
+    ).collect()
     n_cells = len(cent)
     dim = len(cent[0].vec)
     C = np.zeros((n_cells, dim), dtype=np.float64)
     for r in cent:
         C[r.cell] = r.vec
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    book_rows = scan(
+        spark, f"{path}/codebooks", schema=_CODEBOOKS_SCHEMA
+    ).collect()
     m = 1 + max(r.subspace for r in book_rows)
     n_codes = 1 + max(r.code for r in book_rows)
     books = [
@@ -1319,6 +1356,7 @@ def ivfpq_merge_index(
     ``n_id_conflicts`` counts batch ids presented with two DIFFERENT
     vectors (malformed upstream; resolved deterministically, see the
     inline note)."""
+    _check_index_ids(new_vectors, id_col)
     # heal any interrupted compact/delete swap BEFORE the dedup probe:
     # an un-recovered rolled-back cell would be invisible to the
     # anti-join and its ids re-added, duplicating rows once recovered
@@ -1363,7 +1401,7 @@ def ivfpq_merge_index(
         F.col("_mx.codes").alias("codes"),
     )
     existing = (
-        spark.read.parquet(f"{path}/codes")
+        scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
         .filter(F.col("cell").isin(batch_cells))
         .select("neighbor_id")
     )
@@ -1400,7 +1438,7 @@ def ivfpq_merge_index(
         )["n"]
     )
     if n_added:
-        n_staged = spark.read.parquet(stage).count()
+        n_staged = scan(spark, stage, schema=CODES_SCHEMA).count()
         if n_staged != n_added:
             fs.delete(jpath(stage), True)
             raise IOError(
@@ -2216,9 +2254,8 @@ def ivfpq_compact_index(spark, path: str) -> dict:
     ]
     if not fragmented:
         return {"n_cells_compacted": 0, "n_rows_rewritten": 0}
-    codes = spark.read.parquet(f"{path}/codes")
-    sub = codes.filter(F.col("cell").isin(fragmented)).withColumn(
-        "cell", F.col("cell").cast("long")
+    sub = scan(spark, f"{path}/codes", schema=CODES_SCHEMA).filter(
+        F.col("cell").isin(fragmented)
     )
     staging = f"{path}/codes_staging"
     # the fragmented subset is read exactly ONCE, directly into the
@@ -2246,7 +2283,7 @@ def ivfpq_compact_index(spark, path: str) -> dict:
             f"compact read 0 rows from {len(fragmented)} fragmented "
             f"cells — refusing to swap; live index left untouched"
         )
-    n_staged = spark.read.parquet(staging).count()
+    n_staged = scan(spark, staging, schema=CODES_SCHEMA).count()
     if n_staged != n_rows:
         # live index untouched — discard the bad stage and fail loudly
         fs, jpath = _hadoop_fs(spark, path)
@@ -2300,17 +2337,11 @@ def ivfpq_delete_ids(
     "n_cells_rewritten", "n_cells_emptied"}``."""
     ivfpq_recover_index(spark, path)
     if not isinstance(ids, DataFrame):
-        id_t = (
-            spark.read.parquet(f"{path}/codes")
-            .schema["neighbor_id"].dataType.simpleString()
-        )
-        ids = spark.createDataFrame(
-            [(i,) for i in ids], f"{id_col} {id_t}"
-        )
+        ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} bigint")
     victims = (
         ids.select(F.col(ids.columns[0]).alias("neighbor_id")).distinct()
     )
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
     per_cell = (
         codes.select("neighbor_id", "cell")
         .join(F.broadcast(victims), "neighbor_id")
@@ -2325,7 +2356,6 @@ def ivfpq_delete_ids(
     survivors = (
         codes.filter(F.col("cell").isin(affected))
         .join(F.broadcast(victims), "neighbor_id", "left_anti")
-        .withColumn("cell", F.col("cell").cast("long"))
     )
     kept_cells: set = set()
     staging = f"{path}/codes_staging"
@@ -2347,7 +2377,7 @@ def ivfpq_delete_ids(
     )
     if n_survivors:
         back = (
-            spark.read.parquet(staging)
+            scan(spark, staging, schema=CODES_SCHEMA)
             .agg(
                 F.count(F.lit(1)).alias("_n"),
                 F.collect_set("cell").alias("_cells"),
@@ -2458,9 +2488,7 @@ def ivfpq_drift_audit(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v"),
         seg,
     )
-    codes = spark.read.parquet(f"{path}/codes").withColumn(
-        "cell", F.col("cell").cast("long")
-    )
+    codes = scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
     if sample_mod is not None:
         if sample_mod < 1:
             raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
@@ -2598,9 +2626,8 @@ def ivfpq_probe_index(
     qtab = register_pinned(qtab)
     probed = sorted(_m["cells"])
     enc = (
-        spark.read.parquet(f"{path}/codes")
+        scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
         .filter(F.col("cell").isin(probed))  # directory-level pruning
-        .withColumn("cell", F.col("cell").cast("long"))
     )
     adc = enc.join(
         F.broadcast(qtab.select("query_id", "cell", "_tab")), "cell"

@@ -449,11 +449,10 @@ _BPE_MERGES = 8
 #: (ties break (count DESC, l, r)), and each of its n_merges iterations
 #: is a driver-blocking argmax action — the trainer query and the
 #: encode query would otherwise each pay the full iteration ladder for
-#: the identical result. Same convention as extension_queries'
-#: _ROWCOUNT_CACHE, with the same caveat: the key assumes the fixture
-#: at sf_dir is immutable for the process lifetime; a corpus mutated
-#: in place at the same path would be served stale merges (key on
-#: (path, parquet mtime) if fixtures ever become mutable).
+#: the identical result. Caveat: the key assumes the fixture at sf_dir
+#: is immutable for the process lifetime; a corpus mutated in place at
+#: the same path would be served stale merges (key on (path, parquet
+#: mtime) if fixtures ever become mutable).
 _BPE_MERGE_CACHE: dict[tuple[str, int, int], list[tuple[str, str, int]]] = {}
 
 

@@ -17,9 +17,16 @@ Determinism rules enforced across the registry (SURVEY.md §5.2):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schemas import FIXTURE_SCHEMAS
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -39,40 +46,65 @@ def query(name: str, oracle: str | None = None):
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    """Read driver fixture parquet tables (TESTDATA.md).
+    """Read the fixture parquet tables (TESTDATA.md) with their
+    declared schemas (``schemas.FIXTURE_SCHEMAS``), so no read launches
+    a schema-inference job.
 
-    ``events.parquet`` has shipped in two encodings across driver
-    rounds: TIMESTAMP(NANOS) (which Spark's parquet reader rejects
-    unless the legacy nanosAsLong escape hatch is on, yielding a
-    bigint of epoch-nanos) and plain ``timestamp[us]`` (read natively
-    as TIMESTAMP_NTZ). We flip the conf — a no-op for the micros
-    encoding — then rebuild a microsecond timestamp only when the read
-    dtype is the nanos long. Either way the result matches DuckDB's
-    TIMESTAMP view of the same file bit-for-bit (sub-microsecond
-    digits in the nanos fixture are all zero).
+    Every current fixture SF stores ``events.ts`` as naive
+    ``timestamp[us]``; older fixture releases stored TIMESTAMP(NANOS),
+    which Spark reads only as a bigint of epoch-nanos, and a table
+    Spark wrote itself stores a UTC-adjusted one. ``ts``'s declared
+    type comes from the parquet footer (read on the driver, no Spark
+    job). Either way ``ts`` becomes a microsecond TIMESTAMP
+    that matches DuckDB's view of the same file bit-for-bit (the nanos
+    fixture's sub-microsecond digits are all zero).
     """
     # Self-defend against a non-UTC caller session: the DuckDB oracle is
     # tz-naive, so timestamp-derived year/month must be computed in UTC.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     out: list[DataFrame] = []
     for n in names:
+        path = f"{sf_dir}/{n}.parquet"
         if n == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            from pyspark.sql import functions as F
-
-            df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            elif ts_type == "timestamp_ntz":
-                # canonical engine type for event time is TIMESTAMP
-                # (downstream uses unix_micros etc., which reject NTZ);
-                # under the UTC session this cast is value-preserving
-                # and matches DuckDB's naive reading of the same file
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+            out.append(_read_events(spark, path))
         else:
-            df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        out.append(df)
+            out.append(spark.read.schema(FIXTURE_SCHEMAS[n]).parquet(path))
     return out
+
+
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    ts_type = _ts_type(path)
+    nanos = ts_type == T.LongType()
+    schema = T.StructType([
+        T.StructField("ts", ts_type) if f.name == "ts" else f
+        for f in FIXTURE_SCHEMAS["events"]
+    ])
+    df = spark.read.schema(schema).parquet(path)
+    if nanos:
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # canonical engine type for event time is TIMESTAMP (downstream uses
+    # unix_micros etc., which reject NTZ); under the UTC session the NTZ
+    # cast is value-preserving and matches DuckDB's naive reading of the
+    # same file
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _ts_type(path: str) -> T.DataType:
+    """Spark's type for ``events.ts`` in the parquet file or directory
+    at ``path``, from its first file's footer: INT96 (Spark's default
+    timestamp encoding) and UTC-adjusted timestamps read as TIMESTAMP,
+    naive ones as TIMESTAMP_NTZ and nanosecond ones as a bigint."""
+    footer = pq.ParquetFile(ds.dataset(path, format="parquet").files[0]).schema
+    col = next(c for c in map(footer.column, range(len(footer))) if c.path == "ts")
+    if col.physical_type == "INT96":
+        return T.TimestampType()
+    logical = json.loads(col.logical_type.to_json())
+    if logical["timeUnit"] == "nanoseconds":
+        return T.LongType()
+    return T.TimestampType() if logical["isAdjustedToUTC"] else T.TimestampNTZType()
+
+
+def fixture_rows(sf_dir: str, name: str) -> int:
+    """Row count of a fixture table from its parquet footers — driver
+    metadata, no Spark job."""
+    return ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()

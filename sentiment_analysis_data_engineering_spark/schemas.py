@@ -15,6 +15,11 @@ so no DATE/TIMESTAMP type appears in any warehouse schema. Where the
 reference's DDL and its append path disagree (ESG ``value_SOCIAL_RATING``
 vs ``value_SOCIAL_LEVEL``, ``weekly_dag.py:556`` vs ``:274``), the DDL
 wins (SURVEY.md §2.11.3).
+
+The fixture tables (TESTDATA.md) are declared here too, in
+``FIXTURE_SCHEMAS``, so ``plans.registry.load_tables`` reads them
+without a schema-inference job — the catalog-held DDL of the
+reference, for parquet files that carry no catalog.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ __all__ = [
     "TICKERS",
     "DATE_KEY_DAILY",
     "DATE_KEY_MONTHLY",
+    "FIXTURE_SCHEMAS",
 ]
 
 #: The nine SGX tickers every pipeline iterates over
@@ -174,4 +180,61 @@ WAREHOUSE_SCHEMAS: dict[str, tuple[T.StructType, list[str]]] = {
     "key_metrics_table": (KEY_METRICS_TABLE, ["year", "month"]),
     "company_esg_table": (COMPANY_ESG_TABLE, ["year", "month"]),
     "company_group_table": (COMPANY_GROUP_TABLE, ["year", "month"]),
+}
+
+
+_INT = T.IntegerType()
+_NTZ = T.TimestampNTZType()
+
+
+def _table(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([_f(n, t) for n, t in cols])
+
+
+#: The ten fixture tables, typed exactly as Spark's parquet
+#: reader infers them from the files at every SF (int32 keys stay
+#: ``int``, naive ``timestamp[us]`` reads as ``timestamp_ntz``). A
+#: file whose column drifts to a type the reader cannot widen fails
+#: its first action instead of being misread; the schema law in
+#: tests/test_registry.py compares these to the inferred schemas.
+FIXTURE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _table(
+        ("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT),
+    ),
+    "customer": _table(
+        ("c_custkey", _LONG), ("c_name", _STR), ("c_nationkey", _INT),
+        ("c_acctbal", _DBL), ("c_mktsegment", _STR),
+    ),
+    "supplier": _table(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT),
+        ("s_acctbal", _DBL),
+    ),
+    "part": _table(
+        ("p_partkey", _LONG), ("p_name", _STR), ("p_brand", _STR),
+        ("p_type", _STR), ("p_size", _INT), ("p_retailprice", _DBL),
+    ),
+    "orders": _table(
+        ("o_orderkey", _LONG), ("o_custkey", _LONG), ("o_orderstatus", _STR),
+        ("o_totalprice", _DBL), ("o_orderdate", _NTZ),
+        ("o_orderpriority", _STR),
+    ),
+    "lineitem": _table(
+        ("l_orderkey", _LONG), ("l_partkey", _LONG), ("l_suppkey", _LONG),
+        ("l_linenumber", _INT), ("l_quantity", _DBL),
+        ("l_extendedprice", _DBL), ("l_discount", _DBL), ("l_tax", _DBL),
+        ("l_returnflag", _STR), ("l_linestatus", _STR), ("l_shipdate", _NTZ),
+    ),
+    "events": _table(
+        ("event_id", _LONG), ("ts", _NTZ), ("user_id", _LONG),
+        ("event_type", _STR), ("value", _DBL), ("props", _STR),
+    ),
+    "documents": _table(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR),
+        ("source", _STR), ("n_chars", _LONG),
+    ),
+    "embeddings": _table(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType())),
+        ("label", _INT),
+    ),
 }

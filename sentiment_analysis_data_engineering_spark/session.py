@@ -60,8 +60,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for all pandas interchange (pandas_udf, mapInPandas).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # The events fixture stores TIMESTAMP(NANOS) which Spark's parquet
-        # reader rejects; read as long and convert (plans.registry).
+        # Every fixture SF stores events.ts as timestamp[us], and
+        # plans.registry.load_tables picks the declared schema from the
+        # footer. Older fixture releases stored TIMESTAMP(NANOS), which an
+        # inferring parquet read rejects unless it reads them as a bigint.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -116,6 +116,7 @@ def run_ivfpq_merge_stream(
     from fractions import Fraction
 
     from ..operators.similarity import (
+        CODES_SCHEMA,
         ivfpq_cell_file_counts,
         ivfpq_compact_index,
         ivfpq_drift_audit,
@@ -123,6 +124,7 @@ def run_ivfpq_merge_stream(
         ivfpq_read_model,
         ivfpq_write_index,
     )
+    from ..sources.io import scan
 
     stats: list[dict] = []
 
@@ -248,8 +250,8 @@ def run_ivfpq_merge_stream(
                 s["drift_fired"] = bool(fired)
                 if fired:
                     meta = ivfpq_read_model(spark, index_path)[2]
-                    held = spark.read.parquet(
-                        f"{index_path}/codes"
+                    held = scan(
+                        spark, f"{index_path}/codes", schema=CODES_SCHEMA
                     ).select("neighbor_id")
                     # membership-preserving rebuild: corpus rows the
                     # index currently holds, pinned so the overwrite
