@@ -33,12 +33,16 @@ its input is the codes ⋈ corpus join, not an (id, vector) frame.
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 import threading
-from collections import OrderedDict
-from contextlib import contextmanager
+import uuid
+from collections import Counter, OrderedDict
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,6 +70,7 @@ __all__ = [
     "ivfpq_merge_index",
     "ivfpq_compact_index",
     "ivfpq_cell_file_counts",
+    "ivfpq_codes",
     "ivfpq_probe_index",
     "ivfpq_delete_ids",
     "ivfpq_reembed",
@@ -600,7 +605,7 @@ def _sample_normalized(
       smallest-id centroid sample).
     - ``"hash"`` — ``train_rows`` vectors in ``xxhash64(id)`` order
       (id tiebreak). REQUIRED for the persisted index
-      (``ivfpq_write_index``) and therefore for every retrain (r10):
+      (``ivfpq_write_index``) and therefore for every retrain:
       ids correlate with ingestion time in any real pipeline, so a
       smallest-id sample would train every (re)build on the OLDEST
       rows — the one subset a drift-triggered RETRAIN must not be
@@ -986,24 +991,39 @@ def ivfpq_cosine_topk(
 # The index-lifecycle story `build_minhash_index` tells for dedup, told
 # for ANN: train ONCE, persist the model and the encoded corpus, probe
 # from any later session without re-encoding anything, and MERGE new
-# vectors in idempotently. Layout under `path` (model params n_cells /
-# m / n_codes / dim are derived from the artifacts on read — no
-# metadata file to drift):
+# vectors in idempotently. The index is a log of immutable snapshots
+# (the Delta Lake log protocol, Armbrust et al., VLDB 2020). Layout
+# under `path`:
 #
-#   centroids/  n_cells rows — (cell, vec)
-#   codebooks/  m·n_codes rows — (subspace, code, vec)
-#   codes/      one row per indexed vector, parquet PARTITIONED BY
-#               cell — (neighbor_id, codes). Cell == directory, so a
-#               probe's `cell IN (probed)` filter prunes at the FILE
-#               LISTING level: a probe reads ~n_probe/n_cells of the
-#               index bytes, which is the IVF promise made physical.
+#   _log/{n:020d}.json  version n's manifest: the model dir, and each
+#                       codes dir mapped to the cells it still serves
+#   v{n}-{uuid}/        the output of the verb that made version n —
+#                       never renamed or rewritten once written:
+#     centroids/        n_cells rows — (cell, vec)             [builds]
+#     codebooks/        m·n_codes rows — (subspace, code, vec) [builds]
+#     codes/            one row per vector it adds, parquet PARTITIONED
+#                       BY cell — (neighbor_id, codes). Cell ==
+#                       directory, so a probe's `cell IN (probed)`
+#                       filter prunes at the FILE LISTING level: a probe
+#                       reads ~n_probe/n_cells of the index bytes.
 #
-# At 100 TB the codes table is the only corpus-sized artifact (~m
-# bytes/vector), and every maintenance operation below touches only
-# the partitions its batch lands in.
+# Model params (n_cells / m / n_codes / dim) are derived from the
+# artifacts on read — no metadata to drift. A verb reads ONE version n
+# (model and codes from the same manifest), writes its output under a
+# fresh v{n+1}-{uuid}/, validates it, and commits by creating
+# _log/{n+1} create-exclusive (`_commit`): of two writers on version n
+# exactly one create succeeds and the other raises
+# `IndexConflictError`. Readers take the newest entry and read only
+# what it names, so a crashed or losing writer's files are never read;
+# each commit deletes every v{k}-* dir (k ≤ its version) its manifest
+# does not name, and every cell directory it no longer serves. Log
+# entries are never deleted — a deleted entry would
+# let a stale writer's create succeed. At 100 TB the codes table is the
+# only corpus-sized artifact (~m bytes/vector), and every verb writes
+# only the cells its batch touches.
 #
 # Every artifact is written and read back with the schemas below, so
-# no read-back (probe, merge dedup, staging validation) launches a
+# no read-back (probe, merge dedup, validation) launches a
 # schema-inference job. Index ids are stored as bigint.
 
 _VEC = T.ArrayType(T.DoubleType())
@@ -1015,12 +1035,20 @@ _CODEBOOKS_SCHEMA = T.StructType([
     T.StructField("code", T.IntegerType()),
     T.StructField("vec", _VEC),
 ])
-#: ``codes/`` and its staging siblings; ``cell`` is the partition column.
+#: every ``codes/`` dir; ``cell`` is the partition column.
 CODES_SCHEMA = T.StructType([
     T.StructField("neighbor_id", T.LongType()),
     T.StructField("codes", T.ArrayType(T.IntegerType())),
     T.StructField("cell", T.LongType()),
 ])
+_LOG = "_log"
+
+
+class IndexConflictError(RuntimeError):
+    """Another writer committed the version a verb was about to commit.
+    The verb's output was discarded and the index serves the other
+    writer's version; rerun the verb against it (every verb is
+    idempotent or convergent)."""
 
 
 def _check_index_ids(df: DataFrame, id_col: str) -> None:
@@ -1033,25 +1061,135 @@ def _check_index_ids(df: DataFrame, id_col: str) -> None:
         )
 
 
-def _locked_verb(fn):
-    """Enforce the single-writer lock (:func:`index_write_lock`, r10
-    verdict item 1) around a maintenance verb. Every wrapped verb has
-    the ``(spark_or_frame, path, ...)`` shape; the session comes from
-    the frame when the first argument is one. The lock is reentrant
-    in-process, so composed verbs (reembed = delete + merge) still
-    take it exactly once."""
-    import functools
+def _snapshot(spark, path: str, *, required: bool = True):
+    """``(n, manifest)`` of the newest committed version of the index
+    at ``path`` — a driver-side listing of ``_log`` plus one small-file
+    read, no Spark job. An entry whose bytes are not yet written reads
+    as not committed, so the previous version is returned; a writer
+    building on it then fails its create at n+1. ``(0, None)`` when
+    nothing is committed and ``required`` is False."""
+    fs, jpath = _hadoop_fs(spark, path)
+    log = jpath(f"{path}/{_LOG}")
+    names = (
+        [st.getPath().getName() for st in fs.listStatus(log)]
+        if fs.exists(log)
+        else []
+    )
+    versions = sorted(
+        (int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()),
+        reverse=True,
+    )
+    for n in versions:
+        stream = fs.open(jpath(f"{path}/{_LOG}/{n:020d}.json"))
+        try:
+            raw = bytes(
+                spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(
+                    stream
+                )
+            )
+        finally:
+            stream.close()
+        try:
+            return n, json.loads(raw)
+        except ValueError:
+            continue
+    if required:
+        raise FileNotFoundError(
+            f"no IVF-PQ index at '{path}': no committed version under "
+            f"{_LOG}/ — expected an index written by ivfpq_write_index"
+        )
+    return 0, None
 
-    @functools.wraps(fn)
-    def wrapper(a, path, *args, **kwargs):
-        spark = a.sparkSession if isinstance(a, DataFrame) else a
-        with index_write_lock(spark, path):
-            return fn(a, path, *args, **kwargs)
 
-    return wrapper
+def _served(manifest: dict, drop=(), own: str | None = None, cells=()) -> dict:
+    """``manifest`` with the cells in ``drop`` taken from every codes
+    entry (an entry left serving nothing goes) and ``own`` added
+    serving ``cells`` — the one manifest edit every verb makes."""
+    drop = set(drop)
+    codes = {
+        d: kept
+        for d, cs in manifest["codes"].items()
+        if (kept := [c for c in cs if c not in drop])
+    }
+    if cells:
+        codes[own] = sorted(int(c) for c in cells)
+    return {"model": manifest["model"], "codes": codes}
 
 
-@_locked_verb
+def _commit(spark, path: str, n: int, manifest: dict, own: str) -> None:
+    """Publish ``manifest`` as version ``n`` by creating
+    ``_log/{n:020d}.json`` with ``FileSystem.create(overwrite=false)``.
+    When the entry already exists another writer got there first: the
+    verb's own dir ``own`` is deleted and :class:`IndexConflictError`
+    raised. After the commit, every ``v{k}-*`` dir with k ≤ n that the
+    manifest does not name is deleted — superseded data, crashed
+    writers' output and losers' output alike — and so is every cell
+    directory a named dir no longer serves; a dir with k > n belongs
+    to a writer still working on version n and is left alone. No age,
+    clock or retention setting is involved.
+
+    The create is atomic on HDFS. Hadoop's local and S3A file systems
+    implement it as check-then-create, so two writers racing inside
+    that window can both succeed there; see SCALE.md."""
+    fs, jpath = _hadoop_fs(spark, path)
+    try:
+        out = fs.create(jpath(f"{path}/{_LOG}/{n:020d}.json"), False)
+    except Py4JJavaError as e:
+        fs.delete(jpath(f"{path}/{own}"), True)
+        if "FileAlreadyExistsException" not in str(e):
+            raise
+        raise IndexConflictError(
+            f"version {n} of the index at '{path}' was committed by "
+            f"another writer; this verb's output was discarded — rerun "
+            f"it against the new version"
+        ) from e
+    try:
+        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+    finally:
+        out.close()
+    for st in fs.listStatus(jpath(path)):
+        name = st.getPath().getName()
+        k = re.match(r"v(\d+)-", name)
+        if not k or int(k.group(1)) > n:
+            continue
+        if name != manifest["model"] and name not in manifest["codes"]:
+            fs.delete(st.getPath(), True)
+            continue
+        # a named dir keeps only the cells this version serves from it
+        served = set(manifest["codes"].get(name, ()))
+        codes = jpath(f"{path}/{name}/codes")
+        for cell in fs.listStatus(codes) if fs.exists(codes) else ():
+            cn = cell.getPath().getName()
+            if cn.startswith("cell=") and int(cn[5:]) not in served:
+                fs.delete(cell.getPath(), True)
+
+
+def _discard(spark, path: str, own: str, msg: str) -> None:
+    """Delete a verb's uncommitted dir and fail loudly."""
+    fs, jpath = _hadoop_fs(spark, path)
+    fs.delete(jpath(f"{path}/{own}"), True)
+    raise IOError(f"{msg} — the committed index is unchanged")
+
+
+def _write_codes(df: DataFrame, codes_dir: str) -> dict:
+    """The one codes write: clustered by cell, partitioned by cell, with
+    the row count ``n`` and the written ``cells`` observed on the write
+    job. Clustering before the partitioned write gives each cell ONE
+    file per write instead of one per (task × cell) — what makes
+    directory pruning worth having. At larger corpora repartition(n,
+    "cell") with n > n_cells keeps write parallelism while preserving
+    the clustering."""
+    return write_with_metrics(
+        df,
+        lambda d: d.repartition(F.col("cell"))
+        .write.partitionBy("cell")
+        .parquet(codes_dir),
+        defaults={"n": 0, "cells": []},  # empty plans drop the metrics node
+        n=F.count(F.lit(1)),
+        cells=F.collect_set("cell"),
+    )
+
+
 def ivfpq_write_index(
     corpus: DataFrame,
     path: str,
@@ -1064,37 +1202,31 @@ def ivfpq_write_index(
     train_rows: int = 256,
     iters: int = 10,
 ) -> dict:
-    """Train the IVF-PQ model on ``corpus`` and persist model + encoded
-    corpus at ``path`` (overwriting any prior index there). Training is
-    the deterministic bounded-sample Lloyd (`_ivfpq_train_model`);
-    encoding is one Arrow pass; the codes land partitioned by cell so
-    probes prune directories. Model params are not stored separately —
-    ``ivfpq_read_model`` derives them from the keyed centroid/codebook
-    rows. The fit sample is HASH-ordered (``_sample_normalized``
-    sample_order="hash"): a persisted index gets REBUILT by
-    drift-triggered retrains, and an id-prefix sample would train
-    every rebuild on the oldest rows — exactly the rows a retrain must
-    not be limited to.
+    """Train the IVF-PQ model on ``corpus`` and commit model + encoded
+    corpus at ``path`` as a new version that replaces whatever the
+    index held. Training is the deterministic bounded-sample Lloyd
+    (`_ivfpq_train_model`); encoding is one Arrow pass; the codes land
+    partitioned by cell so probes prune directories. Model params are
+    not stored separately — ``ivfpq_read_model`` derives them from the
+    keyed centroid/codebook rows. The fit sample is HASH-ordered
+    (``_sample_normalized`` sample_order="hash"): a persisted index
+    gets REBUILT by drift-triggered retrains, and an id-prefix sample
+    would train every rebuild on the oldest rows — exactly the rows a
+    retrain must not be limited to.
 
-    CRASH SAFETY on a REBUILD (r10): when ``path`` already holds an
-    index, the three artifacts are written to a ``_rebuild_staging``
-    sibling (the live model keeps serving, byte-identical, through the
-    whole train + encode), the staged codes are count-validated by
-    read-back, and only then does :func:`_swap_rebuild` commit — so a
-    retrain can never leave new centroids serving old codes. A fresh
-    build writes in place. The caller must ensure ``corpus`` does not
-    lazily read the live codes (the streaming maintainer eagerly
-    checkpoints its membership semi-join for exactly this reason).
-    Returns ``{"n_indexed", "n_cells", "m", "n_codes", "dim"}``."""
+    A rebuild keeps the previous version serving, byte-identical,
+    through the whole train + encode: the three artifacts land in the
+    new version's own dir, its codes are count-validated by read-back,
+    and one log entry then publishes model and codes together, so a
+    retrain can never leave new centroids serving old codes. ``corpus``
+    may lazily read the index it replaces — the previous version's
+    files are deleted only after the commit. Returns ``{"n_indexed",
+    "n_cells", "m", "n_codes", "dim"}``."""
     _check_index_ids(corpus, id_col)
     spark = corpus.sparkSession
-    fs, jpath = _hadoop_fs(spark, path)
-    rebuild = fs.exists(jpath(f"{path}/codes"))
-    if rebuild:
-        # heal any interrupted maintenance before measuring what exists
-        ivfpq_recover_index(spark, path)
-        rebuild = fs.exists(jpath(f"{path}/codes"))
-    base = f"{path}/_rebuild_staging" if rebuild else path
+    n0, prior = _snapshot(spark, path, required=False)
+    own = f"v{n0 + 1}-{uuid.uuid4().hex}"
+    base = f"{path}/{own}"
     C, books = _ivfpq_train_model(
         corpus, vec_col, id_col,
         n_cells=n_cells, m=m, n_codes=n_codes,
@@ -1102,14 +1234,10 @@ def ivfpq_write_index(
         sample_order="hash",
     )
     dim = len(C[0])
-    # a lease-broken zombie build aborts before its first artifact
-    # write (fresh build writes IN PLACE; a rebuild is re-fenced at
-    # _swap_rebuild's commit point anyway)
-    _fence_commit(spark, path)
     spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
         _CENTROIDS_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{base}/centroids")
+    ).write.parquet(f"{base}/centroids")
     spark.createDataFrame(
         [
             (s, c, [float(x) for x in row])
@@ -1117,62 +1245,42 @@ def ivfpq_write_index(
             for c, row in enumerate(book)
         ],
         _CODEBOOKS_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{base}/codebooks")
+    ).write.parquet(f"{base}/codebooks")
     # encode exactly once, DIRECTLY into the clustered write: the
-    # n_indexed count rides the write job via Observation (r14 verdict
-    # item 1 — previously a localCheckpoint + count pair, two extra
-    # sequential driver jobs bracketing the write).
-    enc = _ivfpq_encode(corpus, vec_col, id_col, C, books)
-    # cluster by cell before the partitioned write: each cell directory
-    # gets ONE file per writing task that owns it instead of one file
-    # per (task x cell) — the difference between n_cells files and
-    # n_tasks*n_cells tiny files, and what makes directory pruning
-    # worth having. At larger corpora repartition(n, "cell") with n >
-    # n_cells keeps write parallelism while preserving the clustering.
-    if not rebuild:
-        # fresh build writes codes IN PLACE and the encode can run
-        # minutes at scale — re-fence so a lease broken during the
-        # train aborts before the overwrite job launches (a rebuild's
-        # codes land in staging and are fenced at _swap_rebuild)
-        _fence_commit(spark, path)
-    n = int(
-        write_with_metrics(
-            enc,
-            lambda d: d.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{base}/codes"),
-            n=F.count(F.lit(1)),
-        )["n"]
+    # n_indexed count and the cell list ride the write job
+    w = _write_codes(
+        _ivfpq_encode(corpus, vec_col, id_col, C, books), f"{base}/codes"
     )
-    if rebuild:
+    n = int(w["n"])
+    if prior is not None:
         n_staged = scan(spark, f"{base}/codes", schema=CODES_SCHEMA).count()
         if n_staged != n:
-            fs.delete(jpath(base), True)
-            raise IOError(
-                f"rebuild staging validation failed: staged {n_staged} "
-                f"rows, expected {n} — live index left untouched"
+            _discard(
+                spark, path, own,
+                f"rebuild validation failed: wrote {n_staged} rows, "
+                f"expected {n}",
             )
-        _swap_rebuild(spark, path)
+    _commit(
+        spark, path, n0 + 1,
+        _served({"model": own, "codes": {}}, own=own, cells=w["cells"]),
+        own,
+    )
     return {
         "n_indexed": n, "n_cells": n_cells, "m": m,
         "n_codes": n_codes, "dim": dim,
     }
 
 
-#: driver-side memo of persisted models, keyed by index path; the
-#: value pairs an on-disk FINGERPRINT (per-file name/mtime/length of
-#: the centroids + codebooks artifacts) with the decoded model, so any
-#: rebuild — in this process or another — invalidates by changing the
-#: fingerprint. Bounded TWO ways (r11 verdict item 3 / advice low 3):
-#: one model-sized entry per index path served, AND an LRU cap of
-#: ``MODEL_CACHE_MAX`` distinct paths — a long-lived serving driver
-#: touching many indexes (or a bench loop building throwaway temp-dir
-#: indexes) evicts its least-recently-served entry instead of growing
-#: without bound. Models are KB-scale, so 16 is generous; deployments
-#: serving more hot indexes from one driver can raise it.
+#: driver-side memo of persisted models, keyed by the version's MODEL
+#: DIR — model dirs are immutable, so a key never goes stale and a
+#: rebuild (a new model dir) is simply a new key. Bounded to
+#: ``MODEL_CACHE_MAX`` entries, least-recently-served evicted first, so
+#: a long-lived serving driver touching many indexes (or a bench loop
+#: building throwaway temp-dir indexes) stays bounded. Models are
+#: KB-scale, so 16 is generous; deployments serving more hot indexes
+#: from one driver can raise it.
 MODEL_CACHE_MAX = 16
-_MODEL_CACHE: OrderedDict[str, tuple[tuple, tuple]] = OrderedDict()
+_MODEL_CACHE: OrderedDict[str, tuple] = OrderedDict()
 MODEL_CACHE_STATS = {"hits": 0, "misses": 0, "evictions": 0}
 #: serializes the get→move_to_end and insert→evict compound ops — a
 #: probe on the stream-execution thread and one on the main thread
@@ -1182,114 +1290,32 @@ _MODEL_CACHE_MUTEX = threading.Lock()
 
 
 def evict_model_cache(path: str) -> None:
-    """Drop a path's cached model AND its lock-metadata mutex, if
-    present — temp-dir index builds (gate fixtures, tests) call this
-    on teardown so a deleted directory never lingers as a cache entry
-    and throwaway paths don't accrete ``_PATH_MUTEXES`` entries for
-    the driver's lifetime (r13 review — same unbounded-growth shape
-    the model-cache LRU bounds). Only call once no verb is in flight
-    on the path (true at fixture teardown by construction): evicting
-    a mutex another thread still holds would let a later caller mint
-    a second mutex for the same path and break serialization. That
-    convention is BEST-EFFORT guarded (r13 advice low 3, scoped
-    honestly per r14 advice low 2): when any thread still holds this
-    path's lease, or the mutex is currently locked, the entry is
-    RETAINED — but a thread that fetched the Lock from
-    ``_path_mutex()`` and has not yet acquired it passes both checks,
-    so a concurrent-misuse eviction can still mint a second mutex.
-    The guard narrows the window; the create-exclusive lock file
-    remains the real cross-thread/cross-process backstop."""
+    """Drop the cached models of every version of the index at
+    ``path`` — temp-dir index builds (gate fixtures, tests) call this
+    on teardown so a deleted directory never lingers as a cache
+    entry."""
     with _MODEL_CACHE_MUTEX:
-        _MODEL_CACHE.pop(path, None)
-    with _PATH_MUTEXES_GUARD:
-        mutex = _PATH_MUTEXES.get(path)
-        if mutex is None:
-            return
-        held = any(k[1] == path for k in list(_HELD_LOCKS))
-        if held or mutex.locked():
-            return  # verb in flight — keep the entry, keep serialization
-        _PATH_MUTEXES.pop(path, None)
+        for key in [k for k in _MODEL_CACHE if k.startswith(f"{path}/")]:
+            del _MODEL_CACHE[key]
 
 
-def _model_fingerprint(spark, path: str) -> tuple:
-    """(artifact, file, mtime, length) tuples for the two MODEL
-    artifacts — metadata listing only, no data bytes. A staged rebuild
-    swap renames freshly-written directories in, so its files carry
-    new mtimes and the fingerprint changes; merge/compact/delete touch
-    only ``codes`` and leave it alone."""
-    fs, jpath = _hadoop_fs(spark, path)
-    fp = []
-    for art in ("centroids", "codebooks"):
-        try:
-            listing = fs.listStatus(jpath(f"{path}/{art}"))
-        except Exception as e:
-            # the common "wrong path" mistake must fail legibly, not
-            # as a raw Py4J FileNotFoundException out of the listing
-            # (r11 advice low 4) — but ONLY the genuinely-missing case
-            # translates (r12 advice low 2): this fingerprint runs on
-            # every cached read, so a transient RPC/permission failure
-            # on a HEALTHY index must propagate as itself, never be
-            # misreported as a missing index.
-            if (
-                "FileNotFoundException" not in str(e)
-                and not isinstance(e, FileNotFoundError)
-            ):
-                raise
-            raise FileNotFoundError(
-                f"no IVF-PQ index at '{path}': cannot list the "
-                f"'{art}' artifact — expected the centroids/ "
-                f"codebooks/ codes/ layout written by "
-                f"ivfpq_write_index ({e.__class__.__name__})"
-            ) from e
-        for st in listing:
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue
-            fp.append((art, name, st.getModificationTime(), st.getLen()))
-    return tuple(sorted(fp))
-
-
-def ivfpq_read_model(spark, path: str, *, use_cache: bool = True):
-    """Reload the persisted model: ``(C, books, meta)`` exactly as
-    trained — centroid/codebook rows are keyed, so reconstruction is
-    order-independent, and every model parameter (n_cells, m, n_codes,
-    dim) is DERIVED from the artifacts themselves rather than stored
-    beside them (no separate metadata file to drift out of sync, and
-    one fewer read job per maintenance operation). A bounded
-    model-sized collect (n_cells + m·n_codes rows), the same class as
-    the training collect itself.
-
-    SERVING-PATH CACHE (r10 verdict item 5): repeated probes against
-    the same index no longer pay two scan jobs each — the decoded
-    model is memoized per path against an mtime/length fingerprint of
-    the artifacts (:func:`_model_fingerprint`, a metadata listing), so
-    a retrain's staged swap invalidates it on the next read while an
-    unchanged index costs zero jobs after the first; the memo is a
-    ``MODEL_CACHE_MAX``-entry LRU (r11 verdict item 3) so a long-lived
-    driver serving many indexes stays bounded. Callers must
-    treat the returned arrays as READ-ONLY (every in-repo consumer
-    already does — encode/audit copy before mutating). Self-heals a
-    crashed writer's interrupted swap first
-    (:func:`_maybe_heal_for_read`)."""
-    _maybe_heal_for_read(spark, path)
-    fp = _model_fingerprint(spark, path) if use_cache else None
-    if use_cache:
-        with _MODEL_CACHE_MUTEX:
-            hit = _MODEL_CACHE.get(path)
-            if hit is not None and hit[0] == fp:
-                _MODEL_CACHE.move_to_end(path)  # LRU: freshly served
-                MODEL_CACHE_STATS["hits"] += 1
-                return hit[1]
-    cent = scan(
-        spark, f"{path}/centroids", schema=_CENTROIDS_SCHEMA
-    ).collect()
+def _model_at(spark, path: str, manifest: dict):
+    """The model ``manifest`` names, decoded once per model dir."""
+    key = f"{path}/{manifest['model']}"
+    with _MODEL_CACHE_MUTEX:
+        hit = _MODEL_CACHE.get(key)
+        if hit is not None:
+            _MODEL_CACHE.move_to_end(key)  # LRU: freshly served
+            MODEL_CACHE_STATS["hits"] += 1
+            return hit
+    cent = scan(spark, f"{key}/centroids", schema=_CENTROIDS_SCHEMA).collect()
     n_cells = len(cent)
     dim = len(cent[0].vec)
     C = np.zeros((n_cells, dim), dtype=np.float64)
     for r in cent:
         C[r.cell] = r.vec
     book_rows = scan(
-        spark, f"{path}/codebooks", schema=_CODEBOOKS_SCHEMA
+        spark, f"{key}/codebooks", schema=_CODEBOOKS_SCHEMA
     ).collect()
     m = 1 + max(r.subspace for r in book_rows)
     n_codes = 1 + max(r.code for r in book_rows)
@@ -1300,18 +1326,56 @@ def ivfpq_read_model(spark, path: str, *, use_cache: bool = True):
         books[r.subspace][r.code] = r.vec
     meta = {"n_cells": n_cells, "m": m, "n_codes": n_codes, "dim": dim}
     model = (C, books, meta)
-    if use_cache:
-        with _MODEL_CACHE_MUTEX:
-            MODEL_CACHE_STATS["misses"] += 1
-            _MODEL_CACHE[path] = (fp, model)
-            _MODEL_CACHE.move_to_end(path)
-            while len(_MODEL_CACHE) > MODEL_CACHE_MAX:  # LRU cap
-                _MODEL_CACHE.popitem(last=False)
-                MODEL_CACHE_STATS["evictions"] += 1
+    with _MODEL_CACHE_MUTEX:
+        MODEL_CACHE_STATS["misses"] += 1
+        _MODEL_CACHE[key] = model
+        _MODEL_CACHE.move_to_end(key)
+        while len(_MODEL_CACHE) > MODEL_CACHE_MAX:  # LRU cap
+            _MODEL_CACHE.popitem(last=False)
+            MODEL_CACHE_STATS["evictions"] += 1
     return model
 
 
-@_locked_verb
+def ivfpq_read_model(spark, path: str):
+    """Reload the committed model: ``(C, books, meta)`` exactly as
+    trained — centroid/codebook rows are keyed, so reconstruction is
+    order-independent, and every model parameter (n_cells, m, n_codes,
+    dim) is DERIVED from the artifacts themselves rather than stored
+    beside them. A bounded model-sized collect (n_cells + m·n_codes
+    rows), the same class as the training collect itself, paid once
+    per model dir: repeated reads of an unchanged index hit the
+    ``MODEL_CACHE_MAX``-entry memo and cost zero jobs. Callers must
+    treat the returned arrays as READ-ONLY (every in-repo consumer
+    already does — encode/audit copy before mutating)."""
+    return _model_at(spark, path, _snapshot(spark, path)[1])
+
+
+def _codes_at(spark, path: str, manifest: dict) -> DataFrame:
+    """The codes ``manifest`` serves: one declared-schema scan per
+    codes dir, filtered to the cells that dir still serves. The
+    partition filter prunes directories, so a cell a dir no longer
+    serves is never listed or read; the union submits no job."""
+    parts = [
+        scan(spark, f"{path}/{d}/codes", schema=CODES_SCHEMA).filter(
+            F.col("cell").isin(cells)
+        )
+        for d, cells in manifest["codes"].items()
+    ]
+    if not parts:
+        return spark.createDataFrame([], CODES_SCHEMA)
+    return functools.reduce(DataFrame.unionAll, parts)
+
+
+def ivfpq_codes(spark, path: str) -> DataFrame:
+    """The committed codes table of the index at ``path`` — (neighbor_id
+    bigint, codes array<int>, cell bigint), one row per indexed vector.
+    Every read of the codes goes through here, so the layout stays this
+    module's business. Lazy: the frame reads the files of the version
+    committed when it was built, and stays valid until a later commit
+    drops those files."""
+    return _codes_at(spark, path, _snapshot(spark, path)[1])
+
+
 def ivfpq_merge_index(
     spark,
     path: str,
@@ -1321,47 +1385,33 @@ def ivfpq_merge_index(
     id_col: str = "vec_id",
 ) -> dict:
     """Incrementally MERGE a batch of vectors into a persisted index:
-    encode the batch under the EXISTING model (no retrain — exactly how
-    FAISS adds to a trained IVF-PQ), anti-join away ids the index
-    already holds, and append the remainder into their cell
-    partitions. Idempotent by construction: re-merging the same batch
-    adds 0 rows, so a retried ingest job cannot duplicate the index.
-    Since r13 the append COMMIT is staged: the batch's files land in
-    a ``codes_append_staging`` sibling (count-validated by
-    read-back), then move into the live cell directories by per-file
-    metadata renames under the commit fence — the live index is
-    never a Spark write job's target, and a crash at any point
-    either discards the stage (recovery) or converges on rerun.
+    encode the batch under the committed model (no retrain — exactly
+    how FAISS adds to a trained IVF-PQ), anti-join away ids the index
+    already holds, and commit the remainder as a new codes entry for
+    the cells it lands in. Idempotent by construction: re-merging the
+    same batch adds 0 rows and commits no version, so a retried ingest
+    job cannot duplicate the index. Two merges on the same version
+    cannot both pass the anti-join either: the second one to commit
+    raises :class:`IndexConflictError`.
 
     Scale shape: the dedup probe reads ONLY the cell partitions the
     batch encodes into (`cell IN (batch cells)` prunes directories —
-    never a full-index scan), the batch's cell list (≤ n_cells) and
-    dedup stats ride the encode checkpoint job via Observation — and
-    the anti-join's row count rides the staged write — so a merge runs
-    THREE Spark jobs (encode, staged write, validation read-back)
-    instead of the eight it ran through r14 (r14 verdict item 1: each
-    extra job is a driver round-trip + cluster barrier that does not
-    shrink with cluster size). The append touches the same partitions. Assumes ids
-    are stable per vector (the encode is deterministic, so an
-    unchanged vector always re-lands in its original cell and dedups);
-    re-embedding under a CHANGED vector is delete+insert maintenance —
-    :func:`ivfpq_reembed` / :func:`ivfpq_delete_ids`, the SCD path,
-    not merge. Merges are SINGLE-WRITER: the
-    dedup-then-append pair is not atomic, so two concurrent merges of
-    overlapping batches could both pass the anti-join — serialize
-    merges (the streaming twin's foreachBatch does exactly that), or
-    move the codes table to an ACID table format (Delta/Iceberg
-    MERGE) when multiple writers are unavoidable. Returns
+    never a full-index scan); the batch's cell list (≤ n_cells) and
+    dedup stats ride the encode checkpoint job via Observation, and the
+    anti-join's row count and cells ride the write, so a merge runs
+    three Spark jobs besides AQE stages: encode, write, validation
+    read-back. Assumes ids are stable per vector (the encode is
+    deterministic, so an unchanged vector always re-lands in its
+    original cell and dedups); re-embedding under a CHANGED vector is
+    delete+insert maintenance — :func:`ivfpq_reembed` /
+    :func:`ivfpq_delete_ids`, the SCD path, not merge. Returns
     ``{"n_batch", "n_added", "n_already", "n_id_conflicts"}`` —
     ``n_id_conflicts`` counts batch ids presented with two DIFFERENT
     vectors (malformed upstream; resolved deterministically, see the
     inline note)."""
     _check_index_ids(new_vectors, id_col)
-    # heal any interrupted compact/delete swap BEFORE the dedup probe:
-    # an un-recovered rolled-back cell would be invisible to the
-    # anti-join and its ids re-added, duplicating rows once recovered
-    ivfpq_recover_index(spark, path)
-    C, books, meta = ivfpq_read_model(spark, path)
+    n0, snap = _snapshot(spark, path)
+    C, books, meta = _model_at(spark, path, snap)
     enc = _ivfpq_encode(new_vectors, vec_col, id_col, C, books)
     # Intra-batch id dedup BEFORE the index anti-join: the anti-join
     # only rejects ids the INDEX already holds, so two rows with the
@@ -1376,14 +1426,9 @@ def ivfpq_merge_index(
     # still converges to one on-disk state, and the conflict is
     # COUNTED in the returned stats (``n_id_conflicts``) so the
     # upstream defect is observable instead of silently resolved.
-    # Same shuffle shape as the dropDuplicates it replaces (one hash
-    # agg keyed on id). n_batch counts the DISTINCT ids presented.
-    # ONE materialization job carries the batch stats AND the touched-
-    # cell list (r14 verdict item 1: the conflict count, batch count
-    # and cell collect were three MORE sequential driver jobs over the
-    # same pinned rows — each a cluster-wide barrier at scale). The
-    # collect_set is the same ≤ n_cells bounded collect as before,
-    # riding the checkpoint instead of its own job.
+    # n_batch counts the DISTINCT ids presented. ONE materialization
+    # job carries the batch stats AND the touched-cell list (≤ n_cells,
+    # a bounded collect riding the checkpoint instead of its own job).
     enc, _m = checkpoint_with_metrics(
         enc.groupBy("neighbor_id").agg(
             F.max(F.struct("cell", "codes")).alias("_mx"),
@@ -1401,78 +1446,36 @@ def ivfpq_merge_index(
         F.col("_mx.codes").alias("codes"),
     )
     existing = (
-        scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
+        _codes_at(spark, path, snap)
         .filter(F.col("cell").isin(batch_cells))
         .select("neighbor_id")
     )
     fresh = enc_pick.join(existing, "neighbor_id", "left_anti")
-    # STAGED APPEND (r13 review): a direct mode("append") write
-    # commits its files from inside the Spark job, minutes after
-    # the last fence read at scale — a lease broken mid-job would
-    # land a zombie's files in cells its successor is concurrently
-    # swapping, unbounded by any fence. So the batch lands in a
-    # codes_append_staging sibling first (the live index is never
-    # a job's write target), is count-validated by read-back, and
-    # only then moves into the live cell directories by per-file
-    # metadata renames under the same interval re-fence as the
-    # swap loops. Crash/abort anywhere: staged-only remnants are
-    # discarded by recovery, a partial move converges on rerun
-    # because the anti-join re-admits only the ids still missing.
-    # The anti-join materializes exactly ONCE, directly into the
-    # staged write; its row count rides the same job (r14 verdict
-    # item 1 — previously a localCheckpoint + count pair, two more
-    # driver jobs). An all-duplicate batch stages zero rows and the
-    # live cells are never touched, as before.
-    fs, jpath = _hadoop_fs(spark, path)
-    stage = f"{path}/codes_append_staging"
-    fs.delete(jpath(stage), True)  # stale remnants from a crash
-    n_added = int(
-        write_with_metrics(
-            fresh,
-            lambda d: d.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(stage),
-            defaults={"n": 0},  # empty plans drop the metrics node
-            n=F.count(F.lit(1)),
-        )["n"]
-    )
+    # the anti-join materializes exactly ONCE, directly into the new
+    # dir's write; its row count and cells ride the same job
+    own = f"v{n0 + 1}-{uuid.uuid4().hex}"
+    w = _write_codes(fresh, f"{path}/{own}/codes")
+    n_added = int(w["n"])
     if n_added:
-        n_staged = scan(spark, stage, schema=CODES_SCHEMA).count()
+        n_staged = scan(
+            spark, f"{path}/{own}/codes", schema=CODES_SCHEMA
+        ).count()
         if n_staged != n_added:
-            fs.delete(jpath(stage), True)
-            raise IOError(
-                f"merge staging validation failed: staged {n_staged} "
-                f"rows, expected {n_added} — live index left untouched"
+            _discard(
+                spark, path, own,
+                f"merge validation failed: wrote {n_staged} rows, "
+                f"expected {n_added}",
             )
-        _fence_commit(spark, path)  # zombie merge aborts before moving
-        moved = 0
-        for st in fs.listStatus(jpath(stage)):
-            dname = st.getPath().getName()
-            if not (st.isDirectory() and dname.startswith("cell=")):
-                continue
-            fs.mkdirs(jpath(f"{path}/codes/{dname}"))
-            for part in fs.listStatus(st.getPath()):
-                fname = part.getPath().getName()
-                if fname.startswith(("_", ".")):
-                    continue
-                if moved and moved % FENCE_RECHECK_CELLS == 0:
-                    _fence_commit(spark, path)
-                # part filenames carry the write job's UUID, so a
-                # rename can never collide with a live file
-                _must_rename(
-                    fs, part.getPath(),
-                    jpath(f"{path}/codes/{dname}/{fname}"),
-                )
-                moved += 1
-        fs.delete(jpath(stage), True)
+        _commit(
+            spark, path, n0 + 1, _served(snap, own=own, cells=w["cells"]), own
+        )
     else:
-        # all-duplicate batch: the staged write ran over zero rows
-        # (just a _SUCCESS marker) — discard it, live cells untouched
-        fs.delete(jpath(stage), True)
+        # empty or all-duplicate batch: commits no version
+        fs, jpath = _hadoop_fs(spark, path)
+        fs.delete(jpath(f"{path}/{own}"), True)
     # every consumer is done — free the pinned encode eagerly rather
-    # than leaving block cleanup to GC (a long-running streaming twin
-    # would otherwise pin a frame per micro-batch)
+    # than leaving block cleanup to GC (a long-running streaming
+    # maintainer would otherwise pin a frame per micro-batch)
     enc.unpersist()
     return {
         "n_batch": n_batch,
@@ -1482,821 +1485,67 @@ def ivfpq_merge_index(
     }
 
 
+def _entries_per_cell(manifest: dict) -> dict:
+    return dict(Counter(c for cs in manifest["codes"].values() for c in cs))
+
+
 def ivfpq_cell_file_counts(spark, path: str) -> dict:
-    """Files per cell directory of a persisted index — the
-    FRAGMENTATION probe behind auto-compaction
-    (streaming/events.py::run_ivfpq_merge_stream). Pure Hadoop
-    FileSystem METADATA listing (works on local/HDFS/S3A): ~n_cells +
-    n_files driver-side operations, zero data bytes read — which is
-    what lets a streaming maintainer check fragmentation after EVERY
-    micro-batch without scanning the index. Hidden/_SUCCESS files are
-    ignored. Returns ``{cell: n_files}``."""
-    fs, jpath = _hadoop_fs(spark, path)
-    counts: dict[int, int] = {}
-    for st in fs.listStatus(jpath(f"{path}/codes")):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("cell=")):
-            continue
-        n = sum(
-            1
-            for f in fs.listStatus(st.getPath())
-            if not f.getPath().getName().startswith(("_", "."))
-        )
-        counts[int(name.split("=", 1)[1])] = n
-    return counts
+    """Codes files per cell of the committed index — the FRAGMENTATION
+    probe behind auto-compaction
+    (streaming/events.py::run_ivfpq_merge_stream). Every verb writes
+    one file per cell it touches (`_write_codes` clusters by cell), so
+    this is the number of manifest entries serving each cell, counted
+    from the manifest alone: no listing of the data files, zero data
+    bytes read — which is what lets a streaming maintainer check
+    fragmentation after EVERY micro-batch. Returns ``{cell: n_files}``."""
+    return _entries_per_cell(_snapshot(spark, path)[1])
 
 
-def _must_rename(fs, src, dst) -> None:
-    """Hadoop rename returns False instead of raising on most
-    failures — surface that as an error, never a silent no-op."""
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-#: lock lease: a writer crash leaves its lock file behind; a second
-#: writer (or a reader-side heal) may BREAK the lock once it is older
-#: than this. Set well above the longest maintenance verb at the
-#: deployment's scale — a broken lease under a still-LIVE writer turns
-#: that writer into a zombie, which since r13 ABORTS loudly at its
-#: next commit point (:func:`_fence_commit` re-reads the lock token
-#: before every mutation batch) instead of interleaving renames with
-#: its successor; an undersized lease therefore costs wasted work and
-#: a loud IndexWriteLockError, never corruption. The default is
-#: generous for the test corpus and is a module constant so
-#: deployments (and the crash-recovery pytest laws) can tune it.
-#:
-#: CLOCK ASSUMPTION (r11 verdict item 4): staleness is judged by
-#: comparing THIS host's ``time.time()`` against the lock file's
-#: filesystem mtime, which the WRITER's host (or the storage service)
-#: stamped — the lease therefore assumes roughly synchronized clocks
-#: between writer hosts. Severe skew between two driver hosts can
-#: break a live writer's lock early (breaker's clock fast relative to
-#: the stamp) or delay a legitimate break (slow). Cross-host
-#: deployments should size ``INDEX_LOCK_LEASE_SEC`` comfortably above
-#: the worst expected clock skew PLUS the longest verb; single-host
-#: and NTP-disciplined fleets are unaffected.
-INDEX_LOCK_LEASE_SEC = 900.0
-
-#: how often :func:`_swap_staged_cells` re-reads the lock token inside
-#: its per-cell rename loop. The head-of-batch fence alone would leave
-#: a wide swap (hundreds of cells) exposed for its whole duration; a
-#: re-check every N cells bounds a zombie writer's interleave window
-#: to one interval at the cost of one small-file read per N·2 renames
-#: (~1.5% extra metadata RPCs at the default). Module constant so the
-#: mid-swap-abort pytest law can drive it to 1.
-FENCE_RECHECK_CELLS = 32
-
-#: fence false-positive tolerance: a missing/unreadable token is
-#: re-read this many extra times (sleeping between attempts) before
-#: the verb aborts — one transient RPC failure or another holder's
-#: transient release-claim must not kill a healthy multi-minute verb.
-#: A STABLE foreign token (same value twice) aborts without waiting.
-FENCE_RETRIES = 2
-FENCE_RETRY_SLEEP_SEC = 0.5
-_LOCK_FILE = "_index_write_lock"
-#: (thread_ident, index path) → the unique token written into the lock
-#: file payload by the acquiring thread. Ownership is PER-THREAD (r11
-#: advice medium): a foreachBatch merge on the stream-execution thread
-#: must not let a maintenance verb on ANOTHER driver thread alias its
-#: lock "reentrantly" — reentrancy is for composed verbs on the SAME
-#: thread (ivfpq_reembed = delete + merge under one lock). The token
-#: lets release verify the on-disk lock is still OURS before deleting
-#: (an outlived lease must not delete its successor's lock).
-_HELD_LOCKS: dict[tuple[int, str], str] = {}
-#: serializes this process's lock-file acquire/release metadata ops so
-#: two in-process threads can't interleave the exists→stat→create
-#: window — cross-process contenders are handled by the
-#: create-exclusive file semantics themselves. Keyed PER INDEX PATH
-#: (r12 advice low 3): acquire/release hold the mutex across remote
-#: filesystem RPCs, so one slow storage call on one index must not
-#: block lock traffic for every OTHER index on every other driver
-#: thread. The registry itself is guarded by a tiny in-memory lock
-#: held only for the dict lookup; entries are one ~50-byte Lock per
-#: distinct index path this driver ever maintains — bounded by the
-#: deployment's index count for long-lived serving drivers, and
-#: throwaway temp-dir paths (bench loops, test fixtures) are dropped
-#: by the same :func:`evict_model_cache` teardown hook that bounds
-#: the model cache (r13 review).
-_PATH_MUTEXES: dict[str, threading.Lock] = {}
-_PATH_MUTEXES_GUARD = threading.Lock()
-
-
-def _path_mutex(path: str) -> threading.Lock:
-    with _PATH_MUTEXES_GUARD:
-        mutex = _PATH_MUTEXES.get(path)
-        if mutex is None:
-            mutex = _PATH_MUTEXES[path] = threading.Lock()
-        return mutex
-
-
-def _lock_key(path: str) -> tuple[int, str]:
-    return (threading.get_ident(), path)
-
-
-def _this_thread_holds(path: str) -> bool:
-    return _lock_key(path) in _HELD_LOCKS
-
-
-class _LockPayloadTooLargeError(IOError):
-    """A lock payload exceeded the 1 MiB sanity bound — corrupt or
-    foreign; raised loudly instead of parsing a truncated token."""
-
-
-def _read_token_file(spark, fs, file_jpath):
-    """The ``token`` field of a lock-payload file's JSON, or None when
-    the file is missing/unreadable/tokenless (a vanished lock, a torn
-    write, or another engine's lock format). The no-commons-io
-    fallback reads to EOF with no fixed byte cap (r12 advice low 4: a
-    4096-byte cap would silently truncate an oversized payload,
-    json.loads would fail, and the token would resolve to None —
-    turning every release into a silent leak until lease expiry); the
-    payload is writer-controlled and ~150 bytes, so the 1 MiB sanity
-    guard only trips on a corrupt/foreign file, and it FAILS LOUDLY
-    rather than truncating. The guard is a METADATA length check
-    before the read, so it covers the commons-io fast path too — the
-    byte-loop cap alone would leave toByteArray free to slurp a
-    multi-GB corrupt file into driver memory and silently resolve it
-    to None (r13 review)."""
-    import json
-
-    try:
-        if fs.getFileStatus(file_jpath).getLen() > (1 << 20):
-            raise _LockPayloadTooLargeError(
-                f"lock payload at {file_jpath} exceeds 1 MiB — "
-                f"corrupt or foreign; refusing to read it"
-            )
-    except _LockPayloadTooLargeError:
-        raise
-    except Exception:
-        return None  # vanished between the caller's check and here
-    try:
-        stream = fs.open(file_jpath)
-    except Exception:
-        return None  # vanished between the caller's check and here
-    try:
-        try:
-            try:  # commons-io ships with every Spark distribution...
-                raw = bytes(
-                    spark.sparkContext._jvm.org.apache.commons.io.IOUtils
-                    .toByteArray(stream)
-                )
-            except _LockPayloadTooLargeError:
-                raise
-            except Exception:  # ...but a per-byte fallback keeps
-                buf = []       # release working even without it
-                while True:
-                    b = stream.read()
-                    if b < 0:  # EOF is the ONLY loop exit
-                        break
-                    buf.append(b)
-                    if len(buf) > (1 << 20):
-                        raise _LockPayloadTooLargeError(
-                            f"lock payload at {file_jpath} exceeds 1 MiB"
-                            f" — refusing to parse a truncated token"
-                        )
-                raw = bytes(buf)
-        except _LockPayloadTooLargeError:
-            raise  # never silently truncate — the one loud case
-        except Exception:
-            # a FAILED read (torn file, checksum error, transient RPC)
-            # resolves to "not ours": release then leaves the lock in
-            # place (it self-expires) and the commit fence aborts —
-            # both conservative
-            return None
-    finally:
-        stream.close()
-    try:
-        return json.loads(raw.decode("utf-8")).get("token")
-    except Exception:
-        return None  # torn write or another engine's lock format
-
-
-def _read_lock_token(spark, fs, jpath, path: str):
-    """Token of the live lock file under ``path``, or None."""
-    return _read_token_file(spark, fs, jpath(f"{path}/{_LOCK_FILE}"))
-
-
-class IndexWriteLockError(RuntimeError):
-    """A maintenance verb found another writer's LIVE lock on the
-    index. The caller raced a concurrent writer — rerun after it
-    finishes (every verb is idempotent/convergent), or investigate a
-    crashed writer if the lock never clears (it self-expires after
-    ``INDEX_LOCK_LEASE_SEC``)."""
-
-
-def _fence_commit(spark, path: str) -> None:
-    """COMMIT-POINT FENCE against lease-broken zombie writers (r12
-    verdict item 1). A live verb that outruns ``INDEX_LOCK_LEASE_SEC``
-    has its lock legitimately broken by a successor; token-verified
-    release already stops the zombie deleting the successor's lock,
-    but nothing stopped its still-running job from committing staged
-    renames CONCURRENTLY with the successor's. So every mutation batch
-    re-reads the on-disk lock token immediately before committing and
-    aborts with :class:`IndexWriteLockError` when it is no longer this
-    writer's — the zombie dies loudly at its commit point, its staged
-    bytes are garbage the successor's entry recovery (or the next
-    verb's) discards. Called at the head of
-    :func:`_swap_staged_cells` (and every ``FENCE_RECHECK_CELLS``
-    cells inside its loop), :func:`_swap_rebuild`,
-    :func:`ivfpq_recover_index`'s mutation pass, the merge's
-    staged-append move loop (same interval) and the fresh-build
-    artifact writes — one small-file read each, on maintenance verbs
-    only (probe/read paths never pay it).
-
-    RESIDUAL, stated precisely: the fence is check-then-act, so a
-    lease that is broken AFTER a fence read passes but BEFORE the
-    renames it guards complete can still interleave — the fence
-    bounds that exposure to one recheck interval (a handful of
-    metadata renames, ≤ ``FENCE_RECHECK_CELLS`` cell swaps or staged
-    part-file moves), it does not make rename batches conditional on
-    lock ownership. The one DATA-WRITE commit the fence can only
-    duration-bound (not interval-bound) is the FRESH build's in-place
-    artifact writes: those Spark jobs commit their own files from
-    inside the job, so the exposure is the job's runtime — on a
-    brand-new path with nothing live to corrupt (rebuilds stage, and
-    since r13 merges stage too). Zero-window
-    multi-writer safety needs a coordinating table format
-    (Delta/Iceberg) — the same boundary SCALE.md already draws for
-    S3A's non-atomic create-exclusive. In practice a lease sized above
-    the longest verb makes a mid-interval break require the clock-skew
-    pathology documented at ``INDEX_LOCK_LEASE_SEC``. A missing
-    held-token entry means the caller is not running under a lease
-    (crash-injection tests drive the swap helpers directly) — there is
-    no lease to have lost, so the fence passes.
-
-    FALSE-POSITIVE TOLERANCE (r13 review): a single failed or empty
-    read must not kill a healthy multi-minute verb — a transient RPC
-    hiccup, a torn read, or another holder's release transiently
-    CLAIMING its own lock by rename all make one read come back
-    None. The fence therefore retries a missing/unreadable token up
-    to ``FENCE_RETRIES`` times (sleeping ``FENCE_RETRY_SLEEP_SEC``
-    between attempts) before aborting, and only aborts WITHOUT
-    retrying when it reads the SAME foreign token twice — a stable
-    foreign token is a successor really holding the lock, not noise.
-    The abort message distinguishes THREE evidence classes (r13
-    advice low 1): a stable foreign token (read twice), foreign
-    token(s) observed but unstable (token churn — e.g. A,B,C or
-    A,None,A: contenders racing, exactly where diagnostics matter),
-    and a lock that stayed missing/unreadable on every read."""
-    import time as _time
-
-    token = _HELD_LOCKS.get(_lock_key(path))
-    if token is None:
-        return
-    fs, jpath = _hadoop_fs(spark, path)
-    prev = None
-    stable_foreign = False
-    saw_foreign = False
-    for attempt in range(FENCE_RETRIES + 1):
-        on_disk = _read_lock_token(spark, fs, jpath, path)
-        if on_disk == token:
-            return
-        if on_disk is not None:
-            saw_foreign = True
-            if on_disk == prev:
-                stable_foreign = True  # same foreign token twice: taken
-                break
-        prev = on_disk
-        if attempt < FENCE_RETRIES:
-            _time.sleep(FENCE_RETRY_SLEEP_SEC)
-    if stable_foreign:
-        evidence = "a successor's lock token was read twice"
-    elif saw_foreign:
-        evidence = (
-            f"foreign token(s) observed but unstable across "
-            f"{FENCE_RETRIES + 1} reads"
-        )
-    else:
-        evidence = (
-            f"the lock stayed missing/unreadable across "
-            f"{FENCE_RETRIES + 1} reads"
-        )
-    raise IndexWriteLockError(
-        f"write lease lost mid-verb on {path}: the on-disk lock "
-        f"token no longer matches this writer's ({evidence}) — the "
-        f"verb outran INDEX_LOCK_LEASE_SEC and a successor broke "
-        f"the lease. Aborting before the commit point; staged data "
-        f"is discarded by the next maintenance verb's recovery. "
-        f"Size the lease above the longest verb at this "
-        f"deployment's scale."
-    )
-
-
-def _try_acquire_index_lock(spark, path: str, *, lease_sec=None) -> bool:
-    """Best-effort create-exclusive lock under the index root. True =
-    acquired (caller must release via the context manager / finally).
-    False = a LIVE lock exists (younger than the lease). A lock older
-    than the lease is presumed a crashed writer's and is broken.
-
-    Semantics by filesystem: Hadoop ``FileSystem.create(path,
-    overwrite=false)`` is atomic on HDFS and local disk — exactly one
-    of two racing creators wins. On S3A it is check-then-create
-    (best-effort); true multi-writer isolation there needs an ACID
-    table format, which SCALE.md already names as the upgrade path.
-    A STALE lease is broken by an atomic RENAME to a unique tombstone
-    (r11 advice low 2) — of N racing breakers exactly one rename
-    succeeds, so a breaker can never delete the fresh lock a faster
-    breaker already installed; the loser simply reports contention.
-    In-process threads additionally serialize the whole
-    check→break→create window under this path's mutex
-    (:func:`_path_mutex` — per index path, so a slow storage call on
-    one index never stalls lock traffic on another)."""
-    import time
-    import uuid
-
-    if lease_sec is None:
-        lease_sec = INDEX_LOCK_LEASE_SEC
-    fs, jpath = _hadoop_fs(spark, path)
-    lock = jpath(f"{path}/{_LOCK_FILE}")
-    with _path_mutex(path):
-        if fs.exists(lock):
-            try:
-                age_ms = time.time() * 1000.0 - fs.getFileStatus(
-                    lock
-                ).getModificationTime()
-            except Exception:  # lock vanished between exists and stat:
-                age_ms = None  # its holder just released — contend fresh
-            if age_ms is not None and age_ms < lease_sec * 1000.0:
-                return False
-            # stale lease — break the crashed writer's lock ATOMICALLY:
-            # rename to a unique tombstone (one breaker wins; a loser's
-            # rename fails because the source is gone) then discard it.
-            # The name encodes the tombstone's CREATION time: rename
-            # preserves the source lock's mtime, which is by definition
-            # lease-stale, so mtime-based staleness would let a
-            # concurrent recovery sweep delete a live breaker's
-            # tombstone the instant it is created (r13 advice low 4).
-            tomb = jpath(
-                f"{path}/{_LOCK_FILE}.broken-"
-                f"{int(time.time() * 1000)}-{uuid.uuid4().hex}"
-            )
-            try:
-                won_break = fs.rename(lock, tomb)
-            except Exception:
-                won_break = False
-            if not won_break:
-                return False  # another breaker (or a release) won the race
-            fs.delete(tomb, False)
-        try:
-            out = fs.create(lock, False)  # create-exclusive: one winner
-        except Exception:
-            return False  # lost the creation race to a concurrent writer
-        token = uuid.uuid4().hex
-        try:
-            import json as _json
-            import os as _os
-            import socket as _socket
-
-            out.write(bytearray(_json.dumps({
-                "host": _socket.gethostname(),
-                "pid": _os.getpid(),
-                "thread": threading.get_ident(),
-                "token": token,
-                "acquired_unix": time.time(),
-            }).encode("utf-8")))
-        finally:
-            out.close()
-        _HELD_LOCKS[_lock_key(path)] = token
-    return True
-
-
-def _release_index_lock(spark, path: str) -> None:
-    """Release THIS thread's lock — but only if the on-disk lock is
-    still ours (r11 advice low 2): a verb that outlived its lease and
-    had its lock broken must not delete the successor's lock on the
-    way out.
-
-    PRE-READ then ATOMIC CLAIM (r12 advice low 1 + r13 review): the
-    original read-token-then-delete pair left a window — a breaker
-    could tombstone our expired lock and install the successor's
-    BETWEEN our token read and our delete, and we would then delete
-    the successor's fresh lock. The r12 fix (claim-by-rename before
-    inspecting) closed that but opened a subtler availability hole:
-    release claimed EVERY lock, so a zombie's exit transiently made a
-    HEALTHY successor's live lock vanish mid-rename — long enough on
-    a slow store for the successor's commit fence to read
-    missing-and-abort, or for a third acquirer to move in and
-    permanently displace an in-lease holder. Release now reads the
-    token IN PLACE first and only claims when it matched our own:
-    a mismatched or unreadable pre-read means the lock is definitely
-    not ours to delete and it is left completely untouched (zero
-    renames against a successor's lock on the common zombie-exit
-    path). The claim step still guards the narrow race where our
-    matching lock is swapped for a successor's between pre-read and
-    rename — then the tombstone inspection mismatches and the lock is
-    renamed straight back, and the commit-fence retry loop
-    (``FENCE_RETRIES``) absorbs the transient gap on the successor's
-    side. Residuals, all availability-shaped, never corruption: a
-    third acquirer slipping into the (now rare) claim window makes
-    the rename-back fail and the displaced successor fence-aborts;
-    a TORN READ of our own lock leaves it in place to self-expire
-    after ``INDEX_LOCK_LEASE_SEC``. Best-effort by contract: release
-    runs in ``finally`` blocks, so it NEVER raises — a storage error
-    here leaves the lock to self-expire rather than masking the
-    verb's real exception (r13 review)."""
-    import time as _time
-    import uuid
-
-    with _path_mutex(path):
-        token = _HELD_LOCKS.pop(_lock_key(path), None)
-        if token is None:
-            return  # this thread holds nothing here — never delete blind
-        try:
-            fs, jpath = _hadoop_fs(spark, path)
-            lock = jpath(f"{path}/{_LOCK_FILE}")
-            if _read_lock_token(spark, fs, jpath, path) != token:
-                return  # definitely not ours anymore — never touch it
-            # creation time in the name, same reason as break
-            # tombstones: rename inherits the old lock's mtime
-            tomb = jpath(
-                f"{path}/{_LOCK_FILE}.release-"
-                f"{int(_time.time() * 1000)}-{uuid.uuid4().hex}"
-            )
-            try:
-                claimed = fs.rename(lock, tomb)
-            except Exception:
-                claimed = False
-            if not claimed:
-                return  # vanished since the pre-read — nothing ours
-            if _read_token_file(spark, fs, tomb) == token:
-                fs.delete(tomb, False)  # it was ours — released
-                return
-            # the matching lock was swapped for a successor's between
-            # pre-read and claim: restore it in place
-            try:
-                _must_rename(fs, tomb, lock)
-            except Exception:
-                # a third acquirer created a fresh lock during the
-                # claim window; the displaced successor fence-aborts
-                # at its next commit point — drop the orphaned
-                # tombstone
-                fs.delete(tomb, False)
-        except Exception:
-            # best-effort: the lock self-expires; never mask the
-            # verb's real exception from an enclosing finally
-            return
-
-
-@contextmanager
-def index_write_lock(spark, path: str, *, lease_sec=None):
-    """SINGLE-WRITER enforcement for every persisted-index maintenance
-    verb (r10 verdict item 1): the documented invariant — two
-    concurrent maintenance calls would interleave recover/stage/swap
-    into silent corruption — becomes a loud failure instead. Entry
-    acquires a create-exclusive ``_index_write_lock`` file under the
-    index root (raising :class:`IndexWriteLockError` when another
-    writer's lock is live); exit always releases it, including on
-    error. REENTRANT per THREAD (r11 advice medium) — composed verbs
-    (``ivfpq_reembed`` = delete + merge) run under ONE lock, but a
-    verb on a DIFFERENT driver thread (e.g. racing a foreachBatch
-    merge on the stream-execution thread) is a genuine second writer
-    and raises like any cross-process contender. A crashed writer's
-    lock self-expires after ``lease_sec`` (default
-    ``INDEX_LOCK_LEASE_SEC``) — the next writer breaks it, and its
-    entry recovery (:func:`ivfpq_recover_index`) heals whatever the
-    crash left."""
-    if _this_thread_holds(path):  # reentrant: the outer verb owns it
-        yield
-        return
-    if not _try_acquire_index_lock(spark, path, lease_sec=lease_sec):
-        raise IndexWriteLockError(
-            f"another writer holds the live lock {path}/{_LOCK_FILE} — "
-            f"persisted-index maintenance is single-writer; rerun after "
-            f"it finishes (a crashed writer's lock self-expires after "
-            f"{INDEX_LOCK_LEASE_SEC if lease_sec is None else lease_sec}s)"
-        )
-    try:
-        yield
-    finally:
-        _release_index_lock(spark, path)
-
-
-#: every on-disk remnant an interrupted maintenance verb can leave —
-#: the read-side heal probes exactly these (cheap driver-side
-#: existence checks, no data bytes).
-_RECOVERY_MARKERS = (
-    "_rebuild_trash",
-    "_rebuild_trash_done",
-    "_rebuild_staging",
-    "codes_trash",
-    "codes_staging",
-    "codes_append_staging",
-)
-
-
-def _maybe_heal_for_read(spark, path: str) -> bool:
-    """Let READ paths self-heal a crashed writer's interrupted swap
-    (r10 advice item 1): without this, ``ivfpq_probe_index`` /
-    ``ivfpq_read_model`` would serve a mid-swap mix until the NEXT
-    maintenance writer happens to run — which may never come. Probes
-    five marker paths (metadata existence checks only — the no-crash
-    fast path costs no data IO); when a remnant exists, takes the
-    WRITE lock (recovery mutates) and runs
-    :func:`ivfpq_recover_index`. A live writer's lock means the
-    remnant is a swap IN PROGRESS, not a crash — the reader backs off
-    and reads as-is, exactly the pre-r11 behavior, bounded by the
-    writer's own commit. A crashed writer's still-live lease delays
-    the heal by at most ``INDEX_LOCK_LEASE_SEC``. Returns True when a
-    recovery ran."""
-    if _this_thread_holds(path):
-        return False  # we ARE the writer — it already ran recovery
-    fs, jpath = _hadoop_fs(spark, path)
-    if not any(
-        fs.exists(jpath(f"{path}/{m}")) for m in _RECOVERY_MARKERS
-    ):
-        return False
-    if not _try_acquire_index_lock(spark, path):
-        return False  # live writer mid-swap (or fresh crash lease) — read as-is
-    try:
-        ivfpq_recover_index(spark, path)
-    finally:
-        _release_index_lock(spark, path)
-    return True
-
-
-_INDEX_ARTIFACTS = ("centroids", "codebooks", "codes")
-
-
-def _swap_rebuild(spark, path: str) -> None:
-    """Commit a staged REBUILD (all three artifacts under
-    ``_rebuild_staging``) into the live index: move each live artifact
-    into ``_rebuild_trash``, rename the staged one in, then mark the
-    swap complete by atomically renaming the trash to
-    ``_rebuild_trash_done`` BEFORE deleting it. That marker is the
-    commit point: :func:`ivfpq_recover_index` rolls an un-renamed
-    ``_rebuild_trash`` back WHOLESALE (every artifact it holds — a
-    crash mid-swap can never leave new centroids serving old
-    codebooks), while a ``_rebuild_trash_done`` is just garbage from a
-    completed swap. Callers must have validated the staged codes
-    first. A lease-broken zombie rebuild aborts at the fence HERE,
-    before any artifact rename (r12 verdict item 1)."""
-    _fence_commit(spark, path)
-    fs, jpath = _hadoop_fs(spark, path)
-    trash = jpath(f"{path}/_rebuild_trash")
-    fs.mkdirs(trash)
-    for art in _INDEX_ARTIFACTS:
-        live = jpath(f"{path}/{art}")
-        staged = jpath(f"{path}/_rebuild_staging/{art}")
-        if fs.exists(live):
-            _must_rename(fs, live, jpath(f"{path}/_rebuild_trash/{art}"))
-        if fs.exists(staged):
-            _must_rename(fs, staged, live)
-    done = jpath(f"{path}/_rebuild_trash_done")
-    _must_rename(fs, trash, done)  # atomic commit point
-    fs.delete(done, True)
-    fs.delete(jpath(f"{path}/_rebuild_staging"), True)
-
-
-@_locked_verb
-def ivfpq_recover_index(spark, path: str) -> dict:
-    """Heal an index interrupted mid-swap: ROLL BACK any cell whose
-    live directory went missing while its previous contents sit in
-    ``codes_trash`` (the one-rename-wide crash window of
-    :func:`_swap_staged_cells`), then discard ``codes_trash`` and any
-    pre-commit ``codes_staging`` data outright. After recovery the
-    codes table is exactly a state the interrupted verb is documented
-    to leave: already-swapped cells keep their new contents (compact
-    and delete are both per-cell idempotent, so RERUNNING the verb
-    completes the remainder), un-swapped cells are back to their
-    pre-verb contents, and no staged bytes linger. Called
-    automatically at the top of every maintenance WRITER (merge /
-    compact / delete / rebuild) — cost is a few directory-existence
-    checks when there is nothing to heal; readers (probe) stay
-    mutation-free and may observe the pre-recovery mix until the next
-    writer runs.
-
-    Also heals interrupted REBUILDS (:func:`_swap_rebuild`): an
-    un-committed ``_rebuild_trash`` rolls back WHOLESALE — every
-    artifact it holds replaces whatever is live, so the restored model
-    is the complete pre-rebuild one, never a centroids/codebooks mix —
-    while a ``_rebuild_trash_done`` marker (the swap completed, only
-    its cleanup was interrupted) is simply deleted, keeping the new
-    model. Stale ``_rebuild_staging`` data is discarded either way.
-    Returns ``{"n_cells_rolled_back", "n_staging_discarded",
-    "n_rebuild_rolled_back"}``; ``n_staging_discarded`` counts
-    staging AREAS discarded — ``codes_staging`` and
-    ``codes_append_staging`` each contribute one, so a crash that
-    leaves both reports 2 (r13 advice low 2).
-
-    Also sweeps ORPHANED LOCK TOMBSTONES (r13 review): a crash
-    between a release/stale-break's claim rename and its tombstone
-    disposal strands a ``_index_write_lock.release-*`` /
-    ``.broken-*`` file in the index root forever — no live-lock path
-    ever targets those names. Any such file older than the lease is
-    crash garbage (live tombstones exist for milliseconds) and is
-    deleted here."""
-    import re
-    import time as _time
-
-    _fence_commit(spark, path)  # recovery mutates — zombies abort first
-    fs, jpath = _hadoop_fs(spark, path)
-    try:
-        for st in fs.listStatus(jpath(path)):
-            name = st.getPath().getName()
-            if not name.startswith(f"{_LOCK_FILE}."):
-                continue
-            # Staleness from the CREATION time encoded in the name
-            # (.broken-<ms>-<uuid> / .release-<ms>-<uuid>), NOT the
-            # mtime: rename preserves the source lock's mtime, which
-            # is by definition lease-stale when a breaker tombstones
-            # it, so mtime would call every tombstone stale the
-            # instant it exists and this sweep could delete a LIVE
-            # breaker's tombstone mid-break (r13 advice low 4). The
-            # mtime fallback only covers pre-r14 name formats.
-            m = re.search(r"\.(?:broken|release)-(\d{10,})-", name)
-            birth_ms = (
-                float(m.group(1)) if m else float(st.getModificationTime())
-            )
-            # abs(): a FUTURE-dated name (the breaker's host clock ran
-            # ahead of ours) must also age out — without it that
-            # tombstone would never satisfy now - birth > lease and
-            # would be permanent garbage (r14 advice low 1). One lease
-            # of future skew is the same tolerance the lease itself
-            # grants backward skew.
-            if (
-                abs(_time.time() * 1000.0 - birth_ms)
-                > INDEX_LOCK_LEASE_SEC * 1000.0
-            ):
-                fs.delete(st.getPath(), False)
-    except Exception:
-        pass  # sweep is best-effort housekeeping, never blocks healing
-    # rebuild swap first: it moves whole artifacts, so any cell-level
-    # trash inside a rolled-back codes directory comes back with it
-    n_rebuild = 0
-    done = jpath(f"{path}/_rebuild_trash_done")
-    if fs.exists(done):  # swap committed; only its cleanup crashed
-        fs.delete(done, True)
-    rb_trash = jpath(f"{path}/_rebuild_trash")
-    if fs.exists(rb_trash):
-        for st in fs.listStatus(rb_trash):
-            name = st.getPath().getName()
-            live = jpath(f"{path}/{name}")
-            if fs.exists(live):
-                fs.delete(live, True)  # discard the half-installed new
-            _must_rename(fs, st.getPath(), live)
-            n_rebuild += 1
-        fs.delete(rb_trash, True)
-    rb_staging = jpath(f"{path}/_rebuild_staging")
-    if fs.exists(rb_staging):
-        fs.delete(rb_staging, True)
-    trash = jpath(f"{path}/codes_trash")
-    staging = jpath(f"{path}/codes_staging")
-    rolled = 0
-    if fs.exists(trash):
-        for st in fs.listStatus(trash):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("cell=")):
-                continue
-            live = jpath(f"{path}/codes/{name}")
-            if not fs.exists(live):
-                # same interval re-fence as _swap_staged_cells: a
-                # crash can leave as many trashed cells as the widest
-                # swap, so the rollback batch is equally unbounded
-                if rolled and rolled % FENCE_RECHECK_CELLS == 0:
-                    _fence_commit(spark, path)
-                _must_rename(fs, st.getPath(), live)
-                rolled += 1
-        fs.delete(trash, True)
-    discarded = 0
-    if fs.exists(staging):
-        fs.delete(staging, True)
-        discarded += 1
-    append_staging = jpath(f"{path}/codes_append_staging")
-    if fs.exists(append_staging):
-        # a merge that crashed between its staged write and the
-        # per-file move commit: the un-moved remainder is discarded —
-        # the merge's anti-join re-admits exactly the missing ids on
-        # rerun, so no bookkeeping of what DID move is needed
-        fs.delete(append_staging, True)
-        discarded += 1
-    return {
-        "n_cells_rolled_back": rolled,
-        "n_staging_discarded": discarded,
-        "n_rebuild_rolled_back": n_rebuild,
-    }
-
-
-def _swap_staged_cells(spark, path: str, cells) -> None:
-    """Commit staged replacement cell directories into the live codes
-    table, cell by cell: rename the live directory into
-    ``codes_trash`` (atomic metadata op), rename the staged
-    replacement in (second atomic op; skipped when the cell has no
-    staged data — that is how a delete empties a cell), then drop
-    trash + staging remnants. The only window where a cell is neither
-    old nor new is BETWEEN its two renames — one metadata operation
-    wide, and :func:`ivfpq_recover_index` rolls exactly that cell back
-    from trash on the next maintenance call, so no crash point loses
-    data. Callers must have VALIDATED the staged rows before invoking
-    (count read back from the staging parquet == expected). A
-    lease-broken zombie writer aborts at the fence HERE, before any
-    rename (r12 verdict item 1) — and the fence is RE-CHECKED every
-    ``FENCE_RECHECK_CELLS`` cells inside the loop, so for a wide swap
-    (a big compaction touching hundreds of cells) a mid-batch lease
-    break is caught within one interval instead of only at the head;
-    the partial swap it leaves behind is the same per-cell
-    old-or-new state a crash leaves, healed by
-    :func:`ivfpq_recover_index`."""
-    _fence_commit(spark, path)
-    fs, jpath = _hadoop_fs(spark, path)
-    trash_dir = jpath(f"{path}/codes_trash")
-    fs.mkdirs(trash_dir)
-    for i, c in enumerate(cells):
-        if i and i % FENCE_RECHECK_CELLS == 0:
-            _fence_commit(spark, path)
-        live = jpath(f"{path}/codes/cell={c}")
-        staged = jpath(f"{path}/codes_staging/cell={c}")
-        if fs.exists(live):
-            _must_rename(fs, live, jpath(f"{path}/codes_trash/cell={c}"))
-        if fs.exists(staged):
-            _must_rename(fs, staged, live)
-    # every cell swapped — the old bytes and staging remnants
-    # (_SUCCESS markers) are now garbage
-    fs.delete(trash_dir, True)
-    fs.delete(jpath(f"{path}/codes_staging"), True)
-
-
-@_locked_verb
 def ivfpq_compact_index(spark, path: str) -> dict:
-    """Compact merge-fragmented cell partitions back to ONE file per
-    cell — the ordinary parquet maintenance an append-based index
-    accumulates (each ``ivfpq_merge_index`` adds a file to every cell
-    its batch touches, so probe IO per cell grows with merge count
-    until compacted).
+    """Compact merge-fragmented cells back to ONE file per cell — the
+    ordinary parquet maintenance an append-based index accumulates
+    (each ``ivfpq_merge_index`` adds an entry, and a file, to every
+    cell its batch touches, so probe IO per cell grows with merge
+    count until compacted).
 
-    Scale shape: only MULTI-file cells are rewritten (single-file
-    cells are already compact and their bytes are never touched), and
-    the fragmented subset is pinned once (one read feeds the staging
-    write, the expected-count check and nothing else).
-
-    CRASH SAFETY — atomic per cell: replacement data is written to a
-    ``codes_staging`` sibling directory (the live index is never the
-    write target), VALIDATED by reading the staged parquet back and
-    comparing row counts, and only then committed by per-cell
-    directory renames (:func:`_swap_staged_cells`). A crash before the
-    swap leaves the live index byte-identical (stale staging is
-    discarded by :func:`ivfpq_recover_index`, which every maintenance
-    writer runs first); a crash mid-swap is healed by the same
-    recovery — each cell is either fully old or fully new, and the one
-    rename-wide window per cell rolls back from ``codes_trash``.
-    Probes running DURING a swap see each cell either old or new —
-    both hold identical rows for a compaction, so reads stay correct
-    throughout. An ACID table format (Delta/Iceberg OPTIMIZE) buys
-    multi-writer coordination on top; the single-writer rule here is
-    unchanged (never compact concurrently with a merge). Idempotent: a
-    second compaction finds nothing fragmented. Fragmented cells are
-    found by the METADATA listing (:func:`ivfpq_cell_file_counts`) —
-    no tag-every-row ``input_file_name`` scan of the index; only the
-    multi-file cells' bytes are ever read. Returns
-    ``{"n_cells_compacted", "n_rows_rewritten"}``."""
-    ivfpq_recover_index(spark, path)
-    fragmented = [
-        c for c, n in ivfpq_cell_file_counts(spark, path).items() if n > 1
-    ]
+    Scale shape: fragmented cells are those the manifest serves from
+    more than one entry (:func:`ivfpq_cell_file_counts` — no listing,
+    no scan); only their rows are read, once, straight into the new
+    entry's write, which is count-validated by read-back before the
+    commit. Cells served by a single entry are never touched. Probes
+    keep reading the previous version until the commit, and both
+    versions hold identical rows. Idempotent: a second compaction finds
+    nothing fragmented. Returns ``{"n_cells_compacted",
+    "n_rows_rewritten"}``."""
+    n0, snap = _snapshot(spark, path)
+    fragmented = sorted(
+        c for c, n in _entries_per_cell(snap).items() if n > 1
+    )
     if not fragmented:
         return {"n_cells_compacted": 0, "n_rows_rewritten": 0}
-    sub = scan(spark, f"{path}/codes", schema=CODES_SCHEMA).filter(
-        F.col("cell").isin(fragmented)
-    )
-    staging = f"{path}/codes_staging"
-    # the fragmented subset is read exactly ONCE, directly into the
-    # staging write; the expected-count side of the validation rides
-    # the write job via Observation (r14 verdict item 1 — previously a
-    # localCheckpoint + count pair, two extra sequential driver jobs)
-    n_rows = int(
-        write_with_metrics(
-            sub,
-            lambda d: d.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(staging),
-            defaults={"n": 0},
-            n=F.count(F.lit(1)),
-        )["n"]
-    )
+    sub = _codes_at(spark, path, snap).filter(F.col("cell").isin(fragmented))
+    own = f"v{n0 + 1}-{uuid.uuid4().hex}"
+    w = _write_codes(sub, f"{path}/{own}/codes")
+    n_rows = int(w["n"])
     if n_rows == 0:
-        # fragmented cells that read back ZERO rows: nothing sane to
-        # swap in (the old readback validation would have failed here
-        # too) — discard the stage and fail loudly, live index intact
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.delete(jpath(staging), True)
-        raise IOError(
-            f"compact read 0 rows from {len(fragmented)} fragmented "
-            f"cells — refusing to swap; live index left untouched"
+        _discard(
+            spark, path, own,
+            f"compact read 0 rows from {len(fragmented)} fragmented cells",
         )
-    n_staged = scan(spark, staging, schema=CODES_SCHEMA).count()
+    n_staged = scan(spark, f"{path}/{own}/codes", schema=CODES_SCHEMA).count()
     if n_staged != n_rows:
-        # live index untouched — discard the bad stage and fail loudly
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.delete(jpath(staging), True)
-        raise IOError(
-            f"compact staging validation failed: staged {n_staged} rows, "
-            f"expected {n_rows} — live index left untouched"
+        _discard(
+            spark, path, own,
+            f"compact validation failed: wrote {n_staged} rows, "
+            f"expected {n_rows}",
         )
-    _swap_staged_cells(spark, path, fragmented)
+    _commit(
+        spark, path, n0 + 1,
+        _served(snap, drop=fragmented, own=own, cells=w["cells"]), own,
+    )
     return {"n_cells_compacted": len(fragmented), "n_rows_rewritten": n_rows}
 
 
-@_locked_verb
 def ivfpq_delete_ids(
     spark,
     path: str,
@@ -2317,31 +1566,23 @@ def ivfpq_delete_ids(
       from directory names) — against a broadcast of the victim ids,
       and aggregates to a ≤ n_cells collect. No full-width scan, no
       shuffle of the codes.
-    - REWRITE touches only the cells that actually hold victims:
-      their survivors are staged to the ``codes_staging`` sibling
-      directory (never written over the live index), VALIDATED by
-      reading the staged parquet back and comparing counts, then
-      committed by per-cell atomic renames (:func:`_swap_staged_cells`
-      — same crash story as ``ivfpq_compact_index``: a crash before
-      the swap leaves the index byte-identical, a crash mid-swap is
-      rolled back per cell by :func:`ivfpq_recover_index` on the next
-      maintenance call; a rolled-back cell temporarily resurrects its
-      victims until the delete is RERUN, which the idempotence below
-      makes safe).
-    - Cells whose every row was deleted have no staged replacement, so
-      the swap removes their live directory and installs nothing —
-      emptied cells cannot resurrect from stale files.
+    - REWRITE touches only the cells that actually hold victims: their
+      survivors are written to the new version's dir, validated by
+      read-back, and committed as one entry serving those cells, which
+      the commit takes from every older entry.
+    - Cells whose every row was deleted get no new rows, so the new
+      version serves them from no entry — emptied cells cannot
+      resurrect from the older files.
 
-    Same single-writer rule as ``ivfpq_compact_index``. Idempotent:
-    deleting absent ids rewrites nothing. Returns ``{"n_deleted",
-    "n_cells_rewritten", "n_cells_emptied"}``."""
-    ivfpq_recover_index(spark, path)
+    Idempotent: deleting absent ids commits nothing. Returns
+    ``{"n_deleted", "n_cells_rewritten", "n_cells_emptied"}``."""
+    n0, snap = _snapshot(spark, path)
     if not isinstance(ids, DataFrame):
         ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} bigint")
     victims = (
         ids.select(F.col(ids.columns[0]).alias("neighbor_id")).distinct()
     )
-    codes = scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
+    codes = _codes_at(spark, path, snap)
     per_cell = (
         codes.select("neighbor_id", "cell")
         .join(F.broadcast(victims), "neighbor_id")
@@ -2357,27 +1598,16 @@ def ivfpq_delete_ids(
         codes.filter(F.col("cell").isin(affected))
         .join(F.broadcast(victims), "neighbor_id", "left_anti")
     )
-    kept_cells: set = set()
-    staging = f"{path}/codes_staging"
+    own = f"v{n0 + 1}-{uuid.uuid4().hex}"
     # the survivor anti-join materializes exactly ONCE, directly into
-    # the staging write; its row count rides the write job, and the
+    # the new dir's write; its row count rides the write job, and the
     # validation read-back folds the count and the kept-cell set into
-    # ONE aggregate (r14 verdict item 1 — previously a localCheckpoint
-    # + count + count + distinct-collect, three extra driver jobs)
-    n_survivors = int(
-        write_with_metrics(
-            survivors,
-            lambda d: d.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(staging),
-            defaults={"n": 0},  # every affected cell fully emptied
-            n=F.count(F.lit(1)),
-        )["n"]
-    )
+    # ONE aggregate
+    n_survivors = int(_write_codes(survivors, f"{path}/{own}/codes")["n"])
+    kept_cells: list = []
     if n_survivors:
         back = (
-            scan(spark, staging, schema=CODES_SCHEMA)
+            scan(spark, f"{path}/{own}/codes", schema=CODES_SCHEMA)
             .agg(
                 F.count(F.lit(1)).alias("_n"),
                 F.collect_set("cell").alias("_cells"),
@@ -2385,16 +1615,16 @@ def ivfpq_delete_ids(
             .first()
         )
         if back._n != n_survivors:
-            fs, jpath = _hadoop_fs(spark, path)
-            fs.delete(jpath(staging), True)
-            raise IOError(
-                f"delete staging validation failed: staged {back._n} "
-                f"rows, expected {n_survivors} — live index left untouched"
+            _discard(
+                spark, path, own,
+                f"delete validation failed: wrote {back._n} rows, "
+                f"expected {n_survivors}",
             )
-        kept_cells = set(back._cells)
-    # the swap removes every affected live cell directory and installs
-    # staged survivors where they exist; emptied cells install nothing
-    _swap_staged_cells(spark, path, affected)
+        kept_cells = back._cells
+    _commit(
+        spark, path, n0 + 1,
+        _served(snap, drop=affected, own=own, cells=kept_cells), own,
+    )
     return {
         "n_deleted": n_deleted,
         "n_cells_rewritten": len(kept_cells),
@@ -2476,7 +1706,10 @@ def ivfpq_drift_audit(
     maintainer price a drift check per micro-batch."""
     if scope not in ("index", "corpus"):
         raise ValueError(f"scope must be 'index' or 'corpus', got {scope!r}")
-    C, books, meta = ivfpq_read_model(spark, path)
+    if sample_mod is not None and sample_mod < 1:
+        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
+    _, snap = _snapshot(spark, path)
+    C, books, meta = _model_at(spark, path, snap)
     m, sub = meta["m"], meta["dim"] // meta["m"]
     B = [np.asarray(b, dtype=np.float64) for b in books]
     Cm = np.asarray(C, dtype=np.float64)
@@ -2488,10 +1721,8 @@ def ivfpq_drift_audit(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v"),
         seg,
     )
-    codes = scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
+    codes = _codes_at(spark, path, snap)
     if sample_mod is not None:
-        if sample_mod < 1:
-            raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
         keep = lambda c: (  # noqa: E731 — shared sample predicate
             F.pmod(F.xxhash64(c), F.lit(sample_mod)) == 0
         )
@@ -2551,7 +1782,6 @@ def ivfpq_drift_audit(
     )
 
 
-@_locked_verb
 def ivfpq_reembed(
     spark,
     path: str,
@@ -2567,11 +1797,11 @@ def ivfpq_reembed(
 
     Convergent (state-idempotent): re-running with the same batch
     deletes the rows the previous run inserted and re-inserts
-    identical encodings — the on-disk STATE is the same after every
-    run, though files are rewritten each time (run-idempotence needs
-    an ACID format's MERGE). Count conservation holds whenever the
-    batch ids were all present: n_deleted == n_inserted. Single-writer,
-    like every maintenance verb here. Returns ``{"n_batch",
+    identical encodings — the served STATE is the same after every
+    run, though files are rewritten each time. Each half commits its
+    own version, so a reader between the two sees the batch ids
+    deleted. Count conservation holds whenever the batch ids were all
+    present: n_deleted == n_inserted. Returns ``{"n_batch",
     "n_deleted", "n_inserted"}``."""
     ids = changed.select(F.col(id_col)).distinct()
     d = ivfpq_delete_ids(spark, path, ids, id_col=id_col)
@@ -2606,10 +1836,12 @@ def ivfpq_probe_index(
     index bytes. ``corpus`` supplies true vectors for the exact
     re-rank only (candidate-sized equi-join, the deployed-path cost).
     The probed-cell list is a ≤ |queries|·n_probe collect — bounded
-    model-build class, same as the training collect."""
+    model-build class, same as the training collect. Model and codes
+    come from the one version committed when the probe is built."""
     from .dedup import register_pinned
 
-    C, books, meta = ivfpq_read_model(spark, path)
+    _, snap = _snapshot(spark, path)
+    C, books, meta = _model_at(spark, path, snap)
     # probed cells + join side + rerank qv all consume qtab; the
     # returned frame still references it lazily, so it cannot be freed
     # here — registered with the dedup pin registry instead, so
@@ -2617,7 +1849,7 @@ def ivfpq_probe_index(
     # once the caller has materialized the result. The probed-cell
     # list (≤ |queries|·n_probe, bounded model-build class) rides the
     # checkpoint job via Observation instead of a second
-    # distinct+collect job (r14 verdict item 1). Sorted so the pruning
+    # distinct+collect job. Sorted so the pruning
     # filter's literal list is deterministic across runs.
     qtab, _m = checkpoint_with_metrics(
         _ivfpq_query_tables(queries, vec_col, id_col, C, books, n_probe),
@@ -2625,9 +1857,8 @@ def ivfpq_probe_index(
     )
     qtab = register_pinned(qtab)
     probed = sorted(_m["cells"])
-    enc = (
-        scan(spark, f"{path}/codes", schema=CODES_SCHEMA)
-        .filter(F.col("cell").isin(probed))  # directory-level pruning
+    enc = _codes_at(spark, path, snap).filter(
+        F.col("cell").isin(probed)  # directory-level pruning
     )
     adc = enc.join(
         F.broadcast(qtab.select("query_id", "cell", "_tab")), "cell"

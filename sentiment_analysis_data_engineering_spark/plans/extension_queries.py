@@ -33,7 +33,6 @@ from ..operators import similarity as sim
 from ..operators import skew as sk
 from ..operators import profile as pf
 from ..operators import text as tx
-from ..sources.io import scan
 from .registry import fixture_rows, load_tables, query
 
 # --------------------------------------------------------------------------
@@ -787,7 +786,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_cells=16, m=8, n_codes=64,
         )
         n_cells_occupied = (
-            scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA)
+            sim.ivfpq_codes(spark, path)
             .select("cell").distinct().count()
         )
 
@@ -939,7 +938,7 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
        model + codes persisted, codes parquet-partitioned by coarse
        cell (one file per cell directory);
     2. MERGE the held-out 20% under the EXISTING model — no retrain,
-       encode + cell-pruned anti-join + partition append;
+       encode + cell-pruned anti-join + one committed codes entry;
     3. RE-MERGE the same batch — idempotence on disk;
     4. PROBE the standard 10 query vectors against the merged index;
        candidates stream off the probed cell DIRECTORIES only
@@ -1012,7 +1011,7 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact = sim.cosine_topk(
             queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
         )
-        audit = scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA).agg(
+        audit = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n_rows"),
             F.countDistinct("neighbor_id").alias("_n_ids"),
         )
@@ -1117,7 +1116,7 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         d = sim.ivfpq_delete_ids(spark, path, victims.select("vec_id"))
         n_victims = d["n_deleted"]
-        post = scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA).agg(
+        post = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
@@ -1139,7 +1138,7 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
         reembed_stats_ok = r == {
             "n_batch": n_victims, "n_deleted": 0, "n_inserted": n_victims,
         }
-        final = scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA).agg(
+        final = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
@@ -1286,13 +1285,13 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file micro-batches into a persisted IVF-PQ index with
     ``auto_compact_max_files=3`` armed. Each merge appends one file to
     every cell its batch touches, so by the second batch some cell
-    reaches 3 files — the zero-data-read metadata listing
+    reaches 3 files — the zero-data-read manifest count
     (operators/similarity.py::ivfpq_cell_file_counts) sees it and the
     trigger compacts, bounding worst-case probe file count at the
     threshold FOREVER without an operator on call. The trigger runs
-    inside foreachBatch, so the single-writer rule holds by
-    construction; merge insert-idempotence + compaction idempotence
-    make the pair replay-safe across crashes.
+    inside foreachBatch, so merge and compaction never race for a
+    commit; merge insert-idempotence + compaction idempotence make the
+    pair replay-safe across crashes.
 
     Hash-gated contract (one summary row — per-batch rows would hang
     the gate on file-source delivery order, which ties on modification
@@ -1338,7 +1337,7 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             auto_compact_max_files=3,
         )
         frag = sim.ivfpq_cell_file_counts(spark, path)
-        final = scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA).agg(
+        final = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
@@ -1375,8 +1374,8 @@ def ann_index_retrain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     20% holdout (the frozen-quantizer regime), audit, RETRAIN the
     whole index from the current corpus (`ivfpq_write_index` — retrain
     IS a rebuild: fresh centroids + codebooks + re-encoded codes,
-    overwriting in place under the same single-writer rule as every
-    maintenance verb), audit again, probe.
+    committed as one new version like every maintenance verb), audit
+    again, probe.
 
     Hash-gated contract per query row:
 
@@ -1601,7 +1600,7 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return rows["all"]
         post_full = audit(retrain_corpus, "index")
         post_ood = audit(ood, "corpus")
-        final = scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA).agg(
+        final = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()

@@ -51,9 +51,8 @@ def run_ivfpq_merge_stream(
     ``ivfpq_compact_index`` when any cell reaches the threshold —
     hands-free index maintenance, bounding worst-case probe file
     count at ``auto_compact_max_files`` forever. The trigger runs
-    INSIDE foreachBatch, so it inherits the stream's serialization —
-    the single-writer rule (never compact concurrently with a merge)
-    holds by construction. Compaction is idempotent and the merge is
+    INSIDE foreachBatch, so merge and compaction never race each
+    other for a commit. Compaction is idempotent and the merge is
     insert-idempotent, so a crash between merge and compact replays
     safely: the re-delivered batch adds nothing and the trigger
     re-fires on the still-fragmented layout.
@@ -74,14 +73,12 @@ def run_ivfpq_merge_stream(
     integer cross-multiplication of the audits' int64 error sums (the
     float knob is snapped to a rational via
     ``Fraction.limit_denominator``; no float mean is ever formed) —
-    REBUILDS the index in place (``ivfpq_write_index``, same model
-    shape; ``retrain_train_rows`` sets the rebuild's bounded
-    fit-sample size) from the corpus rows the index currently holds (a
-    semi-join
-    of ``retrain_corpus`` on the live ids — retrain preserves
-    membership by construction, pinned eagerly so no read of the codes
-    remains when the overwrite lands), then re-audits the whole index
-    to establish the new baseline. Auditing the BATCH is the sharp
+    REBUILDS the index (``ivfpq_write_index``, same model shape;
+    ``retrain_train_rows`` sets the rebuild's bounded fit-sample size)
+    from the corpus rows the index currently holds (a semi-join of
+    ``retrain_corpus`` on the committed ids — retrain preserves
+    membership by construction), then re-audits the whole index to
+    establish the new baseline. Auditing the BATCH is the sharp
     trigger: drift arrives with new data, and a full-index mean
     dilutes an out-of-distribution batch by corpus/batch (measured
     1.005× overall vs 3-9× batch-scoped on the same injected drift).
@@ -98,13 +95,10 @@ def run_ivfpq_merge_stream(
     ``retrain_corpus``
     must be the index's corpus of record (it is re-read at each
     audit/retrain, so a view over the landing table stays current).
-    The rebuild is STAGED and atomically swapped
-    (``ivfpq_write_index`` over a live index writes all three
-    artifacts to ``_rebuild_staging`` and commits them by rename — the
-    old model keeps serving until the swap, and recovery rolls an
-    interrupted swap back wholesale), and it runs inside foreachBatch,
-    so the single-writer rule holds by construction, exactly like
-    compaction.
+    The rebuild commits model and codes as one new version — the old
+    model keeps serving until that commit, and a rebuild that dies
+    before it leaves the old version untouched — and it runs inside
+    foreachBatch, exactly like compaction.
 
     Returns the per-batch merge stats (batch_id, n_batch, n_added,
     n_already, n_id_conflicts, plus max_files_per_cell /
@@ -116,15 +110,14 @@ def run_ivfpq_merge_stream(
     from fractions import Fraction
 
     from ..operators.similarity import (
-        CODES_SCHEMA,
         ivfpq_cell_file_counts,
+        ivfpq_codes,
         ivfpq_compact_index,
         ivfpq_drift_audit,
         ivfpq_merge_index,
         ivfpq_read_model,
         ivfpq_write_index,
     )
-    from ..sources.io import scan
 
     stats: list[dict] = []
 
@@ -250,12 +243,14 @@ def run_ivfpq_merge_stream(
                 s["drift_fired"] = bool(fired)
                 if fired:
                     meta = ivfpq_read_model(spark, index_path)[2]
-                    held = scan(
-                        spark, f"{index_path}/codes", schema=CODES_SCHEMA
-                    ).select("neighbor_id")
+                    held = ivfpq_codes(spark, index_path).select(
+                        "neighbor_id"
+                    )
                     # membership-preserving rebuild: corpus rows the
-                    # index currently holds, pinned so the overwrite
-                    # never races its own input scan
+                    # index currently holds. The rebuild reads them
+                    # twice (training sample, then encode), so they are
+                    # pinned once instead of running the semi-join
+                    # twice (one Spark job more per retrain unpinned)
                     members = (
                         retrain_corpus.join(
                             held,

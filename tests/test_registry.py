@@ -19,7 +19,6 @@ from sentiment_analysis_data_engineering_spark.plans.registry import (
     load_tables,
 )
 from sentiment_analysis_data_engineering_spark.schemas import FIXTURE_SCHEMAS
-from sentiment_analysis_data_engineering_spark.sources.io import scan
 
 from conftest import SF001, SF0001
 
@@ -84,20 +83,19 @@ def test_events_encodings_read_like_the_fixture(spark, sf_dir, tmp_path, encodin
 def test_index_artifacts_read_without_inference(spark, sf_dir, tmp_path):
     (emb,) = load_tables(spark, sf_dir, "embeddings")
     path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path, n_cells=8)
+    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 != 0), path, n_cells=8)
+    model = f"{path}/{sim._snapshot(spark, path)[1]['model']}"
     for art, declared in (
         ("centroids", sim._CENTROIDS_SCHEMA),
         ("codebooks", sim._CODEBOOKS_SCHEMA),
     ):
-        inferred = spark.read.parquet(f"{path}/{art}").schema
+        inferred = spark.read.parquet(f"{model}/{art}").schema
         assert _types(declared) == _types(inferred), art
-    codes, n_jobs = _jobs(
-        spark, lambda: scan(spark, f"{path}/codes", schema=sim.CODES_SCHEMA)
-    )
+    codes, n_jobs = _jobs(spark, lambda: sim.ivfpq_codes(spark, path))
     assert n_jobs == 0
     # inference parses the cell directories as int; the declaration
     # reads them as the bigint the encode wrote
-    inferred = spark.read.parquet(f"{path}/codes")
+    inferred = spark.read.parquet(f"{model}/codes")
     assert _types(inferred.schema) == [
         (n, "int" if n == "cell" else t) for n, t in _types(sim.CODES_SCHEMA)
     ]
@@ -105,6 +103,14 @@ def test_index_artifacts_read_without_inference(spark, sf_dir, tmp_path):
     assert codes.orderBy(key).collect() == (
         inferred.withColumn("cell", F.col("cell").cast("long")).orderBy(key).collect()
     )
+    # the accessor stays job-free once a merge and a compaction have
+    # spread the codes over several entries
+    sim.ivfpq_merge_index(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
+    assert _jobs(spark, lambda: sim.ivfpq_codes(spark, path))[1] == 0
+    sim.ivfpq_compact_index(spark, path)
+    codes, n_jobs = _jobs(spark, lambda: sim.ivfpq_codes(spark, path))
+    assert n_jobs == 0
+    assert codes.count() == emb.count()
     sim.evict_model_cache(path)
 
 

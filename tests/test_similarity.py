@@ -499,7 +499,7 @@ def test_ivfpq_index_merge_idempotent_and_complete(spark, sf_dir, tmp_path):
     m2 = sim.ivfpq_merge_index(spark, path, delta)
     assert m2["n_added"] == 0 and m2["n_already"] == delta.count()
     # completeness: every id indexed exactly once
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     agg = codes.agg(
         F.count("*").alias("n"),
         F.countDistinct("neighbor_id").alias("nd"),
@@ -523,7 +523,7 @@ def test_ivfpq_index_merge_dedups_within_batch(spark, sf_dir, tmp_path):
     assert m["n_batch"] == n_delta  # distinct ids presented
     assert m["n_added"] == n_delta and m["n_already"] == 0
     agg = (
-        spark.read.parquet(f"{path}/codes")
+        sim.ivfpq_codes(spark, path)
         .agg(
             F.count("*").alias("n"),
             F.countDistinct("neighbor_id").alias("nd"),
@@ -571,7 +571,7 @@ def test_ivfpq_delete_ids_removes_and_probe_excludes(spark, sf_dir, tmp_path):
     n_all = emb.count()
     d = sim.ivfpq_delete_ids(spark, path, victims)
     assert d["n_deleted"] == n_victims > 0
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     assert codes.count() == n_all - n_victims
     assert (
         codes.join(F.broadcast(victims), codes.neighbor_id == victims.vec_id)
@@ -600,21 +600,21 @@ def test_ivfpq_delete_ids_accepts_python_list(spark, sf_dir, tmp_path):
     some = [r.vec_id for r in emb.select("vec_id").limit(4).collect()]
     d = sim.ivfpq_delete_ids(spark, path, some)
     assert d["n_deleted"] == 4
-    assert spark.read.parquet(f"{path}/codes").count() == emb.count() - 4
+    assert sim.ivfpq_codes(spark, path).count() == emb.count() - 4
 
 
 def test_ivfpq_delete_ids_emptied_cell_directory_removed(spark, tmp_path):
-    """Deleting EVERY row of a cell must remove the cell's directory:
-    dynamic partition overwrite only replaces partitions present in
-    the output, so without the explicit remove the stale files would
-    resurrect the deleted ids."""
+    """Deleting EVERY row of a cell must take the cell out of what the
+    index serves and remove its directory: no entry of the new version
+    serves it, and the commit deletes the cell directory the build
+    wrote, so stale files can never resurrect the deleted ids."""
     import pyspark.sql.functions as sf
 
     rows = [(i, [float((i * 7 + d) % 13) for d in range(16)]) for i in range(64)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     path = str(tmp_path / "idx")
     sim.ivfpq_write_index(df, path, n_cells=4, m=4, n_codes=8)
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     one_cell = codes.select("cell").first().cell
     cell_ids = [
         r.neighbor_id
@@ -622,10 +622,11 @@ def test_ivfpq_delete_ids_emptied_cell_directory_removed(spark, tmp_path):
     ]
     d = sim.ivfpq_delete_ids(spark, path, cell_ids)
     assert d["n_deleted"] == len(cell_ids) and d["n_cells_emptied"] >= 1
-    import os
+    import glob
 
-    assert not os.path.exists(f"{path}/codes/cell={one_cell}")
-    after = spark.read.parquet(f"{path}/codes")
+    assert one_cell not in sim.ivfpq_cell_file_counts(spark, path)
+    assert not glob.glob(f"{path}/*/codes/cell={one_cell}")
+    after = sim.ivfpq_codes(spark, path)
     assert after.count() == 64 - len(cell_ids)
     assert after.filter(sf.col("cell") == one_cell).count() == 0
 
@@ -652,7 +653,7 @@ def test_ivfpq_reembed_changed_vectors(spark, sf_dir, tmp_path):
         "n_deleted": n_changed,
         "n_inserted": n_changed,
     }
-    codes1 = spark.read.parquet(f"{path}/codes")
+    codes1 = sim.ivfpq_codes(spark, path)
     agg = codes1.agg(
         F.count("*").alias("n"), F.countDistinct("neighbor_id").alias("nd")
     ).first()
@@ -668,7 +669,7 @@ def test_ivfpq_reembed_changed_vectors(spark, sf_dir, tmp_path):
     sim.ivfpq_reembed(spark, path, changed)
     state2 = sorted(
         (r.neighbor_id, r.cell, tuple(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
+        for r in sim.ivfpq_codes(spark, path).collect()
     )
     assert state2 == state1
     # the index now serves the NEW geometry: full-probe full-rerank
@@ -756,7 +757,7 @@ def test_ivfpq_index_probe_prunes_cell_directories(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "idx")
     sim.ivfpq_write_index(emb, path)
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     cells = sorted(r.cell for r in codes.select("cell").distinct().collect())
     assert len(cells) > 2
 
@@ -773,17 +774,23 @@ def test_ivfpq_index_probe_prunes_cell_directories(spark, sf_dir, tmp_path):
 
 def test_ivfpq_index_empty_merge_and_probe(spark, sf_dir, tmp_path):
     """Degenerate inputs stay total: an empty merge batch is a no-op
-    with zeroed stats (and never touches the index files), an empty
-    query set probes to an empty frame — no isin([])/emptiness traps."""
+    with zeroed stats that commits no version and leaves no file
+    behind, an empty query set probes to an empty frame — no
+    isin([])/emptiness traps."""
+    import os
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "idx")
     sim.ivfpq_write_index(emb, path)
-    before = sorted(spark.read.parquet(f"{path}/codes").inputFiles())
+    version, dirs = sim._snapshot(spark, path)[0], sorted(os.listdir(path))
+    before = sorted(sim.ivfpq_codes(spark, path).inputFiles())
     empty = emb.filter(F.col("vec_id") < 0)
     assert sim.ivfpq_merge_index(spark, path, empty) == {
         "n_batch": 0, "n_added": 0, "n_already": 0, "n_id_conflicts": 0,
     }
-    assert sorted(spark.read.parquet(f"{path}/codes").inputFiles()) == before
+    assert sorted(sim.ivfpq_codes(spark, path).inputFiles()) == before
+    assert sim._snapshot(spark, path)[0] == version
+    assert sorted(os.listdir(path)) == dirs
     assert sim.ivfpq_probe_index(spark, path, empty, emb, k=3).count() == 0
 
 
@@ -801,7 +808,7 @@ def test_ivfpq_index_compaction(spark, sf_dir, tmp_path):
     sim.ivfpq_merge_index(spark, path, delta)
 
     def snapshot():
-        codes = spark.read.parquet(f"{path}/codes")
+        codes = sim.ivfpq_codes(spark, path)
         rows = sorted(
             (r.neighbor_id, int(r.cell), tuple(r.codes)) for r in codes.collect()
         )
@@ -874,7 +881,7 @@ def test_ivfpq_merge_conflicting_ids_deterministic_and_counted(
     def codes_of(path):
         return sorted(
             (r.neighbor_id, int(r.cell), tuple(r.codes))
-            for r in spark.read.parquet(f"{path}/codes").collect()
+            for r in sim.ivfpq_codes(spark, path).collect()
         )
 
     assert codes_of(str(tmp_path / "a")) == codes_of(str(tmp_path / "b"))
@@ -883,153 +890,196 @@ def test_ivfpq_merge_conflicting_ids_deterministic_and_counted(
     assert m3["n_id_conflicts"] == 0
 
 
-def test_ivfpq_compact_crash_before_swap_preserves_index(
+# ---------------------------------------------------------------------------
+# Commit protocol laws: one create-exclusive log entry per version
+# ---------------------------------------------------------------------------
+
+
+def _served_rows(spark, path):
+    return sorted(
+        (r.neighbor_id, int(r.cell), tuple(r.codes))
+        for r in sim.ivfpq_codes(spark, path).collect()
+    )
+
+
+def _served_state(spark, path, queries, corpus):
+    """Everything a reader of the index can observe: the version, the
+    codes, the model and a probe's answers."""
+    C, books, meta = sim.ivfpq_read_model(spark, path)
+    probe = sorted(
+        (r.query_id, r.neighbor_id, r.rank)
+        for r in sim.ivfpq_probe_index(
+            spark, path, queries, corpus, k=3
+        ).collect()
+    )
+    return (
+        sim._snapshot(spark, path)[0], _served_rows(spark, path),
+        C.tolist(), [b.tolist() for b in books], meta, probe,
+    )
+
+
+def _fragmented_index(spark, sf_dir, path):
+    """A build of 3/5 of the fixture plus one merge of another 1/5, so
+    every verb has work left: the last 1/5 to merge, two entries per
+    touched cell to compact, ids to delete, a corpus to rebuild from."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 > 1), path)
+    sim.ivfpq_merge_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+    return emb
+
+
+_VERBS = {
+    "write": lambda spark, path, emb: sim.ivfpq_write_index(
+        emb, path, n_cells=8
+    ),
+    "merge": lambda spark, path, emb: sim.ivfpq_merge_index(
+        spark, path, emb.filter(F.col("vec_id") % 5 == 0)
+    ),
+    "compact": lambda spark, path, emb: sim.ivfpq_compact_index(spark, path),
+    "delete": lambda spark, path, emb: sim.ivfpq_delete_ids(
+        spark, path, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_VERBS))
+def test_crash_before_commit_keeps_prior_version(
+    spark, sf_dir, tmp_path, monkeypatch, verb
+):
+    """A verb killed after its data write and before its commit leaves
+    the prior version serving: same version, digest-equal codes, model
+    and probe answers. Its output sits in a dir nothing reads, and the
+    next commit deletes it."""
+    import os
+
+    path = str(tmp_path / "idx")
+    emb = _fragmented_index(spark, sf_dir, path)
+    queries = emb.filter(F.col("vec_id") < 3)
+    before = _served_state(spark, path, queries, emb)
+    dirs = set(os.listdir(path))
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before commit")
+
+    monkeypatch.setattr(sim, "_commit", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _VERBS[verb](spark, path, emb)
+    monkeypatch.undo()
+    (orphan,) = set(os.listdir(path)) - dirs
+    assert _served_state(spark, path, queries, emb) == before
+
+    _VERBS[verb](spark, path, emb)  # the rerun commits and sweeps
+    assert sim._snapshot(spark, path)[0] == before[0] + 1
+    assert orphan not in os.listdir(path)
+    sim.evict_model_cache(path)
+
+
+@pytest.mark.parametrize("verb", sorted(_VERBS))
+def test_reader_never_sees_uncommitted_dir(
+    spark, sf_dir, tmp_path, monkeypatch, verb
+):
+    """Readers read what the newest log entry names and nothing else:
+    at the verb's commit point, with its output fully written, the
+    codes and model a reader gets hold no file of that output; right
+    after the commit they do."""
+    path = str(tmp_path / "idx")
+    emb = _fragmented_index(spark, sf_dir, path)
+    model0 = sim._snapshot(spark, path)[1]["model"]
+    real = sim._commit
+    seen: list = []
+
+    def read_then_commit(spark_, path_, n, manifest, own):
+        files = sim.ivfpq_codes(spark, path).inputFiles()
+        seen.append(any(f"/{own}/" in f for f in files))
+        seen.append(sim._snapshot(spark, path)[1]["model"])
+        real(spark_, path_, n, manifest, own)
+        files = sim.ivfpq_codes(spark, path).inputFiles()
+        seen.append(any(f"/{own}/" in f for f in files))
+
+    monkeypatch.setattr(sim, "_commit", read_then_commit)
+    _VERBS[verb](spark, path, emb)
+    monkeypatch.undo()
+    assert seen == [False, model0, True]
+    sim.evict_model_cache(path)
+
+
+def test_two_writers_on_one_base_exactly_one_commits(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Crash-injection law (r9 verdict item 2): kill compaction AFTER
-    the staging write but BEFORE the swap — the live index must serve
-    the OLD cells byte-intact, and the next maintenance verb heals the
-    leftover staging so a rerun completes cleanly."""
+    """Two merges of one batch, both reading the same version: each
+    passes its anti-join, but only the first create of the next log
+    entry succeeds. The second raises IndexConflictError and its output
+    is deleted, so the batch lands exactly once."""
     import os
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
     delta = emb.filter(F.col("vec_id") % 5 == 0)
-    queries = emb.filter(F.col("vec_id") < 3)
     path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-    sim.ivfpq_merge_index(spark, path, delta)
+    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 != 0), path)
+    n0 = sim._snapshot(spark, path)[0]
+    real = sim._commit
+    rival: list = []
 
-    def snapshot():
-        return sorted(
-            (r.neighbor_id, int(r.cell), tuple(r.codes))
-            for r in spark.read.parquet(f"{path}/codes").collect()
-        )
+    def rival_commits_first(*args):
+        if not rival:
+            rival.append(None)
+            rival[0] = sim.ivfpq_merge_index(spark, path, delta)
+        real(*args)
 
-    before = snapshot()
-    probe_before = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
-    )
-
-    def boom(*a, **k):
-        raise RuntimeError("injected crash between stage and swap")
-
-    monkeypatch.setattr(sim, "_swap_staged_cells", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.ivfpq_compact_index(spark, path)
+    monkeypatch.setattr(sim, "_commit", rival_commits_first)
+    with pytest.raises(sim.IndexConflictError, match="another writer"):
+        sim.ivfpq_merge_index(spark, path, delta)
     monkeypatch.undo()
-
-    # live index byte-identical; staged bytes are sitting unswapped
-    assert snapshot() == before
-    assert os.path.exists(f"{path}/codes_staging")
-    probe_mid = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
-    )
-    assert probe_mid == probe_before
-
-    # rerun: recovery discards the stale staging, compaction completes
-    stats = sim.ivfpq_compact_index(spark, path)
-    assert stats["n_cells_compacted"] > 0
-    assert snapshot() == before
-    assert not os.path.exists(f"{path}/codes_staging")
-    assert not os.path.exists(f"{path}/codes_trash")
-
-
-def test_ivfpq_recover_rolls_back_mid_swap_cell(spark, sf_dir, tmp_path):
-    """Crash INSIDE the per-cell swap window (live renamed to trash,
-    replacement not yet installed): recovery must roll that cell back
-    from codes_trash, restoring the pre-verb state exactly — no crash
-    point loses rows."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-
-    def snapshot():
-        return sorted(
-            (r.neighbor_id, int(r.cell), tuple(r.codes))
-            for r in spark.read.parquet(f"{path}/codes").collect()
-        )
-
-    before = snapshot()
-    cell = int(
-        spark.read.parquet(f"{path}/codes").select("cell").first().cell
-    )
-    # hand-craft the one-rename-wide crash state
-    os.makedirs(f"{path}/codes_trash", exist_ok=True)
-    sh.move(f"{path}/codes/cell={cell}", f"{path}/codes_trash/cell={cell}")
-    os.makedirs(f"{path}/codes_staging/cell={cell}", exist_ok=True)
-    assert len(snapshot()) < len(before)  # the cell really is missing
-
-    rec = sim.ivfpq_recover_index(spark, path)
-    assert rec["n_cells_rolled_back"] == 1
-    assert rec["n_staging_discarded"] == 1
-    assert snapshot() == before
-    assert not os.path.exists(f"{path}/codes_trash")
-    assert not os.path.exists(f"{path}/codes_staging")
-
-
-def test_ivfpq_merge_heals_interrupted_swap_before_dedup(
-    spark, sf_dir, tmp_path
-):
-    """Merge must recover an interrupted swap BEFORE its anti-join: a
-    rolled-back-able missing cell would otherwise be invisible to the
-    dedup probe and its ids re-appended — duplicated once healed."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    cell = int(
-        spark.read.parquet(f"{path}/codes").select("cell").first().cell
-    )
-    os.makedirs(f"{path}/codes_trash", exist_ok=True)
-    sh.move(f"{path}/codes/cell={cell}", f"{path}/codes_trash/cell={cell}")
-
-    # re-merge the WHOLE corpus against the damaged index: with the
-    # heal in place every id is already present, so nothing is added
-    m = sim.ivfpq_merge_index(spark, path, emb.select("vec_id", "embedding"))
-    assert m["n_added"] == 0 and m["n_already"] == emb.count()
-    agg = spark.read.parquet(f"{path}/codes").agg(
+    assert rival[0]["n_added"] == delta.count()
+    n, manifest = sim._snapshot(spark, path)
+    assert n == n0 + 1
+    agg = sim.ivfpq_codes(spark, path).agg(
         F.count("*").alias("n"), F.countDistinct("neighbor_id").alias("nd")
     ).first()
     assert agg.n == agg.nd == emb.count()
+    # the loser's dir is gone; only what the manifest names is left
+    assert set(os.listdir(path)) == {"_log", manifest["model"], *manifest["codes"]}
+    sim.evict_model_cache(path)
 
 
-def test_ivfpq_delete_crash_before_swap_preserves_index(
+def test_stale_writer_cannot_commit_and_is_swept(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Same crash-injection law for delete: a kill between the staging
-    write and the swap leaves every victim still served; the rerun
-    completes the delete."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    """A writer that dies between its data write and its commit leaves
+    a dir no version names; the next commit by any writer deletes it.
+    Resumed after that commit, the stale writer cannot commit: its log
+    entry already exists."""
+    import os
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
     path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    victims = emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
-    n_victims = victims.count()
-    n_all = emb.count()
+    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 != 0), path)
+    stale: list = []
 
-    def boom(*a, **k):
-        raise RuntimeError("injected crash between stage and swap")
+    def die(*args):
+        stale.append(args)
+        raise RuntimeError("writer died before its commit")
 
-    monkeypatch.setattr(sim, "_swap_staged_cells", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.ivfpq_delete_ids(spark, path, victims)
+    monkeypatch.setattr(sim, "_commit", die)
+    with pytest.raises(RuntimeError, match="died"):
+        sim.ivfpq_merge_index(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
     monkeypatch.undo()
-    assert spark.read.parquet(f"{path}/codes").count() == n_all  # intact
+    own = stale[0][-1]
+    assert os.path.isdir(f"{path}/{own}")
 
-    d = sim.ivfpq_delete_ids(spark, path, victims)  # rerun completes
-    assert d["n_deleted"] == n_victims
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == n_all - n_victims
-    assert codes.join(
-        F.broadcast(victims), codes.neighbor_id == victims.vec_id
-    ).count() == 0
+    sim.ivfpq_delete_ids(spark, path, [1])  # another writer commits
+    assert not os.path.exists(f"{path}/{own}")
+    after = (sim._snapshot(spark, path), _served_rows(spark, path))
+    with pytest.raises(sim.IndexConflictError):
+        sim._commit(*stale[0])
+    assert (sim._snapshot(spark, path), _served_rows(spark, path)) == after
+    sim.evict_model_cache(path)
 
 
 def test_ivfpq_drift_audit_surfaces_unaudited_rows(spark, sf_dir, tmp_path):
@@ -1071,6 +1121,27 @@ def test_ivfpq_drift_audit_surfaces_unaudited_rows(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert sub["all"].sum_qerr_micro == part["all"].sum_qerr_micro
+
+
+def test_ivfpq_drift_audit_rejects_sample_mod_before_any_job(
+    spark, sf_dir, tmp_path
+):
+    """A sample_mod below 1 is refused before the audit submits any
+    job — in particular before a cold model cache pays its collects."""
+    from sentiment_analysis_data_engineering_spark.operators.observe import (
+        spark_job_count,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    path = str(tmp_path / "idx")
+    sim.ivfpq_write_index(emb, path)
+    sim.evict_model_cache(path)
+    before = spark_job_count(spark)
+    with pytest.raises(ValueError, match="sample_mod must be >= 1"):
+        sim.ivfpq_drift_audit(spark, path, emb, sample_mod=0)
+    assert spark_job_count(spark) == before
 
 
 def test_ivfpq_drift_audit_sample_mod_replays_exact_subsample(
@@ -1117,289 +1188,16 @@ def test_ivfpq_drift_audit_sample_mod_replays_exact_subsample(
     assert again == sampled
 
 
-def test_ivfpq_rebuild_crash_before_swap_preserves_model(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Retraining over an EXISTING index is staged + swapped like the
-    cell maintenance verbs (r10): a kill after the staged rebuild but
-    before the swap leaves the OLD model and codes serving
-    byte-identically, and the rerun completes."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    queries = emb.filter(F.col("vec_id") < 3)
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-
-    def model_snapshot():
-        C, books, meta = sim.ivfpq_read_model(spark, path)
-        return C.tolist(), [b.tolist() for b in books], meta
-
-    def probe():
-        return sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in sim.ivfpq_probe_index(
-                spark, path, queries, emb, k=3
-            ).collect()
-        )
-
-    old_model = model_snapshot()
-    old_probe = probe()
-
-    def boom(*a, **k):
-        raise RuntimeError("injected crash between rebuild stage and swap")
-
-    monkeypatch.setattr(sim, "_swap_rebuild", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.ivfpq_write_index(emb, path)  # retrain over the live index
-    monkeypatch.undo()
-
-    # the staged bytes sit unswapped — until the first read arrives
-    assert os.path.exists(f"{path}/_rebuild_staging")
-    assert model_snapshot() == old_model  # old model fully intact
-    assert probe() == old_probe
-    # r11: the read itself healed the crash — stale staging discarded
-    # (reads no longer wait for the next maintenance writer)
-    assert not os.path.exists(f"{path}/_rebuild_staging")
-
-    # rerun: recovery discards any stale stage, the rebuild completes
-    stats = sim.ivfpq_write_index(emb, path)
-    assert stats["n_indexed"] == emb.count()
-    assert not os.path.exists(f"{path}/_rebuild_staging")
-    assert not os.path.exists(f"{path}/_rebuild_trash")
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == emb.count()
-
-
-def test_ivfpq_rebuild_mid_swap_rolls_back_whole_model(
-    spark, sf_dir, tmp_path
-):
-    """A crash INSIDE the rebuild swap (some artifacts moved to trash,
-    some not) must roll back to the COMPLETE old model — never a mix
-    of new centroids with old codebooks."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-    C0, B0, meta0 = sim.ivfpq_read_model(spark, path)
-
-    # hand-craft the mid-swap state: centroids moved to trash, a
-    # different staged centroids installed live, codes untouched
-    os.makedirs(f"{path}/_rebuild_trash", exist_ok=True)
-    sh.move(f"{path}/centroids", f"{path}/_rebuild_trash/centroids")
-    os.makedirs(f"{path}/_rebuild_staging", exist_ok=True)
-    spark.createDataFrame(
-        [(i, [0.0] * meta0["dim"]) for i in range(meta0["n_cells"])],
-        "cell long, vec array<double>",
-    ).write.parquet(f"{path}/centroids")
-
-    rec = sim.ivfpq_recover_index(spark, path)
-    assert rec["n_rebuild_rolled_back"] >= 1
-    C1, B1, meta1 = sim.ivfpq_read_model(spark, path)
-    assert C1.tolist() == C0.tolist() and meta1 == meta0
-    assert [b.tolist() for b in B1] == [b.tolist() for b in B0]
-    assert not os.path.exists(f"{path}/_rebuild_trash")
-    assert not os.path.exists(f"{path}/_rebuild_staging")
-
-
 # ---------------------------------------------------------------------------
-# Single-writer lock (r10 verdict item 1) + read-side heal + model cache
+# Model cache and the clustered-fixture recall gates
 # ---------------------------------------------------------------------------
-
-
-def _make_lock(path: str, *, age_sec: float = 0.0) -> str:
-    """Fabricate ANOTHER process's lock file (bypassing _HELD_LOCKS),
-    optionally back-dated so the lease logic sees it as stale."""
-    import json
-    import os
-    import time
-
-    lock = f"{path}/_index_write_lock"
-    os.makedirs(path, exist_ok=True)
-    with open(lock, "w") as f:
-        json.dump({"host": "other-host", "pid": 99999}, f)
-    if age_sec:
-        t = time.time() - age_sec
-        os.utime(lock, (t, t))
-    return lock
-
-
-def test_index_lock_blocks_second_writer(spark, sf_dir, tmp_path):
-    """The single-writer invariant is ENFORCED, not documented: every
-    maintenance verb fails loudly when another writer's live lock is
-    present — two concurrent maintainers can no longer interleave
-    recover/stage/swap into silent corruption."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 != 0), path)
-    assert not os.path.exists(f"{path}/_index_write_lock")  # released
-
-    _make_lock(path)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    with pytest.raises(sim.IndexWriteLockError, match="single-writer"):
-        sim.ivfpq_merge_index(spark, path, delta)
-    with pytest.raises(sim.IndexWriteLockError):
-        sim.ivfpq_compact_index(spark, path)
-    with pytest.raises(sim.IndexWriteLockError):
-        sim.ivfpq_delete_ids(spark, path, [0])
-    with pytest.raises(sim.IndexWriteLockError):
-        sim.ivfpq_write_index(emb, path)  # rebuild is a writer too
-    # the blocked verbs changed nothing — the foreign lock is intact
-    # and the index still serves the base rows only
-    assert os.path.exists(f"{path}/_index_write_lock")
-    n = spark.read.parquet(f"{path}/codes").count()
-    assert n == emb.filter(F.col("vec_id") % 5 != 0).count()
-
-
-def test_index_lock_stale_lease_is_broken_and_healed(
-    spark, sf_dir, tmp_path
-):
-    """Crash-with-held-lock recovers via the lease: a lock older than
-    INDEX_LOCK_LEASE_SEC is presumed a crashed writer's — the next
-    verb breaks it, heals the crash remnants on entry, completes, and
-    releases cleanly."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    before = sorted(
-        (r.neighbor_id, int(r.cell), tuple(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    )
-    # crashed writer: mid-swap cell in trash + a held (but stale) lock
-    cell = int(
-        spark.read.parquet(f"{path}/codes").select("cell").first().cell
-    )
-    os.makedirs(f"{path}/codes_trash", exist_ok=True)
-    sh.move(f"{path}/codes/cell={cell}", f"{path}/codes_trash/cell={cell}")
-    _make_lock(path, age_sec=sim.INDEX_LOCK_LEASE_SEC + 60)
-
-    m = sim.ivfpq_merge_index(spark, path, emb)  # breaks the stale lease
-    assert m["n_added"] == 0  # entry recovery restored the cell first
-    after = sorted(
-        (r.neighbor_id, int(r.cell), tuple(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    )
-    assert after == before
-    assert not os.path.exists(f"{path}/codes_trash")
-    assert not os.path.exists(f"{path}/_index_write_lock")
-
-
-def test_index_lock_released_on_error_and_reentrant(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The lock must release on ANY exit — including a crash inside
-    the verb — and composed verbs (reembed = delete + merge) must run
-    under ONE reentrant lock instead of deadlocking on themselves."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb.filter(F.col("vec_id") % 5 != 0), path)
-    sim.ivfpq_merge_index(
-        spark, path, emb.filter(F.col("vec_id") % 5 == 0)
-    )
-
-    def boom(*a, **k):
-        raise RuntimeError("injected crash inside the locked verb")
-
-    monkeypatch.setattr(sim, "_swap_staged_cells", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.ivfpq_compact_index(spark, path)
-    monkeypatch.undo()
-    assert not os.path.exists(f"{path}/_index_write_lock")  # released
-    assert not any(p == path for (_, p) in sim._HELD_LOCKS)
-
-    # reentrancy: reembed (delete + merge under one lock) completes
-    changed = emb.filter(F.col("vec_id") % 7 == 1)
-    r = sim.ivfpq_reembed(spark, path, changed)
-    assert r["n_deleted"] == r["n_inserted"] == changed.count()
-    assert not os.path.exists(f"{path}/_index_write_lock")
-
-
-def test_reader_heals_interrupted_swap(spark, sf_dir, tmp_path):
-    """Read paths self-heal a CRASHED writer's interrupted swap (r10
-    advice item 1): a probe arriving after the crash — with no further
-    maintenance writer ever scheduled — restores the rolled-back cell
-    instead of silently serving the mid-swap mix forever."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    n_all = emb.count()
-    cell = int(
-        spark.read.parquet(f"{path}/codes").select("cell").first().cell
-    )
-    os.makedirs(f"{path}/codes_trash", exist_ok=True)
-    sh.move(f"{path}/codes/cell={cell}", f"{path}/codes_trash/cell={cell}")
-    assert spark.read.parquet(f"{path}/codes").count() < n_all
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    out = sim.ivfpq_probe_index(spark, path, queries, emb, k=3)
-    assert out.count() > 0  # the read itself succeeded...
-    # ...and healed the index as a side effect: cell restored, trash
-    # gone, no lock left behind
-    assert spark.read.parquet(f"{path}/codes").count() == n_all
-    assert not os.path.exists(f"{path}/codes_trash")
-    assert not os.path.exists(f"{path}/_index_write_lock")
-
-
-def test_reader_backs_off_under_live_writer_lock(spark, sf_dir, tmp_path):
-    """A LIVE lock means the swap remnants belong to a writer mid-verb,
-    not a crash — readers must NOT 'heal' (that would race the writer's
-    own renames); they read as-is, bounded by the writer's commit."""
-    import os
-    import shutil as sh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    cell = int(
-        spark.read.parquet(f"{path}/codes").select("cell").first().cell
-    )
-    os.makedirs(f"{path}/codes_trash", exist_ok=True)
-    sh.move(f"{path}/codes/cell={cell}", f"{path}/codes_trash/cell={cell}")
-    _make_lock(path)  # fresh: a live writer owns these remnants
-
-    sim.ivfpq_read_model(spark, path)  # must not mutate
-    assert os.path.exists(f"{path}/codes_trash/cell={cell}")
-    assert os.path.exists(f"{path}/_index_write_lock")
-    # once the 'writer' dies and its lease expires, the next read heals
-    _make_lock(path, age_sec=sim.INDEX_LOCK_LEASE_SEC + 60)
-    sim.ivfpq_read_model(spark, path)
-    assert not os.path.exists(f"{path}/codes_trash")
-    assert spark.read.parquet(f"{path}/codes").count() == emb.count()
 
 
 def test_probe_model_cache_hits_and_invalidates(spark, sf_dir, tmp_path):
-    """Serving-path model cache (r10 verdict item 5): the second probe
-    against an unchanged index reads NO model parquet (cache hit on
-    the mtime/length fingerprint) and returns identical results; a
-    rebuild invalidates — the next read decodes the NEW model."""
+    """Serving-path model cache: the second probe against an unchanged
+    index reads NO model parquet (a hit on the version's model dir)
+    and returns identical results; a rebuild commits a new model dir,
+    so the next read decodes the NEW model."""
     from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1425,9 +1223,8 @@ def test_probe_model_cache_hits_and_invalidates(spark, sf_dir, tmp_path):
     assert sim.MODEL_CACHE_STATS["misses"] == m0 + 1
     assert r1 == r2
 
-    # a retrain (staged rebuild + swap) must invalidate: the fingerprint
-    # changes with the swapped-in files, and the next read sees the new
-    # model shape
+    # a retrain commits a new model dir — a new key, so the next read
+    # sees the new model shape
     sim.ivfpq_write_index(emb, path, n_cells=8)
     _, _, meta = sim.ivfpq_read_model(spark, path)
     assert meta["n_cells"] == 8
@@ -1452,85 +1249,12 @@ def test_clustered_fixture_recall_gates(spark, sf_dir):
     assert row.n_results == 5 * row.n_queries
 
 
-def test_index_lock_ownership_is_per_thread(spark, sf_dir, tmp_path):
-    """Lock ownership is keyed by THREAD, not just path (r11 advice
-    medium): while one driver thread holds the write lock — exactly
-    the foreachBatch-merge-on-the-stream-thread shape — a maintenance
-    verb on ANOTHER thread must contend and raise, never alias the
-    holder's ownership 'reentrantly'. The holder itself stays
-    reentrant."""
-    import os
-    import threading
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-
-    assert sim._try_acquire_index_lock(spark, path)  # this thread holds
-    try:
-        # same thread: reentrant — the composed-verb contract
-        with sim.index_write_lock(spark, path):
-            pass
-        assert os.path.exists(f"{path}/_index_write_lock")  # still held
-
-        errs: list[BaseException] = []
-
-        def contender():
-            try:
-                with sim.index_write_lock(spark, path):
-                    errs.append(AssertionError("second thread aliased the lock"))
-            except sim.IndexWriteLockError as e:
-                errs.append(e)
-
-        t = threading.Thread(target=contender)
-        t.start()
-        t.join(30)
-        assert len(errs) == 1 and isinstance(errs[0], sim.IndexWriteLockError)
-        # the contender's failed attempt must not have released our lock
-        assert os.path.exists(f"{path}/_index_write_lock")
-        assert sim._this_thread_holds(path)
-    finally:
-        sim._release_index_lock(spark, path)
-    assert not os.path.exists(f"{path}/_index_write_lock")
-
-
-def test_index_lock_release_verifies_token(spark, sf_dir, tmp_path):
-    """A verb that outlived its lease must not delete its SUCCESSOR's
-    lock on release (r11 advice low 2): release compares the on-disk
-    payload token against the one written at acquire time and leaves a
-    mismatched (foreign) lock untouched."""
-    import json
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-
-    assert sim._try_acquire_index_lock(spark, path)
-    # simulate: our lease expired, a successor broke it and installed
-    # its own lock (different token) while we were still running
-    lock = f"{path}/_index_write_lock"
-    with open(lock, "w") as f:
-        json.dump({"host": "successor", "pid": 4242, "token": "theirs"}, f)
-
-    sim._release_index_lock(spark, path)  # must be a no-op on disk
-    assert os.path.exists(lock)
-    with open(lock) as f:
-        assert json.load(f)["token"] == "theirs"
-    assert not sim._this_thread_holds(path)  # our in-memory claim is gone
-    os.remove(lock)
-
-
 def test_model_cache_lru_cap_and_eviction(spark, sf_dir, tmp_path, monkeypatch):
-    """The serving-path model cache is a bounded LRU (r11 verdict item
-    3): one entry past the cap evicts the least-recently-served path;
-    re-reading the evicted path is a fresh miss; a survivor still
-    hits. evict_model_cache drops a named entry outright (temp-dir
-    fixtures call it on teardown)."""
+    """The serving-path model cache is a bounded LRU: one entry past the
+    cap evicts the least-recently-served index; re-reading the evicted
+    index is a fresh miss; a survivor still hits. evict_model_cache
+    drops an index's entries outright (temp-dir fixtures call it on
+    teardown)."""
     import shutil as sh
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1549,15 +1273,18 @@ def test_model_cache_lru_cap_and_eviction(spark, sf_dir, tmp_path, monkeypatch):
     sim._MODEL_CACHE.clear()
     e0 = sim.MODEL_CACHE_STATS["evictions"]
 
+    def cached():  # keys are model dirs: the index path + "/v{n}-..."
+        return [k.rsplit("/", 1)[0] for k in sim._MODEL_CACHE]
+
     for p in paths[:3]:
         sim.ivfpq_read_model(spark, p)
-    assert [k for k in sim._MODEL_CACHE] == paths[:3]
+    assert cached() == paths[:3]
     sim.ivfpq_read_model(spark, paths[0])  # hit: idx0 becomes most-recent
-    assert [k for k in sim._MODEL_CACHE][-1] == paths[0]
+    assert cached()[-1] == paths[0]
 
     sim.ivfpq_read_model(spark, paths[3])  # 4th distinct path: evicts idx1
     assert sim.MODEL_CACHE_STATS["evictions"] == e0 + 1
-    assert paths[1] not in sim._MODEL_CACHE
+    assert paths[1] not in cached()
     assert len(sim._MODEL_CACHE) == 3
 
     m0 = sim.MODEL_CACHE_STATS["misses"]
@@ -1568,7 +1295,7 @@ def test_model_cache_lru_cap_and_eviction(spark, sf_dir, tmp_path, monkeypatch):
     assert sim.MODEL_CACHE_STATS["hits"] == h0 + 1
 
     sim.evict_model_cache(paths[0])
-    assert paths[0] not in sim._MODEL_CACHE
+    assert paths[0] not in cached()
     sim._MODEL_CACHE.clear()
 
 
@@ -1643,583 +1370,17 @@ def test_model_cache_concurrent_readers_survive_eviction(
     sim._MODEL_CACHE.clear()
 
 
-def test_zombie_writer_fenced_at_commit_point(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Commit-point fence law (r12 verdict item 1): a writer whose
-    lock is forcibly broken MID-VERB (its lease expired and a
-    successor installed its own lock while the verb was still
-    running) must raise IndexWriteLockError at its next commit point
-    — BEFORE any live-index rename — and leave the index recoverable:
-    the live codes are byte-identical, the orphaned staging is
-    discarded by the next verb's recovery, and a rerun completes."""
-    import json
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-    sim.ivfpq_merge_index(spark, path, delta)  # fragment cells
-
-    lock = f"{path}/_index_write_lock"
-    real_counts = sim.ivfpq_cell_file_counts
-    successor_token: list[str] = []
-
-    def break_lease_then_count(spark_, p):
-        # the successor: a second writer on ANOTHER thread treats the
-        # running verb's lease as expired (lease_sec=0), breaks its
-        # lock through the real tombstone path and installs its own —
-        # exactly the zombie scenario
-        import threading
-
-        def successor():
-            assert sim._try_acquire_index_lock(spark_, p, lease_sec=0.0)
-            successor_token.append(
-                sim._HELD_LOCKS.pop((threading.get_ident(), p))
-            )
-
-        t = threading.Thread(target=successor)
-        t.start()
-        t.join(60)
-        return real_counts(spark_, p)
-
-    monkeypatch.setattr(sim, "ivfpq_cell_file_counts", break_lease_then_count)
-    before = sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    )
-    with pytest.raises(sim.IndexWriteLockError, match="lease lost mid-verb"):
-        sim.ivfpq_compact_index(spark, path)
-    monkeypatch.setattr(sim, "ivfpq_cell_file_counts", real_counts)
-
-    # the zombie aborted BEFORE any rename: live codes untouched, the
-    # successor's lock intact (token-verified release left it alone)
-    after = sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    )
-    assert after == before
-    with open(lock) as f:
-        assert json.load(f)["token"] == successor_token[0]
-    assert not sim._this_thread_holds(path)
-
-    # recoverable: once the successor is done (lock gone), a rerun
-    # discards the zombie's staging and compacts to one file per cell
-    fs, jpath = sim._hadoop_fs(spark, path)
-    fs.delete(jpath(lock), False)
-    stats = sim.ivfpq_compact_index(spark, path)
-    assert stats["n_cells_compacted"] > 0
-    assert not os.path.exists(f"{path}/codes_staging")
-    assert set(
-        sim.ivfpq_cell_file_counts(spark, path).values()
-    ) == {1}
-    assert sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    ) == before
-
-
-def test_release_claims_lock_atomically_and_restores_foreign(
-    spark, sf_dir, tmp_path
-):
-    """Release claims the lock file by ATOMIC RENAME before inspecting
-    it (r12 advice low 1 — the read-token-then-delete pair had a
-    window where a breaker could install a successor's lock between
-    the two steps): a matching token drops the claimed tombstone, a
-    foreign token is renamed straight back, and no `.release-*`
-    tombstone ever lingers on either path."""
-    import json
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    lock = f"{path}/_index_write_lock"
-
-    def tombstones():
-        return [
-            n for n in os.listdir(path)
-            if n.startswith("_index_write_lock.release-")
-        ]
-
-    # ours: claim → match → gone, no tombstone left
-    assert sim._try_acquire_index_lock(spark, path)
-    sim._release_index_lock(spark, path)
-    assert not os.path.exists(lock)
-    assert tombstones() == []
-
-    # foreign: claim → mismatch → restored in place, no tombstone left
-    import threading
-
-    assert sim._try_acquire_index_lock(spark, path)
-    successor_token: list[str] = []
-
-    def successor():  # breaks our lease and installs its own lock
-        assert sim._try_acquire_index_lock(spark, path, lease_sec=0.0)
-        successor_token.append(
-            sim._HELD_LOCKS.pop((threading.get_ident(), path))
-        )
-
-    t = threading.Thread(target=successor)
-    t.start()
-    t.join(60)
-    sim._release_index_lock(spark, path)
-    assert os.path.exists(lock)
-    with open(lock) as f:
-        assert json.load(f)["token"] == successor_token[0]
-    assert tombstones() == []
-    fs, jpath = sim._hadoop_fs(spark, path)
-    fs.delete(jpath(lock), False)
-
-
-def test_lock_mutexes_are_per_index_path():
-    """The in-process acquire/release serialization is keyed per index
-    path (r12 advice low 3): a slow storage RPC under one index's
-    mutex must not block lock traffic on another index, so distinct
-    paths must get distinct mutex objects — and repeat lookups the
-    SAME object, or the mutex would not serialize anything."""
-    a1 = sim._path_mutex("/idx/a")
-    a2 = sim._path_mutex("/idx/a")
-    b = sim._path_mutex("/idx/b")
-    assert a1 is a2
-    assert a1 is not b
-    # and one path's held mutex leaves the other's acquirable
-    with a1:
-        assert b.acquire(timeout=1)
-        b.release()
-
-
-def test_midswap_lease_break_aborts_within_recheck_interval(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Loop-interior fence law (r13): a lease broken in the MIDDLE of
-    a wide cell-swap batch — after the head fence already passed — is
-    caught at the next ``FENCE_RECHECK_CELLS`` re-check instead of the
-    zombie finishing the whole batch; the partial swap it leaves is
-    the same per-cell old-or-new state a crash leaves, so recovery +
-    rerun restore one-file-per-cell with byte-identical rows."""
-    import json
-    import os
-    import threading
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-    sim.ivfpq_merge_index(spark, path, delta)  # fragment many cells
-    assert (
-        sum(n > 1 for n in sim.ivfpq_cell_file_counts(spark, path).values())
-        >= 2
-    ), "law needs at least two fragmented cells to break mid-swap"
-    before = sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    )
-
-    monkeypatch.setattr(sim, "FENCE_RECHECK_CELLS", 1)
-    lock = f"{path}/_index_write_lock"
-    real_rename = sim._must_rename
-    renames: list = []
-    successor_token: list[str] = []
-
-    def rename_then_break(fs, src, dst):
-        real_rename(fs, src, dst)
-        renames.append(str(src))
-        if len(renames) == 2:  # first cell fully swapped (trash+live)
-            def successor():
-                assert sim._try_acquire_index_lock(spark, path, lease_sec=0.0)
-                successor_token.append(
-                    sim._HELD_LOCKS.pop((threading.get_ident(), path))
-                )
-
-            t = threading.Thread(target=successor)
-            t.start()
-            t.join(60)
-
-    monkeypatch.setattr(sim, "_must_rename", rename_then_break)
-    with pytest.raises(sim.IndexWriteLockError, match="lease lost mid-verb"):
-        sim.ivfpq_compact_index(spark, path)
-    monkeypatch.setattr(sim, "_must_rename", real_rename)
-
-    # the i=1 re-check caught it: exactly one cell's pair of swap
-    # renames ran (release's atomic-claim restore of the successor's
-    # lock also routes through _must_rename — excluded by path), the
-    # rest of the batch never committed, and the successor's lock
-    # survived the zombie's release untouched
-    assert [r for r in renames if "/codes" in r] == renames[:2]
-    assert len([r for r in renames if "/codes" in r]) == 2
-    with open(lock) as f:
-        assert json.load(f)["token"] == successor_token[0]
-    assert not sim._this_thread_holds(path)
-    # compaction stages identical rows, so even the half-swapped view
-    # is row-identical — mid-swap probes were never wrong
-    assert sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    ) == before
-
-    # recoverable: lock clears, recovery rolls the lone swapped cell
-    # back from trash and discards staging, rerun compacts everything
-    fs, jpath = sim._hadoop_fs(spark, path)
-    fs.delete(jpath(lock), False)
-    stats = sim.ivfpq_compact_index(spark, path)
-    assert stats["n_cells_compacted"] >= 2
-    assert not os.path.exists(f"{path}/codes_staging")
-    assert not os.path.exists(f"{path}/codes_trash")
-    assert set(sim.ivfpq_cell_file_counts(spark, path).values()) == {1}
-    assert sorted(
-        (r.neighbor_id, int(r.cell))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    ) == before
-
-
-def test_fence_retry_absorbs_transient_missing_lock(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Fence false-positive tolerance (r13 review): ONE failed or
-    empty token read must not kill a healthy verb — a transient RPC
-    hiccup or another holder's momentary release-claim makes a single
-    read come back None. The fence retries a missing token and passes
-    when it reappears; a PERSISTENTLY missing lock and a STABLE
-    foreign token still abort, each naming its evidence class."""
-    import json
-    import os
-    import threading
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    lock = f"{path}/_index_write_lock"
-    aside = f"{path}/_index_write_lock.aside"
-    monkeypatch.setattr(sim, "FENCE_RETRY_SLEEP_SEC", 0.2)
-
-    assert sim._try_acquire_index_lock(spark, path)
-    try:
-        # transient: the lock vanishes for one read, then reappears
-        os.rename(lock, aside)
-        t = threading.Timer(0.1, lambda: os.rename(aside, lock))
-        t.start()
-        sim._fence_commit(spark, path)  # must NOT raise
-        t.join()
-        assert os.path.exists(lock)
-
-        # persistently missing: aborts, naming the evidence
-        os.remove(lock)
-        with pytest.raises(
-            sim.IndexWriteLockError, match="missing/unreadable"
-        ):
-            sim._fence_commit(spark, path)
-
-        # stable foreign token: aborts fast, naming the evidence
-        # (drop the checksum sidecar of the removed lock, or Hadoop's
-        # LocalFileSystem rejects the hand-written replacement as a
-        # checksum mismatch and this reads as unreadable instead)
-        crc = f"{path}/._index_write_lock.crc"
-        if os.path.exists(crc):
-            os.remove(crc)
-        with open(lock, "w") as f:
-            json.dump({"token": "someone-elses-token"}, f)
-        with pytest.raises(sim.IndexWriteLockError, match="read twice"):
-            sim._fence_commit(spark, path)
-    finally:
-        sim._HELD_LOCKS.pop(sim._lock_key(path), None)
-        if os.path.exists(lock):
-            os.remove(lock)
-
-
-def test_zombie_release_never_touches_successor_lock(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Release pre-reads the token before claiming (r13 review): on
-    the common zombie-exit path the successor's live lock must never
-    be renamed at all — the r12 claim-every-lock release made a
-    HEALTHY successor's lock vanish for the duration of two remote
-    renames, long enough for its fence to misfire or a third acquirer
-    to displace it. Zero rename calls against a foreign lock."""
-    import json
-    import threading
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    lock = f"{path}/_index_write_lock"
-
-    assert sim._try_acquire_index_lock(spark, path)
-    successor_token: list[str] = []
-
-    def successor():  # breaks our lease and installs its own lock
-        assert sim._try_acquire_index_lock(spark, path, lease_sec=0.0)
-        successor_token.append(
-            sim._HELD_LOCKS.pop((threading.get_ident(), path))
-        )
-
-    t = threading.Thread(target=successor)
-    t.start()
-    t.join(60)
-
-    fs, jpath = sim._hadoop_fs(spark, path)
-    real_rename = fs.rename
-    rename_calls: list = []
-
-    class CountingFs:
-        def __getattr__(self, name):
-            if name == "rename":
-                def counted(src, dst):
-                    rename_calls.append(str(src))
-                    return real_rename(src, dst)
-                return counted
-            return getattr(fs, name)
-
-    monkeypatch.setattr(
-        sim, "_hadoop_fs", lambda s, p: (CountingFs(), jpath)
-    )
-    sim._release_index_lock(spark, path)
-    assert rename_calls == []  # pre-read mismatch: left untouched
-    with open(lock) as f:
-        assert json.load(f)["token"] == successor_token[0]
-    fs.delete(jpath(lock), False)
-
-
-def test_merge_staged_append_crash_converges(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Staged-append commit law (r13 review): the merge batch lands in
-    codes_append_staging and moves into live cells by per-file
-    renames, so a crash mid-move leaves staged-only remnants plus a
-    partial move — recovery discards the stage, and a RE-MERGE
-    converges to exactly the full corpus because the anti-join
-    re-admits only the still-missing ids."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    n_total = emb.count()
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-
-    real_rename = sim._must_rename
-    moves: list = []
-
-    def crash_after_first_move(fs, src, dst):
-        if "codes_append_staging" in str(src):
-            if moves:
-                raise IOError("injected crash mid-move")
-            moves.append(str(src))
-        real_rename(fs, src, dst)
-
-    monkeypatch.setattr(sim, "_must_rename", crash_after_first_move)
-    with pytest.raises(IOError, match="injected crash mid-move"):
-        sim.ivfpq_merge_index(spark, path, delta)
-    monkeypatch.setattr(sim, "_must_rename", real_rename)
-    assert len(moves) == 1  # exactly one staged file made it live
-    assert os.path.exists(f"{path}/codes_append_staging")
-
-    # recovery discards the stage; re-merge adds exactly the missing
-    stats = sim.ivfpq_recover_index(spark, path)
-    assert stats["n_staging_discarded"] == 1
-    assert not os.path.exists(f"{path}/codes_append_staging")
-    sim.ivfpq_merge_index(spark, path, delta)
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == n_total
-    assert codes.select("neighbor_id").distinct().count() == n_total
-
-
-def test_recovery_sweeps_orphaned_lock_tombstones(
-    spark, sf_dir, tmp_path
-):
-    """A crash between a release/stale-break's claim rename and its
-    tombstone disposal strands a .release-*/.broken-* file forever
-    (r13 review); recovery deletes any such file older than the
-    lease and keeps fresh ones (a live claim in flight)."""
-    import os
-    import time
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    old = f"{path}/_index_write_lock.release-deadbeef"
-    fresh = f"{path}/_index_write_lock.broken-cafebabe"
-    for p in (old, fresh):
-        with open(p, "w") as f:
-            f.write("{}")
-    stale_ts = time.time() - sim.INDEX_LOCK_LEASE_SEC - 60
-    os.utime(old, (stale_ts, stale_ts))
-    sim.ivfpq_recover_index(spark, path)
-    assert not os.path.exists(old)
-    assert os.path.exists(fresh)
-    os.remove(fresh)
-
-
-def test_oversized_lock_payload_fails_loudly_but_release_survives(
-    spark, sf_dir, tmp_path
-):
-    """The 1 MiB payload guard is a METADATA length check before any
-    read (r13 review: the byte-loop cap alone left commons-io free to
-    slurp a multi-GB corrupt file and silently resolve None), and
-    release — which runs in finally blocks — swallows it best-effort
-    instead of masking the verb's real exception."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    lock = f"{path}/_index_write_lock"
-    fs, jpath = sim._hadoop_fs(spark, path)
-
-    with open(lock, "wb") as f:
-        f.write(b"x" * ((1 << 20) + 1))
-    with pytest.raises(sim._LockPayloadTooLargeError):
-        sim._read_token_file(spark, fs, jpath(lock))
-
-    # a holder releasing against the corrupt lock: no raise, lock left
-    sim._HELD_LOCKS[sim._lock_key(path)] = "mytoken"
-    sim._release_index_lock(spark, path)  # must not raise
-    assert os.path.exists(lock)
-    assert not sim._this_thread_holds(path)
-    os.remove(lock)
-
-
-def test_evict_model_cache_drops_path_mutex():
-    """evict_model_cache bounds _PATH_MUTEXES the same way it bounds
-    the model cache (r13 review): throwaway temp-dir paths must not
-    accrete a Lock per path for the driver's lifetime."""
-    p = "/idx/throwaway"
-    sim._path_mutex(p)
-    assert p in sim._PATH_MUTEXES
-    sim.evict_model_cache(p)
-    assert p not in sim._PATH_MUTEXES
-
-
-def test_evict_model_cache_retains_mutex_in_use():
-    """The r13-review convention ("only evict once no verb is in
-    flight") is enforced, not just documented (r13 advice low 3): a
-    held lease or a locked mutex RETAINS the _PATH_MUTEXES entry, so
-    a misuse degrades to one leaked entry instead of two threads
-    holding two different mutexes for the same path."""
-    p = "/idx/in-use"
-
-    # case 1: some thread holds the path's lease
-    mutex = sim._path_mutex(p)
-    sim._HELD_LOCKS[sim._lock_key(p)] = "tok"
-    try:
-        sim.evict_model_cache(p)
-        assert sim._PATH_MUTEXES.get(p) is mutex  # retained, SAME object
-    finally:
-        sim._HELD_LOCKS.pop(sim._lock_key(p), None)
-
-    # case 2: the mutex itself is locked (verb mid check/break/create)
-    with mutex:
-        sim.evict_model_cache(p)
-        assert sim._PATH_MUTEXES.get(p) is mutex
-    # idle again: eviction proceeds
-    sim.evict_model_cache(p)
-    assert p not in sim._PATH_MUTEXES
-
-
-def test_recovery_counts_each_staging_area_discarded(
-    spark, sf_dir, tmp_path
-):
-    """n_staging_discarded counts staging AREAS (r13 advice low 2): a
-    crash that leaves BOTH codes_staging and codes_append_staging
-    reports 2, not 1."""
-    import os
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    os.makedirs(f"{path}/codes_staging/cell=0", exist_ok=True)
-    os.makedirs(f"{path}/codes_append_staging", exist_ok=True)
-    rec = sim.ivfpq_recover_index(spark, path)
-    assert rec["n_staging_discarded"] == 2
-    assert not os.path.exists(f"{path}/codes_staging")
-    assert not os.path.exists(f"{path}/codes_append_staging")
-
-
-def test_tombstone_staleness_from_name_not_inherited_mtime(
-    spark, sf_dir, tmp_path
-):
-    """Tombstones are created by RENAMING a lock file, and rename
-    preserves the source's mtime — which is by definition lease-stale
-    when a breaker tombstones it. The sweep therefore judges
-    staleness from the creation time encoded in the tombstone NAME
-    (r13 advice low 4): a FRESH tombstone whose mtime is ancient
-    survives, a stale-named one with a fresh mtime goes."""
-    import os
-    import time
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    now_ms = int(time.time() * 1000)
-    stale_ms = now_ms - int((sim.INDEX_LOCK_LEASE_SEC + 60) * 1000)
-    # a live breaker's tombstone: fresh NAME, inherited-ancient mtime
-    live = f"{path}/_index_write_lock.broken-{now_ms}-aaaa"
-    # crash garbage: stale NAME, fresh mtime (e.g. a backup-restore)
-    dead = f"{path}/_index_write_lock.release-{stale_ms}-bbbb"
-    for p in (live, dead):
-        with open(p, "w") as f:
-            f.write("{}")
-    old = time.time() - sim.INDEX_LOCK_LEASE_SEC - 120
-    os.utime(live, (old, old))  # rename-inherited mtime
-    sim.ivfpq_recover_index(spark, path)
-    assert os.path.exists(live)   # name says fresh -> kept
-    assert not os.path.exists(dead)  # name says stale -> swept
-    os.remove(live)
-
-
-def test_fence_reports_unstable_foreign_token_evidence(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Token churn (A,B,C or A,None,A — contenders racing) is its own
-    evidence class (r13 advice low 1): the abort message must not
-    call readable-but-unstable foreign tokens 'missing/unreadable'."""
-    import pytest as _pytest
-
-    path = str(tmp_path / "idx")
-    monkeypatch.setattr(sim, "FENCE_RETRY_SLEEP_SEC", 0.01)
-    sim._HELD_LOCKS[sim._lock_key(path)] = "mine"
-    seq = iter(["foreign-a", "foreign-b", "foreign-c", None, "foreign-d"])
-    monkeypatch.setattr(
-        sim, "_read_lock_token",
-        lambda spark_, fs_, jp_, p_: next(seq, None),
-    )
-    monkeypatch.setattr(sim, "_hadoop_fs", lambda s_, p_: (None, None))
-    try:
-        with _pytest.raises(
-            sim.IndexWriteLockError, match="unstable"
-        ):
-            sim._fence_commit(spark, path)
-    finally:
-        sim._HELD_LOCKS.pop(sim._lock_key(path), None)
-
-
 def test_index_verb_job_counts_stay_folded(spark, sf_dir, tmp_path):
-    """The r15 job-folding law (r14 verdict item 1): every maintenance
-    verb's driver-sequential Spark-job budget is pinned, so a future
-    change cannot silently reintroduce the count/collect round-trips
-    the Observation folds removed (a merge ran 8 Python-side actions
-    through r14; it now runs 3 — encode checkpoint, staged write,
-    validation read-back). Counts are DAG-scheduler job ids, which
-    include AQE stage materializations, hence the slack above the
-    action count; the caps sit ~25% over the measured steady state."""
+    """The job-folding law: every maintenance verb's driver-sequential
+    Spark-job budget is pinned, so a future change cannot silently
+    reintroduce the count/collect round-trips the Observation folds
+    removed. A first merge runs 5 actions — the model's 2 collects, the
+    encode checkpoint, the write and the validation read-back; a
+    replayed batch runs 2 (cached model, nothing written, no
+    read-back). Counts are DAG-scheduler job ids, which include AQE
+    stage materializations, hence the slack above the action count.
+    Measured on local[4]: write 6, merge 10, replay 6, compact 4,
+    delete 10, rebuild 8; the caps sit ~25% above."""
     from sentiment_analysis_data_engineering_spark.operators.observe import (
         spark_job_count,
     )
@@ -2235,7 +1396,7 @@ def test_index_verb_job_counts_stay_folded(spark, sf_dir, tmp_path):
         return spark_job_count(spark) - before
 
     assert jobs(lambda: sim.ivfpq_write_index(base, path)) <= 8
-    # first merge pays the model read (2 collect jobs) + the append;
+    # first merge pays the model read (2 collect jobs) + the write;
     # every artifact read-back has a declared schema, so none of these
     # verbs pays a schema-inference job
     assert jobs(lambda: sim.ivfpq_merge_index(spark, path, delta)) <= 13
@@ -2246,7 +1407,8 @@ def test_index_verb_job_counts_stay_folded(spark, sf_dir, tmp_path):
         jobs(lambda: sim.ivfpq_delete_ids(spark, path, delta.select("vec_id")))
         <= 13
     )
-    # retrain = staged rebuild: adds the staging read-back validation
+    # retrain = rebuild over a committed version: adds the read-back
+    # validation
     assert jobs(lambda: sim.ivfpq_write_index(emb, path)) <= 10
     q = emb.filter(F.col("vec_id") < 5)
     probe = sim.ivfpq_probe_index(spark, path, q, emb, k=3)

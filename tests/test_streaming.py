@@ -96,7 +96,7 @@ def test_streaming_ivfpq_merge_matches_batch_and_replays(spark, sf_dir, tmp_path
     assert all(s["n_already"] == 0 for s in stats)
 
     # streamed merges == the batch merge: index complete, ids unique
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     agg = codes.agg(
         F.count("*").alias("n"), F.countDistinct("neighbor_id").alias("nd")
     ).first()
@@ -172,7 +172,7 @@ def test_streaming_ivfpq_merge_auto_compacts(spark, sf_dir, tmp_path):
     frag = sim.ivfpq_cell_file_counts(spark, path)
     assert max(frag.values()) <= 3
     # completeness + exactness survive compaction
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = sim.ivfpq_codes(spark, path)
     agg = codes.agg(
         F.count("*").alias("n"), F.countDistinct("neighbor_id").alias("nd")
     ).first()
