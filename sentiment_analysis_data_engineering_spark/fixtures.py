@@ -23,6 +23,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TICKERS
+from .sources.io import local_frame
 
 __all__ = [
     "ohlcv_history",
@@ -72,7 +73,8 @@ def ohlcv_history(spark: SparkSession, tickers: list[str] | None = None) -> dict
             rows.append((f"{y:04d}-{m:02d}-{d:02d}", p, p * 1.02, p * 0.98,
                          p * 1.01, float(1000 + i), 0.0, 0.0))
         rows.append(rows[-1])  # ST4 duplicate (daily_dag.py re-appends history)
-        out[t] = spark.createDataFrame(
+        out[t] = local_frame(
+            spark,
             rows,
             "date string, open double, high double, low double, close double, "
             "volume double, dividends double, stock_splits double",
@@ -199,4 +201,4 @@ def labeled_quality_docs(
             else:
                 words.append(CLEAN_VOCAB[pick % len(CLEAN_VOCAB)])
         rows.append((i, " ".join(words), 1 if 2 * n_junk < words_per_doc else 0))
-    return spark.createDataFrame(rows, "doc_id long, text string, label int")
+    return local_frame(spark, rows, "doc_id long, text string, label int")

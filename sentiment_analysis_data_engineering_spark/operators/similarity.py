@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 import re
 import threading
 import uuid
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql import types as T
 
-from ..sources.io import _hadoop_fs, scan
+from ..sources.io import _hadoop_fs, local_frame, scan
 from .dedup import _spread
 from .observe import checkpoint_with_metrics, write_with_metrics
 
@@ -1116,9 +1117,44 @@ def _served(manifest: dict, drop=(), own: str | None = None, cells=()) -> dict:
     return {"model": manifest["model"], "codes": codes}
 
 
+def _create_exclusive(fs, entry, data: bytes) -> bool:
+    """Create the file ``entry`` holding ``data``, or return False when
+    it already exists — atomically, on every file system the index
+    runs on. Hadoop's ``create(overwrite=false)`` is atomic on HDFS,
+    but its local file system checks ``exists()`` and then opens the
+    file, so two writers can both pass the check. On ``file:`` paths
+    the bytes therefore go to a hidden temp file beside the entry,
+    published with one ``link(2)``: the kernel's create-exclusive,
+    and a reader never sees a partly written entry."""
+    if fs.getUri().getScheme() != "file":
+        try:
+            out = fs.create(entry, False)
+        except Py4JJavaError as e:
+            if "FileAlreadyExistsException" not in str(e):
+                raise
+            return False
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        return True
+    final = fs.pathToFile(entry).getPath()
+    tmp = os.path.join(os.path.dirname(final), f".{uuid.uuid4().hex}.tmp")
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    with open(tmp, "wb") as f:
+        f.write(data)
+    try:
+        os.link(tmp, final)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
 def _commit(spark, path: str, n: int, manifest: dict, own: str) -> None:
     """Publish ``manifest`` as version ``n`` by creating
-    ``_log/{n:020d}.json`` with ``FileSystem.create(overwrite=false)``.
+    ``_log/{n:020d}.json`` create-exclusive (``_create_exclusive``).
     When the entry already exists another writer got there first: the
     verb's own dir ``own`` is deleted and :class:`IndexConflictError`
     raised. After the commit, every ``v{k}-*`` dir with k ≤ n that the
@@ -1128,25 +1164,18 @@ def _commit(spark, path: str, n: int, manifest: dict, own: str) -> None:
     to a writer still working on version n and is left alone. No age,
     clock or retention setting is involved.
 
-    The create is atomic on HDFS. Hadoop's local and S3A file systems
-    implement it as check-then-create, so two writers racing inside
-    that window can both succeed there; see SCALE.md."""
+    The create is atomic on HDFS and on local paths. S3A implements it
+    as check-then-create, so two writers racing inside that window can
+    both succeed there; see SCALE.md."""
     fs, jpath = _hadoop_fs(spark, path)
-    try:
-        out = fs.create(jpath(f"{path}/{_LOG}/{n:020d}.json"), False)
-    except Py4JJavaError as e:
+    entry = jpath(f"{path}/{_LOG}/{n:020d}.json")
+    if not _create_exclusive(fs, entry, json.dumps(manifest).encode("utf-8")):
         fs.delete(jpath(f"{path}/{own}"), True)
-        if "FileAlreadyExistsException" not in str(e):
-            raise
         raise IndexConflictError(
             f"version {n} of the index at '{path}' was committed by "
             f"another writer; this verb's output was discarded — rerun "
             f"it against the new version"
-        ) from e
-    try:
-        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
+        )
     for st in fs.listStatus(jpath(path)):
         name = st.getPath().getName()
         k = re.match(r"v(\d+)-", name)
@@ -1234,11 +1263,13 @@ def ivfpq_write_index(
         sample_order="hash",
     )
     dim = len(C[0])
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
         _CENTROIDS_SCHEMA,
     ).write.parquet(f"{base}/centroids")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (s, c, [float(x) for x in row])
             for s, book in enumerate(books)
@@ -1362,7 +1393,7 @@ def _codes_at(spark, path: str, manifest: dict) -> DataFrame:
         for d, cells in manifest["codes"].items()
     ]
     if not parts:
-        return spark.createDataFrame([], CODES_SCHEMA)
+        return local_frame(spark, [], CODES_SCHEMA)
     return functools.reduce(DataFrame.unionAll, parts)
 
 
@@ -1578,7 +1609,7 @@ def ivfpq_delete_ids(
     ``{"n_deleted", "n_cells_rewritten", "n_cells_emptied"}``."""
     n0, snap = _snapshot(spark, path)
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} bigint")
+        ids = local_frame(spark, [(i,) for i in ids], f"{id_col} bigint")
     victims = (
         ids.select(F.col(ids.columns[0]).alias("neighbor_id")).distinct()
     )

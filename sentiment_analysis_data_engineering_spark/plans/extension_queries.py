@@ -33,6 +33,7 @@ from ..operators import similarity as sim
 from ..operators import skew as sk
 from ..operators import profile as pf
 from ..operators import text as tx
+from ..sources.io import local_frame
 from .registry import fixture_rows, load_tables, query
 
 # --------------------------------------------------------------------------
@@ -805,7 +806,8 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, hits2 = probe_hits(2)
     planted.unpersist()
     exact.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             n_queries,
             n_results8,
@@ -903,7 +905,8 @@ def ann_clustered_recall_families(
     )
     planted.unpersist()
     exact.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             n_queries,
             n_exact,
@@ -1259,7 +1262,8 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for s in (b, g)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "segment string, n_vectors long, coverage_ok boolean, "
         "occupancy_skew_ok boolean, residual_drift_ok boolean",
@@ -1341,7 +1345,8 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("_n"),
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             len(stats),
             sum(s["n_added"] for s in stats),
@@ -1605,7 +1610,8 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("neighbor_id").alias("_nd"),
         ).first()
     n_total = n_corpus + n_copies + n_ood
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             len(stats),
             sum(s["n_added"] for s in stats),

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import parse_unit_suffixed, today_parts
 from ..operators.relational import union_all
-from ..sources.io import idempotent_append, upsert_partitions
+from ..sources.io import idempotent_append, local_frame, upsert_partitions
 from ..sources.json_source import TIMESERIES_SCHEMA
 
 __all__ = [
@@ -72,8 +72,8 @@ def load_macro_daily(
     here the probe is the anti join inside ``idempotent_append``.
     """
     parts = today_parts(as_of)
-    row = spark.createDataFrame(
-        [(gold_json, oil_json)], "gold string, oil string"
+    row = local_frame(
+        spark, [(gold_json, oil_json)], "gold string, oil string"
     ).select(
         parts["year"].alias("year"),
         parts["month"].alias("month"),
@@ -144,7 +144,7 @@ def _stats_df(spark: SparkSession, stats: list[dict], as_of: str) -> DataFrame:
     defaults), i.e. F5+F7 in-plan instead of Python conditionals."""
     parts = today_parts(as_of)
     rows = [(s["company"], json.dumps(s)) for s in stats]
-    return spark.createDataFrame(rows, "company string, payload string").select(
+    return local_frame(spark, rows, "company string, payload string").select(
         parts["year"].alias("year"),
         parts["month"].alias("month"),
         parts["day"].alias("day"),
@@ -295,7 +295,7 @@ def _load_macro_joined(
         for n in names
     }
     entries = (
-        spark.createDataFrame([(p,) for p in payloads], "payload string")
+        local_frame(spark, [(p,) for p in payloads], "payload string")
         .select(F.from_json("payload", TIMESERIES_SCHEMA).alias("p"))
         .select("p.name", F.inline("p.data"))
     )

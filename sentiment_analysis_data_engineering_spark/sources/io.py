@@ -4,6 +4,9 @@ The reference's storage contract, re-expressed on partitioned parquet:
 
 - ``scan``               S1: predicate scan; filters reach the parquet
                          reader (pushdown / partition pruning).
+- ``local_frame``        rows held on the driver (REST payloads, summary
+                         rows, index models) as a frame that no job and
+                         no Python worker has to produce.
 - ``append``             S2: plain append (``to_gbq(if_exists='append')``).
 - ``idempotent_append``  ST1/ST2: insert only rows whose key is absent —
                          ONE left_anti join instead of the reference's
@@ -36,14 +39,17 @@ from __future__ import annotations
 
 from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.observe import write_with_metrics
 from ..operators.relational import anti_join_new_rows
 
 __all__ = [
+    "local_frame",
     "scan",
     "scan_or_none",
     "append",
@@ -51,6 +57,46 @@ __all__ = [
     "replace_partition",
     "upsert_partitions",
 ]
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """The one way the package turns driver-side rows into a DataFrame:
+    ``rows`` (tuples in ``schema``'s field order; ``schema`` a
+    ``StructType`` or a DDL string) become one Arrow table in the
+    declared types, which Spark plans as a ``LocalRelation``: the rows
+    ride in the plan, collecting them runs no job, and no action on
+    them starts a Python worker.
+
+    ``spark.createDataFrame(<list>)`` instead parallelizes pickled rows
+    into ``defaultParallelism`` slices and re-serializes them through a
+    Python worker, so every execution of such a frame starts one
+    Python task per slice, even for one row.
+
+    A value its column cannot hold raises here, on the driver, before
+    any job (``pyarrow.ArrowInvalid`` / ``ArrowTypeError``)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = zip(*rows, strict=True) if rows else ([] for _ in arrow)
+    table = pa.Table.from_arrays(
+        [_arrow_column(c, t) for c, t in zip(cols, arrow.types, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_column(values, arrow_type: pa.DataType) -> pa.Array:
+    """``values`` as an Arrow array of ``arrow_type``. The typed read
+    refuses a value of the wrong kind (``"x"`` in a double, ``1`` in a
+    string or boolean, ``2**40`` in an int) but truncates ``1.5`` into
+    a bigint; the safe cast of the inferred column refuses that lossy
+    case."""
+    out = pa.array(values, type=arrow_type)
+    pa.array(values).cast(arrow_type, safe=True)
+    return out
 
 
 def scan(

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .io import local_frame
+
 __all__ = ["scalar_json_lookup"]
 
 
@@ -27,7 +29,7 @@ def scalar_json_lookup(
     (``daily_dag.py:59-60``) becomes ``get_json_object``.
     """
     rows = [(name, payload, path) for name, (payload, path) in payloads.items()]
-    df = spark.createDataFrame(rows, "name string, payload string, path string")
+    df = local_frame(spark, rows, "name string, payload string, path string")
     # get_json_object needs a foldable path → one branch per DISTINCT
     # path (iterating payload entries would select every row sharing a
     # path once per sharer, duplicating output rows).

@@ -2,9 +2,15 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
+
+from sentiment_analysis_data_engineering_spark.operators import similarity as sim
+from sentiment_analysis_data_engineering_spark.operators.observe import spark_job_count
 from sentiment_analysis_data_engineering_spark.sources.io import (
     append,
     idempotent_append,
+    local_frame,
     replace_partition,
     scan,
 )
@@ -160,3 +166,78 @@ def test_analyze_table_records_stats(spark):
     assert got["rows"] == 500 and got["bytes"] > 0
     catalog.drop_table(spark, f"{db}.t_stats")
     catalog.drop_database(spark, db)
+
+
+def _plan_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+#: (rows, schema) in every schema the package builds driver-side frames
+#: with: T1, T3-T6, T7/T8, the index model and ids, a summary row, the
+#: JSON lookup and both fixtures — with empty, None and array cases.
+_SITE_CASES = [
+    ([('{"rates": {}}', None)], "gold string, oil string"),
+    ([("D05.SI", "{}"), (None, '{"a": 1}')], "company string, payload string"),
+    ([], "company string, payload string"),
+    ([("{}",), (None,)], "payload string"),
+    ([(0, [0.5, -1.0]), (1, []), (2, None), (3, [None, 2.0])], sim._CENTROIDS_SCHEMA),
+    ([(0, 7, [1.0, 2.5]), (1, 2**31 - 1, None)], sim._CODEBOOKS_SCHEMA),
+    ([], sim.CODES_SCHEMA),
+    ([(5, [1, None, 255], 3), (2**40, [], None)], sim.CODES_SCHEMA),
+    ([(1,), (2**62,), (None,)], "vec_id bigint"),
+    ([(3, 15, True, False, None)],
+     "n_queries long, n_results long, structure_found_ok boolean, "
+     "pruning_informative_ok boolean, recall_floor_ok boolean"),
+    ([("index", 40, True, None, False)],
+     "segment string, n_vectors long, coverage_ok boolean, "
+     "occupancy_skew_ok boolean, residual_drift_ok boolean"),
+    ([("gold", '{"p": 2}', "$.p")], "name string, payload string, path string"),
+    ([("2023-01-02", 1.5, 2.0, 1.0, 1.25, 1000.0, 0.0, None)],
+     "date string, open double, high double, low double, close double, "
+     "volume double, dividends double, stock_splits double"),
+    ([(0, "clean words", 1), (1, None, None)], "doc_id long, text string, label int"),
+]
+
+
+@pytest.mark.parametrize("rows,schema", _SITE_CASES)
+def test_local_frame_equals_the_list_frame_and_runs_no_job(spark, rows, schema):
+    """``local_frame`` gives the frame ``createDataFrame(<list>)`` gives —
+    same names, types, nullability and rows — as a LocalRelation whose
+    collect submits no job (the list frame submits one, with a Python
+    task per slice)."""
+    want = spark.createDataFrame(rows, schema)
+    got = local_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    assert _plan_root(got) == "LocalRelation"
+    before = spark_job_count(spark)
+    got_rows = got.collect()
+    assert spark_job_count(spark) == before
+    assert got_rows == want.collect()
+
+
+@pytest.mark.parametrize(
+    "rows,schema",
+    [
+        ([("x",)], "v bigint"),
+        ([(1.5,)], "v bigint"),
+        ([(2**40,)], "v int"),
+        ([("1.5",)], "v double"),
+        ([(1,)], "v boolean"),
+        ([(1,)], "v string"),
+        ([(["a"],)], "v array<double>"),
+        ([([0.5],)], "v array<int>"),
+    ],
+)
+def test_local_frame_refuses_a_wrong_typed_value_before_any_job(spark, rows, schema):
+    before = spark_job_count(spark)
+    with pytest.raises((pa.ArrowInvalid, pa.ArrowTypeError)):
+        local_frame(spark, rows, schema)
+    assert spark_job_count(spark) == before
+
+
+def test_empty_index_codes_frame_is_a_local_relation(spark, tmp_path):
+    """A version that serves no cell reads as an empty LocalRelation in
+    the codes schema, not as a parallelized empty list."""
+    codes = sim._codes_at(spark, str(tmp_path), {"model": "v1-m", "codes": {}})
+    assert codes.schema == sim.CODES_SCHEMA
+    assert _plan_root(codes) == "LocalRelation"

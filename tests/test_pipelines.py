@@ -192,3 +192,45 @@ def test_pipeline_tasks_commit_within_job_budgets(spark, tmp_table_dir):
     budget = {"T1": 2, "T2": 3, "T3": 5, "T7": 3, "T8": 3}
     over = {task: j for task, (_, j) in got.items() if j > budget[task]}
     assert not over, f"jobs over budget {budget}: {over}"
+
+
+def _rdd_scans(df) -> int:
+    """``LogicalRDD`` leaves in ``df``'s optimized plan — each one a
+    frame parallelized from the driver, read through a Python worker."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"\bLogicalRDD\b", plan))
+
+
+def test_etl_tasks_add_no_rdd_scan(spark, monkeypatch):
+    """T1 and T3-T8 build their inputs on the driver as LocalRelations,
+    so the frames they write hold no ``LogicalRDD`` — no Python-worker
+    task. T2 writes the caller's per-ticker frames: exactly one RDD scan
+    per caller-built frame, and none when the caller's frames are
+    local."""
+    written = []
+
+    def capture(spark, df, *args, **kwargs):
+        written.append(df)
+        return 0
+
+    monkeypatch.setattr(pl, "idempotent_append", capture)
+    monkeypatch.setattr(pl, "upsert_partitions", capture)
+    stats = fx.company_stats((2023, 5, 12))
+    pl.load_macro_daily(spark, *fx.spot_price_json(2023, 5, 12), "2023-05-12", "t1")
+    for task in (pl.load_financial_ratio, pl.load_key_metrics,
+                 pl.load_company_esg, pl.load_company_group):
+        task(spark, stats, "2023-05-12", "t")
+    pl.load_macro_monthly(spark, [fx.indicator_json(n) for n in fx.MONTHLY_INDICATORS], "t7")
+    pl.load_macro_quarterly(
+        spark, [fx.indicator_json(n, monthly=False) for n in fx.QUARTERLY_INDICATORS], "t8"
+    )
+    assert [_rdd_scans(df) for df in written] == [0] * 7
+
+    local = fx.ohlcv_history(spark, ["D05.SI", "U11.SI", "O39.SI"])
+    pl.load_stock_daily(spark, local, "t2")
+    callers = {t: spark.createDataFrame(df.collect(), df.schema) for t, df in local.items()}
+    assert [_rdd_scans(df) for df in callers.values()] == [1] * len(callers)
+    pl.load_stock_daily(spark, callers, "t2")
+    assert [_rdd_scans(df) for df in written[7:]] == [0, len(callers)]

@@ -379,6 +379,29 @@ def test_every_export_is_reached_outside_tests():
     assert unreached == _UNREACHED_EXPORTS
 
 
+def test_driver_rows_become_frames_only_through_local_frame():
+    """Within the package, ``createDataFrame`` is called only inside
+    ``sources.io.local_frame``, which hands it an Arrow table (a
+    LocalRelation). A list handed to ``createDataFrame`` anywhere else
+    is parallelized and re-read through one Python-worker task per
+    slice on every execution. Tests stay free to use it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(entrymod.__file__).resolve().parent / "sentiment_analysis_data_engineering_spark"
+    callers = set()
+    for mod in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(mod.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "createDataFrame":
+                owner = node
+                while owner is not None and not isinstance(owner, ast.FunctionDef):
+                    owner = parent.get(owner)
+                callers.add((mod.relative_to(pkg).as_posix(), getattr(owner, "name", None)))
+    assert callers == {("sources/io.py", "local_frame")}
+
+
 def test_crossencoder_rerank_plan_shape(spark, sf_dir):
     """The production rerank path (candidates -> true-vector equi-join
     -> Arrow score -> window top-k) must broadcast the query side and

@@ -1082,6 +1082,43 @@ def test_stale_writer_cannot_commit_and_is_swept(
     sim.evict_model_cache(path)
 
 
+def test_racing_commits_on_one_version_have_one_winner(spark, tmp_path):
+    """8 writers race ``_commit`` on the same version of one index, in
+    100 trials on a local path, where Hadoop's ``create(overwrite=false)``
+    checks and then creates: every trial has exactly one winner, the
+    other 7 raise IndexConflictError, the entry holds the winner's
+    manifest and only the winner's dir is left."""
+    import os
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    n_writers = 8
+
+    def trial(path: str):
+        barrier = threading.Barrier(n_writers)
+
+        def writer(i: int):
+            own = f"v1-w{i}"
+            os.makedirs(f"{path}/{own}")
+            barrier.wait(timeout=60)
+            try:
+                sim._commit(spark, path, 1, {"model": own, "codes": {}}, own)
+            except sim.IndexConflictError:
+                return None
+            return own
+
+        return [w for w in pool.map(writer, range(n_writers)) if w]
+
+    with ThreadPoolExecutor(n_writers) as pool:
+        for t in range(100):
+            path = str(tmp_path / f"idx{t}")
+            won = trial(path)
+            assert len(won) == 1, (t, won)
+            assert sim._snapshot(spark, path) == (1, {"model": won[0], "codes": {}})
+            assert sorted(os.listdir(path)) == ["_log", won[0]]
+            assert os.listdir(f"{path}/_log") == [f"{1:020d}.json"]
+
+
 def test_ivfpq_drift_audit_surfaces_unaudited_rows(spark, sf_dir, tmp_path):
     """Index rows whose id is missing from the supplied corpus must
     surface as the __unaudited__ segment (exact count, zero error) —
