@@ -55,7 +55,6 @@ def decompose_date(
     df: DataFrame,
     date_col: str,
     *,
-    keep: bool = False,
     parts: tuple[str, ...] = ("year", "month", "day"),
 ) -> DataFrame:
     """F1+F2+P1 — add integer date-part columns, then drop the source.
@@ -65,7 +64,7 @@ def decompose_date(
     all_parts = date_parts(date_col)
     for name in parts:
         df = df.withColumn(name, all_parts[name])
-    return df if keep else df.drop(date_col)
+    return df.drop(date_col)
 
 
 def safe_cast(col: Column | str, dtype: str) -> Column:

@@ -97,7 +97,7 @@ _PINNED: list[tuple[DataFrame, bool]] = []
 _SCOPE_DEPTH: int = 0
 
 
-def _pin(df: DataFrame, persist: bool) -> DataFrame:
+def _pin(df: DataFrame) -> DataFrame:
     """Persist (memory, spill to disk) a frame that the surrounding
     plan references more than once. Without it, each reference
     recomputes the whole subtree — self-joins and skew-guard probes
@@ -113,9 +113,7 @@ def _pin(df: DataFrame, persist: bool) -> DataFrame:
     only by an explicit unpersist or context shutdown — NOT by job
     completion. Each pin is recorded; long-lived sessions that invoke
     these pipelines repeatedly should call :func:`release_pinned`
-    after materializing each output (or pass ``persist=False``)."""
-    if not persist:
-        return df
+    after materializing each output."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PINNED.append((df, True))
     return df
@@ -180,8 +178,7 @@ def pinned_scope() -> Iterator[None]:
     ``with`` are unpersisted on exit (LIFO), frames pinned before it
     are untouched. The storage-safe way for a long-lived session to
     call the pinning operators (minhash_lsh_pairs, minhash_lsh_probe,
-    simhash_pairs, embedding_cosine_pairs, ngram_jaccard_pairs,
-    template_doc_flags)::
+    simhash_pairs, ngram_jaccard_pairs, template_doc_flags)::
 
         with pinned_scope():
             pairs = minhash_lsh_pairs(df, "text", "doc_id")
@@ -343,7 +340,7 @@ def template_doc_flags(
     Returns one row per document: (id, n_shingles, hot_shingles,
     hot_ratio, is_template) — clean docs asserted clean, not absent.
     """
-    sh = _pin(_doc_shingles(_spread(df, id_col), text_col, id_col, n), persist=True)
+    sh = _pin(_doc_shingles(_spread(df, id_col), text_col, id_col, n))
     n_docs = df.select(F.count("*").alias("_nd"))
     hot_bar = F.greatest(
         F.lit(hot_min_docs), F.ceil(F.lit(hot_frac) * F.col("_nd"))
@@ -390,7 +387,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.2,
     max_bucket_size: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
 
@@ -407,14 +403,13 @@ def ngram_jaccard_pairs(
     references it three times (sizes + both join sides).
     """
     df = _spread(df, id_col)
-    sh = _pin(_doc_shingles(df, text_col, id_col, n), persist)
+    sh = _pin(_doc_shingles(df, text_col, id_col, n))
     sizes = sh.groupBy("_id").agg(F.count("*").alias("_size"))
 
     sh_kept = _pin(
         sh.withColumn("_df", F.count("*").over(Window.partitionBy("_sh")))
         .filter(F.col("_df") <= max_bucket_size)
-        .drop("_df"),
-        persist,
+        .drop("_df")
     )
 
     a = sh_kept.select(F.col("_id").alias("id_a"), "_sh")
@@ -548,12 +543,10 @@ def minhash_lsh_pairs(
     shingle_size: int = 5,
     verify_threshold: float | None = 0.2,
     max_bucket_size: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding over MinHash
-    signatures, optionally verified with exact n-gram Jaccard.
-    ``persist`` pins the twice-referenced signature/bucket frames
-    (see _pin); pass False to keep the plan fully lazy.
+    signatures, optionally verified with exact n-gram Jaccard. The
+    twice-referenced signature/bucket frames are pinned (see _pin).
 
     Banding: num_hashes/bands rows per band; a pair lands in a bucket iff
     a whole band of their signatures agrees. With 64 hashes / 16 bands
@@ -569,19 +562,16 @@ def minhash_lsh_pairs(
     # directly — without the shared pin the word_ngrams transform (the
     # most expensive scalar work in the plan) would run twice over the
     # corpus.
-    doc_sh = _pin(
-        df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "")
-        .select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(word_ngrams(text_col, shingle_size)).alias("_shs"),
-        ),
-        persist and verify_threshold is not None,
+    doc_sh = df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "").select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(word_ngrams(text_col, shingle_size)).alias("_shs"),
     )
+    if verify_threshold is not None:
+        doc_sh = _pin(doc_sh)
     sig = _pin(
         _signatures_from_shingle_rows(
             doc_sh.select("_id", F.explode("_shs").alias("_sh")), num_hashes
-        ),
-        persist,
+        )
     )
     band_sig = _band_buckets(sig, bands, rows_per_band)
     # skew guard: a bucket with B docs yields B² pairs. A window count
@@ -593,8 +583,7 @@ def minhash_lsh_pairs(
             "_bsz", F.count("*").over(Window.partitionBy("_band", "_bucket"))
         )
         .filter(F.col("_bsz") <= max_bucket_size)
-        .drop("_bsz"),
-        persist,
+        .drop("_bsz")
     )
     a = kept.select(F.col("_id").alias("id_a"), "_band", "_bucket")
     b = kept.select(F.col("_id").alias("id_b"), "_band", "_bucket")
@@ -660,7 +649,6 @@ def minhash_lsh_probe(
     bands: int = 16,
     shingle_size: int = 5,
     max_bucket_size: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Incremental near-dup candidates: every LSH pair involving at
     least one NEW document — new-vs-index and new-vs-new — WITHOUT
@@ -684,9 +672,9 @@ def minhash_lsh_probe(
     as the monolithic run — the guard can't diverge); the pair join
     probes new-side buckets against all. One shuffle each for
     signature agg, bucket window, and pair join — all keyed.
-    ``persist`` pins the twice-probed bucket frame (see _pin / call
-    under :func:`pinned_scope`); ids must be disjoint between batch
-    and index — an id on both sides would pair with itself's bands.
+    The twice-probed bucket frame is pinned (see _pin; call under
+    :func:`pinned_scope`); ids must be disjoint between batch and
+    index — an id on both sides would pair with itself's bands.
     """
     rows_per_band = num_hashes // bands
     sig_new = minhash_signatures(
@@ -708,8 +696,7 @@ def minhash_lsh_probe(
             "_bsz", F.count("*").over(Window.partitionBy("_band", "_bucket"))
         )
         .filter(F.col("_bsz") <= max_bucket_size)
-        .drop("_bsz"),
-        persist,
+        .drop("_bsz")
     )
     a = kept.filter("_new").select(
         F.col("_id").alias("id_a"), "_band", "_bucket"
@@ -813,7 +800,6 @@ def simhash_pairs(
     *,
     max_hamming: int = 3,
     chunks: int = 4,
-    persist: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
@@ -847,7 +833,7 @@ def simhash_pairs(
             )
         ).alias("_c"),
     ).select("_id", "simhash", F.col("_c.ci").alias("_ci"), F.col("_c.cv").alias("_cv"))
-    exploded = _pin(exploded, persist)
+    exploded = _pin(exploded)
 
     a = exploded.select(
         F.col("_id").alias("id_a"), F.col("simhash").alias("_ha"), "_ci", "_cv"
@@ -1034,42 +1020,34 @@ def connected_components(
 # --------------------------------------------------------------------------
 
 
-def _cosine_base(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    """(_id, _v double[], _norm) — norms once per vector, element-order
-    sums so a SQL oracle reproduces the arithmetic exactly."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.select(
-        F.col(id_col).alias("_id"),
-        v.alias("_v"),
-        F.sqrt(
-            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-        ).alias("_norm"),
-    )
+def _cell_cosines(A, B):
+    """(C, live) for two float64 blocks of row vectors: ``C[i, j]`` is
+    the cosine of A[i] and B[j] from one matmul, ``live[i, j]`` is
+    False where either norm is 0 — that pair has no cosine (0/0), so
+    its entry is 0 and never computed."""
+    import numpy as np
 
-
-def _pair_dot() -> Column:
-    return F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    na = np.sqrt((A * A).sum(axis=1))
+    nb = np.sqrt((B * B).sum(axis=1))
+    live = np.outer(na > 0, nb > 0)
+    C = np.divide(A @ B.T, np.outer(na, nb), out=np.zeros(live.shape), where=live)
+    return C, live
 
 
 def _exact_pairs_arrow(
     base: DataFrame, b_blocks: int, threshold: float
 ) -> DataFrame:
-    """Arrow/BLAS form of the triangle block-grid exact join: instead of
-    realizing the (n/B)² candidate ROWS of every cell in the JVM and
-    evaluating an interpreted 64-element fold per pair, each cell's two
-    block slices travel ONCE through Arrow (n·~B/2 rows of vectors —
-    megabytes, not the gigabytes the pair rows would be) and numpy
-    computes the whole cell's cosines as one float64 matmul. Emits RAW
-    cosines pre-filtered with 1e-6 slack — strictly wider than the
-    5e-7 half-ulp that HALF_UP rounding at 6 dp can add, so no pair
-    the SQL path would round up past the threshold is ever dropped;
-    the caller re-rounds and re-filters in Spark so the final
-    threshold semantics are identical to the SQL path. float64 matmul vs the sequential fold differs by
-    ~1e-16 relative — invisible at 6 dp (oracle-verified)."""
+    """Triangle block-grid exact join over (_id, _v double[]): each
+    cell's two block slices travel ONCE through Arrow (n·~B/2 rows of
+    vectors — megabytes, not the gigabytes the (n/B)² pair rows would
+    be) and numpy computes the whole cell's cosines as one float64
+    matmul (``_cell_cosines``). A pair with a zero-norm side has no
+    cosine and is never emitted. Emits RAW cosines pre-filtered with
+    1e-6 slack — strictly wider than the 5e-7 half-ulp that HALF_UP
+    rounding at 6 dp can add, so no pair that rounds up onto the
+    threshold is dropped; the caller rounds and filters in Spark. float64 matmul vs a SQL oracle's
+    sequential fold differs by ~1e-16 relative — invisible at 6 dp
+    (oracle-verified)."""
     import numpy as np
     import pandas as pd
 
@@ -1100,12 +1078,10 @@ def _exact_pairs_arrow(
             return pd.DataFrame({"id_a": [], "id_b": [], "_raw": []})
         A = np.stack(a["_v"].to_numpy()).astype(np.float64)
         B = np.stack(b["_v"].to_numpy()).astype(np.float64)
-        na = np.sqrt((A * A).sum(axis=1))
-        nb = np.sqrt((B * B).sum(axis=1))
-        C = (A @ B.T) / np.outer(na, nb)
+        C, live = _cell_cosines(A, B)
         ia = a["_id"].to_numpy()
         ib = b["_id"].to_numpy()
-        mask = C >= threshold - 1e-6
+        mask = live & (C >= threshold - 1e-6)
         if p == q:
             mask &= ia[:, None] < ib[None, :]
         r, c = np.nonzero(mask)
@@ -1127,173 +1103,35 @@ def embedding_cosine_pairs(
     id_col: str,
     *,
     threshold: float = 0.95,
-    method: str = "exact",
-    engine: str = "arrow",
     n_blocks: int | None = None,
-    num_planes: int = 64,
-    bands: int = 16,
-    dim: int = 64,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold —
-    (id_a, id_b, cosine), id_a < id_b.
+    (id_a, id_b, cosine), id_a < id_b, cosine rounded to 6 dp; a zero
+    vector pairs with nothing.
 
-    Two scale-safe plans, both equi-joins/equi-groupings (no theta
-    join, so no BroadcastNestedLoopJoin/CartesianProduct ever appears):
-
-    - ``method="exact"`` — triangle block-grid self-join. Each vector
-      hashes to one of B blocks; side A explodes to cells (p, q≥p),
-      side B to cells (p≤q, q); the (p, q) cell key realizes every
-      unordered block pair exactly once. The O(n²) pair work is
-      inherent to an exact threshold join over dense vectors (no
-      sound pruning exists at low thresholds), but it is spread
-      evenly over B(B+1)/2 cells of (n/B)² pairs. B defaults to
-      2·defaultParallelism (cap 64). Two engines:
-        * ``engine="arrow"`` (default) — per-cell float64 numpy
-          matmul via ``applyInPandas``: Arrow moves each cell's two
-          block SLICES (linear in n·B), BLAS does the quadratic
-          flops, and only survivors come back. Rounding/threshold
-          re-applied in Spark so semantics match the SQL engine.
-        * ``engine="sql"`` — pure-JVM hash join on the cell key with
-          fold-based dots, bit-identical to a SQL oracle; the
-          codegen-free fold costs ~10x the matmul on the same flops.
-    - ``method="lsh"`` — hyperplane-LSH banding (similarity.py's
-      deterministic sign-bit sketches) generates candidates via an
-      equi-join on (band, band-value); exact cosine refines. Linear
-      shuffle, candidate-proportional work — THE path for true
-      near-dup thresholds, with the standard LSH recall caveat:
-      a pair separated by > num_planes·θ/π planes can miss. At
-      cosine ≥ 0.8 (θ ≤ 37°) the default 64 planes/16 bands gives
-      miss-probability < 1e-4 per pair; at τ = 0.4 the angle is so
-      wide no banding holds recall — use "exact".
-    - ``method="auto"`` — "lsh" when threshold ≥ 0.8 else "exact".
-
-    The default is ``"exact"``: an approximation (however small the
-    documented miss probability) is an opt-in, never a silent
-    substitution behind an unchanged signature. Pass ``"lsh"`` or
-    ``"auto"`` explicitly on corpora where the O(n²) exact grid is
-    unaffordable.
+    Triangle block-grid self-join, an equi-grouping (no theta join, so
+    no BroadcastNestedLoopJoin/CartesianProduct ever appears). Each
+    vector hashes to one of B blocks; side A explodes to cells (p, q≥p),
+    side B to cells (p≤q, q); the (p, q) cell key realizes every
+    unordered block pair exactly once. The O(n²) pair work is inherent
+    to an exact threshold join over dense vectors (no sound pruning
+    exists at low thresholds), but it is spread evenly over B(B+1)/2
+    cells of (n/B)² pairs. B defaults to 2·defaultParallelism (cap 64).
+    Per cell, ``applyInPandas`` moves the two block SLICES through
+    Arrow (linear in n·B), BLAS does the quadratic flops, and only
+    survivors come back (``_exact_pairs_arrow``).
 
     The brute-force theta-join form this replaces survives only in
     tests (tests/test_dedup.py) as the verification baseline.
     """
-    if method == "auto":
-        method = "lsh" if threshold >= 0.8 else "exact"
-    if method not in ("exact", "lsh"):
-        raise ValueError(f"unknown method {method!r}")
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"unknown engine {engine!r}")
-
-    base = _cosine_base(_spread(df, id_col), vec_col, id_col)
-    if not (method == "exact" and engine == "arrow"):
-        # the sql-exact and lsh plans reference base 2-3 times; the
-        # arrow-exact plan consumes it exactly once, so pinning would
-        # only add a cache write of the full vector frame.
-        base = _pin(base, persist)
-
-    if method == "exact":
-        spark = df.sparkSession
-        b_blocks = n_blocks or min(64, spark.sparkContext.defaultParallelism * 2)
-        if engine == "arrow":
-            raw = _exact_pairs_arrow(
-                base.select("_id", "_v"), b_blocks, threshold
-            )
-            return (
-                raw.withColumn("cosine", F.round(F.col("_raw"), 6))
-                .filter(F.col("cosine") >= threshold)
-                .select("id_a", "id_b", "cosine")
-            )
-        blk = F.pmod(F.xxhash64(F.col("_id")), F.lit(b_blocks)).cast("int")
-        side_a = (
-            base.withColumn("_blk", blk)
-            .withColumn("_q", F.explode(F.sequence(F.col("_blk"), F.lit(b_blocks - 1))))
-            .select(
-                F.col("_id").alias("_ida"), F.col("_v").alias("_va"),
-                F.col("_norm").alias("_na"),
-                F.col("_blk").alias("_p"), F.col("_q"),
-            )
-        )
-        side_b = (
-            base.withColumn("_blk", blk)
-            .withColumn("_p", F.explode(F.sequence(F.lit(0), F.col("_blk"))))
-            .select(
-                F.col("_id").alias("_idb"), F.col("_v").alias("_vb"),
-                F.col("_norm").alias("_nb"),
-                F.col("_p"), F.col("_blk").alias("_q"),
-            )
-        )
-        pairs = (
-            side_a.join(side_b, ["_p", "_q"])
-            # off-diagonal cells see each unordered pair once (any id
-            # order); diagonal cells see both orders — keep one.
-            .filter((F.col("_p") != F.col("_q")) | (F.col("_ida") < F.col("_idb")))
-            # x*y and the element-order sum are operand-commutative in
-            # IEEE754, so dot/norm arithmetic is bit-identical whichever
-            # side holds the smaller id — no operand canonicalization
-            # needed, only the id ordering.
-            .select(
-                F.least("_ida", "_idb").alias("id_a"),
-                F.greatest("_ida", "_idb").alias("id_b"),
-                "_va", "_vb", "_na", "_nb",
-            )
-        )
-    else:
-        from .similarity import signatures_arrow
-
-        band_bits = num_planes // bands
-        mask = (1 << band_bits) - 1
-        # one Arrow matmul pass per corpus scan — at 64 planes × 64 dims
-        # the literal-folded expression sketch costs more in plan
-        # analysis/codegen than the data pass (see similarity.py).
-        sig = signatures_arrow(base, "_v", "_id", num_planes=num_planes, dim=dim)
-        banded = _pin(
-            sig.select(
-                "_id",
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.shiftright(F.col("_sig"), i * band_bits)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bval"),
-                        )
-                        for i in range(bands)
-                    ])
-                ).alias("_b"),
-            ).select("_id", F.col("_b.band").alias("_band"), F.col("_b.bval").alias("_bval")),
-            persist,
-        )
-        cand = (
-            banded.select(F.col("_id").alias("id_a"), "_band", "_bval")
-            .join(banded.select(F.col("_id").alias("id_b"), "_band", "_bval"),
-                  ["_band", "_bval"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        pairs = (
-            cand.join(
-                base.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-                            F.col("_norm").alias("_na")),
-                "id_a",
-            )
-            .join(
-                base.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-                            F.col("_norm").alias("_nb")),
-                "id_b",
-            )
-        )
-
+    b_blocks = n_blocks or min(64, df.sparkSession.sparkContext.defaultParallelism * 2)
+    base = _spread(df, id_col).select(
+        F.col(id_col).alias("_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    )
     return (
-        # zero-norm guard: 0/0 = NaN, and Spark orders NaN above every
-        # double, so a NaN cosine would PASS the >= threshold filter
-        pairs.withColumn(
-            "cosine",
-            F.when(
-                (F.col("_na") > 0) & (F.col("_nb") > 0),
-                F.round(_pair_dot() / (F.col("_na") * F.col("_nb")), 6),
-            ),
-        )
+        _exact_pairs_arrow(base, b_blocks, threshold)
+        .withColumn("cosine", F.round(F.col("_raw"), 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

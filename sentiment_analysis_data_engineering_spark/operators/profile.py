@@ -17,13 +17,13 @@ min/max/count metrics are exact values, never summation-ordered, so
 the string forms are bit-stable; ``mean``/``avg_len`` carry the usual
 round-to-6dp cross-engine convention.
 
-Physical design — why exact mode is NOT one agg: Spark rewrites
-``agg(count_distinct(a), count_distinct(b), …, min(s), …)`` into an
-Expand (rows replicated once per distinct group) feeding an aggregate
-whose buffer holds the min/max values; a string or timestamp min/max
-buffer disqualifies HashAggregate, so the whole expanded stream falls
-to SortAggregate — measured 6× slower than the two pieces run apart
-(2.3 s vs 0.4+0.6 s on sf0.1 orders). Exact mode therefore uses two
+Physical design — why exact distinct counts are NOT one agg: Spark
+rewrites ``agg(count_distinct(a), count_distinct(b), …, min(s), …)``
+into an Expand (rows replicated once per distinct group) feeding an
+aggregate whose buffer holds the min/max values; a string or
+timestamp min/max buffer disqualifies HashAggregate, so the whole
+expanded stream falls to SortAggregate — measured 6× slower than the two pieces run apart
+(2.3 s vs 0.4+0.6 s on sf0.1 orders). The profile therefore uses two
 column-pruned subtrees: base metrics as one plain global aggregate,
 and distinct counts via a (column, value) explode into two hash
 aggregates — map-side partial distinct, shuffle ∝ Σ column
@@ -47,12 +47,7 @@ def _fmt_double(c: Column) -> Column:
     return F.format_string("%.6f", c.cast("double"))
 
 
-def profile_table(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    *,
-    exact_distinct: bool = True,
-) -> DataFrame:
+def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Profile ``columns`` (default: all) of ``df`` — (col_name,
     metric, value string), plus a single ('_table', 'n_rows') row.
 
@@ -72,10 +67,8 @@ def profile_table(
     only where it is equality-faithful: simple scalars, with -0.0
     normalized to 0.0 so float distinctness matches count_distinct /
     DuckDB. Complex-typed columns (array/map/struct/binary) get
-    ``approx_count_distinct`` even in exact mode — their casts are not
-    injective. ``exact_distinct=False`` folds ``approx_count_distinct``
-    (HLL ±5%) into the base agg for every column: ONE scan total, no
-    second subtree — the 100 TB mode.
+    ``approx_count_distinct`` (HLL ±5%) in the base agg — their casts
+    are not injective.
     """
     dtypes = dict(df.dtypes)
     if columns is None:
@@ -92,8 +85,8 @@ def profile_table(
     # -0.0 to 0.0 — count_distinct and DuckDB both treat them as one
     # value; NaN casts to the single 'NaN' token). Complex types
     # (array/map/struct/binary) have non-injective casts, so their
-    # n_distinct always comes from approx_count_distinct in the base
-    # agg, exact_distinct or not — documented contract.
+    # n_distinct comes from approx_count_distinct in the base agg —
+    # documented contract.
     def _distinct_key(c: str, t: str) -> Column | None:
         if t in ("float", "double"):
             col = F.col(c)
@@ -117,7 +110,7 @@ def profile_table(
     for c in columns:
         t = dtypes[c]
         specs.append((c, "n_null", (n_rows - F.count(c)).cast("string")))
-        if not exact_distinct or _distinct_key(c, t) is None:
+        if _distinct_key(c, t) is None:
             specs.append(
                 (c, "n_distinct", F.approx_count_distinct(c).cast("string"))
             )
@@ -155,8 +148,6 @@ def profile_table(
             )
         ).alias("_r")
     ).select("_r.col_name", "_r.metric", "_r.value")
-    if not exact_distinct:
-        return base
     exact_cols = [
         (c, _distinct_key(c, dtypes[c]))
         for c in columns

@@ -164,7 +164,6 @@ def epoch_shuffle(
     epoch: int,
     n_shards: int,
     modulus: int = _SHUFFLE_MOD,
-    hash_ids: bool = False,
 ) -> DataFrame:
     """Deterministic global reshuffle of a training corpus for one
     epoch — shard assignment and intra-shard order as a PURE FUNCTION
@@ -189,44 +188,29 @@ def epoch_shuffle(
     different epoch yields an independent-looking permutation from the
     same scan.
 
-    Id domain: with ``hash_ids=False`` (default) ids MUST lie in
-    [0, modulus) so ``a·id`` stays within int64 (a < 2^31 ⇒ product
-    < 2^62) — ENFORCED per row with a codegen-stage ``raise_error``
-    guard, so an out-of-range or negative id fails the job loudly
-    instead of silently wrapping into a negative shard (plain ``%``
-    keeps the dividend's sign; the arithmetic here uses ``pmod`` so
-    every emitted position/shard is non-negative by construction).
-    Corpora with wider/negative/non-numeric ids pass
-    ``hash_ids=True``: ids map through ``xxhash64 & (modulus-1)``
-    first, which trades the bijection guarantee for a birthday-bound
-    collision rate (~n²/2^32 colliding PAIRS at the default modulus —
-    break position ties deterministically by ordering on
-    ``(shuffle_pos, id)``) and keeps everything in JVM integer
-    codegen. Exact 128-bit decimal lifting is the alternative when
-    even hashed ties are unacceptable.
+    Id domain: ids MUST be integers in [0, modulus) so ``a·id`` stays
+    within int64 (a < 2^31 ⇒ product < 2^62) — ENFORCED per row with a
+    codegen-stage ``raise_error`` guard, so an out-of-range or negative
+    id fails the job loudly instead of silently wrapping into a
+    negative shard (plain ``%`` keeps the dividend's sign; the
+    arithmetic here uses ``pmod`` so every emitted position/shard is
+    non-negative by construction). A corpus with wider, negative or
+    non-numeric ids renumbers them into that domain first.
 
     Adds ``shuffle_pos`` (long) and ``shard`` (int) columns.
     """
     if not 0 < n_shards <= modulus:
         raise ValueError(f"n_shards must be in (0, {modulus}]")
     a, b = epoch_shuffle_params(epoch, modulus)
-    if hash_ids:
-        # two's-complement AND with 2^k-1 == mod 2^k, non-negative even
-        # for negative hash values; works for any column type.
-        c = F.xxhash64(F.col(id_col)).bitwiseAND(F.lit(modulus - 1))
-    else:
-        raw = F.col(id_col).cast("long")
-        c = F.when((raw >= 0) & (raw < F.lit(modulus)), raw).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"epoch_shuffle: id outside [0, {modulus}) — "
-                        "pass hash_ids=True for wide or negative ids; got "
-                    ),
-                    F.col(id_col).cast("string"),
-                )
-            ).cast("long")
-        )
+    raw = F.col(id_col).cast("long")
+    c = F.when((raw >= 0) & (raw < F.lit(modulus)), raw).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"epoch_shuffle: ids must lie in [0, {modulus}); got "),
+                F.col(id_col).cast("string"),
+            )
+        ).cast("long")
+    )
     pos = F.pmod(c * F.lit(a) + F.lit(b), F.lit(modulus))
     return df.withColumn("shuffle_pos", pos).withColumn(
         "shard", F.pmod(F.col("shuffle_pos"), F.lit(n_shards)).cast("int")

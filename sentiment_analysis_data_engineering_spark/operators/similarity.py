@@ -1,34 +1,36 @@
 """Similarity search over an embedding column (array<float>).
 
-Extension layer (no reference counterpart). Two paths:
+Extension layer (no reference counterpart). The top-k operators:
 
 - ``cosine_topk``       brute-force exact top-k — the correctness
                         baseline; O(|Q|·|C|) via an equi-join-free
                         broadcast of the (small) query set, never a
                         shuffling cross join of the corpus.
 - ``lsh_cosine_topk``   random-hyperplane LSH (Charikar, STOC 2002):
-                        sign-bit sketches bucket the corpus; queries
-                        probe only their own bucket (+ optional
-                        multi-probe by band). The 100 TB path: the
-                        corpus shuffles once on bucket id, queries
-                        equi-join on it.
+                        sign-bit sketches split into bands; a query's
+                        candidates share at least one band with it.
+                        The 100 TB path: the corpus shuffles once on
+                        (band, band value), queries equi-join on it.
+- ``ivf_cosine_topk``   IVF-Flat: queries probe their nearest cells of
+                        a sampled coarse quantizer.
+- ``pq_cosine_topk`` /  product-quantized ADC scans, the IVF-PQ one
+  ``ivfpq_cosine_topk`` also over a persisted index.
 
-Hyperplanes are derived from a deterministic integer hash evaluated at
-plan-build time (literal arrays, constant-folded) — no RNG, so results
-are reproducible across runs, and the "model" ships as code.
+Each approximate operator re-ranks its candidates by exact cosine.
+Hyperplanes are derived from a deterministic integer hash
+(``_plane_component``) — no RNG, so results are reproducible across
+runs, and the "model" ships as code. MLlib's BucketedRandomProjectionLSH
+offers the same primitive for euclidean distance; this module keeps
+cosine semantics and deterministic planes.
 
-MLlib's BucketedRandomProjectionLSH offers the same primitive for
-euclidean distance; this module keeps cosine semantics and
-deterministic planes, staying in pure DataFrame expressions.
-
-The ``engine="arrow"`` sketches, the IVF cell tags and every PQ /
-IVF-PQ encode and query-table pass cross into Python through one
-adapter, `_map_vectors`: it owns the (id, double vector) select, the
-id type of the output schema, the empty-batch skip and the float64
-stacking, so each pass is only its numpy body. Those bodies share one
-copy each of the kernels (`_unit_rows`, `_sq_dists`, `_pq_codes`,
-`_adc_tables`). ``ivfpq_drift_audit`` keeps its own crossing because
-its input is the codes ⋈ corpus join, not an (id, vector) frame.
+The LSH sketches, the IVF cell tags and every PQ / IVF-PQ encode and
+query-table pass cross into Python through one adapter, `_map_vectors`:
+it owns the (id, double vector) select, the id type of the output
+schema, the empty-batch skip and the float64 stacking, so each pass is
+only its numpy body. Those bodies share one copy each of the kernels
+(`_unit_rows`, `_sq_dists`, `_pq_codes`, `_adc_tables`).
+``ivfpq_drift_audit`` keeps its own crossing because its input is the
+codes ⋈ corpus join, not an (id, vector) frame.
 """
 
 from __future__ import annotations
@@ -57,7 +59,6 @@ from .observe import checkpoint_with_metrics, write_with_metrics
 __all__ = [
     "cosine_topk",
     "lsh_cosine_topk",
-    "hyperplane_signature",
     "ivf_cosine_topk",
     "ivfpq_cosine_topk",
     "pq_cosine_topk",
@@ -172,9 +173,9 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact top-k cosine neighbours for each query vector.
+    """Exact top-k cosine neighbours for each query vector, the query
+    itself excluded.
 
     The query side is broadcast (it's the small side by construction),
     so the corpus is scanned exactly once with no shuffle; the only
@@ -188,12 +189,13 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv")
     ).withColumn("_cn", _norm(F.col("_cv")))
 
-    joined = c.crossJoin(F.broadcast(q))
-    if not include_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.withColumn(
-        "cosine",
-        _safe_cosine(_dot(F.col("_qv"), F.col("_cv")), F.col("_qn"), F.col("_cn")),
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            "cosine",
+            _safe_cosine(_dot(F.col("_qv"), F.col("_cv")), F.col("_qn"), F.col("_cn")),
+        )
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -207,39 +209,16 @@ def cosine_topk(
 
 def _plane_component(p: int, d: int) -> float:
     """Deterministic ±1 hyperplane component — a small multiplicative
-    hash (splitmix-style constants) evaluated in Python at PLAN BUILD
-    time, so the planes fold into literals instead of being recomputed
-    per row per element."""
+    hash (splitmix-style constants), so the planes need no RNG and no
+    stored model."""
     x = (p * 0x9E3779B97F4A7C15 + d * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
     x = ((x >> 31) ^ x) * 0x94D049BB133111EB & 0xFFFFFFFFFFFFFFFF
     return 1.0 if ((x >> 17) & 1) == 0 else -1.0
 
 
-def hyperplane_signature(
-    vec_col: str, *, num_planes: int = 16, dim: int = 64
-) -> Column:
-    """Sign-bit LSH sketch: bit p = [dot(v, h_p) >= 0], hyperplanes with
-    deterministic ±1 components baked in as array literals (constant-
-    folded by Catalyst). Packed into a long → the bucket id."""
-    v = _as_double(vec_col)
-    sig = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = F.array(
-            *[F.lit(_plane_component(p, d)) for d in range(dim)]
-        )
-        dot = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseXOR(F.shiftleft(bit, p))
-    return sig
-
-
 def _plane_matrix(num_planes: int, dim: int):
     """The deterministic ±1 hyperplanes as a (dim, num_planes) numpy
-    matrix — same ``_plane_component`` values the expression form bakes
-    into literals, just materialized once for BLAS."""
+    matrix of ``_plane_component`` values, materialized once for BLAS."""
     return np.array(
         [[_plane_component(p, d) for p in range(num_planes)] for d in range(dim)],
         dtype=np.float64,
@@ -255,18 +234,13 @@ def signatures_arrow(
     dim: int,
     vec_out: str | None = None,
 ) -> DataFrame:
-    """(id, [vec,] sig) in ONE Arrow pass — the constant-plan-size twin
-    of ``hyperplane_signature``.
+    """(id, [vec,] sig) in ONE Arrow pass: bit p of ``sig`` is
+    [dot(v, h_p) >= 0] for the ``_plane_component`` hyperplanes h_p.
 
-    The expression form bakes num_planes × dim literals into the plan;
-    fine at 12×64, but at 64×64 the tree alone costs more in analysis +
-    codegen than the data pass (see the block-grid engine note in
-    operators/dedup.py). Here the plane matrix lives in the closure
-    (task-serialized once), each Arrow batch computes all sign bits as
-    a single (rows × dim) @ (dim × planes) matmul, and bits pack into
-    the same long the expression form produces. Sign(dot) under float64
-    matmul vs the sequential fold differs only for |dot| ≲ 1e-13 —
-    never observed on the driver corpora (recall contracts verify).
+    The plane matrix lives in the closure (task-serialized once), so
+    the plan size stays constant in num_planes × dim; each Arrow batch
+    computes all sign bits as a single (rows × dim) @ (dim × planes)
+    matmul and packs them into one long, the bucket id.
 
     Narrow map, no shuffle; scales to any corpus size batch-by-batch.
     """
@@ -299,8 +273,7 @@ def _ivf_tag_arrow(
     """Cell-tag one side of the IVF join in a single Arrow pass: each
     batch scores all vectors against all centroids as one matmul.
     ``role="corpus"`` emits (neighbor_id, _cv, _cn, cell) with the
-    argmax cell (first index on exact ties, matching the expression
-    form's ``array_position``); ``role="assign"`` emits just
+    argmax cell (first index on exact ties); ``role="assign"`` emits just
     (neighbor_id, cell) — the lean variant for callers that only need
     the partition (only the id crosses back over the Arrow boundary,
     guide §4: pass only the columns the function needs);
@@ -354,7 +327,6 @@ def ivf_cosine_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    engine: str = "arrow",
 ) -> DataFrame:
     """IVF-Flat approximate top-k: a coarse quantizer of ``n_centroids``
     cells partitions the corpus; each query probes only its ``n_probe``
@@ -366,22 +338,15 @@ def ivf_cosine_topk(
     to fitting MLlib KMeans (which is the drop-in refinement at scale:
     ``KMeans(k=n_centroids).fit`` then ``predict`` as the cell
     assignment; sampled centroids keep this module deterministic and
-    dependency-free). Centroids are L2-normalized driver-side and baked
-    into the plan as literals — cell assignment is a JVM-side argmax,
-    no UDF, no shuffle beyond the final (cell equi-join + top-k).
+    dependency-free). Centroids are L2-normalized driver-side and ride
+    the task closure of one ``mapInPandas`` matmul per side
+    (``_ivf_tag_arrow``), so the plan size stays constant in
+    n_centroids × dim — no UDF per row, no shuffle beyond the final
+    (cell equi-join + top-k).
 
     Scale shape: corpus scans once to tag cells (narrow), shuffles once
     on cell id; queries broadcast. Recall tunes with n_probe/n_centroids.
-
-    ``engine="arrow"`` (default) tags cells via one ``mapInPandas``
-    matmul per side — plan size stays constant in n_centroids × dim,
-    where the expression form bakes every centroid component into
-    literals (2 × 16 × 64 here) and pays for it in analysis + codegen
-    before the first row moves. ``engine="sql"`` keeps the pure-JVM
-    expression path.
     """
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"unknown engine {engine!r}")
     # --- model build: deterministic centroid sample (tiny action) ----
     sample = (
         corpus.select(id_col, vec_col)
@@ -395,59 +360,12 @@ def ivf_cosine_topk(
         n = sum(x * x for x in v) ** 0.5 or 1.0
         cents.append([x / n for x in v])
 
-    if engine == "arrow":
-        c = _ivf_tag_arrow(
-            _spread(corpus, id_col), vec_col, id_col, cents, role="corpus"
-        )
-        qcells = _ivf_tag_arrow(
-            queries, vec_col, id_col, cents, role="query", n_probe=n_probe
-        )
-    else:
-        def cell_scores(v: Column) -> Column:
-            return F.array(*[
-                F.aggregate(
-                    F.zip_with(v, F.array(*[F.lit(c) for c in cent]),
-                               lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x,
-                )
-                for cent in cents
-            ])
-
-        # corpus: argmax cell (1-based array_position → 0-based cell id).
-        # The L2 norm is computed HERE, once per corpus vector — the
-        # re-rank join below references each vector once per candidate
-        # pair, and an interpreted 64-element fold per pair is pure waste.
-        c = _spread(corpus, id_col).select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv")
-        )
-        c = c.withColumn("_scores", cell_scores(F.col("_cv"))).select(
-            "neighbor_id",
-            "_cv",
-            _norm(F.col("_cv")).alias("_cn"),
-            (F.array_position("_scores", F.array_max("_scores")) - 1).alias("cell"),
-        )
-
-        # queries: top-n_probe cells via sort of (score, idx) structs
-        q = queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
-        ).withColumn("_qn", _norm(F.col("_qv")))
-        ranked = F.slice(
-            F.reverse(
-                F.array_sort(
-                    F.transform(
-                        cell_scores(F.col("_qv")),
-                        lambda s, i: F.struct(s.alias("s"), i.alias("i")),
-                    )
-                )
-            ),
-            1,
-            n_probe,
-        )
-        qcells = (
-            q.withColumn("_probe", F.explode(ranked))
-            .withColumn("cell", F.col("_probe.i").cast("long"))
-            .drop("_probe")
-        )
+    c = _ivf_tag_arrow(
+        _spread(corpus, id_col), vec_col, id_col, cents, role="corpus"
+    )
+    qcells = _ivf_tag_arrow(
+        queries, vec_col, id_col, cents, role="query", n_probe=n_probe
+    )
 
     scored = (
         c.join(F.broadcast(qcells), "cell")
@@ -477,7 +395,6 @@ def lsh_cosine_topk(
     num_planes: int = 12,
     dim: int = 64,
     bands: int = 6,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: candidates must share at least one LSH band
     with the query (multi-probe via banding, like MinHash-LSH), then
@@ -487,27 +404,17 @@ def lsh_cosine_topk(
     (band, band_value); queries do the same; candidate generation is an
     equi-join on the band key. Recall tunes with num_planes/bands.
 
-    ``engine="arrow"`` (default) sketches each side via one
-    ``signatures_arrow`` matmul pass (constant plan size);
-    ``engine="sql"`` keeps the literal-folded expression sketch. Either
-    way the band explode carries only (id, band, bval) — vectors rejoin
-    later, once per survivor, not once per band row.
+    Each side is sketched by one ``signatures_arrow`` matmul pass
+    (constant plan size). The band explode carries only (id, band,
+    bval) — vectors rejoin later, once per survivor, not once per band
+    row.
     """
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"unknown engine {engine!r}")
     band_bits = num_planes // bands
 
     def with_bands(df: DataFrame, role: str) -> DataFrame:
-        if engine == "arrow":
-            base = signatures_arrow(
-                df, vec_col, id_col, num_planes=num_planes, dim=dim
-            ).withColumnRenamed("_id", f"{role}_id")
-        else:
-            base = df.select(
-                F.col(id_col).alias(f"{role}_id"),
-                hyperplane_signature(vec_col, num_planes=num_planes, dim=dim)
-                .alias("_sig"),
-            )
+        base = signatures_arrow(
+            df, vec_col, id_col, num_planes=num_planes, dim=dim
+        ).withColumnRenamed("_id", f"{role}_id")
         mask = (1 << band_bits) - 1
         return base.select(
             f"{role}_id",
@@ -742,7 +649,7 @@ def pq_cosine_topk(
     # m·n_codes·sub doubles into the plan (512 aggregate expressions
     # here) and pays seconds of analysis/codegen before any row moves —
     # measured 21 s → 3 s for the whole query by keeping the plan
-    # constant-size, same trade ``_ivf_tag_arrow`` documents.
+    # constant-size, as ``_ivf_tag_arrow`` does for the cell tags.
     def qtab_gen(pdf, V):
         V = _unit_rows(V)
         return {

@@ -50,24 +50,14 @@ def _salt_col(df: DataFrame, buckets: int) -> Column:
     return F.pmod(F.xxhash64(*parts), F.lit(buckets))
 
 
-#: join types where replicating the right side once per salt value is
-#: semantics-preserving: the replicated side never emits unmatched rows.
-_SAFE_SALTED_HOW = {
-    "inner", "left", "left_outer", "leftouter",
-    "left_semi", "leftsemi", "semi",
-    "left_anti", "leftanti", "anti",
-}
-
-
 def salted_join(
     skewed: DataFrame,
     other: DataFrame,
     on: Sequence[str],
     *,
     buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where ``skewed``'s hot keys would overload single
+    """Inner equi-join where ``skewed``'s hot keys would overload single
     tasks: the skewed side gets a per-row salt appended to the join
     key; ``other`` is replicated once per salt value (explode over
     ``sequence(0, buckets-1)``), so each (key, salt) pair is its own
@@ -78,21 +68,15 @@ def salted_join(
     side. For broadcast-sized ``other``, a plain broadcast join already
     has no skew problem; for two huge sides, prefer AQE skew-join.
 
-    Only inner/left/left_semi/left_anti are accepted: with ``right`` or
-    ``full``, an unmatched right row would surface once per salt value
-    (``buckets`` duplicates) — flip the sides or use AQE instead.
+    Inner only: under an outer join, an unmatched row of ``other``
+    would surface once per salt value (``buckets`` duplicates).
     """
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in _SAFE_SALTED_HOW}:
-        raise ValueError(
-            f"salted_join(how={how!r}) would duplicate unmatched rows of the "
-            "replicated side; supported: inner, left, left_semi, left_anti"
-        )
     on = list(on)
     left = skewed.withColumn("_salt", _salt_col(skewed, buckets))
     right = other.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
     )
-    out = left.join(right, on=on + ["_salt"], how=how)
+    out = left.join(right, on=on + ["_salt"])
     return out.drop("_salt")
 
 

@@ -480,9 +480,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ 0.4) via the triangle
-    block-grid exact join (Arrow/BLAS per-cell matmul engine). At this
-    low threshold no LSH banding holds recall, so exact is the honest
-    plan; hyperplane-LSH + refine kicks in for threshold ≥ 0.8."""
+    block-grid exact join (one Arrow/BLAS matmul per cell). At this low
+    threshold no LSH banding holds recall, so exact is the honest
+    plan."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     return dd.embedding_cosine_pairs(
         embeddings, "embedding", "vec_id", threshold=0.4

@@ -92,7 +92,7 @@ def test_embedding_cosine_pairs(spark):
     pairs = {
         (r.id_a, r.id_b): r.cosine
         for r in dd.embedding_cosine_pairs(
-            df, "embedding", "vec_id", threshold=0.95, dim=4
+            df, "embedding", "vec_id", threshold=0.95
         ).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
@@ -101,7 +101,7 @@ def test_embedding_cosine_pairs(spark):
 
 def _brute_force_pairs(df, threshold):
     """The replaced O(n²) theta-join form — kept here as the test-time
-    verification baseline for both scale-safe methods."""
+    verification baseline for the block-grid join."""
     from pyspark.sql import functions as F
 
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -141,7 +141,7 @@ def test_embedding_cosine_exact_matches_brute_force(spark):
     )
     expect = sorted(map(tuple, _brute_force_pairs(df, 0.3).collect()))
     got = sorted(map(tuple, dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3, method="exact", n_blocks=4
+        df, "embedding", "vec_id", threshold=0.3, n_blocks=4
     ).collect()))
     assert got == expect and len(got) > 0
 
@@ -151,24 +151,11 @@ def test_embedding_cosine_exact_plan_has_no_nested_loop(spark):
         _clustered_vectors(n=20), "vec_id long, embedding array<float>"
     )
     out = dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3, method="exact", n_blocks=4
+        df, "embedding", "vec_id", threshold=0.3, n_blocks=4
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_embedding_cosine_lsh_matches_brute_force_at_high_threshold(spark):
-    # tight clusters (cos ≈ 1 within, ~random across): the LSH path must
-    # recover exactly the brute-force pair set at a near-dup threshold.
-    df = spark.createDataFrame(
-        _clustered_vectors(dim=16), "vec_id long, embedding array<float>"
-    )
-    expect = sorted(map(tuple, _brute_force_pairs(df, 0.95).collect()))
-    got = sorted(map(tuple, dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.95, method="lsh", dim=16
-    ).collect()))
-    assert got == expect and len(got) > 0
 
 
 def test_word_ngrams_short_doc(spark):
@@ -327,25 +314,51 @@ def test_contamination_screen(spark):
 def test_embedding_cosine_arrow_keeps_round_up_boundary_pairs(spark):
     import math
 
-    from pyspark.sql import functions as F
-
-    # raw cosine 0.4 - 3e-7 rounds UP to 0.400000 at 6 dp, so the SQL
-    # path keeps the pair at threshold 0.4; the arrow engine's raw
-    # pre-filter must not drop it (regression: slack was 1e-9 < half
-    # an ulp at 6 dp)
+    # raw cosine 0.4 - 3e-7 rounds UP to 0.400000 at 6 dp, so the pair
+    # is kept at threshold 0.4; the raw pre-filter in the Arrow cell
+    # scorer must not drop it (regression: slack was 1e-9 < half an ulp
+    # at 6 dp)
     c = 0.4 - 3e-7
     rows = [(0, [1.0, 0.0]), (1, [c, math.sqrt(1 - c * c)])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {}
-    for engine in ("arrow", "sql"):
-        out[engine] = sorted(
-            (r.id_a, r.id_b, r.cosine)
-            for r in dd.embedding_cosine_pairs(
-                df, "embedding", "vec_id", threshold=0.4, method="exact",
-                engine=engine, persist=False,
-            ).collect()
-        )
-    assert out["arrow"] == out["sql"] == [(0, 1, 0.4)]
+    out = sorted(
+        (r.id_a, r.id_b, r.cosine)
+        for r in dd.embedding_cosine_pairs(
+            df, "embedding", "vec_id", threshold=0.4
+        ).collect()
+    )
+    assert out == [(0, 1, 0.4)]
+
+
+def test_embedding_cosine_zero_vector_pairs_with_nothing(spark):
+    import math
+    import warnings
+
+    import numpy as np
+
+    # a zero vector has no cosine with anything (0/0): it must neither
+    # surface as a NULL/NaN row nor warn inside the cell scorer, at any
+    # threshold — including one a 0 cosine would pass
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.999, 0.04, 0.0]),
+        (2, [0.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for threshold in (0.95, -1.0):
+        got = dd.embedding_cosine_pairs(
+            df, "embedding", "vec_id", threshold=threshold, n_blocks=1
+        ).collect()
+        assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
+        assert all(r.cosine is not None and not math.isnan(r.cosine) for r in got)
+
+    # the per-cell kernel masks the zero norm instead of dividing 0/0
+    V = np.array([r[1] for r in rows])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        C, live = dd._cell_cosines(V, V)
+    assert not live[2].any() and not live[:, 2].any() and live[:2, :2].all()
+    assert not np.isnan(C).any() and C[0, 1] > 0.99
 
 
 def test_dedup_survivor_selection_invariants(spark):
@@ -536,64 +549,6 @@ def test_epoch_shuffle_out_of_range_id_fails_loudly(spark):
     ok = spark.createDataFrame([(0,), ((1 << 31) - 1,)], "doc_id long")
     rows = sp.epoch_shuffle(ok, "doc_id", epoch=0, n_shards=8).collect()
     assert all(0 <= r.shuffle_pos < (1 << 31) and 0 <= r.shard < 8 for r in rows)
-
-
-def test_epoch_shuffle_hash_ids_wide_domain(spark):
-    from pyspark.sql import functions as F
-    from sentiment_analysis_data_engineering_spark.operators import sampling as sp
-    from sentiment_analysis_data_engineering_spark.operators.sampling import (
-        epoch_shuffle_params,
-    )
-
-    # wide + negative ids: the documented xxhash64 fallback, now real
-    wide = spark.range(0, 2000).select(
-        ((F.col("id") * F.lit(1 << 33)) - F.lit(1 << 40)).alias("doc_id")
-    )
-    out = sp.epoch_shuffle(wide, "doc_id", epoch=3, n_shards=8, hash_ids=True)
-    agg = out.agg(
-        F.countDistinct("shuffle_pos").alias("npos"),
-        F.count("*").alias("n"),
-        F.min("shuffle_pos").alias("pmin"),
-        F.max("shuffle_pos").alias("pmax"),
-        F.min("shard").alias("smin"),
-        F.max("shard").alias("smax"),
-    ).first()
-    # domain law: positions/shards non-negative and in range even for
-    # negative input ids (pmod + mask, never sign-carrying %)
-    assert 0 <= agg.pmin and agg.pmax < (1 << 31)
-    assert agg.smin >= 0 and agg.smax <= 7
-    # bijectivity law on this synthetic frame: no birthday collision
-    # among 2000 hashed ids (deterministic, so this holds exactly)
-    assert agg.npos == agg.n == 2000
-    # determinism + partition independence
-    first = {r.doc_id: (r.shuffle_pos, r.shard) for r in out.collect()}
-    again = {
-        r.doc_id: (r.shuffle_pos, r.shard)
-        for r in sp.epoch_shuffle(
-            wide.repartition(17), "doc_id", epoch=3, n_shards=8, hash_ids=True
-        ).collect()
-    }
-    assert first == again
-    # epochs permute differently over the same hashed domain
-    e4 = {
-        r.doc_id: r.shuffle_pos
-        for r in sp.epoch_shuffle(
-            wide, "doc_id", epoch=4, n_shards=8, hash_ids=True
-        ).collect()
-    }
-    assert e4 != {k: v[0] for k, v in first.items()}
-    # bit-exact law: hashed path == affine map applied to the masked
-    # xxhash64 value Spark itself computes
-    a, b = epoch_shuffle_params(3)
-    masked = {
-        r.doc_id: r.h
-        for r in wide.select(
-            "doc_id",
-            F.xxhash64("doc_id").bitwiseAND(F.lit((1 << 31) - 1)).alias("h"),
-        ).collect()
-    }
-    for did, (pos, _) in first.items():
-        assert pos == (a * masked[did] + b) % (1 << 31)
 
 
 def test_cluster_aware_split_no_straddle_and_rehoming(spark):

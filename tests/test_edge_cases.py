@@ -84,15 +84,6 @@ def test_tfidf_ignores_empty_docs(weird):
 # --------------------------------------------------------------------------
 
 
-def test_salted_join_rejects_outer_how(spark):
-    from sentiment_analysis_data_engineering_spark.operators.skew import salted_join
-
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(df, df, ["k"], how=how)
-
-
 def test_salt_spreads_identical_duplicate_rows(spark):
     from sentiment_analysis_data_engineering_spark.operators.skew import _salt_col
 

@@ -300,6 +300,21 @@ def test_bench_measure_records_jobs_and_isolates_failures(spark, sf_dir):
         measure(spark, qs, ["no_such_query"], sf_dir, warm_dir=sf_dir, runs=1)
 
 
+def _source_trees():
+    """(package dir, package modules, {path: AST}) over the package
+    modules plus every non-test caller: ``bench.py``,
+    ``__spark_entry__.py`` and ``tools/``."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    pkg = root / "sentiment_analysis_data_engineering_spark"
+    modules = [p for p in sorted(pkg.rglob("*.py")) if p.name != "__init__.py"]
+    callers = [root / "bench.py", root / "__spark_entry__.py",
+               *sorted((root / "tools").glob("*.py"))]
+    return pkg, modules, {p: ast.parse(p.read_text()) for p in modules + callers}
+
+
 #: Exported names that no registered query, DAG task, tool or other
 #: package code references, each kept for the reason in its comment.
 _UNREACHED_EXPORTS = {
@@ -333,10 +348,8 @@ def test_every_export_is_reached_outside_tests():
     ``_UNREACHED_EXPORTS`` with its reason. A name only tests reach is
     code no query, DAG task or tool runs: delete it with its tests."""
     import ast
-    from pathlib import Path
 
-    root = Path(entrymod.__file__).resolve().parent
-    pkg = root / "sentiment_analysis_data_engineering_spark"
+    pkg, modules, trees = _source_trees()
 
     def used(node) -> set[str]:
         out = set()
@@ -349,10 +362,6 @@ def test_every_export_is_reached_outside_tests():
                 out.update(a.name for a in n.names)
         return out
 
-    modules = [p for p in sorted(pkg.rglob("*.py")) if p.name != "__init__.py"]
-    callers = [root / "bench.py", root / "__spark_entry__.py",
-               *sorted((root / "tools").glob("*.py"))]
-    trees = {p: ast.parse(p.read_text()) for p in modules + callers}
     uses = {p: used(t) for p, t in trees.items()}
 
     unreached = {}
@@ -377,6 +386,108 @@ def test_every_export_is_reached_outside_tests():
                 unreached.setdefault(key, set()).add(name)
 
     assert unreached == _UNREACHED_EXPORTS
+
+
+#: Option values of public functions that no registered query, DAG
+#: task, tool or other package code passes, each kept for the reason
+#: in its comment: (module.function, parameter) -> untaken values.
+_UNTAKEN_OPTIONS = {
+    # SURVEY §2.1 S7–S9: the reference's dataset/table DDL verbs
+    ("catalog.drop_database", "cascade"): {True},
+    # test fixture: the quarterly-indicator payloads
+    ("fixtures.indicator_json", "monthly"): {False},
+}
+
+
+def test_every_option_value_is_taken_outside_tests():
+    """Every option value of a public package function is passed by
+    some caller outside ``tests/`` (package code, ``bench.py``,
+    ``tools/``, ``__spark_entry__.py``) — or sits on
+    ``_UNTAKEN_OPTIONS`` with its reason. Option values are the
+    non-default value of a bool-defaulted parameter and each literal of
+    a ``param in / not in (<literals>)`` check in the body. A call that
+    omits the parameter takes its default; a non-constant argument (or
+    ``*``/``**`` unpacking) takes every value; calls match by function
+    name. A value only tests pass keeps a second code path alive that
+    no query, DAG task or tool runs: delete it with its branch."""
+    import ast
+    import itertools
+
+    pkg, modules, trees = _source_trees()
+    every = object()
+
+    def defaults(fn) -> dict:
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        out = dict(zip([x.arg for x in pos[len(pos) - len(a.defaults):]], a.defaults))
+        out.update({x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+        return out
+
+    def options(fn) -> dict:
+        a = fn.args
+        params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        out = {}
+        for arg, d in defaults(fn).items():
+            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                out.setdefault(arg, set()).add(not d.value)
+        for n in ast.walk(fn):
+            if (isinstance(n, ast.Compare) and isinstance(n.left, ast.Name)
+                    and n.left.id in params and len(n.ops) == 1
+                    and isinstance(n.ops[0], (ast.In, ast.NotIn))
+                    and isinstance(n.comparators[0], (ast.Tuple, ast.List, ast.Set))
+                    and all(isinstance(e, ast.Constant) for e in n.comparators[0].elts)):
+                out.setdefault(n.left.id, set()).update(
+                    e.value for e in n.comparators[0].elts)
+        return out
+
+    # function name -> [(module.function, positional names, defaults, options)]
+    public = {}
+    for mod in modules:
+        key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
+        for fn in trees[mod].body:
+            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+                opts = options(fn)
+                if opts:
+                    a = fn.args
+                    public.setdefault(fn.name, []).append((
+                        f"{key}.{fn.name}",
+                        [x.arg for x in a.posonlyargs + a.args],
+                        defaults(fn),
+                        opts,
+                    ))
+
+    taken = {}
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            args = list(itertools.takewhile(
+                lambda x: not isinstance(x, ast.Starred), call.args))
+            unpacks = len(args) < len(call.args) or any(
+                k.arg is None for k in call.keywords)
+            for key, pos, dflt, opts in public.get(name, []):
+                passed = dict(zip(pos, args))
+                passed.update({k.arg: k.value for k in call.keywords if k.arg})
+                for param in opts:
+                    got = taken.setdefault((key, param), set())
+                    if param in passed:
+                        x = passed[param]
+                        got.add(x.value if isinstance(x, ast.Constant) else every)
+                    elif unpacks:
+                        got.add(every)
+                    elif isinstance(dflt.get(param), ast.Constant):
+                        got.add(dflt[param].value)
+
+    untaken = {}
+    for defs in public.values():
+        for key, _, _, opts in defs:
+            for param, values in opts.items():
+                got = taken.get((key, param), set())
+                if every not in got and values - got:
+                    untaken[(key, param)] = values - got
+
+    assert untaken == _UNTAKEN_OPTIONS
 
 
 def test_driver_rows_become_frames_only_through_local_frame():

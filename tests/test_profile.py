@@ -59,31 +59,15 @@ def test_profile_column_subset_and_unknown(spark):
         profile_table(df, ["nope"])
 
 
-def test_profile_approx_distinct_mode(spark):
-    df = spark.createDataFrame([(i % 10,) for i in range(100)], "k long")
-    got = _as_dict(profile_table(df, exact_distinct=False))
-    # HLL at default rsd is exact for tiny cardinalities
-    assert got[("k", "n_distinct")] == "10"
-
-
 def test_profile_scan_counts_and_no_sort_agg(spark):
     df = spark.range(100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS x")
-    # exact mode: exactly TWO column-pruned subtrees (base metrics +
-    # the distinct pair path) and NO SortAggregate/Expand anywhere —
-    # the failure mode this layout exists to avoid
+    # exactly TWO column-pruned subtrees (base metrics + the distinct
+    # pair path) and NO SortAggregate/Expand anywhere — the failure
+    # mode this layout exists to avoid
     plan = profile_table(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Range (0, 100") == 2
     assert "SortAggregate" not in plan
     assert "Expand" not in plan
-    # approx mode folds distincts into the base agg: ONE scan total
-    plan1 = (
-        profile_table(df, exact_distinct=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan1.count("Range (0, 100") == 1
-    assert "Expand" not in plan1
 
 
 def test_profile_negative_zero_and_complex_types(spark):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,14 +92,6 @@ def test_ivf_deterministic(spark, sf_dir):
     assert a == b and a
 
 
-def test_hyperplane_signature_deterministic(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(20)
-    sig = sim.hyperplane_signature("embedding", num_planes=8, dim=64)
-    a = [r.s for r in emb.select(sig.alias("s")).collect()]
-    b = [r.s for r in emb.select(sig.alias("s")).collect()]
-    assert a == b
-
-
 def test_kmeans_clusters_assigns_every_vector(spark, sf_dir):
     from pyspark.sql import functions as F
     from sentiment_analysis_data_engineering_spark.operators import similarity as sim
@@ -148,32 +141,108 @@ def test_semantic_dedup_fit_sample_scales_with_k(spark, sf_dir):
     assert out.count() == emb.count()
 
 
+def _collect_vectors(df):
+    rows = df.select("vec_id", "embedding").orderBy("vec_id").collect()
+    return [r.vec_id for r in rows], np.array([r.embedding for r in rows], dtype=np.float64)
+
+
+def _ref_signatures(V, num_planes):
+    """Bit p of each row's long is [v·h_p >= 0], with h_p read straight
+    from ``_plane_component``."""
+    H = np.array(
+        [[sim._plane_component(p, d) for d in range(V.shape[1])] for p in range(num_planes)]
+    )
+    return [
+        sum(1 << p for p, bit in enumerate(row) if bit) for row in (V @ H.T) >= 0.0
+    ]
+
+
+def _ref_cosine(a, b):
+    """The engine's cosine arithmetic: element-order folds, NULL when a
+    norm is 0, rounded HALF_UP at 6 dp."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    dot = na = nb = 0.0
+    for x, y in zip(a.tolist(), b.tolist()):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    na, nb = na ** 0.5, nb ** 0.5
+    if not (na > 0 and nb > 0):
+        return None
+    return float(Decimal(repr(dot / (na * nb))).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _ref_topk(ids, V, qn, candidates, k):
+    """{(query, rank): (neighbour, cosine)}: exact re-rank of each
+    query's candidate set, cosine desc then neighbour id, NULLs last."""
+    out = {}
+    for qi in range(qn):
+        scored = [
+            (_ref_cosine(V[qi], V[ci]), ids[ci])
+            for ci in candidates(qi) if ids[ci] != ids[qi]
+        ]
+        scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+        for r, (cos, nid) in enumerate(scored[:k], 1):
+            out[(ids[qi], r)] = (nid, cos)
+    return out
+
+
 def test_signatures_arrow_matches_expression_form(spark):
-    # the arrow matmul pass must produce the SAME packed long as the
-    # literal-folded expression sketch, bit for bit, on real data
+    # the arrow matmul pass must produce the sign-bit definition's
+    # packed long bit for bit, on real data
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    arrow = sim.signatures_arrow(
-        emb, "embedding", "vec_id", num_planes=12, dim=64
-    )
-    sql = emb.select(
-        F.col("vec_id").alias("_id"),
-        sim.hyperplane_signature("embedding", num_planes=12, dim=64).alias("_sig"),
-    )
-    assert arrow.exceptAll(sql).isEmpty() and sql.exceptAll(arrow).isEmpty()
+    ids, V = _collect_vectors(emb)
+    want = dict(zip(ids, _ref_signatures(V, 12)))
+    got = {
+        r._id: r._sig
+        for r in sim.signatures_arrow(
+            emb, "embedding", "vec_id", num_planes=12, dim=64
+        ).collect()
+    }
+    assert got == want and len(set(want.values())) > 1
 
 
 def test_lsh_ivf_engines_agree(spark):
+    # LSH band candidates and IVF cell probes, each re-ranked exactly,
+    # against a numpy reference of the same candidate rule
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    for fn, kw in (
-        (sim.lsh_cosine_topk, dict(k=3, num_planes=12, bands=6, dim=64)),
-        (sim.ivf_cosine_topk, dict(k=3, n_centroids=8, n_probe=3)),
+    ids, V = _collect_vectors(emb)
+    qn = sum(i < 5 for i in ids)
+    assert ids[:qn] == list(range(qn))
+
+    def lsh(num_planes, bands):
+        bits = num_planes // bands
+        keys = [
+            {(b, (s >> (b * bits)) & ((1 << bits) - 1)) for b in range(bands)}
+            for s in _ref_signatures(V, num_planes)
+        ]
+        return lambda qi: [ci for ci in range(len(ids)) if keys[qi] & keys[ci]]
+
+    def ivf(n_centroids, n_probe):
+        cents = np.array([v / (sum(x * x for x in v.tolist()) ** 0.5 or 1.0)
+                          for v in V[:n_centroids]])
+        S = V @ cents.T
+        cell = S.argmax(axis=1)
+        probes = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
+        return lambda qi: np.flatnonzero(np.isin(cell, probes[qi])).tolist()
+
+    for fn, kw, candidates in (
+        (sim.lsh_cosine_topk, dict(k=3, num_planes=12, bands=6, dim=64), lsh(12, 6)),
+        (sim.ivf_cosine_topk, dict(k=3, n_centroids=8, n_probe=3), ivf(8, 3)),
         # more probes than cells: each query probes every cell
-        (sim.ivf_cosine_topk, dict(k=3, n_centroids=2, n_probe=4)),
+        (sim.ivf_cosine_topk, dict(k=3, n_centroids=2, n_probe=4), ivf(2, 4)),
     ):
-        a = fn(q, emb, vec_col="embedding", id_col="vec_id", engine="arrow", **kw)
-        s = fn(q, emb, vec_col="embedding", id_col="vec_id", engine="sql", **kw)
-        assert a.exceptAll(s).isEmpty() and s.exceptAll(a).isEmpty(), fn.__name__
+        want = _ref_topk(ids, V, qn, candidates, kw["k"])
+        got = {
+            (r.query_id, r.rank): (r.neighbor_id, r.cosine)
+            for r in fn(q, emb, vec_col="embedding", id_col="vec_id", **kw).collect()
+        }
+        assert {key: n for key, (n, _) in got.items()} == {
+            key: n for key, (n, _) in want.items()
+        }, fn.__name__
+        assert all(abs(got[key][1] - c) <= 1e-6 for key, (_, c) in want.items()), fn.__name__
 
 
 def test_quantize_int8_stats_bounds_and_zero_vector(spark):
