@@ -30,10 +30,6 @@ import traceback
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
-# Python WORKERS must import the package too (pandas UDF closures are
-# pickled by reference): pin PYTHONPATH so the run does not depend on
-# the launch directory.
-os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # n runs per query, report the MIN: sub-second queries jitter up to

@@ -13,17 +13,28 @@ entry point (tests, bench, driver contract) runs with the same stance:
   DuckDB oracle is UTC-naive. Pinning UTC makes them agree.
 - **Arrow on** — every pandas_udf / mapInPandas / toPandas crossing
   is Arrow-batched, never per-row pickled.
+- **Python workers import pyspark from its installed directory** —
+  ``worker_daemon`` drops Spark's archives from the workers' path,
+  so a task's start-up re-reads no zip directory; the package's parent
+  directory rides the workers' ``PYTHONPATH``, so workers import the
+  package (and the daemon) from any working directory. On a cluster
+  the package must be installed on the executors.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The directory that holds the package: Spark appends it to the
+# workers' PYTHONPATH after its own entries.
+_PACKAGE_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def get_spark(
@@ -67,6 +78,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers: import the package from any working directory,
+        # and pyspark from its installed directory (worker_daemon.py).
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     if extra_conf:
         for k, v in extra_conf.items():

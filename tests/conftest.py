@@ -6,13 +6,14 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from sentiment_analysis_data_engineering_spark.session import get_spark  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
-TMP = Path("/root/repo/.tmp/tests")
+TMP = ROOT / ".tmp" / "tests"
 
 
 @pytest.fixture(scope="session")

@@ -33,8 +33,10 @@ import pandas as pd
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 # Python WORKERS must import the package too (pandas UDF closures are
-# pickled by reference): pin PYTHONPATH so the sweep does not depend on
-# the launch directory.
+# pickled by reference). session.get_spark puts it on their PYTHONPATH,
+# but --gate builds a vanilla SparkSession that never sees get_spark's
+# confs: pin PYTHONPATH so the gate does not depend on the launch
+# directory.
 os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 TABLES = [

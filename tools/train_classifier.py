@@ -30,7 +30,6 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-os.environ.setdefault("PYTHONPATH", ROOT)
 
 OUT = os.path.join(
     ROOT,
