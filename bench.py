@@ -6,8 +6,9 @@
 Prints the full per-query JSON line, then a compact summary line LAST:
     {"metric": "...", "value": N, "unit": "sec", "n_queries": N,
      "queries": {...}, "sf": ...}
-and writes the complete record (timings, Spark jobs per query, failed
-queries) to $SPARK_GRAFT_BENCH_PQ_OUT (default bench_per_query.json).
+and writes the complete record (timings, Spark jobs and codegen
+compiles per query, failed queries) to $SPARK_GRAFT_BENCH_PQ_OUT
+(default bench_per_query.json).
 
 Each query executes via the noop sink (full plan execution, no driver
 collect), after a warm-up pass that triggers JVM/codegen warm-up on the
@@ -33,7 +34,7 @@ sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # n runs per query, report the MIN: sub-second queries jitter up to
-# ±40-50% run-to-run on a busy local JVM (GC, codegen cache churn),
+# ±40-50% run-to-run on a busy local JVM (GC, JIT, other tenants of the host),
 # and min-of-n is the standard way to read steady-state throughput
 # through that noise so real regressions stand out.
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
@@ -220,24 +221,29 @@ def measure(spark, qs, names, sf_dir, *, warm_dir, runs) -> dict:
     all names at ``warm_dir``.
 
     Returns ``{"queries": {name: sec}, "jobs": {name: n},
-    "failed": {name: error}}``. ``jobs`` is the fewest Spark jobs one
-    timed run scheduled, read outside the timed region. A query that
+    "compiles": {name: n}, "failed": {name: error}}``. ``jobs`` is the
+    fewest Spark jobs one timed run scheduled and ``compiles`` the
+    fewest generated classes one timed run compiled, both read outside
+    the timed region. A query that
     raises in a timed run is reported on stderr, recorded in
     ``failed`` and skipped; the run goes on. An unknown name raises
     ``KeyError`` before any work starts.
     """
     from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
-    from sentiment_analysis_data_engineering_spark.operators.observe import spark_job_count
+    from sentiment_analysis_data_engineering_spark.operators.observe import (
+        codegen_compile_count,
+        spark_job_count,
+    )
 
     fns = {name: qs[name] for name in names}
 
     # Warm-up: run every query once at warm_dir (bench: the smallest
-    # scale factor). Query shapes are identical, so this compiles and
-    # JITs the same whole-stage-codegen classes the timed pass uses
-    # (codegen cache is keyed on generated source) — the timed numbers
-    # then measure steady-state throughput, not one-time JVM
-    # compilation. This mirrors how a long-lived cluster runs: codegen
-    # compile cost is paid once per query shape, not per batch.
+    # scale factor), so the timed runs measure steady-state throughput,
+    # not one-time JVM start-up. Generated classes are cached by their
+    # source, and get_spark sizes that cache to hold every registered
+    # query's classes; a class whose source differs at sf_dir (AQE can
+    # pick another join shape there) is compiled in the first timed
+    # run, which ``compiles`` (min over runs) leaves out.
     for name, fn in fns.items():
         try:
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
@@ -248,18 +254,20 @@ def measure(spark, qs, names, sf_dir, *, warm_dir, runs) -> dict:
         finally:
             release_pinned()
 
-    out: dict[str, dict] = {"queries": {}, "jobs": {}, "failed": {}}
+    out: dict[str, dict] = {"queries": {}, "jobs": {}, "compiles": {}, "failed": {}}
     for name, fn in fns.items():
-        best = jobs = None
+        best = jobs = compiles = None
         try:
             for _ in range(runs):
                 before = spark_job_count(spark)
+                compiled = codegen_compile_count(spark)
                 try:
                     t0 = time.time()
                     df = fn(spark, sf_dir)
                     df.write.format("noop").mode("overwrite").save()
                     dt = time.time() - t0
                     n = spark_job_count(spark) - before
+                    c = codegen_compile_count(spark) - compiled
                 finally:
                     # dedup/LSH queries pin signature frames for
                     # intra-query reuse; drain between runs so storage
@@ -267,12 +275,14 @@ def measure(spark, qs, names, sf_dir, *, warm_dir, runs) -> dict:
                     release_pinned()
                 best = dt if best is None else min(best, dt)
                 jobs = n if jobs is None else min(jobs, n)
+                compiles = c if compiles is None else min(compiles, c)
         except Exception as exc:
             out["failed"][name] = f"{type(exc).__name__}: {exc}"
             print(f"FAIL {name}:\n{traceback.format_exc()}", file=sys.stderr)
         else:
             out["queries"][name] = round(best, 3)
             out["jobs"][name] = jobs
+            out["compiles"][name] = compiles
         # Between queries (OUTSIDE the timed section): drop any cached
         # relations and force a driver GC. Spark's ContextCleaner only
         # releases finished queries' broadcast/shuffle state when the
@@ -325,6 +335,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "queries": timings,
                 "jobs": record["jobs"],
+                "compiles": record["compiles"],
                 "failed": record["failed"],
                 "sf": sf_val,
             },

@@ -27,7 +27,12 @@ from __future__ import annotations
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 
-__all__ = ["checkpoint_with_metrics", "write_with_metrics", "spark_job_count"]
+__all__ = [
+    "checkpoint_with_metrics",
+    "write_with_metrics",
+    "spark_job_count",
+    "codegen_compile_count",
+]
 
 
 def _delivered(obs: Observation, defaults: dict | None) -> dict:
@@ -98,3 +103,16 @@ def spark_job_count(spark) -> int:
     over long sessions."""
     sc = spark.sparkContext
     return int(sc._jsc.sc().dagScheduler().nextJobId())
+
+
+def codegen_compile_count(spark) -> int:
+    """Total generated classes this JVM has COMPILED so far (Janino
+    runs, i.e. misses of Spark's generated-class cache). Reads the
+    sample count of ``CodegenMetrics.METRIC_COMPILATION_TIME``, which
+    ``CodeGenerator`` updates once per compilation and which, like the
+    job counter, only grows — so a delta around a warm re-run counts
+    the classes the cache failed to keep (``session.get_spark`` sizes
+    it). The counter is JVM-wide: it also counts compilations of other
+    sessions and threads in the same JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

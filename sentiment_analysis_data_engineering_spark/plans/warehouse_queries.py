@@ -931,7 +931,10 @@ def join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 on=["custkey"],
                 batch_id=parity,
             )
-        view = spark.read.parquet(root + "/view")
+        # read with the schema merge_join_view wrote: the join's columns
+        # plus its _batch_id partition (no schema-inference job)
+        written = o.join(c, ["custkey"]).withColumn("_batch_id", F.lit(0)).schema
+        view = spark.read.schema(written).parquet(root + "/view")
         out = view.groupBy(F.col("c_nationkey")).agg(
             F.count("*").alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),

@@ -7,14 +7,19 @@ this file makes that a loud test failure instead):
 1. localCheckpoint(eager=True) delivers observed metrics;
 2. DataFrame writes deliver observed metrics (staged-write counts);
 3. collect_set is accepted as an observed metric (cell/width sets).
+
+It also pins the codegen compile counter the bench reports.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import functions as F
 
 from sentiment_analysis_data_engineering_spark.operators.observe import (
     checkpoint_with_metrics,
+    codegen_compile_count,
     spark_job_count,
     write_with_metrics,
 )
@@ -94,3 +99,16 @@ def test_first_action_wins_and_reuse_does_not_block(spark):
     # a later action over the checkpointed frame neither hangs nor
     # changes the delivered metrics
     assert ck.filter(F.col("flag")).count() == 34
+
+
+def test_codegen_compile_count_counts_new_classes_only(spark):
+    # an int literal is inlined into the generated source, so a fresh
+    # one makes a class no earlier test compiled
+    fresh = time.time_ns() % 1_000_000_007
+    df = spark.range(10).select((F.col("id") * 7919 + F.lit(fresh)).alias("x"))
+    before = codegen_compile_count(spark)
+    first = df.collect()
+    assert codegen_compile_count(spark) - before >= 1
+    before = codegen_compile_count(spark)
+    assert df.collect() == first
+    assert codegen_compile_count(spark) - before == 0
