@@ -51,20 +51,13 @@ def date_parts(col: Column | str) -> dict[str, Column]:
     }
 
 
-def decompose_date(
-    df: DataFrame,
-    date_col: str,
-    *,
-    parts: tuple[str, ...] = ("year", "month", "day"),
-) -> DataFrame:
-    """F1+F2+P1 — add integer date-part columns, then drop the source.
+def decompose_date(df: DataFrame, date_col: str) -> DataFrame:
+    """F1+F2+P1 — add the integer year/month/day columns, then drop the
+    source.
 
     One lazy projection; Catalyst fuses it with neighbouring selects.
     """
-    all_parts = date_parts(date_col)
-    for name in parts:
-        df = df.withColumn(name, all_parts[name])
-    return df.drop(date_col)
+    return df.withColumns(date_parts(date_col)).drop(date_col)
 
 
 def safe_cast(col: Column | str, dtype: str) -> Column:

@@ -68,8 +68,6 @@ def _merge_fold(syms: Column, left: str, right: str) -> Column:
 def bpe_train(
     words: DataFrame,
     *,
-    word_col: str = "word",
-    freq_col: str = "freq",
     n_merges: int,
     min_count: int = 2,
 ) -> list[tuple[str, str, int]]:
@@ -86,8 +84,7 @@ def bpe_train(
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
     sym = words.select(
-        F.col(freq_col).alias("freq"),
-        F.split(F.col(word_col), "").alias("syms"),
+        "freq", F.split(F.col("word"), "").alias("syms")
     ).localCheckpoint(eager=True)
 
     merges: list[tuple[str, str, int]] = []
@@ -131,79 +128,36 @@ def apply_merges(
     syms: Column, merges: list[tuple[str, str, int]] | list[tuple[str, str]]
 ) -> Column:
     """Segment a symbol array with learned merges, applied in rank
-    order — JVM folds, no Python. Concatenating the result always
-    reconstructs the input (BPE merges never drop characters).
+    order — a chain of per-rank JVM folds, no Python. Concatenating the
+    result always reconstructs the input (BPE merges never drop
+    characters).
 
-    Built as ONE outer ``aggregate`` over a literal array of
-    (left, right) pairs whose accumulator is the symbol array, with
-    the single-pair greedy fold as the inner lambda — a CONSTANT-depth
-    expression tree regardless of rank count; only the literal pair
-    array grows, O(ranks) wide (r15, guide §5: the previous
-    ``len(merges)``-deep chain of nested ``_merge_fold`` expressions
-    cost O(ranks) driver-side Column construction (py4j round trips
-    per fold) and O(ranks) analyzer depth, overrunning the
-    analyzer's fixed Resolution budget past ~100 ranks — callers had
-    to chunk, and a 300-rank table burned ~56 s of pure driver time
-    building the tree). Rank order is the literal array's order, so
-    semantics are unchanged (pinned by test_bpe.py: greedy
-    left-to-right on runs, reconstruction, 300-rank bit-equality with
-    the Arrow encoder).
-
-    BELOW 48 ranks the original chain of per-rank folds is kept: its
-    literal left/right comparisons evaluate ~2-3x faster per row than
-    the generic pair-variable lambda (measured +1.3 s on
-    bpe_merge_stats' 8-rank table at sf0.1 when the aggregate form
-    was applied unconditionally), construction cost is negligible at
-    that depth, and 48 stays safely under the analyzer's
-    ~100-iteration Resolution budget. Both forms are pinned
-    token-identical by the test_bpe laws: tables under 48 ranks take
-    the chain, the 300-rank production table takes the aggregate, and
-    a 47-rank table plus one never-occurring pair pins the switch on
-    the same effective table."""
-    if not merges:
-        return syms
-    if len(merges) < 48:
-        out = syms
-        for m in merges:
-            out = _merge_fold(out, m[0], m[1])
-        return out
-    pairs = F.array(
-        *[
-            F.struct(F.lit(m[0]).alias("l"), F.lit(m[1]).alias("r"))
-            for m in merges
-        ]
-    )
-    return F.aggregate(
-        pairs,
-        syms,
-        lambda acc, m: F.aggregate(
-            acc,
-            F.expr("CAST(array() AS array<string>)"),
-            lambda a, x: F.when(
-                (F.size(a) > 0)
-                & (F.element_at(a, -1) == m["l"])
-                & (x == m["r"]),
-                F.concat(
-                    F.slice(a, 1, F.size(a) - 1),
-                    F.array(F.concat(m["l"], m["r"])),
-                ),
-            ).otherwise(F.concat(a, F.array(x))),
-        ),
-    )
+    The chain is ``len(merges)`` folds deep: its literal left/right
+    comparisons are cheap per row, but construction and analysis grow
+    with the rank count and overrun the analyzer's ~100-iteration
+    Resolution budget. Tables of 48 ranks or more are refused; encode
+    those with :func:`encode_words`, the Arrow-batched encoder."""
+    if len(merges) >= 48:
+        raise ValueError(
+            f"apply_merges chains one fold per rank; {len(merges)} ranks "
+            "(>= 48) belong to encode_words"
+        )
+    out = syms
+    for m in merges:
+        out = _merge_fold(out, m[0], m[1])
+    return out
 
 
 def encode_words(
     words: DataFrame,
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    *,
-    word_col: str = "word",
-    out_col: str = "tokens",
 ) -> DataFrame:
-    """Corpus-scale BPE ENCODE: apply a trained merge table to every
-    row of a (usually distinct-word) frame, appending ``out_col`` =
-    array<string> of subword tokens. Semantics are bit-identical to
-    :func:`apply_merges` (each merge greedily left-to-right, in rank
-    order — property-tested against the JVM fold), but the engine is an
+    """Corpus-scale BPE ENCODE: apply a trained merge table to the
+    ``word`` column of a (usually distinct-word) frame, appending
+    ``tokens`` = array<string> of subword tokens. Semantics are
+    bit-identical to :func:`apply_merges` (each merge greedily
+    left-to-right, in rank order — tested against the JVM fold and a
+    Python reference), but the engine is an
     Arrow-batched pandas UDF instead of a ``len(merges)``-deep nested
     ``F.aggregate`` chain: the fold chain is the right tool for the
     handful of merges the TRAINER applies per iteration, while a
@@ -220,7 +174,7 @@ def encode_words(
 
     Preconditions / production notes:
 
-    - ``word_col`` values must be NON-EMPTY strings (guaranteed by
+    - ``word`` values must be NON-EMPTY strings (guaranteed by
       :func:`word_frequencies`, which drops zero-length tokens). For
       an empty string this scan returns ``[]`` while
       :func:`apply_merges`' split-based JVM fold yields ``[""]`` —
@@ -260,4 +214,4 @@ def encode_words(
 
         return col.map(enc)
 
-    return words.withColumn(out_col, _enc(F.col(word_col)))
+    return words.withColumn("tokens", _enc(F.col("word")))

@@ -19,7 +19,7 @@ DataFrame plans:
   slower than the compiled aggregate form).
 
 At 100 TB: every stage keys its shuffle on (doc/bucket) ids; skewed
-buckets (stop-shingles) are capped via ``max_bucket_size``.
+buckets (stop-shingles) are capped via ``MAX_BUCKET_SIZE``.
 """
 
 from __future__ import annotations
@@ -77,19 +77,30 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df.repartition(n, F.col(id_col))
 
 
+#: MinHash-LSH shape: hashes per signature, bands (64/16 → 4 rows per
+#: band, an S-curve threshold near 0.5 Jaccard) and word-shingle size.
+#: One value each, so an index built by build_minhash_index always
+#: bands the way minhash_lsh_probe reads it.
+MINHASH_NUM_HASHES = 64
+MINHASH_BANDS = 16
+SHINGLE_SIZE = 5
+
+#: skew guard: LSH buckets with more docs than this are dropped before
+#: the pair join (a B-doc bucket yields B² candidate pairs)
+MAX_BUCKET_SIZE = 1000
+
+#: cap on embedding_cosine_pairs' block count B (B = 2·parallelism)
+MAX_COSINE_BLOCKS = 64
+
 #: strong refs on purpose: Spark's CacheManager keys cached data on the
 #: logical plan and frees it only via unpersist — a GC'd Python wrapper
 #: would leave the storage pinned AND unreachable. release_pinned() is
 #: the one cleanup path, so the refs must stay alive until it runs.
-#: Entries are (frame, recomputable): True for plain persists (safe to
-#: release early — consumers transparently recompute), False for
-#: registered localCheckpoints (lineage truncated — releasing before
-#: every lazy consumer materialized is unrecoverable).
+_PINNED: list[DataFrame] = []
+
 #: rounds the LAST connected_components call ran — pass-count
 #: instrumentation for the r15 pointer-doubling law (tests/test_dedup)
 LAST_CC_ROUNDS = 0
-
-_PINNED: list[tuple[DataFrame, bool]] = []
 
 #: depth of currently-open pinned_scope() blocks — release_pinned()
 #: refuses to run inside one (it would drain frames the scope owns,
@@ -115,7 +126,7 @@ def _pin(df: DataFrame) -> DataFrame:
     these pipelines repeatedly should call :func:`release_pinned`
     after materializing each output."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINNED.append((df, True))
+    _PINNED.append(df)
     return df
 
 
@@ -135,12 +146,10 @@ def register_pinned(df: DataFrame) -> DataFrame:
     consumer of the registered frame has been materialized (both
     harness call sites — tools/check_oracle.py and bench.measure — do
     exactly that, releasing after each query's output is hashed).
-    Registered frames are TAGGED non-recomputable in the registry, and
     :func:`release_pinned` refuses to run inside an active
-    :func:`pinned_scope` — the two misuse shapes that would turn this
-    documented contract into a distant job failure both fail loudly at
-    the release site instead."""
-    _PINNED.append((df, False))
+    :func:`pinned_scope`, so that misuse fails loudly at the release
+    site instead of as a distant job failure."""
+    _PINNED.append(df)
     return df
 
 
@@ -167,7 +176,7 @@ def release_pinned() -> int:
         )
     n = 0
     while _PINNED:
-        _PINNED.pop()[0].unpersist()
+        _PINNED.pop().unpersist()
         n += 1
     return n
 
@@ -198,7 +207,7 @@ def pinned_scope() -> Iterator[None]:
     finally:
         _SCOPE_DEPTH -= 1
         while len(_PINNED) > mark:
-            _PINNED.pop()[0].unpersist()
+            _PINNED.pop().unpersist()
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -442,15 +451,9 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_hashes: int = 64,
-    shingle_size: int = 5,
-) -> DataFrame:
-    """MinHash signatures: (id, sig array<long>[num_hashes]).
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """MinHash signatures: (id, sig array<long>[MINHASH_NUM_HASHES])
+    over word shingles of ``SHINGLE_SIZE``.
 
     Kirsch-Mitzenmacher construction (ESA 2006): each shingle is
     string-hashed exactly TWICE (h1 = xxhash64(s), h2 = xxhash64(1, s));
@@ -459,18 +462,18 @@ def minhash_signatures(
     the doc's shingles.
 
     Shape: explode distinct shingles → hash each once → ONE hash
-    aggregate with num_hashes codegen'd ``min`` columns. Spark's
+    aggregate with MINHASH_NUM_HASHES codegen'd ``min`` columns. Spark's
     higher-order array functions (transform/zip_with/aggregate) are
     interpreted, never whole-stage-codegen'd — the per-row array-fold
     form of this signature benchmarked ~9x slower than this explode +
     compiled-min-agg form. The shuffle stays lean: partial (map-side)
-    mins mean each map task ships one num_hashes-long partial row per
-    doc, NOT |shingles|·num_hashes rows. Null/whitespace-only texts
+    mins mean each map task ships one signature-long partial row per
+    doc, NOT |shingles|·MINHASH_NUM_HASHES rows. Null/whitespace-only texts
     drop out (the _doc_shingles filter) — they have no shingles, so
     they can't be near-duplicates of anything.
     """
     return _signatures_from_shingle_rows(
-        _doc_shingles(df, text_col, id_col, shingle_size), num_hashes
+        _doc_shingles(df, text_col, id_col, SHINGLE_SIZE), MINHASH_NUM_HASHES
     )
 
 
@@ -538,11 +541,10 @@ def minhash_lsh_pairs(
     text_col: str,
     id_col: str,
     *,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 5,
+    num_hashes: int = MINHASH_NUM_HASHES,
+    bands: int = MINHASH_BANDS,
+    shingle_size: int = SHINGLE_SIZE,
     verify_threshold: float | None = 0.2,
-    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding over MinHash
     signatures, optionally verified with exact n-gram Jaccard. The
@@ -582,7 +584,7 @@ def minhash_lsh_pairs(
         band_sig.withColumn(
             "_bsz", F.count("*").over(Window.partitionBy("_band", "_bucket"))
         )
-        .filter(F.col("_bsz") <= max_bucket_size)
+        .filter(F.col("_bsz") <= MAX_BUCKET_SIZE)
         .drop("_bsz")
     )
     a = kept.select(F.col("_id").alias("id_a"), "_band", "_bucket")
@@ -620,23 +622,15 @@ def minhash_lsh_pairs(
     )
 
 
-def build_minhash_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_hashes: int = 64,
-    shingle_size: int = 5,
-) -> DataFrame:
+def build_minhash_index(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sig) signature index for incremental near-dedup — write
     this ONCE per corpus (and append per batch); subsequent batches
     probe it via :func:`minhash_lsh_probe` without ever re-reading the
     corpus text. Signatures are deterministic (keyed xxhash64), so an
     index built in pieces equals one built whole."""
-    return minhash_signatures(
-        _spread(df, id_col), text_col, id_col,
-        num_hashes=num_hashes, shingle_size=shingle_size,
-    ).select(F.col("_id").alias(id_col), F.col("_sig").alias("sig"))
+    return minhash_signatures(_spread(df, id_col), text_col, id_col).select(
+        F.col("_id").alias(id_col), F.col("_sig").alias("sig")
+    )
 
 
 def minhash_lsh_probe(
@@ -644,21 +638,17 @@ def minhash_lsh_probe(
     index: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 5,
-    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Incremental near-dup candidates: every LSH pair involving at
     least one NEW document — new-vs-index and new-vs-new — WITHOUT
     re-sketching the corpus. At 100 TB this is the only affordable
     nightly shape: text is hashed for the incoming batch alone; the
-    stored index contributes pre-computed signatures (num_hashes longs
-    per doc, orders of magnitude smaller than its text).
+    stored index contributes pre-computed signatures
+    (``MINHASH_NUM_HASHES`` longs per doc, orders of magnitude smaller
+    than its text).
 
-    Contract (pytest-pinned): with identical parameters, the result
-    equals the full-corpus ``minhash_lsh_pairs(verify_threshold=None)``
+    Contract (pytest-pinned): the result equals the full-corpus
+    ``minhash_lsh_pairs(verify_threshold=None)``
     restricted to pairs touching a new doc — determinism of the keyed
     hashes makes incremental == monolithic, which is what lets a
     pipeline trust an index built batch-by-batch. Candidates only; the
@@ -676,11 +666,9 @@ def minhash_lsh_probe(
     :func:`pinned_scope`); ids must be disjoint between batch and
     index — an id on both sides would pair with itself's bands.
     """
-    rows_per_band = num_hashes // bands
-    sig_new = minhash_signatures(
-        _spread(new_df, id_col), text_col, id_col,
-        num_hashes=num_hashes, shingle_size=shingle_size,
-    )
+    bands = MINHASH_BANDS
+    rows_per_band = MINHASH_NUM_HASHES // bands
+    sig_new = minhash_signatures(_spread(new_df, id_col), text_col, id_col)
     sig_idx = index.select(
         F.col(id_col).alias("_id"), F.col("sig").alias("_sig")
     )
@@ -695,7 +683,7 @@ def minhash_lsh_probe(
         banded.withColumn(
             "_bsz", F.count("*").over(Window.partitionBy("_band", "_bucket"))
         )
-        .filter(F.col("_bsz") <= max_bucket_size)
+        .filter(F.col("_bsz") <= MAX_BUCKET_SIZE)
         .drop("_bsz")
     )
     a = kept.filter("_new").select(
@@ -799,13 +787,12 @@ def simhash_pairs(
     id_col: str,
     *,
     max_hamming: int = 3,
-    chunks: int = 4,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
 
-    Pigeonhole banding: split the 64-bit hash into ``chunks`` 16-bit
-    chunks; any pair within Hamming distance < chunks must agree on at
+    Pigeonhole banding: split the 64-bit hash into 4 16-bit chunks;
+    any pair within Hamming distance < 4 must agree on at
     least one chunk → equi-join per chunk, union, exact Hamming filter
     via bit_count(xor). No cross join; candidate generation is an
     equi-join on (chunk_idx, chunk_value). The chunk frame is pinned
@@ -814,6 +801,7 @@ def simhash_pairs(
     sh = simhash(_spread(df, id_col), text_col, id_col, hash_fn=hash_fn).select(
         F.col(id_col).alias("_id"), "simhash"
     )
+    chunks = 4
     chunk_bits = 64 // chunks
     mask = (1 << chunk_bits) - 1
     exploded = sh.select(
@@ -884,15 +872,10 @@ def blocking_edges(df: DataFrame, id_col: str, *key_cols: Column) -> DataFrame:
     return out.distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    *,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components by min-label propagation — (id, component),
-    where component is the smallest id reachable from the node.
+def connected_components(edges: DataFrame, *, max_iter: int = 20) -> DataFrame:
+    """Connected components by min-label propagation over (id_a, id_b)
+    edges — (id, component), where component is the smallest id
+    reachable from the node.
 
     This is the cluster-resolution step of every near-dup pipeline:
     pair output from minhash_lsh_pairs / simhash_pairs / blocking keys
@@ -936,7 +919,7 @@ def connected_components(
     propagation. Exactness is mode-independent: both the plain step
     and the doubled step preserve the invariant above.
     """
-    und = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    und = edges.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
     und = und.unionByName(
         und.select(F.col("d").alias("s"), F.col("s").alias("d"))
     ).distinct()
@@ -1103,7 +1086,6 @@ def embedding_cosine_pairs(
     id_col: str,
     *,
     threshold: float = 0.95,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold —
     (id_a, id_b, cosine), id_a < id_b, cosine rounded to 6 dp; a zero
@@ -1116,7 +1098,8 @@ def embedding_cosine_pairs(
     unordered block pair exactly once. The O(n²) pair work is inherent
     to an exact threshold join over dense vectors (no sound pruning
     exists at low thresholds), but it is spread evenly over B(B+1)/2
-    cells of (n/B)² pairs. B defaults to 2·defaultParallelism (cap 64).
+    cells of (n/B)² pairs. B is 2·defaultParallelism, capped at
+    ``MAX_COSINE_BLOCKS``.
     Per cell, ``applyInPandas`` moves the two block SLICES through
     Arrow (linear in n·B), BLAS does the quadratic flops, and only
     survivors come back (``_exact_pairs_arrow``).
@@ -1124,7 +1107,9 @@ def embedding_cosine_pairs(
     The brute-force theta-join form this replaces survives only in
     tests (tests/test_dedup.py) as the verification baseline.
     """
-    b_blocks = n_blocks or min(64, df.sparkSession.sparkContext.defaultParallelism * 2)
+    b_blocks = min(
+        MAX_COSINE_BLOCKS, df.sparkSession.sparkContext.defaultParallelism * 2
+    )
     base = _spread(df, id_col).select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),

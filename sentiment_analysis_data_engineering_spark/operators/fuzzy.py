@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["fuzzy_match_pairs"]
 
+#: skew guard: blocks with more rows than this are dropped before the
+#: pair join (a B-row block yields B² candidate pairs)
+MAX_BLOCK_SIZE = 1000
+
 
 def fuzzy_match_pairs(
     df: DataFrame,
@@ -32,14 +36,13 @@ def fuzzy_match_pairs(
     *,
     block_col: Column,
     max_distance: int,
-    max_block_size: int = 1000,
 ) -> DataFrame:
     """All (id_a < id_b) pairs whose ``text_col`` values sit in the
     same block and within ``max_distance`` Levenshtein edits.
 
     Plan: project (id, text, block) once; self-equi-join on the block
     key (one keyed shuffle — never a cross join); refine with
-    ``F.levenshtein`` inside codegen. ``max_block_size`` mirrors
+    ``F.levenshtein`` inside codegen. ``MAX_BLOCK_SIZE`` mirrors
     ``dedup.py``'s stop-shingle guard: a degenerate block (every row
     keyed the same) would quadratically explode, so oversized blocks
     are dropped BEFORE the pair join — the documented recall trade for
@@ -54,7 +57,7 @@ def fuzzy_match_pairs(
     )
     guarded = (
         keyed.withColumn("_bn", F.count("*").over(Window.partitionBy("_block")))
-        .filter(F.col("_bn") <= max_block_size)
+        .filter(F.col("_bn") <= MAX_BLOCK_SIZE)
         .drop("_bn")
     )
     a = guarded.select(

@@ -43,6 +43,11 @@ __all__ = [
 
 PR_SCALE = 10**12
 
+#: triangle_counts broadcasts its forward-adjacency frame while the
+#: oriented edge count stays at or under this; past it the joins are
+#: plain node-keyed equi-joins
+BROADCAST_MAX_EDGES = 4_000_000
+
 
 def pagerank_fixed_point(
     edges: DataFrame,
@@ -156,11 +161,10 @@ def personalized_pagerank_fixed_point(
     *,
     src: str = "src",
     dst: str = "dst",
-    weight: str | None = None,
     damping: Fraction = Fraction(17, 20),
     iterations: int = 3,
 ) -> DataFrame:
-    """Personalized (seed-biased) PageRank: the teleport mass lands
+    """Personalized (seed-biased) PageRank over unweighted edges: the teleport mass lands
     ONLY on the seed nodes — the "similar to these items" random walk
     recommenders and graph-expansion curation use. Same fixed-point
     integer arithmetic as :func:`pagerank_fixed_point`, so results are
@@ -189,14 +193,9 @@ def personalized_pagerank_fixed_point(
             f"damping must be in [0, 1] with denominator <= 100, got {damping}"
         )
 
-    wcol = (
-        F.col(weight).cast("long") if weight is not None else F.lit(1).cast("long")
-    )
     edges_deg = (
-        edges.select(
-            F.col(src).alias("_s"), F.col(dst).alias("_t"), wcol.alias("_w")
-        )
-        .withColumn("_dg", F.sum("_w").over(W.partitionBy("_s")))
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
+        .withColumn("_dg", F.count("*").over(W.partitionBy("_s")))
         .persist()
     )
     try:
@@ -224,7 +223,7 @@ def personalized_pagerank_fixed_point(
                 edges_deg.join(ranks, edges_deg["_s"] == ranks["node"])
                 .select(
                     F.col("_t").alias("node"),
-                    F.expr("(pr_fixed * _w) DIV _dg").alias("_c"),
+                    F.expr("pr_fixed DIV _dg").alias("_c"),
                 )
                 .groupBy("node")
                 .agg(F.sum("_c").alias("_sum"))
@@ -251,7 +250,6 @@ def triangle_counts(
     *,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Exact per-node triangle counts — (node, degree, triangles), one
     row per node that closes at least one triangle. ``degree`` is the
@@ -336,7 +334,7 @@ def triangle_counts(
         # the IVF centroid build.
         aa = adj.select(F.col("node").alias("_a"), F.col("_nb").alias("_na"))
         bb = adj.select(F.col("node").alias("_b"), F.col("_nb").alias("_nbb"))
-        if ord_e.count() <= broadcast_max_edges:
+        if ord_e.count() <= BROADCAST_MAX_EDGES:
             aa, bb = F.broadcast(aa), F.broadcast(bb)
         et = (
             ord_e.join(aa, "_a")

@@ -114,7 +114,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     keys: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Row-level diff between two versions of a keyed table: one output
     row per key present in either version, tagged ``change_type`` ∈
@@ -128,15 +127,12 @@ def snapshot_diff(
     pruning reaches both scans). No windows, no collect; at 100 TB
     cost is the two keyed shuffles a CDC diff fundamentally needs.
 
-    ``compare_cols`` defaults to the non-key columns common to both
+    The compared columns are the non-key columns common to both
     frames. Key columns must be non-null and unique per side (the
     standard CDC contract; duplicate keys raise downstream in
     ``scd2_apply``'s validator, and here would fan out the join).
     """
-    if compare_cols is None:
-        compare_cols = [
-            c for c in old.columns if c in set(new.columns) and c not in keys
-        ]
+    compare_cols = [c for c in old.columns if c in set(new.columns) and c not in keys]
     o = old.select(*keys, *compare_cols)
     n = new.select(*keys, *compare_cols)
     # disambiguate by renaming BEFORE the join — self-join-safe
@@ -184,9 +180,6 @@ def scd2_apply(
     tracked: list[str],
     *,
     batch_ts: str,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    current_col: str = "is_current",
     assume_unique_keys: bool = False,
 ) -> DataFrame:
     """Apply one change batch to a Slowly-Changing-Dimension type-2
@@ -228,10 +221,10 @@ def scd2_apply(
                 "scd2_apply: changes batch has duplicate keys — deduplicate "
                 "per key (deterministic winner) before applying"
             )
-    passthrough_cols = [*keys, *tracked, valid_from_col, valid_to_col, current_col]
+    passthrough_cols = [*keys, *tracked, "valid_from", "valid_to", "is_current"]
     # NULL is_current → closed passthrough (never dropped between the
     # two complementary filters)
-    is_open = F.coalesce(F.col(current_col), F.lit(False))
+    is_open = F.coalesce(F.col("is_current"), F.lit(False))
     closed = history.filter(~is_open).select(*passthrough_cols)
     open_ = history.filter(is_open).select(*passthrough_cols)
 
@@ -257,17 +250,17 @@ def scd2_apply(
     closed_out = j.filter(in_open & in_batch & ~same).select(
         *keys,
         *tracked,
-        F.col(valid_from_col),
-        F.lit(batch_ts).alias(valid_to_col),
-        F.lit(False).alias(current_col),
+        F.col("valid_from"),
+        F.lit(batch_ts).alias("valid_to"),
+        F.lit(False).alias("is_current"),
     )
     # fresh versions: changed keys + brand-new keys
     fresh = j.filter(in_batch & (~in_open | ~same)).select(
         *[F.coalesce(F.col(f"_ck_{k}"), F.col(k)).alias(k) for k in keys],
         *[F.col(f"_c_{c}").alias(c) for c in tracked],
-        F.lit(batch_ts).alias(valid_from_col),
-        F.lit(None).cast("string").alias(valid_to_col),
-        F.lit(True).alias(current_col),
+        F.lit(batch_ts).alias("valid_from"),
+        F.lit(None).cast("string").alias("valid_to"),
+        F.lit(True).alias("is_current"),
     )
     return closed.unionByName(kept_open).unionByName(closed_out).unionByName(fresh)
 

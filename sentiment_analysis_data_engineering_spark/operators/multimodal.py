@@ -113,7 +113,7 @@ _MEDIA_BLOB = T.StructType(
 )
 
 
-def _synthesize(df: DataFrame, id_col: str, blob_fn) -> DataFrame:
+def _synthesize(df: DataFrame, blob_fn) -> DataFrame:
     """Fixture-generator body: one ``blob_fn(media_id)`` payload per id."""
 
     def row(mid):
@@ -121,7 +121,7 @@ def _synthesize(df: DataFrame, id_col: str, blob_fn) -> DataFrame:
         yield mid, blob_fn(mid)
 
     return _map_rows(
-        df.select(F.col(id_col).cast("long").alias("media_id")), _MEDIA_BLOB, row
+        df.select(F.col("media_id").cast("long").alias("media_id")), _MEDIA_BLOB, row
     )
 
 
@@ -272,7 +272,7 @@ def decode_image(df: DataFrame, *, strict: bool = False) -> DataFrame:
     return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
-def synthesize_bmp_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synthesize_bmp_media(df: DataFrame) -> DataFrame:
     """FIXTURE GENERATOR: one real 24-bit BMP payload per id —
     (media_id, content binary).
 
@@ -287,7 +287,7 @@ def synthesize_bmp_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
         pix = ((mid * 31 + np.arange(w * h * 3)) % 256).astype(np.uint8)
         return encode_bmp(w, h, pix.tobytes())
 
-    return _synthesize(df, id_col, blob)
+    return _synthesize(df, blob)
 
 
 def encode_wav(sample_rate: int, samples: bytes) -> bytes:
@@ -399,7 +399,7 @@ def decode_audio(df: DataFrame, *, strict: bool = False) -> DataFrame:
     return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
-def synthesize_wav_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synthesize_wav_media(df: DataFrame) -> DataFrame:
     """FIXTURE GENERATOR: one real PCM mono 16-bit WAV payload per id —
     (media_id, content binary), the audio twin of synthesize_bmp_media.
 
@@ -414,7 +414,7 @@ def synthesize_wav_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
         s = ((mid * 37 + np.arange(n) * 17) % 4001 - 2000).astype("<i2")
         return encode_wav(8000, s.tobytes())
 
-    return _synthesize(df, id_col, blob)
+    return _synthesize(df, blob)
 
 
 def _chunk(cid: bytes, body: bytes) -> bytes:
@@ -573,7 +573,7 @@ def decode_video_frames(
     return _map_rows(df.select("media_id", "content"), out_schema, row)
 
 
-def synthesize_avi_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synthesize_avi_media(df: DataFrame) -> DataFrame:
     """FIXTURE GENERATOR: one real uncompressed-DIB AVI per id —
     (media_id, content binary), the video twin of synthesize_bmp_media.
 
@@ -590,4 +590,4 @@ def synthesize_avi_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
         ]
         return encode_avi(w, h, frames, fps=10)
 
-    return _synthesize(df, id_col, blob)
+    return _synthesize(df, blob)

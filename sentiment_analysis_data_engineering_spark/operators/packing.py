@@ -48,20 +48,19 @@ def pack_sequences(
     tokens_col: str,
     *,
     budget: int = 2048,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign each document to a pack of ≤ ``budget`` total tokens —
     (doc_id, n_tokens, pack_id, pack_seq).
 
-    Greedy next-fit per sorted partition: docs stream in id order and
+    Greedy next-fit per sorted partition (``defaultParallelism`` hash
+    partitions on the doc id): docs stream in id order and
     open a new pack whenever the current one would overflow. A doc
     longer than the budget gets a pack of its own (callers chunk or
     drop those upstream). ``pack_id`` = partition_index * 2^40 +
     local pack counter; ``pack_seq`` is the doc's position inside its
     pack.
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
 
     def pack_partition(
         batches: Iterator[pd.DataFrame],

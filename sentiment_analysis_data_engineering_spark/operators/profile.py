@@ -47,8 +47,8 @@ def _fmt_double(c: Column) -> Column:
     return F.format_string("%.6f", c.cast("double"))
 
 
-def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Profile ``columns`` (default: all) of ``df`` — (col_name,
+def profile_table(df: DataFrame) -> DataFrame:
+    """Profile every column of ``df`` — (col_name,
     metric, value string), plus a single ('_table', 'n_rows') row.
 
     Per-column metrics: ``n_null``, ``n_distinct`` always; ``min``,
@@ -71,11 +71,7 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     are not injective.
     """
     dtypes = dict(df.dtypes)
-    if columns is None:
-        columns = [c for c, _ in df.dtypes]
-    unknown = [c for c in columns if c not in dtypes]
-    if unknown:
-        raise ValueError(f"columns not in frame: {unknown}")
+    columns = df.columns
 
     n_rows = F.count(F.lit(1))
 

@@ -85,7 +85,6 @@ def n_way_inner_join(
     dfs: Sequence[DataFrame],
     on: str | list[str],
     *,
-    how: str = "inner",
     broadcast_all_but_first: bool = False,
 ) -> DataFrame:
     """J1 — fold N frames into one wide frame on a shared key
@@ -102,7 +101,7 @@ def n_way_inner_join(
 
     def _join(left: DataFrame, right: DataFrame) -> DataFrame:
         r = F.broadcast(right) if broadcast_all_but_first else right
-        return left.join(r, on=on, how=how)
+        return left.join(r, on=on, how="inner")
 
     return reduce(_join, dfs)
 

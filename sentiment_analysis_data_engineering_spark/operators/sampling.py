@@ -135,23 +135,17 @@ def mixture_weighted_sample(
 _SHUFFLE_MOD = 1 << 31
 
 
-def epoch_shuffle_params(epoch: int, modulus: int = _SHUFFLE_MOD) -> tuple[int, int]:
+def epoch_shuffle_params(epoch: int) -> tuple[int, int]:
     """Affine-permutation coefficients (a, b) for a training epoch.
 
-    ``a`` is forced odd, so for the power-of-two ``modulus`` it is a
-    unit mod 2^k and ``pos = (a·id + b) mod 2^k`` is a BIJECTION on
-    [0, 2^k) — every id gets a distinct position, no collisions to
-    resolve. The bijection argument NEEDS the power-of-two modulus
-    (odd ⇔ coprime only holds there), so any other modulus is rejected
-    rather than silently producing a non-injective map. ``epoch + 1``
-    seeds the Knuth multiplicative constant so epoch 0 is already a
-    non-trivial permutation.
+    ``a`` is forced odd, so for the power-of-two modulus 2^31 it is a
+    unit and ``pos = (a·id + b) mod 2^31`` is a BIJECTION on
+    [0, 2^31) — every id gets a distinct position, no collisions to
+    resolve (odd ⇔ coprime only holds for a power-of-two modulus).
+    ``epoch + 1`` seeds the Knuth multiplicative constant so epoch 0 is
+    already a non-trivial permutation.
     """
-    if modulus <= 1 or modulus & (modulus - 1):
-        raise ValueError(
-            f"modulus must be a power of two > 1 (got {modulus}): odd `a` "
-            "is a unit — and the map a bijection — only mod 2^k"
-        )
+    modulus = _SHUFFLE_MOD
     a = (2 * (((epoch + 1) * 2654435761) % (modulus // 2)) + 1) % modulus
     b = ((epoch + 1) * 40503 + 2531011) % modulus
     return a, b
@@ -163,7 +157,6 @@ def epoch_shuffle(
     *,
     epoch: int,
     n_shards: int,
-    modulus: int = _SHUFFLE_MOD,
 ) -> DataFrame:
     """Deterministic global reshuffle of a training corpus for one
     epoch — shard assignment and intra-shard order as a PURE FUNCTION
@@ -188,7 +181,7 @@ def epoch_shuffle(
     different epoch yields an independent-looking permutation from the
     same scan.
 
-    Id domain: ids MUST be integers in [0, modulus) so ``a·id`` stays
+    Id domain: ids MUST be integers in [0, 2^31) so ``a·id`` stays
     within int64 (a < 2^31 ⇒ product < 2^62) — ENFORCED per row with a
     codegen-stage ``raise_error`` guard, so an out-of-range or negative
     id fails the job loudly instead of silently wrapping into a
@@ -199,9 +192,10 @@ def epoch_shuffle(
 
     Adds ``shuffle_pos`` (long) and ``shard`` (int) columns.
     """
+    modulus = _SHUFFLE_MOD
     if not 0 < n_shards <= modulus:
         raise ValueError(f"n_shards must be in (0, {modulus}]")
-    a, b = epoch_shuffle_params(epoch, modulus)
+    a, b = epoch_shuffle_params(epoch)
     raw = F.col(id_col).cast("long")
     c = F.when((raw >= 0) & (raw < F.lit(modulus)), raw).otherwise(
         F.raise_error(

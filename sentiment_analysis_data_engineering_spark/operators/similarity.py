@@ -80,6 +80,23 @@ __all__ = [
     "CODES_SCHEMA",
 ]
 
+#: every Lloyd-trained quantizer here fits from a bounded sample of
+#: TRAIN_ROWS vectors (persisted indexes may pass their own size) and
+#: runs LLOYD_ITERS epochs
+TRAIN_ROWS = 256
+LLOYD_ITERS = 10
+
+#: semantic_dedup: clusters larger than this are excluded from pairing
+#: (all members kept), and the component propagation may run this many
+#: rounds — loose thresholds build similarity CHAINS, whose diameter
+#: far exceeds the dup-graph default
+MAX_CLUSTER_SIZE = 100_000
+CC_MAX_ITER = 60
+
+#: semantic_dedup's Lloyd fit sample: at least this many hash-ordered
+#: rows, and at least 32 per requested center
+FIT_SAMPLE_ROWS = 8192
+
 
 def _as_double(vec_col: str) -> Column:
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -521,8 +538,8 @@ def _sample_normalized(
       moved; measured on the auto-retrain fixture, an id-prefix
       rebuild left the merged distribution entirely out of the fit and
       the drift ratio never recovered). Uniform-coverage, still
-      RNG-free and bit-replayable — the same scheme
-      ``kmeans_clusters``'s fit_sample_rows uses, for the same reason.
+      RNG-free and bit-replayable — the same draw ``semantic_dedup``
+      fits from, for the same reason.
 
     Cost shape identical either way: a global top-``train_rows``
     (TakeOrdered), one bounded collect."""
@@ -553,8 +570,6 @@ def _pq_codebooks(
     *,
     m: int,
     n_codes: int,
-    train_rows: int = 256,
-    iters: int = 10,
 ) -> list:
     """Per-subspace codebooks: deterministic Lloyd k-means over a
     bounded corpus sample, driver-side.
@@ -565,23 +580,26 @@ def _pq_codebooks(
     (measured on the driver fixtures: 16 sampled codewords gave
     per-query recall down to 0.2; 64 Lloyd-trained codes with top-96
     re-rank hold 0.6-0.8 worst-query). Training is
-    the bounded-model-build action class: collect the ``train_rows``
+    the bounded-model-build action class: collect the ``TRAIN_ROWS``
     smallest-id vectors (deterministic — no RNG anywhere; the ad-hoc
     "id" draw of ``_sample_normalized``, fine here because PQ refits
     per call), L2-normalize,
-    slice into subspaces, run ``iters`` Lloyd iterations per subspace
+    slice into subspaces, run ``LLOYD_ITERS`` Lloyd iterations per subspace
     with first-``n_codes``-subvectors init; empty clusters re-seed from
     the worst-quantized points (farthest-point heuristic), ties resolve
     to the lowest index, so the model is bit-replayable. At 100 TB this
     stays a ~256-row collect; MLlib KMeans per subspace is the drop-in
     when the training sample itself must be distributed. Returns ``m``
     (n_codes, dim/m) float64 arrays."""
-    V = _sample_normalized(corpus, vec_col, id_col, train_rows)
+    V = _sample_normalized(corpus, vec_col, id_col, TRAIN_ROWS)
     dim = V.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
-    return [_lloyd(V[:, s * sub : (s + 1) * sub], n_codes, iters) for s in range(m)]
+    return [
+        _lloyd(V[:, s * sub : (s + 1) * sub], n_codes, LLOYD_ITERS)
+        for s in range(m)
+    ]
 
 
 def _pq_encode_arrow(
@@ -746,8 +764,7 @@ def _ivfpq_train_model(
     n_cells: int,
     m: int,
     n_codes: int,
-    train_rows: int,
-    iters: int,
+    train_rows: int = TRAIN_ROWS,
     sample_order: str = "id",
 ):
     """Deterministic IVF-PQ model fit (bounded-sample driver Lloyd):
@@ -766,10 +783,10 @@ def _ivfpq_train_model(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
-    C = _lloyd(V, n_cells, iters)  # coarse centroids (n_cells, dim)
+    C = _lloyd(V, n_cells, LLOYD_ITERS)  # coarse centroids (n_cells, dim)
     R = V - C[_sq_dists(V, C).argmin(axis=1)]
     books = [
-        _lloyd(R[:, s * sub : (s + 1) * sub], n_codes, iters)
+        _lloyd(R[:, s * sub : (s + 1) * sub], n_codes, LLOYD_ITERS)
         for s in range(m)
     ]
     return C, books
@@ -844,9 +861,6 @@ def ivfpq_cosine_topk(
     m: int = 8,
     n_codes: int = 64,
     n_rerank: int = 96,
-    train_rows: int = 256,
-    iters: int = 10,
-    sample_order: str = "id",
 ) -> DataFrame:
     """IVF-PQ approximate top-k (Jégou et al., TPAMI 2011 — the FAISS
     ``IVFx,PQy`` architecture): a Lloyd-trained coarse quantizer of
@@ -869,15 +883,11 @@ def ivfpq_cosine_topk(
     query-table stages are shared verbatim with the PERSISTED index
     lifecycle (``ivfpq_write_index`` / ``ivfpq_merge_index`` /
     ``ivfpq_probe_index``), so an ad-hoc query and an index probe are
-    the same arithmetic (pass ``sample_order="hash"`` to fit from the
-    same draw the persisted index uses — the equality law in
-    tests/test_similarity.py does; the ad-hoc default stays "id", see
+    the same arithmetic once both fit from the same draw (the ad-hoc
+    fit draws by id, the persisted index by hash — see
     ``_sample_normalized``)."""
     C, books = _ivfpq_train_model(
-        corpus, vec_col, id_col,
-        n_cells=n_cells, m=m, n_codes=n_codes,
-        train_rows=train_rows, iters=iters,
-        sample_order=sample_order,
+        corpus, vec_col, id_col, n_cells=n_cells, m=m, n_codes=n_codes
     )
     enc = _ivfpq_encode(corpus, vec_col, id_col, C, books)
     qtab = _ivfpq_query_tables(queries, vec_col, id_col, C, books, n_probe)
@@ -1135,8 +1145,7 @@ def ivfpq_write_index(
     n_cells: int = 16,
     m: int = 8,
     n_codes: int = 64,
-    train_rows: int = 256,
-    iters: int = 10,
+    train_rows: int = TRAIN_ROWS,
 ) -> dict:
     """Train the IVF-PQ model on ``corpus`` and commit model + encoded
     corpus at ``path`` as a new version that replaces whatever the
@@ -1166,8 +1175,7 @@ def ivfpq_write_index(
     C, books = _ivfpq_train_model(
         corpus, vec_col, id_col,
         n_cells=n_cells, m=m, n_codes=n_codes,
-        train_rows=train_rows, iters=iters,
-        sample_order="hash",
+        train_rows=train_rows, sample_order="hash",
     )
     dim = len(C[0])
     local_frame(
@@ -1578,7 +1586,6 @@ def ivfpq_drift_audit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     segment_col=None,
-    sample_mod: int | None = None,
     scope: str = "index",
 ) -> DataFrame:
     """Measure how far a frozen-quantizer index has DRIFTED from the
@@ -1622,18 +1629,6 @@ def ivfpq_drift_audit(
     a two-level hash aggregate to segment·cell and segment rows.
     Output is ≤ segments rows; nothing driver-sized.
 
-    ``sample_mod`` is the 100 TB economics dial: the full audit is a
-    LINEAR corpus-join job, which is the right price for the audit
-    you act on but too steep for a per-N-merged-rows TRIGGER check.
-    With ``sample_mod=k`` both join sides first filter to
-    ``pmod(xxhash64(id), k) == 0`` — the same deterministic ~1/k id
-    subsample on each side (so the join loses nothing the sample
-    kept), cutting the audit to ~1/k of the scan, shuffle and decode.
-    Deterministic by construction: the same ids are audited on every
-    run, so sampled drift RATIOS replay exactly (the contract the
-    sampled-vs-exact pytest law pins); per-cell occupancy becomes a
-    uniform ~1/k estimate. Default None = exact.
-
     ``scope`` picks which side the audit accounts for. ``"index"``
     (default) audits every index row — the left join + __unaudited__
     story above, the full health check. ``"corpus"`` audits exactly
@@ -1644,8 +1639,6 @@ def ivfpq_drift_audit(
     maintainer price a drift check per micro-batch."""
     if scope not in ("index", "corpus"):
         raise ValueError(f"scope must be 'index' or 'corpus', got {scope!r}")
-    if sample_mod is not None and sample_mod < 1:
-        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
     _, snap = _snapshot(spark, path)
     C, books, meta = _model_at(spark, path, snap)
     m, sub = meta["m"], meta["dim"] // meta["m"]
@@ -1660,12 +1653,6 @@ def ivfpq_drift_audit(
         seg,
     )
     codes = _codes_at(spark, path, snap)
-    if sample_mod is not None:
-        keep = lambda c: (  # noqa: E731 — shared sample predicate
-            F.pmod(F.xxhash64(c), F.lit(sample_mod)) == 0
-        )
-        codes = codes.filter(keep(F.col("neighbor_id")))
-        vecs = vecs.filter(keep(F.col("neighbor_id")))
     # scope="index": LEFT join FROM the codes — every indexed row is
     # accounted for; matched rows audit against their true vector,
     # corpus-orphaned rows fall into the __unaudited__ segment below.
@@ -1815,56 +1802,27 @@ def kmeans_clusters(
     id_col: str = "vec_id",
     k: int = 8,
     seed: int = 7,
-    max_iter: int = 10,
-    init_mode: str = "k-means||",
-    fit_sample_rows: int | None = None,
 ) -> DataFrame:
     """MLlib KMeans cluster assignment per vector — (id, cluster).
 
     The trained-quantizer upgrade of ``ivf_cosine_topk``'s sampled
-    centroids: ``KMeans.fit`` runs distributed Lloyd iterations
-    (``init_mode``: kmeans|| default, or "random" when only locality
-    matters and the extra init rounds are overhead), then ``transform``
-    assigns cells in one narrow pass. Feature vectors go through ``array_to_vector`` — a JVM
-    conversion, no Python. Cluster IDS are only stable for a fixed
-    seed+partitioning, so downstream queries should aggregate
-    cluster-invariant facts (sizes, purity) rather than raw ids.
-
-    ``fit_sample_rows`` bounds the FIT to a deterministic seeded
-    hash-ordered sample (``xxhash64(id)`` order, id tiebreak): unlike a
-    smallest-id prefix it stays coverage-unbiased when ids correlate
-    with content or ingestion time (the first 8k vectors from one
-    source would otherwise pin every centroid to that source's region),
-    while assignment stays full-corpus — the standard sampled-Lloyd
-    trade (centroid quality converges with O(k) samples per cluster,
-    not O(n); Sculley 2010's minibatch argument) that turns the
-    Θ(epochs·n·k) fit, the dominant cost of SemDeDup at scale, into
-    Θ(epochs·sample·k). Must satisfy ``fit_sample_rows >= k`` — a
-    smaller sample cannot yield k distinct centers (MLlib silently
-    returns fewer, or fails outright on an empty fit frame), so that
-    misuse is rejected eagerly. None = fit on the full corpus (exact
-    MLlib behavior, the right call when n is modest or centroids feed
-    a quality-sensitive quantizer like PQ)."""
+    centroids: ``KMeans.fit`` runs ``LLOYD_ITERS`` distributed Lloyd
+    iterations from a k-means|| init over the full corpus, then
+    ``transform`` assigns cells in one narrow pass. Feature vectors go
+    through ``array_to_vector`` — a JVM conversion, no Python. Cluster
+    IDS are only stable for a fixed seed+partitioning, so downstream
+    queries should aggregate cluster-invariant facts (sizes, purity)
+    rather than raw ids."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    if fit_sample_rows is not None and fit_sample_rows < max(k, 1):
-        raise ValueError(
-            f"fit_sample_rows must be >= k (and >= 1): got "
-            f"fit_sample_rows={fit_sample_rows}, k={k}"
-        )
     feat = df.select(
         F.col(id_col),
         array_to_vector(_as_double(vec_col)).alias("features"),
     )
-    fit_input = feat
-    if fit_sample_rows is not None:
-        fit_input = feat.orderBy(
-            F.xxhash64(F.col(id_col)), F.col(id_col)
-        ).limit(fit_sample_rows)
-    model = KMeans(k=k, seed=seed, maxIter=max_iter, initMode=init_mode).fit(
-        fit_input
-    )
+    model = KMeans(
+        k=k, seed=seed, maxIter=LLOYD_ITERS, initMode="k-means||"
+    ).fit(feat)
     return model.transform(feat).select(
         F.col(id_col), F.col("prediction").alias("cluster")
     )
@@ -1936,10 +1894,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     k: int = 8,
     threshold: float = 0.3,
-    seed: int = 7,
-    max_cluster_size: int = 100_000,
-    cc_max_iter: int = 60,
-    fit_sample_rows: int | None = 8192,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public method): k-means cluster the
     embeddings, connect within-cluster pairs with cosine ≥ threshold,
@@ -1951,19 +1905,16 @@ def semantic_dedup(
     the cluster id (never a corpus cross join), and k is chosen so
     n/k-sized clusters keep |c|² affordable — at 100 TB you raise k
     with the corpus, exactly as the paper does. Degenerate clusters
-    larger than ``max_cluster_size`` are excluded from pairing (all
+    larger than ``MAX_CLUSTER_SIZE`` are excluded from pairing (all
     their members kept) rather than silently exploding — the same
     oversized-block guard as the fuzzy-matching family. Component
     resolution reuses the dedup family's min-label propagation; the
     survivor is the component's smallest id (deterministic given the
-    assignment; cluster ids themselves are partition-dependent under
-    either init mode, so downstream checks should assert
-    cluster-invariant laws, as the kmeans query contract documents).
-    Random init gives no balance guarantee — callers should watch the
-    oversized-cluster signal (the stats query's
+    assignment). The fit gives no balance guarantee — callers should
+    watch the oversized-cluster signal (the stats query's
     ``no_oversized_clusters_ok`` law) and raise k if it trips, since
-    excluded clusters keep all their duplicates. ``cc_max_iter`` passes through
-    to the component propagation — low thresholds build loose
+    excluded clusters keep all their duplicates. Component propagation
+    may run ``CC_MAX_ITER`` rounds — low thresholds build loose
     similarity CHAINS, not near-cliques, so component diameter (=
     required iterations) can far exceed the dup-graph default.
     """
@@ -1983,33 +1934,24 @@ def semantic_dedup(
     # then `_lloyd` runs the 10 Lloyd epochs in numpy and assignment
     # is one Arrow cosine-argmax pass over the full corpus against
     # the L2-normalized centers. One Spark job total where MLlib ran
-    # ~15. No RNG: bit-replayable, like the IVF-PQ model fit
-    # (``seed`` is kept for API stability; the deterministic draw
-    # never consumes it). The sample is bounded to max(fit_sample_rows,
-    # 32·k) — a FLOOR, since callers scale k with the corpus
-    # (SemDeDup's k ∝ n rule): ≥32 fit points per requested center,
-    # the sampled-Lloyd minimum, keeping the Θ(epochs·sample·k) fit
-    # Θ(epochs·k²), corpus-independent. Assignment stays full-corpus.
-    # fit_sample_rows=None restores the exact full-corpus MLlib fit
-    # (the right call when n is modest or quality feeds a quantizer).
-    if fit_sample_rows is None:
-        assign = kmeans_clusters(
-            df, vec_col=vec_col, id_col=id_col, k=k, seed=seed,
-            init_mode="random", fit_sample_rows=None,
-        )
-    else:
-        V = _sample_normalized(
-            df, vec_col, id_col, max(fit_sample_rows, 32 * k),
-            sample_order="hash",
-        )
-        C = _unit_rows(np.asarray(_lloyd(V, k, 10), dtype=np.float64))
-        cents = [list(map(float, row)) for row in C]
-        assign = _ivf_tag_arrow(
-            df, vec_col, id_col, cents, role="assign"
-        ).select(
-            F.col("neighbor_id").alias(id_col),
-            F.col("cell").cast("int").alias("cluster"),
-        )
+    # ~15. No RNG: bit-replayable, like the IVF-PQ model fit. The
+    # sample is bounded to max(FIT_SAMPLE_ROWS, 32·k) — a FLOOR, since
+    # callers scale k with the corpus (SemDeDup's k ∝ n rule): ≥32 fit
+    # points per requested center, the sampled-Lloyd minimum, keeping
+    # the Θ(epochs·sample·k) fit Θ(epochs·k²), corpus-independent.
+    # Assignment stays full-corpus.
+    V = _sample_normalized(
+        df, vec_col, id_col, max(FIT_SAMPLE_ROWS, 32 * k),
+        sample_order="hash",
+    )
+    C = _unit_rows(np.asarray(_lloyd(V, k, LLOYD_ITERS), dtype=np.float64))
+    cents = [list(map(float, row)) for row in C]
+    assign = _ivf_tag_arrow(
+        df, vec_col, id_col, cents, role="assign"
+    ).select(
+        F.col("neighbor_id").alias(id_col),
+        F.col("cell").cast("int").alias("cluster"),
+    )
     base = (
         df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
         .withColumn("_n", _norm(F.col("_v")))
@@ -2020,7 +1962,7 @@ def semantic_dedup(
         csize = base.groupBy("cluster").agg(F.count("*").alias("_cs"))
         pairable = base.join(
             F.broadcast(
-                csize.filter(F.col("_cs") <= max_cluster_size).select(
+                csize.filter(F.col("_cs") <= MAX_CLUSTER_SIZE).select(
                     "cluster"
                 )
             ),
@@ -2048,7 +1990,7 @@ def semantic_dedup(
             .filter(F.col("_cos") >= threshold)
             .select("id_a", "id_b")
         )
-        comps = connected_components(pairs, max_iter=cc_max_iter)
+        comps = connected_components(pairs, max_iter=CC_MAX_ITER)
         out = (
             base.join(
                 comps.withColumnRenamed("id", "_id"), "_id", "left"

@@ -13,7 +13,7 @@ these client-side):
   only wide operation is a grouped count over candidate-matching rows.
 - ``bloom_build`` / ``bloom_prune`` — a portable Bloom filter built
   distributedly (per-partition bitmaps OR-merged on the driver — a
-  bounded model-build action, bytes ∝ m_bits × build_partitions,
+  bounded model-build action, bytes ∝ m_bits × BLOOM_BUILD_PARTITIONS,
   independent of row count) and applied as an Arrow-vectorized
   membership filter BEFORE a join's shuffle. Spark's AQE can inject
   runtime bloom filters (spark.sql.optimizer.runtime.bloomFilter.*);
@@ -52,14 +52,23 @@ __all__ = [
 # Python's salted hash().
 _HASH_A = np.array(
     [0x9E3779B97F4A7C15, 0xBF58476D1CE4E5B9, 0x94D049BB133111EB,
-     0xD6E8FEB86659FD93, 0xA5A5A5A5A5A5A5A5 | 1, 0xC2B2AE3D27D4EB4F],
+     0xD6E8FEB86659FD93],
     dtype=np.uint64,
 )
 _HASH_B = np.array(
     [0x2545F4914F6CDD1D, 0x27D4EB2F165667C5, 0x85EBCA77C2B2AE63,
-     0x165667B19E3779F9, 0x9E3779B97F4A7C16 | 1, 0xFF51AFD7ED558CCD],
+     0x165667B19E3779F9],
     dtype=np.uint64,
 )
+
+
+#: Bloom sizing: the bitmap is the next power of two >= this many bits
+#: per distinct key (floor 2^14), probed by BLOOM_G hashes — a ~0.24%
+#: false-positive rate; the build side is coalesced to at most
+#: BLOOM_BUILD_PARTITIONS tasks, one bitmap row each
+BLOOM_BITS_PER_KEY = 16
+BLOOM_G = 4
+BLOOM_BUILD_PARTITIONS = 32
 
 
 def _bloom_positions(keys: np.ndarray, m_bits: int, g: int) -> np.ndarray:
@@ -180,43 +189,32 @@ def heavy_hitters_exact(
 # --------------------------------------------------------------------------
 
 
-def bloom_build(
-    df: DataFrame,
-    key_col: str,
-    *,
-    m_bits: int | None = None,
-    g: int = 4,
-    build_partitions: int = 32,
-) -> dict:
+def bloom_build(df: DataFrame, key_col: str) -> dict:
     """Build a Bloom filter over an integer key column; returns
     ``{"bitmap": bytes, "m_bits": int, "g": int, "n_keys": int}``.
 
-    Sizing: ``m_bits`` defaults to the next power of two ≥ 16 bits per
-    distinct-ish key (counted with one cheap agg) — with g=4 that is a
-    ~0.24% false-positive rate; FPs only cost wasted probe rows, never
-    correctness (no false negatives by construction).
+    Sizing: ``m_bits`` is the next power of two ≥ ``BLOOM_BITS_PER_KEY``
+    bits per distinct-ish key (counted with one cheap agg) — with
+    ``BLOOM_G`` = 4 hashes that is a ~0.24% false-positive rate; FPs
+    only cost wasted probe rows, never correctness (no false negatives
+    by construction).
 
     Integer keys only. For strings (or composites), pre-hash JVM-side
     — ``F.xxhash64(col)`` on BOTH the build and probe sides — and
     bloom the hashes (hash collisions just add to the FP rate).
 
-    Scale shape: the build side is coalesced to ≤ ``build_partitions``
-    tasks, each emitting ONE packed bitmap row (m_bits/8 bytes); the
-    driver ORs ≤ build_partitions bitmaps. Driver traffic is
-    m_bits/8 × build_partitions bytes — bounded by filter size and
+    Scale shape: the build side is coalesced to ≤
+    ``BLOOM_BUILD_PARTITIONS`` tasks, each emitting ONE packed bitmap
+    row (m_bits/8 bytes); the driver ORs those bitmaps. Driver traffic
+    is m_bits/8 × BLOOM_BUILD_PARTITIONS bytes — bounded by filter size and
     cluster width, independent of row count (same "bounded model-build
     action" class as IVF centroid sampling, similarity.py).
     """
-    if m_bits is None:
-        n = df.select(
-            F.approx_count_distinct(key_col).alias("n")
-        ).collect()[0]["n"]
-        m_bits = max(1 << 14, 1 << math.ceil(math.log2(max(n, 1) * 16)))
-    if m_bits & (m_bits - 1):
-        raise ValueError(f"m_bits must be a power of two, got {m_bits}")
-    if not 1 <= g <= len(_HASH_A):
-        raise ValueError(f"g must be in [1, {len(_HASH_A)}], got {g}")
-
+    n = df.select(F.approx_count_distinct(key_col).alias("n")).collect()[0]["n"]
+    m_bits = max(
+        1 << 14, 1 << math.ceil(math.log2(max(n, 1) * BLOOM_BITS_PER_KEY))
+    )
+    g = BLOOM_G
     n_bytes = m_bits // 8
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -237,8 +235,8 @@ def bloom_build(
     # nulls dropped JVM-side: a nullable long batch crosses Arrow as
     # float64 and would round keys above 2^53 into wrong bit positions
     src = df.select(key_col).filter(F.col(key_col).isNotNull())
-    if src.rdd.getNumPartitions() > build_partitions:
-        src = src.coalesce(build_partitions)
+    if src.rdd.getNumPartitions() > BLOOM_BUILD_PARTITIONS:
+        src = src.coalesce(BLOOM_BUILD_PARTITIONS)
     rows = src.mapInPandas(build, schema="bitmap binary, n_keys long").collect()
 
     merged = np.zeros(n_bytes, dtype=np.uint8)

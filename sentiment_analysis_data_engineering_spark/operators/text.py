@@ -951,6 +951,7 @@ def remove_duplicate_spans(
     )
 
 
+#: the hashed feature space D shared by training and both scorers
 _CLF_FEATURES = 4096
 _CLF_MULT = 1103515245
 _CLF_INC = 12345
@@ -958,23 +959,21 @@ _CLF_WMOD = 2001
 _CLF_WOFF = 1000
 
 
-def hashed_classifier_score(
-    col: Column | str, *, n_features: int = _CLF_FEATURES
-) -> Column:
+def hashed_classifier_score(col: Column | str) -> Column:
     """Linear classifier score over hashed bag-of-words features — the
     model-based quality-filter stage of the modern curation stack
     (fastText/CCNet-style linear scorer; public methodology), expressed
     so the ENTIRE inference pass is a narrow JVM projection.
 
     Feature extraction: lowercase, split on non-letters, drop empties.
-    Each token hashes to a feature id in [0, n_features) by the classic
-    31-polynomial char fold (h ← (31·h + ascii) mod D — exact integer
-    arithmetic, reproducible in any engine). The "model" is a weight
+    Each token hashes to a feature id in [0, D = ``_CLF_FEATURES``) by
+    the classic 31-polynomial char fold (h ← (31·h + ascii) mod D —
+    exact integer arithmetic, reproducible in any engine). The "model" is a weight
     per feature id, derived arithmetically from the id itself by an
     LCG step (w(i) = ((i·1103515245 + 12345) mod 2001) − 1000 ∈
     [−1000, 1000]) so the weight vector needs no lookup table at all;
     a LEARNED vector swaps that expression for a constant-array
-    ``element_at`` lookup (n_features entries — KBs, not data) with
+    ``element_at`` lookup (D entries — KBs, not data) with
     the IDENTICAL plan shape — that path is implemented, not just
     promised: ``hashed_classifier_score_learned`` below, pinned equal
     to this form when fed the LCG weights (tests/test_text.py).
@@ -994,7 +993,7 @@ def hashed_classifier_score(
     feat = lambda t: F.aggregate(  # noqa: E731 — inline HOF chain
         F.split(t, ""),
         F.lit(0).cast("long"),
-        lambda h, ch: (h * F.lit(31) + F.ascii(ch)) % F.lit(n_features),
+        lambda h, ch: (h * F.lit(31) + F.ascii(ch)) % F.lit(_CLF_FEATURES),
     )
     weight = lambda i: (  # noqa: E731
         (i * F.lit(_CLF_MULT) + F.lit(_CLF_INC)) % F.lit(_CLF_WMOD)
@@ -1004,14 +1003,14 @@ def hashed_classifier_score(
     )
 
 
-def lcg_classifier_weights(n_features: int = _CLF_FEATURES) -> list[int]:
+def lcg_classifier_weights() -> list[int]:
     """The LCG-derived weight vector ``hashed_classifier_score`` bakes
     into its projection, materialized as a plain Python list — feed it
     to ``hashed_classifier_score_learned`` and the two paths are
     pinned bit-identical (the equivalence law in tests/test_text.py)."""
     return [
         ((i * _CLF_MULT + _CLF_INC) % _CLF_WMOD) - _CLF_WOFF
-        for i in range(n_features)
+        for i in range(_CLF_FEATURES)
     ]
 
 
@@ -1078,22 +1077,18 @@ def train_hashed_classifier(
     df: DataFrame,
     text_col: str,
     label_col: str,
-    *,
-    n_features: int = _CLF_FEATURES,
-    max_iter: int = 100,
-    reg_param: float = 0.01,
 ) -> dict:
     """Fit the quality classifier IN-ENGINE — MLlib LogisticRegression
     over hashed bag-of-words counts built with the EXACT tokenizer and
     feature hash the inference expressions use (lowercase, non-letter
-    split, 31-polynomial char fold mod ``n_features``), so the learned
+    split, 31-polynomial char fold mod ``_CLF_FEATURES``), so the learned
     coefficient for feature id ``i`` is directly the weight
     ``hashed_classifier_score_learned`` looks up for that id. Returns::
 
-        {"weights":      [int] * n_features,  # round(1000·w_i) — the
-                                              # fix-point model the
-                                              # exact-int64 scorer ships
-         "coefficients": [float] * n_features,  # raw floats, for audit
+        {"weights":      [int] * _CLF_FEATURES,  # round(1000·w_i) — the
+                                                 # fix-point model the
+                                                 # exact-int64 scorer ships
+         "coefficients": [float] * _CLF_FEATURES,  # raw floats, for audit
          "intercept":    float}
 
     Training data shape: ONE aggregate over the corpus (token ids via
@@ -1104,7 +1099,7 @@ def train_hashed_classifier(
     training runs once over a bounded labeled corpus (thousands of
     rows), never on the 100 TB inference path, which stays a pure
     JVM projection (see ``hashed_classifier_score_learned``). L2 reg
-    (``reg_param``) keeps the separable-data coefficients bounded;
+    (0.01, 100 iterations) keeps the separable-data coefficients bounded;
     ``standardization=False`` because raw token counts ARE the scoring
     feature scale — a standardized fit would learn weights for
     features the int64 scorer never constructs.
@@ -1120,6 +1115,7 @@ def train_hashed_classifier(
     toks = F.filter(
         F.split(F.lower(_c(text_col)), r"[^a-z]+"), lambda t: t != F.lit("")
     )
+    n_features = _CLF_FEATURES
     feat = lambda t: F.aggregate(  # noqa: E731 — same fold as inference
         F.split(t, ""),
         F.lit(0).cast("long"),
@@ -1144,8 +1140,8 @@ def train_hashed_classifier(
 
     train = ids.rdd.map(to_vec).toDF(["label", "features"])
     model = LogisticRegression(
-        maxIter=max_iter,
-        regParam=reg_param,
+        maxIter=100,
+        regParam=0.01,
         standardization=False,
         fitIntercept=True,
     ).fit(train)

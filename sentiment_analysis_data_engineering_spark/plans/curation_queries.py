@@ -336,7 +336,7 @@ def token_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM part GROUP BY p_name
     ),
     guarded AS (
-      -- mirror fuzzy_match_pairs' max_block_size guard so the oracle
+      -- mirror fuzzy_match_pairs' MAX_BLOCK_SIZE guard so the oracle
       -- and the engine agree even on a fixture with a degenerate block
       SELECT * FROM (
         SELECT n.*, count(*) OVER (PARTITION BY noun) AS bn FROM names n

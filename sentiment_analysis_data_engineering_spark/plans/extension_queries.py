@@ -2377,7 +2377,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     while k ∝ n holds per-cluster blocks constant and the total pair
     count linear. The KMeans fit itself stays bounded — it trains on a
     deterministic hash-ordered sample of max(8192, 32·k) rows
-    (operators/similarity.py::kmeans_clusters fit_sample_rows; the
+    (operators/similarity.py::semantic_dedup, FIT_SAMPLE_ROWS; the
     floor auto-scales with k so the sample can always yield k distinct
     centers as k grows with the corpus) with full-corpus assignment.
     The corpus count that derives k is the parquet footer's row count
@@ -2386,7 +2386,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(_SEMDEDUP_K, fixture_rows(sf_dir, "embeddings") // 250)
     out = sim.semantic_dedup(
         embeddings, vec_col="embedding", id_col="vec_id",
-        k=k, threshold=0.3, seed=7,
+        k=k, threshold=0.3,
     )
     per_cluster = out.groupBy("cluster").agg(
         F.sum(F.col("keep").cast("long")).alias("_keeps"),

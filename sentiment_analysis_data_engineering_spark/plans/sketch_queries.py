@@ -79,7 +79,7 @@ def bloom_pruned_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the classic "selective dim prunes huge fact"
     play when the dim is too big to broadcast outright but its KEY SET
     compresses into a few MB of bitmap; the build is a bounded driver
-    OR-merge (bytes ∝ m_bits × build_partitions, not rows). Spark's
+    OR-merge (bytes ∝ m_bits × BLOOM_BUILD_PARTITIONS, not rows). Spark's
     AQE runtime bloom join does this implicitly when stats align; the
     explicit operator makes it deterministic and reusable."""
     from ..operators.sketches import bloom_build, bloom_prune

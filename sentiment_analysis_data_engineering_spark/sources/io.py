@@ -40,7 +40,7 @@ from __future__ import annotations
 from typing import Iterable
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -103,15 +103,13 @@ def scan(
     spark: SparkSession,
     path_or_table: str,
     *,
-    predicate: Column | None = None,
-    columns: list[str] | None = None,
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """S1 — read a parquet path or catalog table with optional predicate
-    and projection. Both are declared on the lazy plan, so Catalyst
-    pushes them into the scan (``PushedFilters`` / pruned ``ReadSchema``)
-    rather than filtering post-read — unlike the reference's local
-    re-filter after ``read_gbq`` (``daily_dag.py:82``).
+    """S1 — read a parquet path or catalog table as a lazy frame: a
+    caller's filter and projection on it reach the scan
+    (``PushedFilters`` / pruned ``ReadSchema``) rather than filtering
+    post-read — unlike the reference's local re-filter after
+    ``read_gbq`` (``daily_dag.py:82``).
 
     ``schema`` declares the columns to read and their types: a parquet
     path is then read without the schema-inference job, and partition
@@ -125,10 +123,6 @@ def scan(
         df = spark.table(path_or_table)
         if schema is not None:
             df = df.select(*[F.col(f.name).cast(f.dataType) for f in schema])
-    if predicate is not None:
-        df = df.filter(predicate)
-    if columns:
-        df = df.select(*columns)
     return df
 
 

@@ -42,12 +42,7 @@ import glob
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 __all__ = ["JsonPayloadDataSource"]
 
@@ -103,9 +98,6 @@ class JsonPayloadDataSource(DataSource):
 
     def reader(self, schema) -> "JsonPayloadReader":
         return JsonPayloadReader(schema, self.options)
-
-    def simpleStreamReader(self, schema) -> "JsonPayloadStreamReader":
-        return JsonPayloadStreamReader(schema, self.options)
 
 
 def _parse_fields(schema) -> list[tuple[str, type]]:
@@ -167,45 +159,3 @@ class JsonPayloadReader(DataSourceReader):
 
     def read(self, partition: InputPartition):
         yield from _read_payload(partition.value, self._fields)
-
-
-class JsonPayloadStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch twin of the batch reader: the payload directory is
-    an APPEND-ONLY drop zone (each scheduler tick / API poll lands one
-    new file — the reference's daily/weekly DAG cadence recast as a
-    stream), and the offset is simply how many files of the sorted
-    listing have been consumed. ``read`` picks up every file past the
-    last offset; ``readBetweenOffsets`` re-reads exactly the files of
-    a finished batch, which is what makes checkpointed replay
-    exactly-once. An empty directory is NOT an error here — unlike the
-    batch reader, a stream's whole premise is that payloads arrive
-    later. Files must not be mutated or removed once dropped; new
-    files must sort after consumed ones (timestamped names — the
-    convention every drop-zone ingest already follows)."""
-
-    def __init__(self, schema, options) -> None:
-        self._path = _payload_path(options)
-        self._fields = _parse_fields(schema)
-
-    def initialOffset(self) -> dict:
-        return {"files_seen": 0}
-
-    def read(self, start: dict):
-        files = _list_payloads(self._path)
-        n0 = start["files_seen"]
-        rows = [
-            row
-            for f in files[n0:]
-            for row in _read_payload(f, self._fields)
-        ]
-        return iter(rows), {"files_seen": len(files)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        files = _list_payloads(self._path)
-        return iter(
-            [
-                row
-                for f in files[start["files_seen"] : end["files_seen"]]
-                for row in _read_payload(f, self._fields)
-            ]
-        )

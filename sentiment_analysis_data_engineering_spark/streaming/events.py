@@ -24,8 +24,6 @@ def run_ivfpq_merge_stream(
     auto_compact_max_files: int | None = None,
     auto_retrain_drift_ratio: float | None = None,
     retrain_corpus: DataFrame | None = None,
-    audit_every_rows: int = 1,
-    audit_sample_mod: int | None = None,
     retrain_train_rows: int = 256,
 ) -> list[dict]:
     """Streaming maintenance of a PERSISTED IVF-PQ index: each
@@ -65,7 +63,7 @@ def run_ivfpq_merge_stream(
     ``retrain_corpus`` (operators/similarity.py::ivfpq_drift_audit)
     and remembers the mean reconstruction error as the BASELINE — how
     well the frozen model serves what it already holds. Then, after
-    every ``audit_every_rows`` merged rows, it audits the JUST-MERGED
+    every merge that adds rows, it audits the JUST-MERGED
     BATCH (``scope="corpus"`` — one narrow index scan + a batch-sized
     decode, never a corpus join, so the per-batch check is priced for
     a stream) and — when the batch's mean exceeds
@@ -82,16 +80,10 @@ def run_ivfpq_merge_stream(
     trigger: drift arrives with new data, and a full-index mean
     dilutes an out-of-distribution batch by corpus/batch (measured
     1.005× overall vs 3-9× batch-scoped on the same injected drift).
-    ``audit_sample_mod`` samples both the baseline and batch audits to
-    the same deterministic ~1/mod id subset — baseline and batch
-    ratios compare like with like, at 1/mod the scan; a batch the
-    sample misses entirely falls back to an exact batch audit
-    (``audit_sample_fallback`` in its stats row) so small batches
-    cannot silently no-op the trigger. Arming FAILS LOUDLY when the
-    baseline audit matches zero vectors (a corpus that explains no
-    index row, or a sample_mod that empties the index sample) — a
-    zero baseline would make the cross-multiplied trigger 0 > 0
-    forever, drift detection dead with no visible symptom.
+    Arming FAILS LOUDLY when the baseline audit matches zero vectors
+    (a corpus that explains no index row) — a zero baseline would make
+    the cross-multiplied trigger 0 > 0 forever, drift detection dead
+    with no visible symptom.
     ``retrain_corpus``
     must be the index's corpus of record (it is re-read at each
     audit/retrain, so a view over the landing table stays current).
@@ -133,22 +125,15 @@ def run_ivfpq_merge_stream(
         else None
     )
 
-    def audit_qerr(spark, corpus, scope, *, sample_mod=...) -> tuple[int, int]:
+    def audit_qerr(spark, corpus, scope) -> tuple[int, int]:
         """(sum_qerr_micro, n_vectors) over the corpus-matched rows —
         exact int64 sums; the __unaudited__ orphan segment (ids the
-        corpus no longer explains) is excluded from the mean.
-        ``sample_mod`` defaults to the stream's ``audit_sample_mod``;
-        pass ``None`` explicitly for an exact audit (the small-batch
-        fallback below)."""
+        corpus no longer explains) is excluded from the mean."""
         rows = {
             r.segment: r
             for r in ivfpq_drift_audit(
                 spark, index_path, corpus,
-                vec_col=vec_col, id_col=id_col,
-                sample_mod=(
-                    audit_sample_mod if sample_mod is ... else sample_mod
-                ),
-                scope=scope,
+                vec_col=vec_col, id_col=id_col, scope=scope,
             ).collect()  # ≤ 2 bounded rows
         }
         hit = rows.get("all")
@@ -156,7 +141,7 @@ def run_ivfpq_merge_stream(
             (hit.sum_qerr_micro, hit.n_vectors) if hit is not None else (0, 0)
         )
 
-    state = {"rows_since_audit": 0, "baseline": None}
+    state = {"baseline": None}
     if armed:
         spark0 = stream_df.sparkSession
         state["baseline"] = audit_qerr(spark0, retrain_corpus, "index")
@@ -164,19 +149,12 @@ def run_ivfpq_merge_stream(
             # A zero-vector baseline makes the cross-multiplied trigger
             # 0 > 0 forever — drift detection would be silently dead
             # and the baseline never refreshes (it only recomputes
-            # after a retrain the dead trigger can never fire). Either
-            # retrain_corpus explains no index row, or audit_sample_mod
-            # sampled the index to nothing — both are arming mistakes;
-            # fail at arm time, mirroring the retrain_corpus None check.
+            # after a retrain the dead trigger can never fire):
+            # retrain_corpus explains no index row. Fail at arm time,
+            # mirroring the retrain_corpus None check.
             raise ValueError(
                 "auto-retrain baseline audit matched ZERO index vectors — "
                 "retrain_corpus must be the index's corpus of record"
-                + (
-                    f" and audit_sample_mod={audit_sample_mod} must leave a "
-                    "non-empty index sample"
-                    if audit_sample_mod is not None
-                    else ""
-                )
             )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -193,33 +171,15 @@ def run_ivfpq_merge_stream(
             else:
                 s.update({"n_cells_compacted": 0, "n_rows_rewritten": 0})
         if armed:
-            state["rows_since_audit"] += s["n_added"]
             s.update(
                 {"audit_checked": False, "drift_fired": False,
                  "retrained": False}
             )
             base_sum, base_n = state["baseline"]
-            if state["rows_since_audit"] >= audit_every_rows:
-                state["rows_since_audit"] = 0
+            if s["n_added"] > 0:
                 # audit the BATCH, not the corpus: the sharp, cheap
                 # trigger (see docstring)
                 cur_sum, cur_n = audit_qerr(spark, batch_df, "corpus")
-                fallback = False
-                if audit_sample_mod is not None and cur_n == 0:
-                    # Small-batch escape hatch: a batch whose ids all
-                    # hash outside the 1/mod sample would audit as
-                    # (0, 0) and the cur_n > 0 guard would make the
-                    # check a silent no-op — drift arriving in small
-                    # batches could never fire despite
-                    # audit_checked=True. Fall back to an EXACT audit
-                    # of this batch (batch-sized decode — affordable by
-                    # definition when the sample missed everything);
-                    # its mean compares against the sampled baseline
-                    # mean, which estimates the same exact quantity.
-                    cur_sum, cur_n = audit_qerr(
-                        spark, batch_df, "corpus", sample_mod=None
-                    )
-                    fallback = True
                 s.update(
                     {
                         "audit_checked": True,
@@ -227,11 +187,6 @@ def run_ivfpq_merge_stream(
                         "audit_n_vectors": cur_n,
                         "baseline_sum_qerr_micro": base_sum,
                         "baseline_n_vectors": base_n,
-                        **(
-                            {"audit_sample_fallback": True}
-                            if fallback
-                            else {}
-                        ),
                     }
                 )
                 # cur_sum/cur_n > ratio * base_sum/base_n, cross-multiplied

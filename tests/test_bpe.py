@@ -17,6 +17,19 @@ from sentiment_analysis_data_engineering_spark.operators.bpe import (
 )
 
 
+def _ref_apply(syms: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
+    """One merge, greedy left to right."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return tuple(out)
+
+
 def _ref_bpe(word_freqs: dict[str, int], n_merges: int, min_count: int = 2):
     vocab = {tuple(w): f for w, f in word_freqs.items()}
     merges = []
@@ -36,15 +49,8 @@ def _ref_bpe(word_freqs: dict[str, int], n_merges: int, min_count: int = 2):
         merges.append((l, r, c))
         new_vocab = {}
         for syms, f in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + f
+            out = _ref_apply(syms, l, r)
+            new_vocab[out] = new_vocab.get(out, 0) + f
         vocab = new_vocab
     return merges
 
@@ -95,27 +101,14 @@ def test_bpe_counts_non_increasing(spark):
     assert counts == sorted(counts, reverse=True)
 
 
-def test_apply_merges_chain_and_aggregate_agree_at_48_ranks(spark):
-    # apply_merges switches from the per-rank chain to the aggregate
-    # form at 48 ranks. A 48th pair that never occurs leaves the
-    # effective table unchanged, so both forms must give equal tokens.
-    vocab = dict(WORDS)
-    for a in sorted(WORDS):
-        for b in sorted(WORDS):
-            vocab[a + b] = vocab.get(a + b, 0) + min(WORDS[a], WORDS[b])
-    merges = [m[:2] for m in _ref_bpe(vocab, 47)]
-    assert len(merges) == 47
-    words = spark.createDataFrame([(w,) for w in sorted(vocab)], "word string")
-    syms = F.split("word", "")
-    rows = words.select(
-        "word",
-        apply_merges(syms, merges).alias("chain"),
-        apply_merges(syms, merges + [("#", "#")]).alias("agg"),
-    ).collect()
-    assert len(rows) == len(vocab)
-    for r in rows:
-        assert r.chain == r.agg, r.word
-    assert any(len(r.chain) < len(r.word) for r in rows)  # merges applied
+def test_apply_merges_refuses_48_ranks(spark):
+    # the per-rank chain stops at 47 ranks; larger tables go to encode_words
+    import pytest
+
+    merges = [(chr(97 + i % 26), chr(97 + i // 26), 1) for i in range(48)]
+    apply_merges(F.split(F.lit("ab"), ""), merges[:47])
+    with pytest.raises(ValueError, match="encode_words"):
+        apply_merges(F.split(F.lit("ab"), ""), merges)
 
 
 def test_word_frequencies_one_pass(spark):
@@ -152,17 +145,15 @@ def test_encode_words_matches_jvm_fold(spark):
 
 
 def test_encode_words_production_rank_count(spark):
-    # VERDICT r6 item 5: pin encode_words == apply_merges at a
-    # production-ish rank count (hundreds of ranks, not the 8-merge
-    # query scale). The sf0.01 corpus vocabulary alone is 31 words and
-    # exhausts after ~89 merges, so extend it with its own pairwise
-    # concatenations (still corpus-derived and deterministic) to give
-    # the trainer enough pair mass for 300 ranks. Merges come from the
-    # pure-Python reference trainer — already pinned bit-equal to
-    # bpe_train by test_bpe_matches_reference_exactly — so this test
-    # pays zero Spark training jobs and isolates exactly the claim
-    # under test: the Arrow per-word scan and the 300-deep JVM fold
-    # chain agree token for token over the whole vocabulary.
+    # pin encode_words at a production-ish rank count (hundreds of
+    # ranks, not the 8-merge query scale) against the Python reference.
+    # The sf0.01 corpus vocabulary alone is 31 words and exhausts after
+    # ~89 merges, so extend it with its own pairwise concatenations
+    # (still corpus-derived and deterministic) to give the trainer
+    # enough pair mass for 300 ranks. Merges come from the pure-Python
+    # reference trainer — already pinned bit-equal to bpe_train by
+    # test_bpe_matches_reference_exactly — so this test pays zero Spark
+    # training jobs.
     from sentiment_analysis_data_engineering_spark.operators.bpe import encode_words
 
     from conftest import SF001
@@ -183,19 +174,13 @@ def test_encode_words_production_rank_count(spark):
     words = spark.createDataFrame(
         [(w,) for w in sorted(extended)], "word string"
     )
-    enc = encode_words(words, merges)
-    # one call at full depth: apply_merges is a constant-size
-    # expression since r15 (outer aggregate over the literal pair
-    # array), so the pre-r15 chunks-of-60 analyzer workaround is gone
-    # — this now also pins that a single 300-rank call analyzes fine
-    jvm = words.withColumn(
-        "jvm", apply_merges(F.split("word", ""), merges)
-    )
-    joined = enc.join(jvm.select("word", "jvm"), "word")
-    rows = joined.collect()
+    rows = encode_words(words, merges).collect()
     assert len(rows) == len(extended)
     for r in rows:
-        assert r.tokens == r.jvm, r.word
+        want = tuple(r.word)
+        for left, right, _ in merges:
+            want = _ref_apply(want, left, right)
+        assert tuple(r.tokens) == want, r.word
         assert "".join(r.tokens) == r.word  # conservation at depth 300
 
 

@@ -141,7 +141,7 @@ def test_embedding_cosine_exact_matches_brute_force(spark):
     )
     expect = sorted(map(tuple, _brute_force_pairs(df, 0.3).collect()))
     got = sorted(map(tuple, dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3, n_blocks=4
+        df, "embedding", "vec_id", threshold=0.3
     ).collect()))
     assert got == expect and len(got) > 0
 
@@ -151,7 +151,7 @@ def test_embedding_cosine_exact_plan_has_no_nested_loop(spark):
         _clustered_vectors(n=20), "vec_id long, embedding array<float>"
     )
     out = dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3, n_blocks=4
+        df, "embedding", "vec_id", threshold=0.3
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
@@ -262,13 +262,13 @@ def test_ngram_guard_bounds_hot_shingle_candidates(hot_corpus):
     assert hot_row.keep_id == 0
 
 
-def test_lsh_bucket_guard_bounds_hot_bucket_candidates(hot_corpus):
+def test_lsh_bucket_guard_bounds_hot_bucket_candidates(hot_corpus, monkeypatch):
     # identical docs share every band bucket → one 300-doc bucket per
     # band; cap 100 drops those buckets, so no hot-hot pair survives
     # candidate generation, while the near-dup pair still pairs up.
+    monkeypatch.setattr(dd, "MAX_BUCKET_SIZE", 100)
     pairs = dd.minhash_lsh_pairs(
-        hot_corpus, "text", "doc_id",
-        num_hashes=64, bands=16, verify_threshold=0.2, max_bucket_size=100,
+        hot_corpus, "text", "doc_id", verify_threshold=0.2
     ).collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (1000, 1001) in ids
@@ -281,7 +281,7 @@ def test_lsh_guard_off_finds_hot_pairs_with_bounded_cap(hot_corpus):
     # is what bounded the candidate space above.
     pairs = dd.minhash_lsh_pairs(
         hot_corpus.filter("doc_id < 20 or doc_id >= 1000"), "text", "doc_id",
-        num_hashes=64, bands=16, verify_threshold=0.2, max_bucket_size=1000,
+        verify_threshold=0.2,
     ).collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (0, 1) in ids and (1000, 1001) in ids
@@ -347,7 +347,7 @@ def test_embedding_cosine_zero_vector_pairs_with_nothing(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for threshold in (0.95, -1.0):
         got = dd.embedding_cosine_pairs(
-            df, "embedding", "vec_id", threshold=threshold, n_blocks=1
+            df, "embedding", "vec_id", threshold=threshold
         ).collect()
         assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
         assert all(r.cosine is not None and not math.isnan(r.cosine) for r in got)
@@ -518,19 +518,6 @@ def test_epoch_shuffle_rejects_bad_shards(spark):
     df = spark.range(3).withColumnRenamed("id", "doc_id")
     with _pytest.raises(ValueError):
         sp.epoch_shuffle(df, "doc_id", epoch=0, n_shards=0)
-
-
-def test_epoch_shuffle_rejects_non_pow2_modulus(spark):
-    import pytest as _pytest
-    from sentiment_analysis_data_engineering_spark.operators import sampling as sp
-
-    # odd `a` is only a unit (and the map only a bijection) mod 2^k —
-    # any other modulus must be rejected, not silently non-injective
-    with _pytest.raises(ValueError, match="power of two"):
-        sp.epoch_shuffle_params(0, modulus=1000)
-    df = spark.range(3).withColumnRenamed("id", "doc_id")
-    with _pytest.raises(ValueError, match="power of two"):
-        sp.epoch_shuffle(df, "doc_id", epoch=0, n_shards=2, modulus=3**7)
 
 
 def test_epoch_shuffle_out_of_range_id_fails_loudly(spark):

@@ -142,14 +142,13 @@ def test_release_pinned_refused_inside_scope(spark, weird):
 
 
 def test_register_pinned_tagged_and_released(spark):
-    """register_pinned tags frames non-recomputable in the registry
-    (the misuse-detection bookkeeping) and release_pinned still frees
-    them outside any scope."""
+    """register_pinned records the frame itself in the registry and
+    release_pinned frees it outside any scope."""
     df = spark.range(5).localCheckpoint(eager=True)
     dd.release_pinned()
     out = dd.register_pinned(df)
     assert out is df
-    assert dd._PINNED[-1] == (df, False)  # tagged: cannot recompute
+    assert dd._PINNED[-1] is df
     assert dd.release_pinned() == 1
 
 
@@ -203,7 +202,7 @@ def test_sketch_ops_on_empty_frames(spark):
     sk = cms_build(empty, "k")
     keys = spark.createDataFrame([(1,)], "k long")
     assert cms_estimate(sk, keys, "k").count() == 0  # no cells -> no estimates
-    bloom = bloom_build(empty, "k", m_bits=1 << 14)
+    bloom = bloom_build(empty, "k")
     assert bloom["n_keys"] == 0
     # empty filter rejects everything non-null, keeps nulls
     probe = spark.createDataFrame([(5,), (None,)], "k long")

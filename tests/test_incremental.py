@@ -112,15 +112,6 @@ def test_snapshot_diff_classes_and_null_safety(spark):
     assert got == {1: "deleted", 3: "changed", 5: "inserted"}
 
 
-def test_snapshot_diff_explicit_compare_cols(spark):
-    from sentiment_analysis_data_engineering_spark.operators.incremental import snapshot_diff
-
-    old = spark.createDataFrame([(1, "a", 1), (2, "b", 2)], "k int, v string, ignored int")
-    new = spark.createDataFrame([(1, "a", 9), (2, "B", 2)], "k int, v string, ignored int")
-    got = snapshot_diff(old, new, ["k"], compare_cols=["v"]).collect()
-    assert {r.k: r.change_type for r in got} == {2: "changed"}  # `ignored` ignored
-
-
 # ---- scd2_apply ------------------------------------------------------------
 
 

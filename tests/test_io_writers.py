@@ -108,7 +108,7 @@ def test_scan_predicate_pushdown(spark, tmp_table_dir):
     target = str(tmp_table_dir / "t_pushdown")
     append(_mk(spark, [(2023, 5, 1, 1.0), (2023, 6, 1, 2.0)]), target,
            partition_by=["year", "month"])
-    df = scan(spark, target, predicate=(F.col("year") == 2023) & (F.col("month") == 5))
+    df = scan(spark, target).filter((F.col("year") == 2023) & (F.col("month") == 5))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert df.count() == 1

@@ -34,8 +34,8 @@ def test_packs_respect_budget(spark, sf_dir):
 def test_packing_deterministic(spark):
     rows = [(i, 10 + (i * 37) % 90) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    a = pack_sequences(df, "doc_id", "n_tokens", budget=128, num_partitions=8)
-    b = pack_sequences(df, "doc_id", "n_tokens", budget=128, num_partitions=8)
+    a = pack_sequences(df, "doc_id", "n_tokens", budget=128)
+    b = pack_sequences(df, "doc_id", "n_tokens", budget=128)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -43,7 +43,7 @@ def test_pack_seq_orders_within_pack(spark):
     df = spark.createDataFrame(
         [(i, 100) for i in range(10)], "doc_id long, n_tokens long"
     )
-    out = pack_sequences(df, "doc_id", "n_tokens", budget=250, num_partitions=1)
+    out = pack_sequences(df, "doc_id", "n_tokens", budget=250)
     rows = sorted(out.collect(), key=lambda r: (r.pack_id, r.pack_seq))
     # 2 docs per pack (100+100 <= 250, third overflows)
     by_pack = {}

@@ -303,7 +303,8 @@ def test_bench_measure_records_jobs_and_isolates_failures(spark, sf_dir):
 def _source_trees():
     """(package dir, package modules, {path: AST}) over the package
     modules plus every non-test caller: ``bench.py``,
-    ``__spark_entry__.py`` and ``tools/``."""
+    ``__spark_entry__.py``, ``tools/`` and the repo benchmark's driver
+    ``perfbench/run.py``."""
     import ast
     from pathlib import Path
 
@@ -311,8 +312,42 @@ def _source_trees():
     pkg = root / "sentiment_analysis_data_engineering_spark"
     modules = [p for p in sorted(pkg.rglob("*.py")) if p.name != "__init__.py"]
     callers = [root / "bench.py", root / "__spark_entry__.py",
-               *sorted((root / "tools").glob("*.py"))]
+               *sorted((root / "tools").glob("*.py")), root / "perfbench" / "run.py"]
     return pkg, modules, {p: ast.parse(p.read_text()) for p in modules + callers}
+
+
+def _exports(tree) -> list[str]:
+    """The names in a module's ``__all__`` (empty when it has none)."""
+    import ast
+
+    return next(
+        (
+            [e.value for e in stmt.value.elts]
+            for stmt in tree.body
+            if isinstance(stmt, ast.Assign)
+            and any(getattr(t, "id", None) == "__all__" for t in stmt.targets)
+        ),
+        [],
+    )
+
+
+def _calls(trees):
+    """(function name, positional args, {keyword: value}, unpacks) for
+    every call in ``trees``. Positional args stop at the first ``*``;
+    ``unpacks`` is True when a ``*`` or ``**`` argument may pass any
+    parameter."""
+    import ast
+    import itertools
+
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if isinstance(call, ast.Call):
+                name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+                args = list(itertools.takewhile(
+                    lambda x: not isinstance(x, ast.Starred), call.args))
+                unpacks = len(args) < len(call.args) or any(
+                    k.arg is None for k in call.keywords)
+                yield name, args, {k.arg: k.value for k in call.keywords if k.arg}, unpacks
 
 
 #: Exported names that no registered query, DAG task, tool or other
@@ -332,11 +367,11 @@ _UNREACHED_EXPORTS = {
     "operators.relational": {"multiset_equal"},
     # test reference: the multi-operator edge-case test samples with it
     "operators.sampling": {"hash_sample"},
-    # SURVEY §2 T1–T8: the reference's DAG tasks
+    # SURVEY §2 T3–T6: the reference's DAG tasks; perfbench/run.py
+    # reaches them by name through getattr, which the scan cannot follow
     "plans.pipelines": {
         "load_company_esg", "load_company_group", "load_financial_ratio",
-        "load_key_metrics", "load_macro_daily", "load_macro_monthly",
-        "load_macro_quarterly", "load_stock_daily",
+        "load_key_metrics",
     },
 }
 
@@ -344,7 +379,8 @@ _UNREACHED_EXPORTS = {
 def test_every_export_is_reached_outside_tests():
     """Every name in a package module's ``__all__`` is used by code in
     the package (its own module counts, its own definition does not),
-    ``bench.py``, ``tools/`` or ``__spark_entry__.py`` — or sits on
+    ``bench.py``, ``tools/``, ``__spark_entry__.py`` or
+    ``perfbench/run.py`` — or sits on
     ``_UNREACHED_EXPORTS`` with its reason. A name only tests reach is
     code no query, DAG task or tool runs: delete it with its tests."""
     import ast
@@ -367,15 +403,7 @@ def test_every_export_is_reached_outside_tests():
     unreached = {}
     for mod in modules:
         tree = trees[mod]
-        exported = next(
-            (
-                [e.value for e in stmt.value.elts]
-                for stmt in tree.body
-                if isinstance(stmt, ast.Assign)
-                and any(getattr(t, "id", None) == "__all__" for t in stmt.targets)
-            ),
-            [],
-        )
+        exported = _exports(tree)
         elsewhere = set().union(*(u for p, u in uses.items() if p != mod))
         key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
         for name in exported:
@@ -402,7 +430,7 @@ _UNTAKEN_OPTIONS = {
 def test_every_option_value_is_taken_outside_tests():
     """Every option value of a public package function is passed by
     some caller outside ``tests/`` (package code, ``bench.py``,
-    ``tools/``, ``__spark_entry__.py``) — or sits on
+    ``tools/``, ``__spark_entry__.py``, ``perfbench/run.py``) — or sits on
     ``_UNTAKEN_OPTIONS`` with its reason. Option values are the
     non-default value of a bool-defaulted parameter and each literal of
     a ``param in / not in (<literals>)`` check in the body. A call that
@@ -411,7 +439,6 @@ def test_every_option_value_is_taken_outside_tests():
     name. A value only tests pass keeps a second code path alive that
     no query, DAG task or tool runs: delete it with its branch."""
     import ast
-    import itertools
 
     pkg, modules, trees = _source_trees()
     every = object()
@@ -457,27 +484,18 @@ def test_every_option_value_is_taken_outside_tests():
                     ))
 
     taken = {}
-    for tree in trees.values():
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
-                continue
-            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
-            args = list(itertools.takewhile(
-                lambda x: not isinstance(x, ast.Starred), call.args))
-            unpacks = len(args) < len(call.args) or any(
-                k.arg is None for k in call.keywords)
-            for key, pos, dflt, opts in public.get(name, []):
-                passed = dict(zip(pos, args))
-                passed.update({k.arg: k.value for k in call.keywords if k.arg})
-                for param in opts:
-                    got = taken.setdefault((key, param), set())
-                    if param in passed:
-                        x = passed[param]
-                        got.add(x.value if isinstance(x, ast.Constant) else every)
-                    elif unpacks:
-                        got.add(every)
-                    elif isinstance(dflt.get(param), ast.Constant):
-                        got.add(dflt[param].value)
+    for name, args, kw, unpacks in _calls(trees):
+        for key, pos, dflt, opts in public.get(name, []):
+            passed = dict(zip(pos, args)) | kw
+            for param in opts:
+                got = taken.setdefault((key, param), set())
+                if param in passed:
+                    x = passed[param]
+                    got.add(x.value if isinstance(x, ast.Constant) else every)
+                elif unpacks:
+                    got.add(every)
+                elif isinstance(dflt.get(param), ast.Constant):
+                    got.add(dflt[param].value)
 
     untaken = {}
     for defs in public.values():
@@ -488,6 +506,64 @@ def test_every_option_value_is_taken_outside_tests():
                     untaken[(key, param)] = values - got
 
     assert untaken == _UNTAKEN_OPTIONS
+
+
+#: Defaulted parameters of exported functions that no registered query,
+#: DAG task, tool, benchmark or other package code passes, each kept
+#: for the reason in its comment: (module.function, parameter).
+_UNPASSED_PARAMETERS = {
+    # SURVEY §2.1 S7–S9: the reference's dataset/table DDL options
+    ("catalog.analyze_table", "columns"),
+    ("catalog.create_table", "location"),
+    ("catalog.create_warehouse", "database"),
+    ("catalog.drop_database", "cascade"),
+    # test fixtures: the sizes and variants only tests ask for
+    ("fixtures.indicator_json", "monthly"),
+    ("fixtures.labeled_quality_docs", "n_docs"),
+    ("fixtures.labeled_quality_docs", "words_per_doc"),
+    ("fixtures.ohlcv_history", "tickers"),
+    # SURVEY §2 F3–F5: the reference's NaN and 0 defaults
+    ("functions.scalar.coalesce_default", "default"),
+    # test reference: the multi-operator edge-case test salts its sample
+    ("operators.sampling.hash_sample", "salt"),
+}
+
+
+def test_every_defaulted_parameter_is_passed_outside_tests():
+    """Every defaulted parameter of a function named in a package
+    module's ``__all__`` is passed, by keyword or position, by some
+    call outside ``tests/`` (package code, ``bench.py``, ``tools/``,
+    ``__spark_entry__.py``, ``perfbench/run.py``) — or sits on
+    ``_UNPASSED_PARAMETERS`` with its reason. Calls match by function
+    name; ``*``/``**`` unpacking passes every parameter. A parameter no
+    caller passes is a knob with one value in use: fold it into the
+    body (a module constant where a guard needs a bound that tests
+    monkeypatch) and delete the branches only its other values select."""
+    import ast
+
+    pkg, modules, trees = _source_trees()
+
+    # function name -> [(module.function, positional names, defaulted names)]
+    exported = {}
+    for mod in modules:
+        key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
+        names = _exports(trees[mod])
+        for fn in trees[mod].body:
+            if isinstance(fn, ast.FunctionDef) and fn.name in names:
+                a = fn.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                dflt = pos[len(pos) - len(a.defaults):] + [
+                    x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                ]
+                exported.setdefault(fn.name, []).append((f"{key}.{fn.name}", pos, dflt))
+
+    unpassed = {(key, p) for defs in exported.values() for key, _, dflt in defs for p in dflt}
+    for name, args, kw, unpacks in _calls(trees):
+        for key, pos, dflt in exported.get(name, []):
+            passed = set(pos[: len(args)]) | set(kw)
+            unpassed -= {(key, p) for p in dflt if unpacks or p in passed}
+
+    assert unpassed == _UNPASSED_PARAMETERS
 
 
 def test_driver_rows_become_frames_only_through_local_frame():

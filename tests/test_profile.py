@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from sentiment_analysis_data_engineering_spark.operators.profile import profile_table
 
 
@@ -48,15 +46,6 @@ def test_profile_timestamp_formatting(spark):
     got = _as_dict(profile_table(df))
     assert got[("t", "min")] == "2020-01-01 00:00:00"
     assert got[("t", "max")] == "2021-03-04 05:06:07"
-
-
-def test_profile_column_subset_and_unknown(spark):
-    df = spark.createDataFrame([(1, "a")], "k long, s string")
-    got = _as_dict(profile_table(df, ["s"]))
-    assert ("k", "n_null") not in got
-    assert ("s", "avg_len") in got
-    with pytest.raises(ValueError, match="columns not in frame"):
-        profile_table(df, ["nope"])
 
 
 def test_profile_scan_counts_and_no_sort_agg(spark):

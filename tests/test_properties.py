@@ -31,8 +31,7 @@ _slow = settings(
 @_slow
 def test_packing_laws(spark, docs, budget):
     df = spark.createDataFrame(docs, "doc_id long, n_tokens long")
-    out = pack_sequences(df, "doc_id", "n_tokens", budget=budget,
-                         num_partitions=4).collect()
+    out = pack_sequences(df, "doc_id", "n_tokens", budget=budget).collect()
     # law 1: bijection on doc ids
     assert sorted(r.doc_id for r in out) == sorted(d for d, _ in docs)
     # law 2: no multi-doc pack exceeds the budget
@@ -240,7 +239,7 @@ def test_bloom_no_false_negative_law(spark, dim, probe):
     )
 
     d = spark.createDataFrame([(x,) for x in dim], "k long")
-    bloom = bloom_build(d, "k", m_bits=1 << 12)
+    bloom = bloom_build(d, "k")
     p = spark.createDataFrame([(x,) for x in probe], "k long")
     kept = [r.k for r in bloom_prune(p, "k", bloom).collect()]
     want_kept = [x for x in probe if x in set(dim)]

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 
@@ -94,82 +93,3 @@ def test_unsupported_column_type_rejected(registered, tmp_path):
             .option("path", str(tmp_path))
             .load()
         ).collect()
-
-
-def test_streaming_picks_up_new_files(registered, tmp_path, spark):
-    # micro-batch 1 sees the initial payload; a file dropped between
-    # triggers arrives in a later batch — the append-only drop-zone
-    # contract
-    d = tmp_path / "drop"
-    d.mkdir()
-    _write(d / "0001.jsonl", [{"k": 1, "v": 1.0}, {"k": 2, "v": 2.0}])
-    stream = (
-        spark.readStream.format("json_payload")
-        .schema("k long, v double")
-        .option("path", str(d))
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_payload_stream")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        import time
-
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) n FROM t_payload_stream").first().n == 2:
-                break
-            time.sleep(0.5)
-        _write(d / "0002.jsonl", [{"k": 3, "v": 0.5}])
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) n FROM t_payload_stream").first().n == 3:
-                break
-            time.sleep(0.5)
-        got = sorted(
-            (r.k, r.v)
-            for r in spark.sql("SELECT * FROM t_payload_stream").collect()
-        )
-        assert got == [(1, 1.0), (2, 2.0), (3, 0.5)]
-    finally:
-        q.stop()
-
-
-def test_streaming_checkpoint_restart_consumes_only_new_files(
-    registered, tmp_path, spark
-):
-    # run 1 consumes the initial payload under a checkpoint; run 2 with
-    # the SAME checkpoint must resume from the stored offset and emit
-    # only the file dropped in between — no re-emission of run 1's rows
-    d = tmp_path / "drop"
-    d.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    _write(d / "0001.jsonl", [{"k": 1, "v": 1.0}, {"k": 2, "v": 2.0}])
-
-    def run_once():
-        # memory sink can't recover from a checkpoint; foreachBatch can
-        rows = []
-        stream = (
-            spark.readStream.format("json_payload")
-            .schema("k long, v double")
-            .option("path", str(d))
-            .load()
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda batch_df, batch_id: rows.extend(batch_df.collect())
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        return rows
-
-    first = run_once()
-    assert sorted((r.k, r.v) for r in first) == [(1, 1.0), (2, 2.0)]
-    _write(d / "0002.jsonl", [{"k": 3, "v": 0.5}])
-    second = run_once()
-    assert sorted((r.k, r.v) for r in second) == [(3, 0.5)]

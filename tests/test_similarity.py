@@ -98,46 +98,27 @@ def test_kmeans_clusters_assigns_every_vector(spark, sf_dir):
     from sentiment_analysis_data_engineering_spark.plans.registry import load_tables
 
     (emb,) = load_tables(spark, sf_dir, "embeddings")
-    out = sim.kmeans_clusters(emb, k=8, seed=7, max_iter=5)
+    out = sim.kmeans_clusters(emb, k=8, seed=7)
     assert out.count() == emb.count()                 # total assignment
     n_clusters = out.select("cluster").distinct().count()
     assert 2 <= n_clusters <= 8                       # nondegenerate
     # assignment is a function of the vector: same call → same result
-    again = sim.kmeans_clusters(emb, k=8, seed=7, max_iter=5)
+    again = sim.kmeans_clusters(emb, k=8, seed=7)
     a = {r.vec_id: r.cluster for r in out.collect()}
     b = {r.vec_id: r.cluster for r in again.collect()}
     assert a == b
 
 
-def test_kmeans_fit_sample_smaller_than_k_rejected(spark, sf_dir):
-    import pytest
+def test_semantic_dedup_fit_sample_scales_with_k(spark, sf_dir, monkeypatch):
     from sentiment_analysis_data_engineering_spark.operators import similarity as sim
     from sentiment_analysis_data_engineering_spark.plans.registry import load_tables
 
     (emb,) = load_tables(spark, sf_dir, "embeddings")
-    # a sample smaller than k cannot yield k distinct centers; <=0
-    # would hand MLlib an empty fit frame — both rejected eagerly
-    with pytest.raises(ValueError, match="fit_sample_rows"):
-        sim.kmeans_clusters(emb, k=8, fit_sample_rows=7)
-    with pytest.raises(ValueError, match="fit_sample_rows"):
-        sim.kmeans_clusters(emb, k=8, fit_sample_rows=0)
-    # boundary k == fit_sample_rows is legal and assigns every vector
-    out = sim.kmeans_clusters(emb, k=4, seed=7, max_iter=3, fit_sample_rows=4)
-    assert out.count() == emb.count()
-
-
-def test_semantic_dedup_fit_sample_scales_with_k(spark, sf_dir):
-    from sentiment_analysis_data_engineering_spark.operators import similarity as sim
-    from sentiment_analysis_data_engineering_spark.plans.registry import load_tables
-
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    # a caller-supplied sample FLOOR below 32*k must not cap the
-    # distinct-center count: semantic_dedup auto-raises it, so a large
-    # k with a small floor still conserves every vector (would raise
-    # in kmeans_clusters if passed through unscaled)
-    out = sim.semantic_dedup(
-        emb, k=16, threshold=0.95, seed=7, fit_sample_rows=8
-    )
+    # a sample FLOOR below 32*k must not cap the distinct-center
+    # count: semantic_dedup auto-raises it, so a large k with a small
+    # floor still conserves every vector
+    monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS", 8)
+    out = sim.semantic_dedup(emb, k=16, threshold=0.95)
     assert out.count() == emb.count()
 
 
@@ -297,20 +278,20 @@ def test_semantic_dedup_two_tight_clusters(spark):
         r.vec_id: r.keep
         for r in sim.semantic_dedup(
             df, vec_col="embedding", id_col="vec_id",
-            k=2, threshold=0.9, seed=7,
+            k=2, threshold=0.9,
         ).collect()
     }
     assert out == {1: True, 2: False, 3: False, 10: True, 11: False, 20: True}
 
 
-def test_semantic_dedup_oversized_cluster_guard(spark):
-    # with max_cluster_size below the cluster population, members are
+def test_semantic_dedup_oversized_cluster_guard(spark, monkeypatch):
+    # with MAX_CLUSTER_SIZE below the cluster population, members are
     # excluded from pairing and ALL kept
+    monkeypatch.setattr(sim, "MAX_CLUSTER_SIZE", 3)
     rows = [(i, [1.0, 0.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = sim.semantic_dedup(
-        df, vec_col="embedding", id_col="vec_id",
-        k=2, threshold=0.5, seed=7, max_cluster_size=3,
+        df, vec_col="embedding", id_col="vec_id", k=2, threshold=0.5
     )
     assert all(r.keep for r in out.collect())
     assert out.count() == 6
@@ -507,13 +488,13 @@ def test_crossencoder_weights_deterministic_and_bounded():
 # ---------------------------------------------------------------------------
 
 
-def test_ivfpq_index_probe_equals_adhoc_query(spark, sf_dir, tmp_path):
+def test_ivfpq_index_probe_equals_adhoc_query(spark, sf_dir, tmp_path, monkeypatch):
     """An index built from the corpus and probed is the SAME arithmetic
     as the ad-hoc ivfpq_cosine_topk (shared train/encode/qtab stages):
     identical (query, neighbor, rank) sets, bit-for-bit, once both fit
     from the same sample draw (the persisted index trains hash-ordered
-    — see _sample_normalized — so the ad-hoc side passes
-    sample_order="hash" here)."""
+    — see _sample_normalized — so the ad-hoc fit is made to draw by
+    hash here)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
@@ -523,11 +504,14 @@ def test_ivfpq_index_probe_equals_adhoc_query(spark, sf_dir, tmp_path):
         (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 12))
         for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
     )
+    train = sim._ivfpq_train_model
+    monkeypatch.setattr(
+        sim, "_ivfpq_train_model",
+        lambda *a, **kw: train(*a, **kw, sample_order="hash"),
+    )
     adhoc = sorted(
         (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 12))
-        for r in sim.ivfpq_cosine_topk(
-            queries, emb, k=3, sample_order="hash"
-        ).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb, k=3).collect()
     )
     assert probe == adhoc and probe
 
@@ -1227,71 +1211,6 @@ def test_ivfpq_drift_audit_surfaces_unaudited_rows(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert sub["all"].sum_qerr_micro == part["all"].sum_qerr_micro
-
-
-def test_ivfpq_drift_audit_rejects_sample_mod_before_any_job(
-    spark, sf_dir, tmp_path
-):
-    """A sample_mod below 1 is refused before the audit submits any
-    job — in particular before a cold model cache pays its collects."""
-    from sentiment_analysis_data_engineering_spark.operators.observe import (
-        spark_job_count,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    sim.evict_model_cache(path)
-    before = spark_job_count(spark)
-    with pytest.raises(ValueError, match="sample_mod must be >= 1"):
-        sim.ivfpq_drift_audit(spark, path, emb, sample_mod=0)
-    assert spark_job_count(spark) == before
-
-
-def test_ivfpq_drift_audit_sample_mod_replays_exact_subsample(
-    spark, sf_dir, tmp_path
-):
-    """The sampled audit IS the exact audit over the deterministic
-    xxhash64(id)%mod==0 subsample — bit-identical, every run (the law
-    behind using it as the cheap streaming retrain-trigger check)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(emb, path)
-    mod = 3
-    sampled = sorted(
-        tuple(r)
-        for r in sim.ivfpq_drift_audit(
-            spark, path, emb, sample_mod=mod
-        ).collect()
-    )
-    # independent replay: filter the corpus to the sampled ids, audit
-    # exactly, and drop index rows outside the sample the same way
-    keep = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mod)) == 0
-    subset = emb.filter(keep)
-    n_sample = subset.count()
-    assert 0 < n_sample < emb.count()
-    exact_on_subset = {
-        r.segment: r
-        for r in sim.ivfpq_drift_audit(spark, path, subset).collect()
-    }["all"]  # the full audit of a partial corpus also reports orphans
-    by_seg = {t[0]: t for t in sampled}
-    assert by_seg["all"][1] == n_sample
-    assert by_seg["all"][4] == exact_on_subset.sum_qerr_micro
-    # unmatched index rows were excluded by the codes-side filter, not
-    # dumped into __unaudited__ — the sample is symmetric on both sides
-    assert set(by_seg) == {"all"}
-    # determinism: a second run is bit-identical
-    again = sorted(
-        tuple(r)
-        for r in sim.ivfpq_drift_audit(
-            spark, path, emb, sample_mod=mod
-        ).collect()
-    )
-    assert again == sampled
 
 
 # ---------------------------------------------------------------------------

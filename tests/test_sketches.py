@@ -94,7 +94,7 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
 
 def test_bloom_prune_keeps_nulls(spark):
     dim = spark.createDataFrame([(1,), (2,)], "k long")
-    bloom = bloom_build(dim, "k", m_bits=1 << 14)
+    bloom = bloom_build(dim, "k")
     probe = spark.createDataFrame([(1,), (None,), (999,)], "k long")
     kept = [r.k for r in bloom_prune(probe, "k", bloom).collect()]
     assert None in kept and 1 in kept
@@ -108,7 +108,7 @@ def test_bloom_prune_join_equivalence(spark):
     dim = spark.createDataFrame(
         [(k, k * 10) for k in range(0, 1000, 7)], "k long, d long"
     )
-    bloom = bloom_build(dim, "k", m_bits=1 << 14)
+    bloom = bloom_build(dim, "k")
     plain = fact.join(dim, "k").groupBy("k").agg(F.sum("v").alias("s"))
     pruned = (
         bloom_prune(fact, "k", bloom)
@@ -174,7 +174,7 @@ def test_bloom_exact_above_2_53_with_nulls_present(spark):
 
     big = (1 << 53) + 1  # loses precision if it ever becomes float64
     dim = spark.createDataFrame([(big,), (None,), (7,)], "k long")
-    bloom = bloom_build(dim, "k", m_bits=1 << 14)
+    bloom = bloom_build(dim, "k")
     assert bloom["n_keys"] == 2  # null dropped JVM-side
     probe = spark.createDataFrame(
         [(big,), ((1 << 53),), (None,), (7,)], "k long"
@@ -194,7 +194,7 @@ def test_bloom_string_keys_via_xxhash64(spark):
     dim = spark.createDataFrame(
         [(f"key_{i}",) for i in range(0, 600, 3)], "k string"
     ).select(F.xxhash64("k").alias("h"), "k")
-    bloom = bloom_build(dim, "h", m_bits=1 << 14)
+    bloom = bloom_build(dim, "h")
     probe = spark.createDataFrame(
         [(f"key_{i}",) for i in range(600)], "k string"
     ).select(F.xxhash64("k").alias("h"), "k")

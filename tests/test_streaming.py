@@ -199,9 +199,8 @@ def test_autoretrain_arm_fails_loudly_on_zero_baseline(
 ):
     """A baseline audit that matches ZERO index vectors would make the
     cross-multiplied drift trigger 0 > 0 forever — silently-dead drift
-    detection (r10 advice item 2). Arming must raise instead, for both
-    dead-baseline causes: a corpus that explains no index row, and an
-    audit_sample_mod that samples the index to nothing."""
+    detection (r10 advice item 2). Arming must raise instead when the
+    corpus of record explains no index row."""
     from sentiment_analysis_data_engineering_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -228,64 +227,3 @@ def test_autoretrain_arm_fails_loudly_on_zero_baseline(
             stream(), path, checkpoint=str(tmp_path / "c1"),
             auto_retrain_drift_ratio=2.0, retrain_corpus=wrong_corpus,
         )
-    # sample_mod so large the deterministic id sample is empty
-    with pytest.raises(ValueError, match="ZERO index vectors"):
-        st.run_ivfpq_merge_stream(
-            stream(), path, checkpoint=str(tmp_path / "c2"),
-            auto_retrain_drift_ratio=2.0, retrain_corpus=emb,
-            audit_sample_mod=10**9,
-        )
-
-
-def test_autoretrain_sampled_miss_falls_back_to_exact_batch_audit(
-    spark, sf_dir, tmp_path
-):
-    """With audit_sample_mod armed, a micro-batch whose ids ALL hash
-    outside the 1/mod sample must not silently no-op the drift check
-    (r10 advice item 3): the maintainer falls back to an exact audit
-    of that batch, so audit_n_vectors covers every batch row and the
-    stats row is marked audit_sample_fallback."""
-    from sentiment_analysis_data_engineering_spark.operators import similarity as sim
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    path = str(tmp_path / "idx")
-    sim.ivfpq_write_index(base, path)
-
-    # pick (mod, batch id) deterministically: the batch's single id
-    # hashes OUTSIDE the sample while the index sample stays non-empty
-    delta_ids = [
-        r.vec_id
-        for r in emb.filter(F.col("vec_id") % 5 == 0)
-        .select(
-            "vec_id", F.pmod(F.xxhash64("vec_id"), F.lit(7)).alias("_h")
-        )
-        .filter(F.col("_h") != 0)
-        .limit(1)
-        .collect()
-    ]
-    assert delta_ids, "fixture has no id hashing outside the mod-7 sample"
-    batch = emb.filter(F.col("vec_id") == delta_ids[0])
-    n_base_sampled = base.filter(
-        F.pmod(F.xxhash64("vec_id"), F.lit(7)) == 0
-    ).count()
-    assert n_base_sampled > 0  # baseline sample non-empty — arming valid
-
-    landing = str(tmp_path / "landing")
-    batch.coalesce(1).write.parquet(landing, mode="append")
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    stats = st.run_ivfpq_merge_stream(
-        stream, path, checkpoint=str(tmp_path / "ckpt"),
-        auto_retrain_drift_ratio=10**6,  # never fires — isolate the audit
-        retrain_corpus=emb, audit_sample_mod=7,
-    )
-    (s,) = stats
-    assert s["audit_checked"] is True
-    assert s.get("audit_sample_fallback") is True
-    assert s["audit_n_vectors"] == 1  # the exact fallback saw the batch

@@ -186,16 +186,16 @@ def test_fuzzy_match_blocks_and_refines(spark):
     assert got == {(1, 2): 3, (1, 4): 3, (2, 4): 3}
 
 
-def test_fuzzy_match_oversized_block_guard(spark):
+def test_fuzzy_match_oversized_block_guard(spark, monkeypatch):
     from pyspark.sql import functions as F
 
-    from sentiment_analysis_data_engineering_spark.operators.fuzzy import fuzzy_match_pairs
+    from sentiment_analysis_data_engineering_spark.operators import fuzzy
 
+    monkeypatch.setattr(fuzzy, "MAX_BLOCK_SIZE", 10)
     rows = [(i, f"name {i}", "same") for i in range(50)]
     df = spark.createDataFrame(rows, "id long, name string, block string")
-    out = fuzzy_match_pairs(
-        df, "name", "id", block_col=F.col("block"),
-        max_distance=10, max_block_size=10,
+    out = fuzzy.fuzzy_match_pairs(
+        df, "name", "id", block_col=F.col("block"), max_distance=10
     )
     assert out.count() == 0  # whole block dropped, not exploded
 
@@ -393,18 +393,19 @@ def test_classifier_score_additive_over_concat(spark):
     assert sab == sa + sb
 
 
-def test_classifier_score_n_features_is_honored(spark):
+def test_classifier_score_n_features_is_honored(spark, monkeypatch):
     # same text, different hash space => (generically) different score;
     # 16 features collides almost everything, 4096 does not
     t = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-    s_small = _one(spark, t, tx.hashed_classifier_score("text", n_features=16))
     s_big = _one(spark, t, tx.hashed_classifier_score("text"))
+    monkeypatch.setattr(tx, "_CLF_FEATURES", 16)
+    s_small = _one(spark, t, tx.hashed_classifier_score("text"))
     n, s_py = _py_clf_score(t, n_features=16)
-    assert s_small == s_py          # parameter reaches the fold
+    assert s_small == s_py          # the feature space reaches the fold
     assert s_small != s_big         # and actually changes the hash space
 
 
-def test_classifier_learned_weights_equal_lcg_form(spark):
+def test_classifier_learned_weights_equal_lcg_form(spark, monkeypatch):
     # the learned-weight path fed the LCG weights IS the LCG form —
     # bit-identical on every fixture text, at both feature widths
     texts = [
@@ -416,10 +417,11 @@ def test_classifier_learned_weights_equal_lcg_form(spark):
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     for nf in (16, 4096):
-        w = tx.lcg_classifier_weights(nf)
+        monkeypatch.setattr(tx, "_CLF_FEATURES", nf)
+        w = tx.lcg_classifier_weights()
         assert len(w) == nf
         rows = df.select(
-            tx.hashed_classifier_score("text", n_features=nf).alias("lcg"),
+            tx.hashed_classifier_score("text").alias("lcg"),
             tx.hashed_classifier_score_learned("text", w).alias("learned"),
         ).collect()
         for r in rows:
