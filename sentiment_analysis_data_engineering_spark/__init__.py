@@ -11,7 +11,7 @@ Layout
 ------
 - ``session``    SparkSession factory (AQE, dynamic partition overwrite, UTC).
 - ``schemas``    The reference's 8 warehouse StructTypes + fixture schemas.
-- ``catalog``    Database/table DDL and parquet-view registration.
+- ``catalog``    Database/table DDL (create, alter, analyze, drop, list).
 - ``sources``    Scan/append/idempotent-append/replace-partition writers,
                  JSON (REST-shaped) ingestion.
 - ``functions``  Scalar layer: date decomposition, casts, coalescing,

@@ -27,21 +27,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import ID_COL, VEC_COL
+
 __all__ = ["pca_fit_project"]
 
 
-def pca_fit_project(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-) -> tuple[DataFrame, dict]:
-    """Fit PCA(k) on ``df[vec_col]`` (array<float|double>) and project.
+def pca_fit_project(df: DataFrame, *, k: int = 8) -> tuple[DataFrame, dict]:
+    """Fit PCA(k) on the embeddings' vector column (array<float|double>)
+    and project.
 
     Returns ``(projected, info)``:
 
-    - ``projected`` — ``id_col`` plus ``components`` array<double> of
+    - ``projected`` — the id column plus ``components`` array<double> of
       length ``k`` (the uncentered projection z = PCᵀx, MLlib
       semantics).
     - ``info`` — driver-side model state: ``explained_variance``
@@ -56,9 +53,9 @@ def pca_fit_project(
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     vecs = df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            F.transform(F.col(VEC_COL), lambda x: x.cast("double"))
         ).alias("_features"),
     )
     model = PCA(k=k, inputCol="_features", outputCol="_pca").fit(vecs)
@@ -73,6 +70,6 @@ def pca_fit_project(
         ),
     }
     projected = model.transform(vecs).select(
-        F.col(id_col), vector_to_array(F.col("_pca")).alias("components")
+        F.col(ID_COL), vector_to_array(F.col("_pca")).alias("components")
     )
     return projected, info

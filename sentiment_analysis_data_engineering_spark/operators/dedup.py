@@ -85,9 +85,24 @@ MINHASH_NUM_HASHES = 64
 MINHASH_BANDS = 16
 SHINGLE_SIZE = 5
 
-#: skew guard: LSH buckets with more docs than this are dropped before
-#: the pair join (a B-doc bucket yields B² candidate pairs)
+#: skew guard: LSH buckets and shingles with more docs than this are
+#: dropped before the pair join (a B-doc bucket yields B² candidate
+#: pairs)
 MAX_BUCKET_SIZE = 1000
+
+#: ngram_jaccard_pairs and the minhash_lsh_pairs verify keep pairs
+#: whose exact n-gram Jaccard reaches this
+JACCARD_THRESHOLD = 0.2
+
+#: template_doc_flags: a shingle is hot when at least this many docs
+#: (and 1% of the corpus) hold it
+HOT_MIN_DOCS = 5
+
+#: simhash_pairs keeps pairs within this Hamming distance
+MAX_HAMMING = 3
+
+#: embedding_cosine_pairs keeps pairs whose cosine reaches this
+COSINE_THRESHOLD = 0.4
 
 #: cap on embedding_cosine_pairs' block count B (B = 2·parallelism)
 MAX_COSINE_BLOCKS = 64
@@ -253,15 +268,17 @@ def word_ngrams(col: Column | str, n: int = 5) -> Column:
     return F.when(c >= n, grams).otherwise(F.array(joined))
 
 
-def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, shingle) pairs, distinct per document. NULL/whitespace-only
-    texts emit NO rows — without the filter, ``word_ngrams`` wraps them
-    into a single NULL/empty shingle that every such doc shares, and
-    they'd all pair up as jaccard-1.0 "duplicates" of each other."""
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, ``SHINGLE_SIZE``-word shingle) pairs, distinct per document.
+    NULL/whitespace-only texts emit NO rows — without the filter,
+    ``word_ngrams`` wraps them into a single NULL/empty shingle that
+    every such doc shares, and they'd all pair up as jaccard-1.0
+    "duplicates" of each other."""
     return (
         df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "")
         .select(F.col(id_col).alias("_id"),
-                F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("_sh"))
+                F.explode(F.array_distinct(word_ngrams(text_col, SHINGLE_SIZE)))
+                .alias("_sh"))
     )
 
 
@@ -270,11 +287,9 @@ def contamination_screen(
     text_col: str,
     id_col: str,
     eval_pred: Column,
-    *,
-    n: int = 5,
 ) -> DataFrame:
     """Benchmark-contamination screen: flag every training document
-    sharing at least one word n-gram shingle with the held-out/eval
+    sharing at least one word ``SHINGLE_SIZE``-gram shingle with the held-out/eval
     split (the standard 'n-gram overlap' decontamination rule, e.g.
     GPT-3 appendix C / PaLM §7 — public methodology).
 
@@ -290,12 +305,12 @@ def contamination_screen(
     the final count. No cross join, no theta join.
     """
     ev_shingles = (
-        _doc_shingles(df.filter(eval_pred), text_col, id_col, n)
+        _doc_shingles(df.filter(eval_pred), text_col, id_col)
         .select("_sh")
         .distinct()
     )
     hits = (
-        _doc_shingles(_spread(df.filter(~eval_pred), id_col), text_col, id_col, n)
+        _doc_shingles(_spread(df.filter(~eval_pred), id_col), text_col, id_col)
         .join(F.broadcast(ev_shingles), "_sh")
         .groupBy("_id")
         .agg(F.count("*").alias("shared_shingles"))
@@ -315,11 +330,6 @@ def template_doc_flags(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    n: int = 5,
-    hot_frac: float = 0.01,
-    hot_min_docs: int = 5,
-    template_ratio: float = 0.5,
 ) -> DataFrame:
     """Templated-document detection via hot-shingle ratio: a document
     most of whose word n-grams also occur in many OTHER documents is
@@ -330,8 +340,8 @@ def template_doc_flags(
     public methodology).
 
     A shingle is *hot* when its document frequency ≥
-    ``max(hot_min_docs, hot_frac · n_docs)``; a doc is flagged when
-    ≥ ``template_ratio`` of its distinct shingles are hot.
+    ``max(HOT_MIN_DOCS, 0.01 · n_docs)``; a doc is flagged when at
+    least half of its distinct shingles are hot.
 
     Scale shape: distinct-per-doc shingles exploded ONCE and pinned
     (MEMORY_AND_DISK, same trade the MinHash path takes — without the
@@ -349,11 +359,9 @@ def template_doc_flags(
     Returns one row per document: (id, n_shingles, hot_shingles,
     hot_ratio, is_template) — clean docs asserted clean, not absent.
     """
-    sh = _pin(_doc_shingles(_spread(df, id_col), text_col, id_col, n))
+    sh = _pin(_doc_shingles(_spread(df, id_col), text_col, id_col))
     n_docs = df.select(F.count("*").alias("_nd"))
-    hot_bar = F.greatest(
-        F.lit(hot_min_docs), F.ceil(F.lit(hot_frac) * F.col("_nd"))
-    )
+    hot_bar = F.greatest(F.lit(HOT_MIN_DOCS), F.ceil(F.lit(0.01) * F.col("_nd")))
     hot = (
         sh.groupBy("_sh")
         .agg(F.count("*").alias("_df"))
@@ -383,28 +391,21 @@ def template_doc_flags(
             n_sh.cast("long").alias("n_shingles"),
             F.coalesce("_hot", F.lit(0)).cast("long").alias("hot_shingles"),
             ratio.alias("hot_ratio"),
-            (ratio >= template_ratio).alias("is_template"),
+            (ratio >= 0.5).alias("is_template"),
         )
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    n: int = 5,
-    threshold: float = 0.2,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
+def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle
+    and reaching ``JACCARD_THRESHOLD``.
 
     Plan: explode distinct shingles → self equi-join on the shingle
     (never a cross join; candidate generation is keyed on shingle) →
     count shared shingles per pair → join per-doc shingle counts →
     jaccard = inter / (|A| + |B| - inter).
 
-    ``max_bucket_size`` drops degenerate stop-shingles shared by more
+    ``MAX_BUCKET_SIZE`` drops degenerate stop-shingles shared by more
     than N docs — they generate O(N²) candidates while carrying no
     signal (the standard skew guard for shingle joins). The guard is a
     window count over the shingle key (one shuffle, no self-join), and
@@ -412,12 +413,12 @@ def ngram_jaccard_pairs(
     references it three times (sizes + both join sides).
     """
     df = _spread(df, id_col)
-    sh = _pin(_doc_shingles(df, text_col, id_col, n))
+    sh = _pin(_doc_shingles(df, text_col, id_col))
     sizes = sh.groupBy("_id").agg(F.count("*").alias("_size"))
 
     sh_kept = _pin(
         sh.withColumn("_df", F.count("*").over(Window.partitionBy("_sh")))
-        .filter(F.col("_df") <= max_bucket_size)
+        .filter(F.col("_df") <= MAX_BUCKET_SIZE)
         .drop("_df")
     )
 
@@ -441,7 +442,7 @@ def ngram_jaccard_pairs(
                 6,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     return out
 
@@ -473,7 +474,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     they can't be near-duplicates of anything.
     """
     return _signatures_from_shingle_rows(
-        _doc_shingles(df, text_col, id_col, SHINGLE_SIZE), MINHASH_NUM_HASHES
+        _doc_shingles(df, text_col, id_col), MINHASH_NUM_HASHES
     )
 
 
@@ -536,27 +537,20 @@ def _band_buckets(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    shingle_size: int = SHINGLE_SIZE,
-    verify_threshold: float | None = 0.2,
-) -> DataFrame:
-    """Near-duplicate candidate pairs via LSH banding over MinHash
-    signatures, optionally verified with exact n-gram Jaccard. The
-    twice-referenced signature/bucket frames are pinned (see _pin).
+def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Near-duplicate pairs via LSH banding over MinHash signatures,
+    verified with exact n-gram Jaccard. The twice-referenced
+    shingle/signature/bucket frames are pinned (see _pin).
 
-    Banding: num_hashes/bands rows per band; a pair lands in a bucket iff
-    a whole band of their signatures agrees. With 64 hashes / 16 bands
-    (r=4), the S-curve threshold is (1/16)^(1/4) ≈ 0.5 Jaccard.
+    Banding: MINHASH_NUM_HASHES/MINHASH_BANDS rows per band; a pair
+    lands in a bucket iff a whole band of their signatures agrees. With
+    64 hashes / 16 bands (r=4), the S-curve threshold is (1/16)^(1/4)
+    ≈ 0.5 Jaccard.
 
-    Output: (id_a, id_b, n_bands[, jaccard]) — one row per candidate
-    pair; the optional verify join recomputes exact Jaccard and filters.
+    Output: (id_a, id_b, n_bands, jaccard) — one row per candidate pair
+    whose exact Jaccard reaches ``JACCARD_THRESHOLD``.
     """
+    num_hashes, bands = MINHASH_NUM_HASHES, MINHASH_BANDS
     rows_per_band = num_hashes // bands
     df = _spread(df, id_col)
     # Shingle ARRAYS are computed ONCE per document: the signature path
@@ -564,12 +558,12 @@ def minhash_lsh_pairs(
     # directly — without the shared pin the word_ngrams transform (the
     # most expensive scalar work in the plan) would run twice over the
     # corpus.
-    doc_sh = df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "").select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(word_ngrams(text_col, shingle_size)).alias("_shs"),
+    doc_sh = _pin(
+        df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "").select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(word_ngrams(text_col, SHINGLE_SIZE)).alias("_shs"),
+        )
     )
-    if verify_threshold is not None:
-        doc_sh = _pin(doc_sh)
     sig = _pin(
         _signatures_from_shingle_rows(
             doc_sh.select("_id", F.explode("_shs").alias("_sh")), num_hashes
@@ -595,8 +589,6 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_bands"))
     )
-    if verify_threshold is None:
-        return pairs
     # Verify CANDIDATES ONLY: banding already pruned the pair space, so
     # fetch each side's shingle ARRAY (the pinned doc_sh frame computed
     # once above) and intersect per row (array_intersect) — zero
@@ -617,7 +609,7 @@ def minhash_lsh_pairs(
                 inter / (F.size("_sha") + F.size("_shb") - inter), 6
             ),
         )
-        .filter(F.col("jaccard") >= verify_threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "n_bands", "jaccard")
     )
 
@@ -647,8 +639,8 @@ def minhash_lsh_probe(
     (``MINHASH_NUM_HASHES`` longs per doc, orders of magnitude smaller
     than its text).
 
-    Contract (pytest-pinned): the result equals the full-corpus
-    ``minhash_lsh_pairs(verify_threshold=None)``
+    Contract (pytest-pinned): the result equals the candidate pairs of
+    the full-corpus ``minhash_lsh_pairs`` (before its Jaccard filter)
     restricted to pairs touching a new doc — determinism of the keyed
     hashes makes incremental == monolithic, which is what lets a
     pipeline trust an index built batch-by-batch. Candidates only; the
@@ -714,9 +706,7 @@ def minhash_lsh_probe(
 # --------------------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame, text_col: str, id_col: str, *, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash per document — (id, simhash long).
 
     Bit b of the output is the sign of Σ_tokens (±1 depending on bit b
@@ -728,42 +718,31 @@ def simhash(
     the shuffle at one 64-column row per doc per map task. Null-text
     docs drop out at the explode (no tokens → nothing to near-match).
 
-    ``hash_fn``: "xxhash64" (default — fastest, Spark-specific) or
-    "md5" (the 64-bit value is the first 16 hex digits of md5(token),
-    split as two 32-bit halves). md5 exists in every engine, so an
-    external SQL oracle (e.g. DuckDB) can recompute the identical
-    simhash bit-for-bit — the cross-engine verification mode."""
+    The token hash is the first 16 hex digits of md5(token), split as
+    two 32-bit halves. md5 exists in every engine, so an external SQL
+    oracle (e.g. DuckDB) can recompute the identical simhash
+    bit-for-bit."""
     # NULL text explodes to nothing; the '' filter drops the single
     # empty token whitespace-only docs produce (they'd otherwise all
     # share one signature and pair as Hamming-0 "duplicates")
     th = df.select(
         F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("_t")
     ).filter(F.col("_t") != "")
-    if hash_fn == "xxhash64":
-        th = th.select("_id", F.xxhash64("_t").alias("_h"))
+    # two 32-bit halves of the leading 64 md5 bits; parsed via
+    # conv(hex) which stays inside the positive long range, so ANSI
+    # mode never overflows. Bits 0-31 come from the low half, 32-63
+    # from the high half. The digest is projected ONCE and the halves
+    # substring it — md5 per (token, half) doubled the hash cost when
+    # inlined.
+    th = th.select("_id", F.md5("_t").alias("_md5")).select(
+        "_id",
+        F.conv(F.substring("_md5", 1, 8), 16, 10).cast("long").alias("_hhi"),
+        F.conv(F.substring("_md5", 9, 8), 16, 10).cast("long").alias("_hlo"),
+    )
 
-        def bit(b: int) -> Column:
-            return F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1))
-
-    elif hash_fn == "md5":
-        # two 32-bit halves of the leading 64 md5 bits; parsed via
-        # conv(hex) which stays inside the positive long range, so ANSI
-        # mode never overflows. Bits 0-31 come from the low half,
-        # 32-63 from the high half. The digest is projected ONCE and
-        # the halves substring it — md5 per (token, half) doubled the
-        # hash cost when inlined.
-        th = th.select("_id", F.md5("_t").alias("_md5")).select(
-            "_id",
-            F.conv(F.substring("_md5", 1, 8), 16, 10).cast("long").alias("_hhi"),
-            F.conv(F.substring("_md5", 9, 8), 16, 10).cast("long").alias("_hlo"),
-        )
-
-        def bit(b: int) -> Column:
-            col = F.col("_hlo") if b < 32 else F.col("_hhi")
-            return F.shiftright(col, b % 32).bitwiseAND(F.lit(1))
-
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    def bit(b: int) -> Column:
+        col = F.col("_hlo") if b < 32 else F.col("_hhi")
+        return F.shiftright(col, b % 32).bitwiseAND(F.lit(1))
 
     counts = th.groupBy("_id").agg(
         *[
@@ -781,15 +760,8 @@ def simhash(
     return counts.select(F.col("_id").alias(id_col), packed.alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
+def simhash_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ ``MAX_HAMMING``.
 
     Pigeonhole banding: split the 64-bit hash into 4 16-bit chunks;
     any pair within Hamming distance < 4 must agree on at
@@ -798,7 +770,7 @@ def simhash_pairs(
     equi-join on (chunk_idx, chunk_value). The chunk frame is pinned
     (_pin) — both self-join sides reference it.
     """
-    sh = simhash(_spread(df, id_col), text_col, id_col, hash_fn=hash_fn).select(
+    sh = simhash(_spread(df, id_col), text_col, id_col).select(
         F.col(id_col).alias("_id"), "simhash"
     )
     chunks = 4
@@ -837,7 +809,7 @@ def simhash_pairs(
         .withColumn(
             "hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -1084,10 +1056,8 @@ def embedding_cosine_pairs(
     df: DataFrame,
     vec_col: str,
     id_col: str,
-    *,
-    threshold: float = 0.95,
 ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold —
+    """Near-duplicate pairs by embedding cosine ≥ ``COSINE_THRESHOLD`` —
     (id_a, id_b, cosine), id_a < id_b, cosine rounded to 6 dp; a zero
     vector pairs with nothing.
 
@@ -1115,8 +1085,8 @@ def embedding_cosine_pairs(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
     return (
-        _exact_pairs_arrow(base, b_blocks, threshold)
+        _exact_pairs_arrow(base, b_blocks, COSINE_THRESHOLD)
         .withColumn("cosine", F.round(F.col("_raw"), 6))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= COSINE_THRESHOLD)
         .select("id_a", "id_b", "cosine")
     )

@@ -52,20 +52,19 @@ BROADCAST_MAX_EDGES = 4_000_000
 def pagerank_fixed_point(
     edges: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
     weight: str | None = None,
     damping: Fraction = Fraction(17, 20),
     iterations: int = 3,
-    assume_symmetric: bool = False,
 ) -> DataFrame:
-    """Fixed-point PageRank; returns (node long, pr_fixed long) where
-    ``pr_fixed`` is the rank scaled by :data:`PR_SCALE`.
+    """Fixed-point PageRank over the edges ``(s, t)``; returns (node
+    long, pr_fixed long) where ``pr_fixed`` is the rank scaled by
+    :data:`PR_SCALE`.
 
-    Contract: every node reachable via ``dst`` must also appear as a
-    ``src`` (no dangling nodes) — symmetric/undirected edge lists
-    satisfy this by construction. ``damping`` is a Fraction so the
-    teleport and damping steps stay in exact integer arithmetic.
+    Contract: the edge list is SYMMETRIC — every ``(s, t)`` comes with
+    its ``(t, s)``, as an undirected edge list does by construction —
+    so every node is a source (no dangling nodes) and none has
+    in-degree 0. ``damping`` is a Fraction so the teleport and damping
+    steps stay in exact integer arithmetic.
 
     ``weight`` names an optional POSITIVE INTEGER edge-weight column
     (e.g. co-purchase counts): each edge then carries
@@ -76,22 +75,19 @@ def pagerank_fixed_point(
     rank·w ≤ 10¹²·w must stay below 2⁶³, so w < ~9·10⁶).
 
     Scale shape: the edge list is annotated with its out-degree totals
-    in a SINGLE shuffle (a full-partition window sum keyed on src — one
+    in a SINGLE shuffle (a full-partition window sum keyed on s — one
     exchange + sort, versus the groupBy-then-join formulation's two
     exchanges and two cache materializations; a super-node's edges land
     in one task either way, so the skew profile is unchanged) and that
     one frame is persisted and reused every iteration; each iteration
-    is one equi-join (edges ⋈ ranks on src — both sides
+    is one equi-join (edges ⋈ ranks on s — both sides
     hash-partitioned on the same key) plus one map-side-combining sum
-    keyed on dst, then a left join
-    back to the node set so in-degree-0 nodes keep their teleport mass.
-    ``assume_symmetric=True`` (correct for any undirected edge list)
-    skips that per-iteration left join — a symmetric graph has no
-    in-degree-0 nodes, so the contribution aggregate already covers
-    every node. Per-iteration shuffle volume ∝ edges, never
-    pairs-of-pairs; the rank frame is O(nodes). The node count rides
-    the plan as a 1-row broadcast aggregate (no driver action), so the
-    whole fixed-iteration recurrence compiles into ONE job. The final
+    keyed on t; a symmetric graph has no in-degree-0 nodes, so that
+    contribution aggregate already covers every node. Per-iteration
+    shuffle volume ∝ edges, never pairs-of-pairs; the rank frame is
+    O(nodes). The node count rides the plan as a 1-row broadcast
+    aggregate (no driver action), so the whole fixed-iteration
+    recurrence compiles into ONE job. The final
     frame is localCheckpoint-ed so the persisted edge frame can be
     released eagerly.
     """
@@ -111,7 +107,7 @@ def pagerank_fixed_point(
     )
     edges_deg = (
         edges.select(
-            F.col(src).alias("_s"), F.col(dst).alias("_t"), wcol.alias("_w")
+            F.col("s").alias("_s"), F.col("t").alias("_t"), wcol.alias("_w")
         )
         .withColumn("_dg", F.sum("_w").over(W.partitionBy("_s")))
         .persist()
@@ -142,11 +138,7 @@ def pagerank_fixed_point(
                 .groupBy("node")
                 .agg(F.sum("_c").alias("_sum"))
             )
-            if assume_symmetric:
-                base = contribs
-            else:
-                base = nodes.join(contribs, "node", "left")
-            ranks = base.crossJoin(F.broadcast(n1)).select(
+            ranks = contribs.crossJoin(F.broadcast(n1)).select(
                 "node", new_rank.alias("pr_fixed")
             )
         ranks = ranks.localCheckpoint(eager=True)
@@ -159,12 +151,11 @@ def personalized_pagerank_fixed_point(
     edges: DataFrame,
     seeds: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
     damping: Fraction = Fraction(17, 20),
     iterations: int = 3,
 ) -> DataFrame:
-    """Personalized (seed-biased) PageRank over unweighted edges: the teleport mass lands
+    """Personalized (seed-biased) PageRank over unweighted edges
+    ``(s, t)``: the teleport mass lands
     ONLY on the seed nodes — the "similar to these items" random walk
     recommenders and graph-expansion curation use. Same fixed-point
     integer arithmetic as :func:`pagerank_fixed_point`, so results are
@@ -180,8 +171,8 @@ def personalized_pagerank_fixed_point(
     seeds only. Non-seed nodes accumulate mass purely through walks,
     so ranks decay with graph distance from the seed set.
 
-    Scale shape mirrors the global variant — per iteration one src
-    equi-join + one dst-keyed sum; the seed frame is aggregate-counted
+    Scale shape mirrors the global variant — per iteration one s
+    equi-join + one t-keyed sum; the seed frame is aggregate-counted
     in-plan and joined as a (node, is_seed) marker, broadcastable when
     small (the typical case: a handful of query items).
     """
@@ -194,7 +185,7 @@ def personalized_pagerank_fixed_point(
         )
 
     edges_deg = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
+        edges.select(F.col("s").alias("_s"), F.col("t").alias("_t"))
         .withColumn("_dg", F.count("*").over(W.partitionBy("_s")))
         .persist()
     )
@@ -245,17 +236,12 @@ def personalized_pagerank_fixed_point(
     return ranks
 
 
-def triangle_counts(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Exact per-node triangle counts — (node, degree, triangles), one
-    row per node that closes at least one triangle. ``degree`` is the
-    node's undirected degree (distinct neighbors), so the local
-    clustering coefficient 2·T/(d·(d-1)) is derivable downstream
-    without another pass.
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Exact per-node triangle counts over the edges ``(u, v)`` — (node,
+    degree, triangles), one row per node that closes at least one
+    triangle. ``degree`` is the node's undirected degree (distinct
+    neighbors), so the local clustering coefficient 2·T/(d·(d-1)) is
+    derivable downstream without another pass.
 
     Input is an undirected edge list in any redundancy state (either
     or both directions, repeats allowed); self-loops are dropped and
@@ -282,8 +268,8 @@ def triangle_counts(
     """
     p = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_u"),
-            F.greatest(F.col(src), F.col(dst)).alias("_v"),
+            F.least(F.col("u"), F.col("v")).alias("_u"),
+            F.greatest(F.col("u"), F.col("v")).alias("_v"),
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
@@ -383,13 +369,11 @@ def kcore_peel(
     *,
     k: int,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    with_telemetry: bool = False,
 ) -> DataFrame:
-    """Bounded k-core peeling — (node, core_degree) for the nodes
-    still alive after ``rounds`` peel iterations, with their degree in
-    the surviving subgraph. Each round deletes every node whose
+    """Bounded k-core peeling over the edges ``(u, v)`` — (node,
+    core_degree, peel_rounds, converged) for the nodes still alive
+    after ``rounds`` peel iterations, with their degree in the
+    surviving subgraph. Each round deletes every node whose
     CURRENT degree is < k, simultaneously (the textbook synchronous
     peel), then recomputes degrees over the induced subgraph. Run to a
     fixed point this yields exactly the k-core; with a fixed round
@@ -430,14 +414,14 @@ def kcore_peel(
     frames' lineage flat (without it the round-r plan would re-derive
     rounds 1..r-1).
 
-    ``with_telemetry=True`` appends two literal columns pinning the
+    ``peel_rounds`` and ``converged`` are literal columns pinning the
     loop's control flow so a caller (or the driver oracle) can detect a
     convergence regression without re-deriving it: ``peel_rounds`` =
     rounds that actually removed nodes before the exit (early break or
     exhausted budget), and ``converged`` = the fixed point was reached
-    inside the budget (always True on an early break; one extra
-    dead-check action when the budget ran out). Both are plan-time
-    literals — zero per-row cost.
+    inside the budget (always True on an early break; read off the
+    final degree frame's observed dead count when the budget ran out).
+    Both are plan-time literals — zero per-row cost.
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
@@ -447,8 +431,8 @@ def kcore_peel(
 
     p = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_u"),
-            F.greatest(F.col(src), F.col(dst)).alias("_v"),
+            F.least(F.col("u"), F.col("v")).alias("_u"),
+            F.greatest(F.col("u"), F.col("v")).alias("_v"),
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
@@ -517,21 +501,14 @@ def kcore_peel(
     # a node whose last edge was removed this round has _d = 0 and no
     # surviving pair — the recount formulation never listed it, so the
     # incremental one must not either
-    out = deg.filter(F.col("_d") > 0).select(
-        "node", F.col("_d").alias("core_degree")
+    # budget exhausted: fixed point iff the final degrees left nothing
+    # below k (rounds=0 lands here too — then this is simply "was the
+    # input already a k-core"); the final degree frame's observed dead
+    # count answers it with no extra action
+    converged = converged or n_dead == 0
+    return deg.filter(F.col("_d") > 0).select(
+        "node",
+        F.col("_d").alias("core_degree"),
+        F.lit(executed).cast("long").alias("peel_rounds"),
+        F.lit(converged).alias("converged"),
     )
-    if with_telemetry:
-        if not converged:
-            # budget exhausted: fixed point iff the final degrees left
-            # nothing below k (rounds=0 lands here too — then this is
-            # simply "was the input already a k-core"); the final
-            # degree frame's observed dead count answers it with no
-            # extra action
-            converged = n_dead == 0
-        out = out.select(
-            "node",
-            "core_degree",
-            F.lit(executed).cast("long").alias("peel_rounds"),
-            F.lit(converged).alias("converged"),
-        )
-    return out

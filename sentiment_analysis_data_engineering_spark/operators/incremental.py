@@ -180,7 +180,6 @@ def scd2_apply(
     tracked: list[str],
     *,
     batch_ts: str,
-    assume_unique_keys: bool = False,
 ) -> DataFrame:
     """Apply one change batch to a Slowly-Changing-Dimension type-2
     history table and return the new history frame.
@@ -189,11 +188,11 @@ def scd2_apply(
     - ``history`` holds one row per (key, version): ``tracked`` value
       columns plus ``valid_from``/``valid_to`` (string timestamps,
       ``valid_to`` NULL = open version) and ``is_current``;
-    - ``changes`` holds AT MOST one row per key (raises otherwise)
-      with the new tracked values; the check is one eager Spark job,
-      so callers whose batch is unique BY CONSTRUCTION (e.g. the
-      output of a ``groupBy(keys)``) pass ``assume_unique_keys=True``
-      to skip recomputing the batch;
+    - ``changes`` holds AT MOST one row per key with the new tracked
+      values — a precondition the caller guarantees by construction
+      (e.g. the output of a ``groupBy(keys)``, or disjoint branches);
+      it is not checked, since a check would recompute the batch in
+      an extra eager job;
     - a NULL ``is_current`` is treated as False (a closed historical
       row passes through untouched) — never silently dropped;
     - a change row whose tracked values differ (null-safely) from the
@@ -211,16 +210,6 @@ def scd2_apply(
     ``sources/io.py::upsert_partitions`` so only touched partitions
     rewrite.
     """
-    if not assume_unique_keys:
-        dup = (
-            changes.groupBy(*keys).count().filter(F.col("count") > 1)
-            .limit(1).count()
-        )
-        if dup:
-            raise ValueError(
-                "scd2_apply: changes batch has duplicate keys — deduplicate "
-                "per key (deterministic winner) before applying"
-            )
     passthrough_cols = [*keys, *tracked, "valid_from", "valid_to", "is_current"]
     # NULL is_current → closed passthrough (never dropped between the
     # two complementary filters)

@@ -16,10 +16,10 @@ Extension layer (no reference counterpart). Decode support:
   RIFF/LIST walk + per-frame DIB pixel path with every-Nth frame
   sampling (`_decode_avi`/`decode_video_frames`), `encode_avi` as the
   counterpart.
-- Compressed formats (JPEG/PNG/MP3/H.264/...) still stub: the
-  container ships no codecs, so those payloads take the
-  deterministic-fake or NotImplementedError path. Swapping in
-  Pillow/librosa/pyav is a one-function change inside a row function.
+- Compressed formats (JPEG/PNG/MP3/H.264/...) raise
+  NotImplementedError from the executor: the container ships no
+  codecs. Swapping in Pillow/librosa/pyav is a one-function change
+  inside a row function.
 
 Every decoder and fixture generator crosses into Python through one
 adapter, `_map_rows`: it owns the ``mapInPandas`` batch loop and builds
@@ -39,7 +39,6 @@ Design for 100 TB of media:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -142,15 +141,6 @@ def attach_media_metadata(df: DataFrame, kind: str, mime: str) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes) -> np.ndarray:
-    """Deterministic stand-in for decoding formats the container has no
-    codec for: a seeded 8x8 'pixel' grid derived from the payload's
-    sha256. Replace with Pillow's ``Image.open`` when available."""
-    digest = hashlib.sha256(payload).digest()
-    rng = np.frombuffer(digest * 2, dtype=np.uint8)[: 8 * 8]
-    return rng.reshape(8, 8).astype(np.float32) / 255.0
-
-
 def _row_size(width: int) -> int:
     """Bytes per stored DIB row: 3 per pixel, padded to 4 bytes."""
     return (width * 3 + 3) & ~3
@@ -231,29 +221,14 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     return _dib_pixels(payload, width, height, offset)
 
 
-def _decode_any(payload: bytes, strict: bool) -> np.ndarray:
-    """Real BMP parse when the payload is BMP; otherwise the honest
-    no-codec behavior (strict → NotImplementedError) or the
-    deterministic fake (returned as a 1-channel grid)."""
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    if strict:
-        raise NotImplementedError(
-            "only uncompressed 24-bit BMP decodes in-container; other "
-            "formats need Pillow/libav (not installed)"
-        )
-    return _fake_decode(payload)[..., np.newaxis]
-
-
-def decode_image(df: DataFrame, *, strict: bool = False) -> DataFrame:
+def decode_image(df: DataFrame) -> DataFrame:
     """Decode the binary payload into (media_id, height, width, mean_px).
 
     BMP payloads (24-bit BI_RGB) decode FOR REAL — header parse, row
     unpadding, bottom-up/BGR undoing — inside the Arrow batch loop;
-    ``mean_px`` is the mean over every channel value in [0, 1]. For
-    other formats: ``strict=True`` raises NotImplementedError from the
-    executor (the honest no-codec behavior), ``strict=False`` runs the
-    deterministic fake so plumbing stays exercised end to end.
+    ``mean_px`` is the mean over every channel value in [0, 1]. Other
+    formats raise NotImplementedError from the executor (the honest
+    no-codec behavior).
     """
 
     out_schema = T.StructType(
@@ -266,7 +241,13 @@ def decode_image(df: DataFrame, *, strict: bool = False) -> DataFrame:
     )
 
     def row(mid, payload):
-        px = _decode_any(bytes(payload), strict)
+        payload = bytes(payload)
+        if payload[:2] != b"BM":
+            raise NotImplementedError(
+                "only uncompressed 24-bit BMP decodes in-container; other "
+                "formats need Pillow/libav (not installed)"
+            )
+        px = _decode_bmp(payload)
         yield int(mid), px.shape[0], px.shape[1], float(px.mean())
 
     return _map_rows(df.select("media_id", "content"), out_schema, row)
@@ -344,7 +325,7 @@ def _decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
     return rate, samples
 
 
-def decode_audio(df: DataFrame, *, strict: bool = False) -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """Decode binary audio payloads into per-item signal features:
     (media_id, sample_rate, n_samples, duration_ms, rms, zero_crossings).
 
@@ -353,9 +334,8 @@ def decode_audio(df: DataFrame, *, strict: bool = False) -> DataFrame:
     square of the raw int16 samples (computed in float64, the exact
     IEEE ops a SQL oracle replays) and ``zero_crossings`` counts
     sign(s_i) != sign(s_{i-1}) transitions with sign = (sample < 0).
-    Compressed audio: ``strict=True`` raises NotImplementedError from
-    the executor (no codec in-container), ``strict=False`` runs a
-    deterministic sha-derived fake so the plumbing stays exercised."""
+    Compressed audio raises NotImplementedError from the executor (no
+    codec in-container)."""
 
     out_schema = T.StructType(
         [
@@ -371,20 +351,14 @@ def decode_audio(df: DataFrame, *, strict: bool = False) -> DataFrame:
     def row(mid, payload):
         payload = bytes(payload)
         # Sniff the full RIFF/WAVE signature: a non-WAVE RIFF container
-        # (e.g. an AVI misrouted into the audio table) must fall through
-        # to the strict/fake branch rather than error out of the
-        # promised strict=False path.
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            rate, s = _decode_wav(payload)
-        elif strict:
+        # (e.g. an AVI misrouted into the audio table) is a format with
+        # no codec here, not a malformed WAV.
+        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
             raise NotImplementedError(
                 "only PCM mono 16-bit WAV decodes in-container; "
                 "compressed audio needs librosa/libav (not installed)"
             )
-        else:
-            digest = hashlib.sha256(payload).digest()
-            rate = 8000
-            s = np.frombuffer(digest * 4, dtype="<i2")
+        rate, s = _decode_wav(payload)
         sf = s.astype(np.float64)
         neg = s < 0
         yield (
@@ -426,10 +400,9 @@ def _list_chunk(ltype: bytes, body: bytes) -> bytes:
     return _chunk(b"LIST", ltype + body)
 
 
-def encode_avi(
-    width: int, height: int, frames: list[bytes], *, fps: int = 10
-) -> bytes:
-    """Assemble a real uncompressed-DIB AVI (RIFF 'AVI ') file.
+def encode_avi(width: int, height: int, frames: list[bytes]) -> bytes:
+    """Assemble a real uncompressed-DIB AVI (RIFF 'AVI ') file at 10
+    fps.
 
     Each entry of ``frames`` is row-major TOP-DOWN RGB bytes of length
     width*height*3 (the same contract as ``encode_bmp``); storage is the
@@ -438,6 +411,7 @@ def encode_avi(
     its BITMAPINFOHEADER). `_decode_avi` inverts it."""
     dib_frames = [_dib_rows(width, height, fb) for fb in frames]
     frame_bytes = _row_size(width) * height
+    fps = 10
     strh = (
         b"vids"
         + b"DIB "
@@ -530,20 +504,14 @@ def _decode_avi(payload: bytes) -> tuple[int, int, int, list[np.ndarray]]:
     return width, abs(height), fps, frames
 
 
-def decode_video_frames(
-    df: DataFrame, *, every_n: int = 2, strict: bool = False
-) -> DataFrame:
-    """Sample every ``every_n``-th frame of binary video payloads and
-    decode each sampled frame — (media_id, frame_idx, height, width,
-    mean_px). The REAL frame grab for uncompressed-DIB AVI (chunk walk
-    + the BMP pixel path per frame, Arrow-batched); compressed video:
-    ``strict=True`` raises NotImplementedError from the executor,
-    ``strict=False`` emits one deterministic fake frame. Sampling
-    happens BEFORE pixel math — skipped frames cost a chunk-size skip,
-    not a decode, which is the point of frame sampling at 100 TB.
-    ``every_n`` must be at least 1 (checked before planning)."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
+def decode_video_frames(df: DataFrame) -> DataFrame:
+    """Sample every 2nd frame of binary video payloads and decode each
+    sampled frame — (media_id, frame_idx, height, width, mean_px). The
+    REAL frame grab for uncompressed-DIB AVI (chunk walk + the BMP
+    pixel path per frame, Arrow-batched); compressed video raises
+    NotImplementedError from the executor. Sampling happens BEFORE
+    pixel math — skipped frames cost a chunk-size skip, not a decode,
+    which is the point of frame sampling at 100 TB."""
 
     out_schema = T.StructType(
         [
@@ -557,18 +525,14 @@ def decode_video_frames(
 
     def row(mid, payload):
         payload = bytes(payload)
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            w, h, _fps, frames = _decode_avi(payload)
-            for idx in range(0, len(frames), every_n):
-                yield int(mid), idx, h, w, float(frames[idx].mean())
-        elif strict:
+        if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
             raise NotImplementedError(
                 "only uncompressed-DIB AVI decodes in-container; "
                 "compressed video needs pyav/libav (not installed)"
             )
-        else:
-            px = _fake_decode(payload)
-            yield int(mid), 0, px.shape[0], px.shape[1], float(px.mean())
+        w, h, _fps, frames = _decode_avi(payload)
+        for idx in range(0, len(frames), 2):
+            yield int(mid), idx, h, w, float(frames[idx].mean())
 
     return _map_rows(df.select("media_id", "content"), out_schema, row)
 
@@ -588,6 +552,6 @@ def synthesize_avi_media(df: DataFrame) -> DataFrame:
             ((mid * 31 + f * 7 + np.arange(n)) % 256).astype(np.uint8).tobytes()
             for f in range(4 + mid % 5)
         ]
-        return encode_avi(w, h, frames, fps=10)
+        return encode_avi(w, h, frames)
 
     return _synthesize(df, blob)

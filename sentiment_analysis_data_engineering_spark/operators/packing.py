@@ -32,6 +32,9 @@ from pyspark.sql import types as T
 
 __all__ = ["pack_sequences"]
 
+#: tokens per pack
+PACK_BUDGET = 512
+
 _PACK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -46,10 +49,8 @@ def pack_sequences(
     df: DataFrame,
     id_col: str,
     tokens_col: str,
-    *,
-    budget: int = 2048,
 ) -> DataFrame:
-    """Assign each document to a pack of ≤ ``budget`` total tokens —
+    """Assign each document to a pack of ≤ ``PACK_BUDGET`` total tokens —
     (doc_id, n_tokens, pack_id, pack_seq).
 
     Greedy next-fit per sorted partition (``defaultParallelism`` hash
@@ -61,6 +62,7 @@ def pack_sequences(
     pack.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
+    budget = PACK_BUDGET  # read on the driver; the packer's closure carries it
 
     def pack_partition(
         batches: Iterator[pd.DataFrame],

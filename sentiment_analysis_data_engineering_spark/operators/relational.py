@@ -81,27 +81,18 @@ def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     return reduce(lambda left, right: left.unionByName(right), dfs)
 
 
-def n_way_inner_join(
-    dfs: Sequence[DataFrame],
-    on: str | list[str],
-    *,
-    broadcast_all_but_first: bool = False,
-) -> DataFrame:
+def n_way_inner_join(dfs: Sequence[DataFrame], on: str | list[str]) -> DataFrame:
     """J1 — fold N frames into one wide frame on a shared key
     (``reduce(pd.merge...)`` at ``weekly_dag.py:393-394``).
 
-    With ``broadcast_all_but_first`` every right side gets a broadcast
-    hint — correct when the joined frames are small dimension tables
-    (the reference's are a few hundred rows each). Left unset, Catalyst
-    + AQE pick the strategy from statistics, which is the right default
-    when sides may be large.
+    Every right side gets a broadcast hint: the joined frames are small
+    dimension tables (the reference's are a few hundred rows each).
     """
     if not dfs:
         raise ValueError("n_way_inner_join needs at least one DataFrame")
 
     def _join(left: DataFrame, right: DataFrame) -> DataFrame:
-        r = F.broadcast(right) if broadcast_all_but_first else right
-        return left.join(r, on=on, how="inner")
+        return left.join(F.broadcast(right), on=on, how="inner")
 
     return reduce(_join, dfs)
 

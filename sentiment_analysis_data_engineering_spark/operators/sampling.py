@@ -59,20 +59,18 @@ def stratified_hash_sample(
     id_col: str,
     stratum_col: str,
     fractions: Mapping[str, float],
-    *,
-    default_fraction: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum value gets its
     own keep-fraction (e.g. downsample dominant languages, keep all of
-    rare ones). Strata not listed fall back to ``default_fraction``.
+    rare ones). Strata not listed keep 10%; membership is by the
+    ``"s1"``-salted hash bucket.
     Still a narrow filter — the threshold is a CASE over the stratum
     column, so no shuffle and no per-stratum passes."""
-    thr: Column = F.lit(int(round(default_fraction * _BUCKETS)))
+    thr: Column = F.lit(int(round(0.1 * _BUCKETS)))
     col = F.col(stratum_col)
     for value, frac in sorted(fractions.items()):
         thr = F.when(col == value, F.lit(int(round(frac * _BUCKETS)))).otherwise(thr)
-    return df.filter(hash_bucket(id_col, salt) < thr)
+    return df.filter(hash_bucket(id_col, "s1") < thr)
 
 
 def mixture_weighted_sample(
@@ -82,8 +80,6 @@ def mixture_weighted_sample(
     weights: Mapping[str, float],
     *,
     target_fraction: float,
-    default_weight: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Resample a corpus toward a target source MIXTURE — the standard
     pretraining data-mixing step (e.g. The Pile / LLaMA mixture tables:
@@ -96,7 +92,8 @@ def mixture_weighted_sample(
         f_s = min(1, w_s · target_fraction · N / n_s)
 
     (strata too small to fill their quota are kept whole — capped at 1;
-    weights are used as given and need not sum to 1). The solve happens
+    weights are used as given and need not sum to 1; strata not listed
+    weigh 0.02). Membership is by the ``"mix"``-salted hash bucket. The solve happens
     IN-PLAN: per-stratum counts are one tiny aggregate (a column-pruned
     scan), the unpartitioned window that totals them runs over
     #strata rows, and the resulting thresholds broadcast back into the
@@ -104,7 +101,7 @@ def mixture_weighted_sample(
     RNG, and the same ``hash_bucket`` determinism as every sampler
     here: partition-, retry-, and cluster-layout-independent.
     """
-    w: Column = F.lit(float(default_weight))
+    w: Column = F.lit(0.02)
     scol = F.col(stratum_col)
     for value, wt in sorted(weights.items()):
         w = F.when(scol == value, F.lit(float(wt))).otherwise(w)
@@ -127,7 +124,7 @@ def mixture_weighted_sample(
     )
     return (
         df.join(F.broadcast(thresholds), stratum_col)
-        .filter(hash_bucket(id_col, salt) < F.col("_thr"))
+        .filter(hash_bucket(id_col, "mix") < F.col("_thr"))
         .drop("_thr")
     )
 

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql import types as T
 
+from ..schemas import FIXTURE_SCHEMAS
 from ..sources.io import _hadoop_fs, local_frame, scan
 from .dedup import _spread
 from .observe import checkpoint_with_metrics, write_with_metrics
@@ -80,6 +81,28 @@ __all__ = [
     "CODES_SCHEMA",
 ]
 
+#: the columns of the embeddings table, the frame every operator here
+#: reads
+ID_COL, VEC_COL, LABEL_COL = FIXTURE_SCHEMAS["embeddings"].names
+
+#: the approximate top-k operators return TOP_K neighbours per query;
+#: the ad-hoc IVF ones split the corpus into N_CELLS cells and probe
+#: N_PROBE of them; the ad-hoc PQ ones code each vector as PQ_M
+#: subspaces of PQ_CODES codewords
+TOP_K = 5
+N_CELLS = 16
+N_PROBE = 4
+PQ_M = 8
+PQ_CODES = 64
+
+#: crossencoder_rerank_topk's stand-in weights span the embeddings'
+#: width
+CE_DIM = 64
+
+#: semantic_dedup links vectors of one cluster whose cosine reaches
+#: this
+SEMDEDUP_THRESHOLD = 0.3
+
 #: every Lloyd-trained quantizer here fits from a bounded sample of
 #: TRAIN_ROWS vectors (persisted indexes may pass their own size) and
 #: runs LLOYD_ITERS epochs
@@ -98,12 +121,12 @@ CC_MAX_ITER = 60
 FIT_SAMPLE_ROWS = 8192
 
 
-def _as_double(vec_col: str) -> Column:
-    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def _as_double() -> Column:
+    return F.transform(F.col(VEC_COL), lambda x: x.cast("double"))
 
 
 def _map_vectors(
-    df: DataFrame, vec_col: str, id_col: str, schema: str, fn
+    df: DataFrame, schema: str, fn
 ) -> DataFrame:
     """The module's one Arrow crossing for vector batches. Selects
     (``_id``, ``_v`` as array<double>), fills ``{id_t}`` in ``schema``
@@ -111,8 +134,8 @@ def _map_vectors(
     empty batches, and calls ``fn(pdf, V)`` with the batch frame and
     its (rows × dim) float64 matrix; ``fn`` returns the output columns
     as a dict in ``schema``'s order."""
-    src = df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
-    id_t = df.schema[id_col].dataType.simpleString()
+    src = df.select(F.col(ID_COL).alias("_id"), _as_double().alias("_v"))
+    id_t = df.schema[ID_COL].dataType.simpleString()
 
     def batches(it):
         for pdf in it:
@@ -187,8 +210,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k cosine neighbours for each query vector, the query
@@ -200,10 +221,10 @@ def cosine_topk(
     k rows each).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+        F.col(ID_COL).alias("query_id"), _as_double().alias("_qv")
     ).withColumn("_qn", _norm(F.col("_qv")))
-    c = _spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv")
+    c = _spread(corpus, ID_COL).select(
+        F.col(ID_COL).alias("neighbor_id"), _as_double().alias("_cv")
     ).withColumn("_cn", _norm(F.col("_cv")))
 
     scored = (
@@ -244,8 +265,6 @@ def _plane_matrix(num_planes: int, dim: int):
 
 def signatures_arrow(
     df: DataFrame,
-    vec_col: str,
-    id_col: str,
     *,
     num_planes: int,
     dim: int,
@@ -275,13 +294,11 @@ def signatures_arrow(
         out["_sig"] = (bits.astype(np.int64) * weights[None, :]).sum(axis=1)
         return out
 
-    return _map_vectors(df, vec_col, id_col, schema, tag)
+    return _map_vectors(df, schema, tag)
 
 
 def _ivf_tag_arrow(
     df: DataFrame,
-    vec_col: str,
-    id_col: str,
     cents: list[list[float]],
     *,
     role: str,
@@ -332,57 +349,44 @@ def _ivf_tag_arrow(
                 "cell": probes.reshape(-1),
             }
 
-    return _map_vectors(df, vec_col, id_col, schema, tag)
+    return _map_vectors(df, schema, tag)
 
 
-def ivf_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF-Flat approximate top-k: a coarse quantizer of ``n_centroids``
-    cells partitions the corpus; each query probes only its ``n_probe``
+def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """IVF-Flat approximate top-k: a coarse quantizer of ``N_CELLS``
+    cells partitions the corpus; each query probes only its ``N_PROBE``
     nearest cells, then exact cosine re-ranks within candidates.
 
     Coarse quantizer: centroids are a deterministic sample of corpus
-    vectors (the ``n_centroids`` smallest ids), collected once at plan
-    build — a model-build action over ``n_centroids`` rows, analogous
+    vectors (the ``N_CELLS`` smallest ids), collected once at plan
+    build — a model-build action over ``N_CELLS`` rows, analogous
     to fitting MLlib KMeans (which is the drop-in refinement at scale:
-    ``KMeans(k=n_centroids).fit`` then ``predict`` as the cell
+    ``KMeans(k=N_CELLS).fit`` then ``predict`` as the cell
     assignment; sampled centroids keep this module deterministic and
     dependency-free). Centroids are L2-normalized driver-side and ride
     the task closure of one ``mapInPandas`` matmul per side
     (``_ivf_tag_arrow``), so the plan size stays constant in
-    n_centroids × dim — no UDF per row, no shuffle beyond the final
+    N_CELLS × dim — no UDF per row, no shuffle beyond the final
     (cell equi-join + top-k).
 
     Scale shape: corpus scans once to tag cells (narrow), shuffles once
-    on cell id; queries broadcast. Recall tunes with n_probe/n_centroids.
+    on cell id; queries broadcast. Recall tunes with N_PROBE/N_CELLS.
     """
     # --- model build: deterministic centroid sample (tiny action) ----
     sample = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col))
-        .limit(n_centroids)
+        corpus.select(ID_COL, VEC_COL)
+        .orderBy(F.col(ID_COL))
+        .limit(N_CELLS)
         .collect()
     )
     cents: list[list[float]] = []
     for row in sample:
-        v = [float(x) for x in row[vec_col]]
+        v = [float(x) for x in row[VEC_COL]]
         n = sum(x * x for x in v) ** 0.5 or 1.0
         cents.append([x / n for x in v])
 
-    c = _ivf_tag_arrow(
-        _spread(corpus, id_col), vec_col, id_col, cents, role="corpus"
-    )
-    qcells = _ivf_tag_arrow(
-        queries, vec_col, id_col, cents, role="query", n_probe=n_probe
-    )
+    c = _ivf_tag_arrow(_spread(corpus, ID_COL), cents, role="corpus")
+    qcells = _ivf_tag_arrow(queries, cents, role="query", n_probe=N_PROBE)
 
     scored = (
         c.join(F.broadcast(qcells), "cell")
@@ -397,7 +401,7 @@ def ivf_cosine_topk(
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -406,12 +410,7 @@ def lsh_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    num_planes: int = 12,
     dim: int = 64,
-    bands: int = 6,
 ) -> DataFrame:
     """Approximate top-k: candidates must share at least one LSH band
     with the query (multi-probe via banding, like MinHash-LSH), then
@@ -419,18 +418,20 @@ def lsh_cosine_topk(
 
     Scale shape: corpus computes its sketch in one scan and shuffles on
     (band, band_value); queries do the same; candidate generation is an
-    equi-join on the band key. Recall tunes with num_planes/bands.
+    equi-join on the band key. Recall tunes with the 12 planes and 6
+    bands.
 
     Each side is sketched by one ``signatures_arrow`` matmul pass
     (constant plan size). The band explode carries only (id, band,
     bval) — vectors rejoin later, once per survivor, not once per band
     row.
     """
+    num_planes, bands = 12, 6
     band_bits = num_planes // bands
 
     def with_bands(df: DataFrame, role: str) -> DataFrame:
         base = signatures_arrow(
-            df, vec_col, id_col, num_planes=num_planes, dim=dim
+            df, num_planes=num_planes, dim=dim
         ).withColumnRenamed("_id", f"{role}_id")
         mask = (1 << band_bits) - 1
         return base.select(
@@ -452,7 +453,7 @@ def lsh_cosine_topk(
                  F.col("_b.band").alias("band"), F.col("_b.bval").alias("bval"))
 
     qb = with_bands(queries, "query")
-    cb = with_bands(_spread(corpus, id_col), "neighbor")
+    cb = with_bands(_spread(corpus, ID_COL), "neighbor")
     # distinct over bare id pairs (two longs) — NOT over the vectors;
     # vectors re-join afterwards (query side broadcast, corpus side one
     # hash join on neighbor_id).
@@ -465,10 +466,10 @@ def lsh_cosine_topk(
     )
     # norms once per vector in the projections — not per candidate pair
     qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_queryv")
+        F.col(ID_COL).alias("query_id"), _as_double().alias("_queryv")
     ).withColumn("_qn", _norm(F.col("_queryv")))
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_neighborv")
+        F.col(ID_COL).alias("neighbor_id"), _as_double().alias("_neighborv")
     ).withColumn("_nn", _norm(F.col("_neighborv")))
     scored = (
         cand.join(F.broadcast(qv), "query_id")
@@ -484,7 +485,7 @@ def lsh_cosine_topk(
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -514,7 +515,7 @@ def _lloyd(X, k: int, iters: int):
 
 
 def _sample_normalized(
-    corpus: DataFrame, vec_col: str, id_col: str, train_rows: int,
+    corpus: DataFrame, train_rows: int,
     *, sample_order: str = "id",
 ):
     """Bounded deterministic training sample, L2-normalized — the
@@ -546,12 +547,12 @@ def _sample_normalized(
     if sample_order not in ("id", "hash"):
         raise ValueError(f"sample_order must be 'id' or 'hash', got {sample_order!r}")
     order = (
-        [F.col(id_col)]
+        [F.col(ID_COL)]
         if sample_order == "id"
-        else [F.xxhash64(F.col(id_col)), F.col(id_col)]
+        else [F.xxhash64(F.col(ID_COL)), F.col(ID_COL)]
     )
     sample = (
-        corpus.select(id_col, vec_col)
+        corpus.select(ID_COL, VEC_COL)
         .orderBy(*order)
         .limit(train_rows)
         .collect()
@@ -559,14 +560,12 @@ def _sample_normalized(
     if not sample:
         raise ValueError("empty corpus")
     return _unit_rows(
-        np.array([[float(x) for x in r[vec_col]] for r in sample], dtype=np.float64)
+        np.array([[float(x) for x in r[VEC_COL]] for r in sample], dtype=np.float64)
     )
 
 
 def _pq_codebooks(
     corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
     *,
     m: int,
     n_codes: int,
@@ -591,7 +590,7 @@ def _pq_codebooks(
     stays a ~256-row collect; MLlib KMeans per subspace is the drop-in
     when the training sample itself must be distributed. Returns ``m``
     (n_codes, dim/m) float64 arrays."""
-    V = _sample_normalized(corpus, vec_col, id_col, TRAIN_ROWS)
+    V = _sample_normalized(corpus, TRAIN_ROWS)
     dim = V.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -604,8 +603,6 @@ def _pq_codebooks(
 
 def _pq_encode_arrow(
     corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
     books: list,
 ) -> DataFrame:
     """Encode every corpus vector to its ``m`` nearest-codeword ids in
@@ -621,7 +618,7 @@ def _pq_encode_arrow(
         }
 
     return _map_vectors(
-        corpus, vec_col, id_col, "neighbor_id {id_t}, codes array<int>", enc
+        corpus, "neighbor_id {id_t}, codes array<int>", enc
     )
 
 
@@ -629,11 +626,6 @@ def pq_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
     n_rerank: int = 32,
 ) -> DataFrame:
     """Approximate top-k via product quantization (Jégou et al., TPAMI
@@ -641,11 +633,11 @@ def pq_cosine_topk(
 
     Both sides are L2-normalized first, so squared-L2 ranking equals
     cosine ranking and the final scores stay comparable with the other
-    ``*_cosine_topk`` operators. The corpus is encoded ONCE to ``m``
+    ``*_cosine_topk`` operators. The corpus is encoded ONCE to ``PQ_M``
     codeword ids (one Arrow matmul pass, narrow); each query precomputes
-    its m × n_codes distance TABLE driver-side-free (a JVM expression
+    its PQ_M × PQ_CODES distance TABLE driver-side-free (a JVM expression
     over the broadcast query row); the ADC scan then scores every
-    (query, corpus) pair with ``m`` table lookups instead of a
+    (query, corpus) pair with ``PQ_M`` table lookups instead of a
     ``dim``-element dot product. Top ``n_rerank`` ADC candidates per
     query re-rank against their TRUE vectors (an equi-join on
     neighbor_id — raw vectors are touched once per candidate, never per
@@ -658,8 +650,9 @@ def pq_cosine_topk(
     residuals per cell) when the corpus also needs partition pruning;
     codebooks here are the deterministic sampled kind (see
     ``_pq_codebooks``) so results are replay-stable with no RNG."""
-    books = _pq_codebooks(corpus, vec_col, id_col, m=m, n_codes=n_codes)
-    enc = _pq_encode_arrow(_spread(corpus, id_col), vec_col, id_col, books)
+    m, n_codes = PQ_M, PQ_CODES
+    books = _pq_codebooks(corpus, m=m, n_codes=n_codes)
+    enc = _pq_encode_arrow(_spread(corpus, ID_COL), books)
 
     # query side: normalize, then build the flattened ADC table
     # [s * n_codes + c] = ||q_s - book[s][c]||² in ONE Arrow pass
@@ -677,7 +670,7 @@ def pq_cosine_topk(
         }
 
     qtab = _map_vectors(
-        queries, vec_col, id_col,
+        queries,
         "query_id {id_t}, _qv array<double>, _tab array<double>", qtab_gen,
     )
 
@@ -686,9 +679,7 @@ def pq_cosine_topk(
         F.col("query_id") != F.col("neighbor_id")
     )
     cand = _adc_candidates(adc, m=m, n_codes=n_codes, n_rerank=n_rerank)
-    return _exact_rerank(
-        cand, qtab.select("query_id", "_qv"), corpus, vec_col, id_col, k=k
-    )
+    return _exact_rerank(cand, qtab.select("query_id", "_qv"), corpus)
 
 
 def _adc_candidates(
@@ -720,20 +711,12 @@ def _adc_candidates(
     )
 
 
-def _exact_rerank(
-    cand: DataFrame,
-    qv: DataFrame,
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    *,
-    k: int,
-) -> DataFrame:
+def _exact_rerank(cand: DataFrame, qv: DataFrame, corpus: DataFrame) -> DataFrame:
     """Shared exact re-rank tail: true vectors join in once per
     candidate (query side broadcast with its unit-norm ``_qv``), exact
     cosine, per-query top-k window."""
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv")
+        F.col(ID_COL).alias("neighbor_id"), _as_double().alias("_cv")
     ).withColumn("_cn", _norm(F.col("_cv")))
     scored = (
         cand.join(F.broadcast(qv), "query_id")
@@ -751,15 +734,13 @@ def _exact_rerank(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
 def _ivfpq_train_model(
     corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
     *,
     n_cells: int,
     m: int,
@@ -777,7 +758,7 @@ def _ivfpq_train_model(
     ad-hoc one-shot operator, "hash" for the persisted/retrained
     index."""
     V = _sample_normalized(
-        corpus, vec_col, id_col, train_rows, sample_order=sample_order
+        corpus, train_rows, sample_order=sample_order
     )
     dim = V.shape[1]
     if dim % m:
@@ -793,7 +774,7 @@ def _ivfpq_train_model(
 
 
 def _ivfpq_encode(
-    corpus: DataFrame, vec_col: str, id_col: str, C, books
+    corpus: DataFrame, C, books
 ) -> DataFrame:
     """One Arrow pass assigning every corpus vector its coarse cell and
     its ``m`` residual codeword ids: (neighbor_id, cell long, codes
@@ -813,13 +794,13 @@ def _ivfpq_encode(
         }
 
     return _map_vectors(
-        _spread(corpus, id_col), vec_col, id_col,
+        _spread(corpus, ID_COL),
         "neighbor_id {id_t}, cell long, codes array<int>", enc_gen,
     )
 
 
 def _ivfpq_query_tables(
-    queries: DataFrame, vec_col: str, id_col: str, C, books, n_probe: int
+    queries: DataFrame, C, books, n_probe: int
 ) -> DataFrame:
     """One Arrow pass over the queries: each query picks its
     ``n_probe`` nearest coarse cells and precomputes the per-(query,
@@ -843,7 +824,7 @@ def _ivfpq_query_tables(
         }
 
     return _map_vectors(
-        queries, vec_col, id_col,
+        queries,
         "query_id {id_t}, cell long, _qv array<double>, _tab array<double>",
         qtab_gen,
     )
@@ -853,21 +834,14 @@ def ivfpq_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 64,
     n_rerank: int = 96,
 ) -> DataFrame:
     """IVF-PQ approximate top-k (Jégou et al., TPAMI 2011 — the FAISS
     ``IVFx,PQy`` architecture): a Lloyd-trained coarse quantizer of
-    ``n_cells`` partitions the corpus, vectors are PQ-encoded on their
+    ``N_CELLS`` partitions the corpus, vectors are PQ-encoded on their
     RESIDUAL to the cell centroid (residuals concentrate near zero, so
     the same code budget quantizes them far more finely than raw
-    vectors), and queries probe only their ``n_probe`` nearest cells
+    vectors), and queries probe only their ``N_PROBE`` nearest cells
     with a per-(query, cell) ADC table before the exact re-rank.
 
     Why this is THE 100 TB ANN composition: IVF gives partition
@@ -887,19 +861,19 @@ def ivfpq_cosine_topk(
     fit draws by id, the persisted index by hash — see
     ``_sample_normalized``)."""
     C, books = _ivfpq_train_model(
-        corpus, vec_col, id_col, n_cells=n_cells, m=m, n_codes=n_codes
+        corpus, n_cells=N_CELLS, m=PQ_M, n_codes=PQ_CODES
     )
-    enc = _ivfpq_encode(corpus, vec_col, id_col, C, books)
-    qtab = _ivfpq_query_tables(queries, vec_col, id_col, C, books, n_probe)
+    enc = _ivfpq_encode(corpus, C, books)
+    qtab = _ivfpq_query_tables(queries, C, books, N_PROBE)
 
     # partition-pruning equi-join: a query meets only its probed cells'
     # vectors — n_probe/n_cells of the corpus instead of all of it
     adc = enc.join(
         F.broadcast(qtab.select("query_id", "cell", "_tab")), "cell"
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    cand = _adc_candidates(adc, m=m, n_codes=n_codes, n_rerank=n_rerank)
+    cand = _adc_candidates(adc, m=PQ_M, n_codes=PQ_CODES, n_rerank=n_rerank)
     qv = qtab.select("query_id", "_qv").dropDuplicates(["query_id"])
-    return _exact_rerank(cand, qv, corpus, vec_col, id_col, k=k)
+    return _exact_rerank(cand, qv, corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -969,12 +943,12 @@ class IndexConflictError(RuntimeError):
     idempotent or convergent)."""
 
 
-def _check_index_ids(df: DataFrame, id_col: str) -> None:
+def _check_index_ids(df: DataFrame) -> None:
     """Refuse ids the bigint ``neighbor_id`` column cannot hold."""
-    t = df.schema[id_col].dataType
+    t = df.schema[ID_COL].dataType
     if not isinstance(t, T.IntegralType):
         raise TypeError(
-            f"a persisted IVF-PQ index stores bigint ids; {id_col!r} is "
+            f"a persisted IVF-PQ index stores bigint ids; {ID_COL!r} is "
             f"{t.simpleString()}"
         )
 
@@ -1140,8 +1114,6 @@ def ivfpq_write_index(
     corpus: DataFrame,
     path: str,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_cells: int = 16,
     m: int = 8,
     n_codes: int = 64,
@@ -1167,13 +1139,13 @@ def ivfpq_write_index(
     may lazily read the index it replaces — the previous version's
     files are deleted only after the commit. Returns ``{"n_indexed",
     "n_cells", "m", "n_codes", "dim"}``."""
-    _check_index_ids(corpus, id_col)
+    _check_index_ids(corpus)
     spark = corpus.sparkSession
     n0, prior = _snapshot(spark, path, required=False)
     own = f"v{n0 + 1}-{uuid.uuid4().hex}"
     base = f"{path}/{own}"
     C, books = _ivfpq_train_model(
-        corpus, vec_col, id_col,
+        corpus,
         n_cells=n_cells, m=m, n_codes=n_codes,
         train_rows=train_rows, sample_order="hash",
     )
@@ -1195,7 +1167,7 @@ def ivfpq_write_index(
     # encode exactly once, DIRECTLY into the clustered write: the
     # n_indexed count and the cell list ride the write job
     w = _write_codes(
-        _ivfpq_encode(corpus, vec_col, id_col, C, books), f"{base}/codes"
+        _ivfpq_encode(corpus, C, books), f"{base}/codes"
     )
     n = int(w["n"])
     if prior is not None:
@@ -1326,9 +1298,6 @@ def ivfpq_merge_index(
     spark,
     path: str,
     new_vectors: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> dict:
     """Incrementally MERGE a batch of vectors into a persisted index:
     encode the batch under the committed model (no retrain — exactly
@@ -1355,10 +1324,10 @@ def ivfpq_merge_index(
     ``n_id_conflicts`` counts batch ids presented with two DIFFERENT
     vectors (malformed upstream; resolved deterministically, see the
     inline note)."""
-    _check_index_ids(new_vectors, id_col)
+    _check_index_ids(new_vectors)
     n0, snap = _snapshot(spark, path)
     C, books, meta = _model_at(spark, path, snap)
-    enc = _ivfpq_encode(new_vectors, vec_col, id_col, C, books)
+    enc = _ivfpq_encode(new_vectors, C, books)
     # Intra-batch id dedup BEFORE the index anti-join: the anti-join
     # only rejects ids the INDEX already holds, so two rows with the
     # same id inside one batch would both survive it and be appended
@@ -1496,8 +1465,6 @@ def ivfpq_delete_ids(
     spark,
     path: str,
     ids,
-    *,
-    id_col: str = "vec_id",
 ) -> dict:
     """DELETE vectors from a persisted index by id — the maintenance
     verb merge cannot express (merge only ever adds rows the index
@@ -1524,7 +1491,7 @@ def ivfpq_delete_ids(
     ``{"n_deleted", "n_cells_rewritten", "n_cells_emptied"}``."""
     n0, snap = _snapshot(spark, path)
     if not isinstance(ids, DataFrame):
-        ids = local_frame(spark, [(i,) for i in ids], f"{id_col} bigint")
+        ids = local_frame(spark, [(i,) for i in ids], f"{ID_COL} bigint")
     victims = (
         ids.select(F.col(ids.columns[0]).alias("neighbor_id")).distinct()
     )
@@ -1583,8 +1550,6 @@ def ivfpq_drift_audit(
     path: str,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     segment_col=None,
     scope: str = "index",
 ) -> DataFrame:
@@ -1649,7 +1614,7 @@ def ivfpq_drift_audit(
         F.lit("all") if segment_col is None else F.col(segment_col)
     ).cast("string").alias("segment")
     vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v"),
+        F.col(ID_COL).alias("neighbor_id"), _as_double().alias("_v"),
         seg,
     )
     codes = _codes_at(spark, path, snap)
@@ -1711,9 +1676,6 @@ def ivfpq_reembed(
     spark,
     path: str,
     changed: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> dict:
     """Re-embed under CHANGED vectors — the documented SCD maintenance
     path (see ``ivfpq_merge_index``): merge alone would silently KEEP
@@ -1728,11 +1690,9 @@ def ivfpq_reembed(
     deleted. Count conservation holds whenever the batch ids were all
     present: n_deleted == n_inserted. Returns ``{"n_batch",
     "n_deleted", "n_inserted"}``."""
-    ids = changed.select(F.col(id_col)).distinct()
-    d = ivfpq_delete_ids(spark, path, ids, id_col=id_col)
-    m = ivfpq_merge_index(
-        spark, path, changed, vec_col=vec_col, id_col=id_col
-    )
+    ids = changed.select(F.col(ID_COL)).distinct()
+    d = ivfpq_delete_ids(spark, path, ids)
+    m = ivfpq_merge_index(spark, path, changed)
     return {
         "n_batch": m["n_batch"],
         "n_deleted": d["n_deleted"],
@@ -1746,9 +1706,6 @@ def ivfpq_probe_index(
     queries: DataFrame,
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
     n_probe: int = 4,
     n_rerank: int = 96,
 ) -> DataFrame:
@@ -1777,7 +1734,7 @@ def ivfpq_probe_index(
     # distinct+collect job. Sorted so the pruning
     # filter's literal list is deterministic across runs.
     qtab, _m = checkpoint_with_metrics(
-        _ivfpq_query_tables(queries, vec_col, id_col, C, books, n_probe),
+        _ivfpq_query_tables(queries, C, books, n_probe),
         cells=F.collect_set("cell"),
     )
     qtab = register_pinned(qtab)
@@ -1792,18 +1749,12 @@ def ivfpq_probe_index(
         adc, m=meta["m"], n_codes=meta["n_codes"], n_rerank=n_rerank
     )
     qv = qtab.select("query_id", "_qv").dropDuplicates(["query_id"])
-    return _exact_rerank(cand, qv, corpus, vec_col, id_col, k=k)
+    return _exact_rerank(cand, qv, corpus)
 
 
-def kmeans_clusters(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """MLlib KMeans cluster assignment per vector — (id, cluster).
+def kmeans_clusters(df: DataFrame) -> DataFrame:
+    """MLlib KMeans cluster assignment per vector — (id, cluster), 8
+    clusters from seed 7.
 
     The trained-quantizer upgrade of ``ivf_cosine_topk``'s sampled
     centroids: ``KMeans.fit`` runs ``LLOYD_ITERS`` distributed Lloyd
@@ -1817,24 +1768,18 @@ def kmeans_clusters(
     from pyspark.ml.functions import array_to_vector
 
     feat = df.select(
-        F.col(id_col),
-        array_to_vector(_as_double(vec_col)).alias("features"),
+        F.col(ID_COL),
+        array_to_vector(_as_double()).alias("features"),
     )
     model = KMeans(
-        k=k, seed=seed, maxIter=LLOYD_ITERS, initMode="k-means||"
+        k=8, seed=7, maxIter=LLOYD_ITERS, initMode="k-means||"
     ).fit(feat)
     return model.transform(feat).select(
-        F.col(id_col), F.col("prediction").alias("cluster")
+        F.col(ID_COL), F.col("prediction").alias("cluster")
     )
 
 
-def quantize_int8_stats(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    group_col: str | None = None,
-) -> DataFrame:
+def quantize_int8_stats(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization with reconstruction-error
     reporting — the storage-reduction step every embedding index at
     100 TB needs (float32 → int8 is a 4× footprint cut; serving stacks
@@ -1849,16 +1794,16 @@ def quantize_int8_stats(
     Scale shape: one narrow pass computes per-vector rmse inside
     whole-stage codegen (``transform``/``aggregate`` higher-order
     functions — zero Python, zero shuffle), then one map-side-combining
-    hash agg on the group key. All-zero vectors take scale=0 and report
+    hash agg on the label. All-zero vectors take scale=0 and report
     rmse 0 rather than NaN.
 
-    Returns per group: (group, n_vecs, avg_rmse, max_rmse) with rmse
+    Returns per label: (grp, n_vecs, avg_rmse, max_rmse) with rmse
     rounded to 6 dp per vector (order-independent within a vector up to
     fp addition order; the per-group avg is the caller's to round).
     """
-    df = _spread(df, id_col)  # single-file inputs otherwise run ONE task
-    v = _as_double(vec_col)
-    dim = F.size(F.col(vec_col))
+    df = _spread(df, ID_COL)  # single-file inputs otherwise run ONE task
+    v = _as_double()
+    dim = F.size(F.col(VEC_COL))
     scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
     q = F.transform(
         v,
@@ -1875,9 +1820,8 @@ def quantize_int8_stats(
     rmse = F.when(scale == 0, F.lit(0.0)).otherwise(
         F.round(F.sqrt(sq_err / dim), 6)
     )
-    grp = F.lit("all").alias("grp") if group_col is None else F.col(group_col).alias("grp")
     return (
-        df.select(grp, rmse.alias("_rmse"))
+        df.select(F.col(LABEL_COL).alias("grp"), rmse.alias("_rmse"))
         .groupBy("grp")
         .agg(
             F.count("*").alias("n_vecs"),
@@ -1890,13 +1834,10 @@ def quantize_int8_stats(
 def semantic_dedup(
     df: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 8,
-    threshold: float = 0.3,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public method): k-means cluster the
-    embeddings, connect within-cluster pairs with cosine ≥ threshold,
+    embeddings, connect within-cluster pairs with cosine ≥ SEMDEDUP_THRESHOLD,
     keep ONE representative per connected near-dup component — returns
     (id, cluster, keep boolean) covering every input vector.
 
@@ -1941,21 +1882,21 @@ def semantic_dedup(
     # the Θ(epochs·sample·k) fit Θ(epochs·k²), corpus-independent.
     # Assignment stays full-corpus.
     V = _sample_normalized(
-        df, vec_col, id_col, max(FIT_SAMPLE_ROWS, 32 * k),
+        df, max(FIT_SAMPLE_ROWS, 32 * k),
         sample_order="hash",
     )
     C = _unit_rows(np.asarray(_lloyd(V, k, LLOYD_ITERS), dtype=np.float64))
     cents = [list(map(float, row)) for row in C]
     assign = _ivf_tag_arrow(
-        df, vec_col, id_col, cents, role="assign"
+        df, cents, role="assign"
     ).select(
-        F.col("neighbor_id").alias(id_col),
+        F.col("neighbor_id").alias(ID_COL),
         F.col("cell").cast("int").alias("cluster"),
     )
     base = (
-        df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
+        df.select(F.col(ID_COL).alias("_id"), _as_double().alias("_v"))
         .withColumn("_n", _norm(F.col("_v")))
-        .join(assign.select(F.col(id_col).alias("_id"), "cluster"), "_id")
+        .join(assign.select(F.col(ID_COL).alias("_id"), "cluster"), "_id")
         .persist()
     )
     try:
@@ -1987,7 +1928,7 @@ def semantic_dedup(
             a.join(b, "cluster")
             .filter(F.col("id_a") < F.col("id_b"))
             .withColumn("_cos", cos)
-            .filter(F.col("_cos") >= threshold)
+            .filter(F.col("_cos") >= SEMDEDUP_THRESHOLD)
             .select("id_a", "id_b")
         )
         comps = connected_components(pairs, max_iter=CC_MAX_ITER)
@@ -1996,7 +1937,7 @@ def semantic_dedup(
                 comps.withColumnRenamed("id", "_id"), "_id", "left"
             )
             .select(
-                F.col("_id").alias(id_col),
+                F.col("_id").alias(ID_COL),
                 "cluster",
                 # un-paired vectors have no component row -> kept; paired
                 # ones survive iff they ARE their component's min label
@@ -2054,18 +1995,13 @@ def crossencoder_rerank_topk(
     candidates: DataFrame,
     queries: DataFrame,
     corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    dim: int = 64,
 ) -> DataFrame:
     """Second-stage reranking over a first-stage candidate list — the
     retrieve-then-rerank architecture every production vector-search
     stack runs (bi-encoder ANN recall stage, cross-encoder precision
     stage). ``candidates`` is any (query_id, neighbor_id) frame from a
     first stage (ivfpq_cosine_topk, lsh_cosine_topk, ...); each pair is
-    re-scored by the pairwise model and only the top ``k`` per query
+    re-scored by the pairwise model and only the top ``TOP_K`` per query
     survive.
 
     The scoring model here is a deterministic stand-in for a learned
@@ -2084,10 +2020,10 @@ def crossencoder_rerank_topk(
     two-stage architecture. Output: (query_id, neighbor_id, ce_score
     rounded to 6dp, rank)."""
     qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+        F.col(ID_COL).alias("query_id"), _as_double().alias("_qv")
     )
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv")
+        F.col(ID_COL).alias("neighbor_id"), _as_double().alias("_cv")
     )
     pairs = (
         candidates.select("query_id", "neighbor_id")
@@ -2095,7 +2031,7 @@ def crossencoder_rerank_topk(
         .join(cv, "neighbor_id")
     )
 
-    W_np = np.array([_ce_weight(d) for d in range(dim)], dtype=np.float64)
+    W_np = np.array([_ce_weight(d) for d in range(CE_DIM)], dtype=np.float64)
 
     @F.pandas_udf("double")
     def _score(q: pd.Series, c: pd.Series) -> pd.Series:
@@ -2117,7 +2053,7 @@ def crossencoder_rerank_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "neighbor_id",

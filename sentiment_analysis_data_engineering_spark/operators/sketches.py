@@ -291,7 +291,8 @@ def bloom_prune(fact: DataFrame, key_col: str, bloom: dict) -> DataFrame:
 # Count-Min Sketch (mergeable frequency sketch, DataFrame-native)
 # --------------------------------------------------------------------------
 
-#: Modular-hash constants: primes below the Mersenne prime 2^31-1.
+#: Modular-hash constants, one pair per sketch row (depth 3): primes
+#: below the Mersenne prime 2^31-1.
 #: With 0 <= key < 2^31 every product stays < 2^62, so the hash chain
 #: is EXACT int64 arithmetic in Spark, DuckDB, or any engine — the
 #: sketch content (not just its estimates) is reproducible everywhere.
@@ -300,7 +301,6 @@ CMS_HASHES = [
     (1_299_709, 15_485_863),
     (2_038_074_743, 32_452_843),
     (179_424_673, 982_451_653),
-    (217_645_177, 497_867_117),
 ]
 
 
@@ -308,12 +308,11 @@ def _cms_cell(key, a: int, b: int, width: int):
     return ((F.lit(a) * key + F.lit(b)) % CMS_P) % width
 
 
-def cms_build(
-    df: DataFrame, key_col: str, *, depth: int = 3, width: int = 512
-) -> DataFrame:
+def cms_build(df: DataFrame, key_col: str, *, width: int = 512) -> DataFrame:
     """Count-Min Sketch of a non-negative int key column as a MERGEABLE
     DataFrame: (row_i int, cell int, cnt long) — at most depth × width
-    rows regardless of input size.
+    rows regardless of input size (depth = one row per ``CMS_HASHES``
+    pair).
 
     This is the relational representation of the classic depth×width
     counter matrix: build per batch/partition-of-history, persist next
@@ -324,15 +323,8 @@ def cms_build(
     hash agg whose key space is depth×width — shuffle rows are
     SKETCH-bounded, not data-bounded.
     """
-    if not 1 <= depth <= len(CMS_HASHES):
-        raise ValueError(f"depth must be in [1, {len(CMS_HASHES)}], got {depth}")
     key = F.col(key_col)
-    cells = F.array(
-        *[
-            _cms_cell(key, *CMS_HASHES[i], width).cast("int")
-            for i in range(depth)
-        ]
-    )
+    cells = F.array(*[_cms_cell(key, a, b, width).cast("int") for a, b in CMS_HASHES])
     return (
         df.select(F.posexplode(cells).alias("row_i", "cell"))
         .groupBy("row_i", "cell")
@@ -341,7 +333,7 @@ def cms_build(
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of CMS frames built with identical (depth, width).
+    """Cell-wise sum of CMS frames built with identical width.
     Estimates from the merged sketch are exactly the estimates of a
     single sketch over the concatenated inputs (counter addition is
     the CMS merge law)."""
@@ -358,7 +350,6 @@ def cms_estimate(
     keys: DataFrame,
     key_col: str,
     *,
-    depth: int = 3,
     width: int = 512,
 ) -> DataFrame:
     """Point-estimate each key's frequency from a CMS frame: probe the
@@ -374,12 +365,7 @@ def cms_estimate(
     probes = keys.select(
         key,
         F.posexplode(
-            F.array(
-                *[
-                    _cms_cell(key, *CMS_HASHES[i], width).cast("int")
-                    for i in range(depth)
-                ]
-            )
+            F.array(*[_cms_cell(key, a, b, width).cast("int") for a, b in CMS_HASHES])
         ).alias("row_i", "cell"),
     )
     return (

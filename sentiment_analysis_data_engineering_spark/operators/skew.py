@@ -54,24 +54,22 @@ def salted_join(
     skewed: DataFrame,
     other: DataFrame,
     on: Sequence[str],
-    *,
-    buckets: int = 16,
 ) -> DataFrame:
     """Inner equi-join where ``skewed``'s hot keys would overload single
-    tasks: the skewed side gets a per-row salt appended to the join
-    key; ``other`` is replicated once per salt value (explode over
-    ``sequence(0, buckets-1)``), so each (key, salt) pair is its own
-    shuffle partition and a hot key fans out over ``buckets`` tasks.
+    tasks: the skewed side gets a per-row salt in [0, 8) appended to the
+    join key; ``other`` is replicated once per salt value (explode over
+    ``sequence(0, 7)``), so each (key, salt) pair is its own shuffle
+    partition and a hot key fans out over 8 tasks.
 
-    Cost model: ``other`` is scanned once but shuffles ``buckets``×
+    Cost model: ``other`` is scanned once but shuffles 8×
     its size — use when ``other`` is the small-but-not-broadcastable
     side. For broadcast-sized ``other``, a plain broadcast join already
     has no skew problem; for two huge sides, prefer AQE skew-join.
 
     Inner only: under an outer join, an unmatched row of ``other``
-    would surface once per salt value (``buckets`` duplicates).
+    would surface once per salt value (8 duplicates).
     """
-    on = list(on)
+    on, buckets = list(on), 8
     left = skewed.withColumn("_salt", _salt_col(skewed, buckets))
     right = other.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
@@ -84,11 +82,10 @@ def salted_sum_count(
     df: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str],
-    *,
-    buckets: int = 16,
 ) -> DataFrame:
     """Two-stage aggregation for skewed group keys: stage 1 aggregates
-    per (keys, salt) — spreading a hot group over ``buckets`` reducers —
+    per (keys, salt in [0, 16)) — spreading a hot group over 16
+    reducers —
     stage 2 merges the partials per key. Emits ``n`` (count) plus
     ``sum_<col>`` for each requested column.
 
@@ -101,7 +98,7 @@ def salted_sum_count(
     """
     keys = list(keys)
     stage1 = (
-        df.withColumn("_salt", _salt_col(df, buckets))
+        df.withColumn("_salt", _salt_col(df, 16))
         .groupBy(*keys, "_salt")
         .agg(
             F.count("*").alias("_n"),

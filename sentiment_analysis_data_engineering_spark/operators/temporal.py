@@ -31,6 +31,15 @@ __all__ = [
     "linear_interpolate",
 ]
 
+#: the smoothing factor of ewma_last and brown_double_smoothing
+ALPHA = 0.3
+
+#: brown_double_smoothing fits each key's trailing this many rows
+BROWN_LOOKBACK = 64
+
+#: range_join_buckets' equi-join bucket width
+RANGE_BUCKET_SECONDS = 1800
+
 
 def brown_double_smoothing(
     df: DataFrame,
@@ -39,11 +48,8 @@ def brown_double_smoothing(
     ts_col: str,
     value_col: str,
     tiebreak_col: str,
-    alpha: float = 0.3,
-    horizon: int = 7,
-    lookback: int = 64,
 ) -> DataFrame:
-    """Brown's double exponential smoothing + h-step linear forecast
+    """Brown's double exponential smoothing + 7-step linear forecast
     per key — the trend-aware upgrade of ``ewma_last``: two chained
     smoothings (s1 over the values, s2 over s1) estimate level AND
     trend, and the forecast extrapolates
@@ -57,14 +63,14 @@ def brown_double_smoothing(
     does not extend: a closed form for s2 reorders the floating-point
     additions and drifts from any recursive replica.)
 
-    Scale shape: fits run on each key's TRAILING ``lookback``
+    Scale shape: fits run on each key's TRAILING ``BROWN_LOOKBACK``
     observations — per-key work and state are constant, the
     rolling-z-score bounded-window stance, which is also what a
     forecaster wants (stale history should age out of the level
     estimate). One keyed window ranks rows, then keys co-locate with a
     hash repartition and ONE ``mapInPandas`` pass folds EVERY key in
-    the partition simultaneously: the recursion runs ``lookback``
-    vectorized steps over a (keys × lookback) matrix with a
+    the partition simultaneously: the recursion runs ``BROWN_LOOKBACK``
+    vectorized steps over a (keys × BROWN_LOOKBACK) matrix with a
     valid-length mask, so Python-side cost is per-STEP, not per-key —
     the per-group ``applyInPandas`` form measured 6.5 s at sf0.1
     (1 500 groups of Arrow overhead), this form runs the same
@@ -76,6 +82,7 @@ def brown_double_smoothing(
     import numpy as np
     import pandas as pd
 
+    alpha, horizon, lookback = ALPHA, 7, BROWN_LOOKBACK
     q = 1.0 - alpha
     factor = alpha * horizon / q
 
@@ -243,15 +250,16 @@ def range_join_buckets(
     event_ts: str,
     win_start: str,
     win_end: str,
-    bucket_seconds: int = 1800,
 ) -> DataFrame:
     """Interval join: event rows matched to every window row of the same
     by-key with ``win_start <= event_ts <= win_end``.
 
-    Equi-join on (by, bucket) with windows exploded over the buckets
-    they span, then an exact range filter. Each event occupies exactly
-    one bucket, so no post-join dedup is needed.
+    Equi-join on (by, ``RANGE_BUCKET_SECONDS`` bucket) with windows
+    exploded over the buckets they span, then an exact range filter.
+    Each event occupies exactly one bucket, so no post-join dedup is
+    needed.
     """
+    bucket_seconds = RANGE_BUCKET_SECONDS
     ev = events.withColumn(
         "_bkt", F.floor(F.unix_micros(F.col(event_ts)) / (bucket_seconds * 1_000_000))
     )
@@ -281,9 +289,8 @@ def ewma_last(
     ts_col: str,
     value_col: str,
     tiebreak_col: str,
-    alpha: float = 0.3,
 ) -> DataFrame:
-    """Exponentially-weighted moving average per key, reporting the
+    """Exponentially-weighted moving average per key (α = ``ALPHA``), reporting the
     final (most-recent) smoothed value — the standard time-series
     smoother (s_1 = x_1; s_i = α·x_i + (1-α)·s_{i-1}).
 
@@ -303,6 +310,7 @@ def ewma_last(
     Returns (key, n_events, ewma) with ``ewma`` unrounded — callers
     that hash-compare across engines should round.
     """
+    alpha = ALPHA
     w = W.partitionBy(key_col).orderBy(F.col(ts_col), F.col(tiebreak_col))
     rn = F.row_number().over(w)
     n = F.count("*").over(W.partitionBy(key_col))

@@ -49,6 +49,13 @@ __all__ = [
 #: k-ary pass-count law in tests/test_text.py.
 LAST_BISECTION_PASSES = 0
 
+#: chunk_token_windows: token windows of CHUNK_SIZE every CHUNK_STRIDE
+CHUNK_SIZE = 32
+CHUNK_STRIDE = 16
+
+#: bigram_pmi keeps bigrams occurring at least this often
+PMI_MIN_COUNT = 10
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -161,10 +168,8 @@ def fingerprint_md5(col: Column | str) -> Column:
     return F.md5(normalize_text(col).cast("binary"))
 
 
-def tfidf_top_terms(
-    df: DataFrame, text_col: str, id_col: str, *, k: int = 3
-) -> DataFrame:
-    """Top-k TF-IDF terms per document — (id, term, score, rank).
+def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Top-3 TF-IDF terms per document — (id, term, score, rank).
 
     Smoothed idf = ln((N+1)/(df+1)) + 1 (the scikit-learn convention);
     score = tf · idf rounded to 6 dp. Everything is explode + two hash
@@ -177,7 +182,7 @@ def tfidf_top_terms(
       raw token stream;
     - N: computed from the same tf frame (distinct doc count), avoiding
       a second scan of the corpus;
-    - top-k: row_number window over (doc) — k rows out per doc,
+    - top-3: row_number window over (doc) — 3 rows out per doc,
       deterministic tiebreak on the term.
 
     The idf join broadcasts when the vocabulary is small; at 100 TB the
@@ -209,7 +214,7 @@ def tfidf_top_terms(
     w = Window.partitionBy("_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select(F.col("_id").alias(id_col), "term", "score", "rank")
     )
 
@@ -275,21 +280,19 @@ def chunk_token_windows(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    chunk_size: int = 32,
-    stride: int = 16,
 ) -> DataFrame:
     """Sliding-window document chunking — the standard pretraining/RAG
-    segmentation: token windows of ``chunk_size`` starting every
-    ``stride`` tokens (overlapping when stride < chunk_size), the last
-    window truncated at the document end.
+    segmentation: token windows of ``CHUNK_SIZE`` starting every
+    ``CHUNK_STRIDE`` tokens (overlapping when the stride is shorter),
+    the last window truncated at the document end.
 
     Output: (id, chunk_idx, n_chunk_tokens, chunk_text), chunk_idx
     dense from 0 in document order. One generate (explode of the start
     offsets) over a narrow scan — ZERO shuffles at any corpus size; the
     chunk count is ceil(n_tokens / stride), so output volume is
-    bounded by (chunk_size/stride)× the corpus, a knob the caller owns.
+    bounded by (CHUNK_SIZE/CHUNK_STRIDE)× the corpus.
     """
+    chunk_size, stride = CHUNK_SIZE, CHUNK_STRIDE
     toks = tokens(_c(text_col))
     n = F.size(toks)
     src = df.select(
@@ -384,12 +387,10 @@ def unigram_logprob_score(
 def bigram_pmi(
     df: DataFrame,
     text_col: str,
-    *,
-    min_count: int = 5,
 ) -> DataFrame:
     """Corpus-level bigram collocations by pointwise mutual information
     — (w1, w2, pair_count, pmi), adjacent-token bigrams occurring at
-    least ``min_count`` times. The classic collocation-mining signal
+    least ``PMI_MIN_COUNT`` times. The classic collocation-mining signal
     (Church-Hanks 1990): PMI = ln(c_xy·N / (c_x·c_y)) with unigram
     counts c_x over the whole token stream and N = total tokens — high
     PMI ⇒ the pair co-occurs far above chance ("new york", "per
@@ -411,8 +412,6 @@ def bigram_pmi(
     overflow; IEEE multiply/divide round identically everywhere) and
     rounded to 6 dp, the cross-engine ln convention.
     """
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
     t = F.filter(tokens(normalize_text(text_col)), lambda x: x != "")
     base = df.select(t.alias("_t"))
     uni = (
@@ -441,7 +440,7 @@ def bigram_pmi(
         .select("_b.w1", "_b.w2")
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("pair_count"))
-        .filter(F.col("pair_count") >= min_count)
+        .filter(F.col("pair_count") >= PMI_MIN_COUNT)
     )
     c1 = uni.select(F.col("term").alias("w1"), F.col("_c").alias("_c1"))
     c2 = uni.select(F.col("term").alias("w2"), F.col("_c").alias("_c2"))
@@ -464,11 +463,9 @@ def bigram_pmi(
     )
 
 
-def bigram_logprob_score(
-    df: DataFrame, text_col: str, id_col: str, *, k: float = 0.5
-) -> DataFrame:
+def bigram_logprob_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document mean bigram log-probability and perplexity under
-    the corpus's own add-k-smoothed bigram model — the conditional-
+    the corpus's own add-k-smoothed (k = 0.5) bigram model — the conditional-
     probability upgrade of ``unigram_logprob_score``: a document full
     of common tokens in IMPLAUSIBLE order (shuffled text, keyword
     stuffing, template soup) scores high on the unigram signal but low
@@ -527,8 +524,8 @@ def bigram_logprob_score(
             "w1",
             "w2",
             F.log(
-                (F.col("_c12").cast("double") + F.lit(float(k)))
-                / (F.col("_c1").cast("double") + F.lit(float(k)) * F.col("_v"))
+                (F.col("_c12").cast("double") + F.lit(0.5))
+                / (F.col("_c1").cast("double") + F.lit(0.5) * F.col("_v"))
             ).alias("_lp"),
         )
     )

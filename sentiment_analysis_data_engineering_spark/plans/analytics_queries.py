@@ -724,7 +724,6 @@ def range_join_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_ts="ts",
         win_start="win_start",
         win_end="win_end",
-        bucket_seconds=1800,
     )
     return joined.groupBy("window_id", "user_id").agg(
         F.count("*").alias("n_in_window")
@@ -761,7 +760,6 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         value_col="value",
         tiebreak_col="event_id",
-        alpha=0.3,
     )
     return out.select("user_id", "n_events", F.round("ewma", 4).alias("ewma"))
 

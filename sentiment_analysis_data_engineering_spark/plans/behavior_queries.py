@@ -966,7 +966,4 @@ def brown_forecast_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         value_col="value",
         tiebreak_col="event_id",
-        alpha=0.3,
-        horizon=7,
-        lookback=64,
     )

@@ -211,9 +211,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-5-gram Jaccard near-dup pairs (threshold 0.2)."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return dd.ngram_jaccard_pairs(
-        documents, "text", "doc_id", n=5, threshold=0.2, max_bucket_size=1000
-    )
+    return dd.ngram_jaccard_pairs(documents, "text", "doc_id")
 
 
 @query(
@@ -259,10 +257,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — array_intersect counts over distinct 5-gram
     shingles — both engines share.)"""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return dd.minhash_lsh_pairs(
-        documents, "text", "doc_id",
-        num_hashes=64, bands=16, shingle_size=5, verify_threshold=0.2,
-    ).select("id_a", "id_b", "jaccard")
+    return dd.minhash_lsh_pairs(documents, "text", "doc_id").select(
+        "id_a", "id_b", "jaccard"
+    )
 
 
 def _simhash_oracle() -> str:
@@ -313,15 +310,11 @@ def _simhash_oracle() -> str:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming ≤ 3 via 4-chunk pigeonhole).
 
-    Runs in portable-hash mode (``hash_fn="md5"``) so the DuckDB
-    oracle can rebuild the identical 64-bit sketches and the gate
-    hash-checks the full pipeline — signatures, banding recall, and
-    Hamming refine. The xxhash64 default stays the production path
-    (same plan, cheaper hash)."""
+    The token hash is md5, so the DuckDB oracle can rebuild the
+    identical 64-bit sketches and the gate hash-checks the full
+    pipeline — signatures, banding recall, and Hamming refine."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return dd.simhash_pairs(
-        documents, "text", "doc_id", max_hamming=3, hash_fn="md5"
-    )
+    return dd.simhash_pairs(documents, "text", "doc_id")
 
 
 @query(
@@ -484,9 +477,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold no LSH banding holds recall, so exact is the honest
     plan."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
-    return dd.embedding_cosine_pairs(
-        embeddings, "embedding", "vec_id", threshold=0.4
-    )
+    return dd.embedding_cosine_pairs(embeddings, "embedding", "vec_id")
 
 
 # --------------------------------------------------------------------------
@@ -527,9 +518,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries over one corpus scan, per-query window top-k."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 10)
-    return sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-    )
+    return sim.cosine_topk(queries_df, embeddings, k=5)
 
 
 #: per-query recall lower bounds the approximate indexes must clear
@@ -574,13 +563,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the per-query recall contract vs the exact scan (≥ 0.8)."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 10)
-    approx = sim.lsh_cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id",
-        k=5, num_planes=12, bands=6, dim=64,
-    )
-    exact = sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-    )
+    approx = sim.lsh_cosine_topk(queries_df, embeddings, dim=64)
+    exact = sim.cosine_topk(queries_df, embeddings, k=5)
     return _ann_recall_contract(approx, exact, 0.8)
 
 
@@ -592,13 +576,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract vs the exact scan (≥ 0.6)."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 10)
-    approx = sim.ivf_cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id",
-        k=5, n_centroids=16, n_probe=4,
-    )
-    exact = sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-    )
+    approx = sim.ivf_cosine_topk(queries_df, embeddings)
+    exact = sim.cosine_topk(queries_df, embeddings, k=5)
     return _ann_recall_contract(approx, exact, 0.6)
 
 
@@ -626,12 +605,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = embeddings.filter(F.col("vec_id") < 10)
     n_corpus = fixture_rows(sf_dir, "embeddings")
     approx = sim.pq_cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id",
-        k=5, m=8, n_codes=64, n_rerank=max(96, n_corpus // 8),
+        queries_df, embeddings, n_rerank=max(96, n_corpus // 8)
     )
-    exact = sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-    )
+    exact = sim.cosine_topk(queries_df, embeddings, k=5)
     return _ann_recall_contract(approx, exact, 0.6)
 
 
@@ -651,13 +627,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = embeddings.filter(F.col("vec_id") < 10)
     n_corpus = fixture_rows(sf_dir, "embeddings")
     approx = sim.ivfpq_cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id",
-        k=5, n_cells=16, n_probe=4, m=8, n_codes=64,
-        n_rerank=max(96, n_corpus // 8),
+        queries_df, embeddings, n_rerank=max(96, n_corpus // 8)
     )
-    exact = sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-    )
+    exact = sim.cosine_topk(queries_df, embeddings, k=5)
     return _ann_recall_contract(approx, exact, 0.6)
 
 
@@ -772,9 +744,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries_df = planted.filter(F.col("vec_id") < 10)
     exact = (
-        sim.cosine_topk(
-            queries_df, planted, vec_col="embedding", id_col="vec_id", k=5
-        )
+        sim.cosine_topk(queries_df, planted, k=5)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)  # consumed by two hit-joins
     )
@@ -782,10 +752,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_queries = queries_df.count()
 
     with _scratch_index("spark_graft_ivfpq_clustered_") as path:
-        sim.ivfpq_write_index(
-            planted, path, vec_col="embedding", id_col="vec_id",
-            n_cells=16, m=8, n_codes=64,
-        )
+        sim.ivfpq_write_index(planted, path, n_cells=16, m=8, n_codes=64)
         n_cells_occupied = (
             sim.ivfpq_codes(spark, path)
             .select("cell").distinct().count()
@@ -793,8 +760,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def probe_hits(n_probe: int) -> tuple[int, int]:
             approx = sim.ivfpq_probe_index(
-                spark, path, queries_df, planted,
-                vec_col="embedding", id_col="vec_id", k=5, n_probe=n_probe,
+                spark, path, queries_df, planted, n_probe=n_probe
             ).select("query_id", "neighbor_id")
             n_results = approx.count()
             hits = approx.join(
@@ -868,9 +834,7 @@ def ann_clustered_recall_families(
     )
     queries_df = planted.filter(F.col("vec_id") < 10)
     exact = (
-        sim.cosine_topk(
-            queries_df, planted, vec_col="embedding", id_col="vec_id", k=5
-        )
+        sim.cosine_topk(queries_df, planted, k=5)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)  # consumed by three hit-joins
     )
@@ -886,21 +850,14 @@ def ann_clustered_recall_families(
         )
 
     lsh_hits = hits(
-        sim.lsh_cosine_topk(
-            queries_df, planted, vec_col="embedding", id_col="vec_id",
-            k=5, num_planes=12, bands=6, dim=_CLUSTERED_DIM,
-        )
+        sim.lsh_cosine_topk(queries_df, planted, dim=_CLUSTERED_DIM)
     )
     ivf_hits = hits(
-        sim.ivf_cosine_topk(
-            queries_df, planted, vec_col="embedding", id_col="vec_id",
-            k=5, n_centroids=16, n_probe=4,
-        )
+        sim.ivf_cosine_topk(queries_df, planted)
     )
     pq_hits = hits(
         sim.pq_cosine_topk(
-            queries_df, planted, vec_col="embedding", id_col="vec_id",
-            k=5, m=8, n_codes=64, n_rerank=max(96, n_corpus // 8),
+            queries_df, planted, n_rerank=max(96, n_corpus // 8)
         )
     )
     planted.unpersist()
@@ -991,13 +948,9 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_corpus = fixture_rows(sf_dir, "embeddings")
 
     with _scratch_index("spark_graft_ivfpq_idx_") as path:
-        sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
-        m1 = sim.ivfpq_merge_index(
-            spark, path, delta, vec_col="embedding", id_col="vec_id"
-        )
-        m2 = sim.ivfpq_merge_index(
-            spark, path, delta, vec_col="embedding", id_col="vec_id"
-        )
+        sim.ivfpq_write_index(base, path)
+        m1 = sim.ivfpq_merge_index(spark, path, delta)
+        m2 = sim.ivfpq_merge_index(spark, path, delta)
         merge_ok = (
             m1["n_added"] == m1["n_batch"]
             and m1["n_batch"] > 0
@@ -1008,12 +961,9 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # qtab pass + pruned codes read + ADC window + rerank
         probe = sim.ivfpq_probe_index(
             spark, path, queries_df, embeddings,
-            vec_col="embedding", id_col="vec_id",
-            k=5, n_probe=8, n_rerank=max(96, n_corpus // 8),
+            n_probe=8, n_rerank=max(96, n_corpus // 8),
         ).localCheckpoint(eager=True)
-        exact = sim.cosine_topk(
-            queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=5
-        )
+        exact = sim.cosine_topk(queries_df, embeddings, k=5)
         audit = sim.ivfpq_codes(spark, path).agg(
             F.count("*").alias("_n_rows"),
             F.countDistinct("neighbor_id").alias("_n_ids"),
@@ -1114,9 +1064,7 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_corpus = fixture_rows(sf_dir, "embeddings")
 
     with _scratch_index("spark_graft_ivfpq_scd_") as path:
-        sim.ivfpq_write_index(
-            corpus, path, vec_col="embedding", id_col="vec_id"
-        )
+        sim.ivfpq_write_index(corpus, path)
         d = sim.ivfpq_delete_ids(spark, path, victims.select("vec_id"))
         n_victims = d["n_deleted"]
         post = sim.ivfpq_codes(spark, path).agg(
@@ -1128,16 +1076,13 @@ def ann_index_delete_reembed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         probe = sim.ivfpq_probe_index(
             spark, path, queries_df, corpus,
-            vec_col="embedding", id_col="vec_id",
-            k=5, n_probe=8, n_rerank=max(96, n_corpus // 8),
+            n_probe=8, n_rerank=max(96, n_corpus // 8),
         ).localCheckpoint(eager=True)
         changed = victims.select(
             "vec_id",
             F.transform("embedding", lambda x: -x).alias("embedding"),
         )
-        r = sim.ivfpq_reembed(
-            spark, path, changed, vec_col="embedding", id_col="vec_id"
-        )
+        r = sim.ivfpq_reembed(spark, path, changed)
         reembed_stats_ok = r == {
             "n_batch": n_victims, "n_deleted": 0, "n_inserted": n_victims,
         }
@@ -1227,12 +1172,8 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = corpus.filter(F.col("vec_id") % 5 == 0)
 
     with _scratch_index("spark_graft_ivfpq_drift_") as path:
-        build_meta = sim.ivfpq_write_index(
-            base, path, vec_col="embedding", id_col="vec_id"
-        )
-        sim.ivfpq_merge_index(
-            spark, path, delta, vec_col="embedding", id_col="vec_id"
-        )
+        build_meta = sim.ivfpq_write_index(base, path)
+        sim.ivfpq_merge_index(spark, path, delta)
         seg = corpus.withColumn(
             "segment",
             F.when(F.col("vec_id") % 5 == 0, "merged").otherwise("base"),
@@ -1240,8 +1181,7 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit = {
             r.segment: r
             for r in sim.ivfpq_drift_audit(
-                spark, path, seg,
-                vec_col="embedding", id_col="vec_id", segment_col="segment",
+                spark, path, seg, segment_col="segment"
             ).collect()  # 2 rows — bounded model-state class
         }
     b, g = audit["base"], audit["merged"]
@@ -1324,7 +1264,7 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_corpus = fixture_rows(sf_dir, "embeddings")
 
     with _scratch_index("spark_graft_ivfpq_ac_") as path:
-        sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
+        sim.ivfpq_write_index(base, path)
         landing = f"{path}_landing"
         for k in (0, 2, 3):  # three single-file micro-batches
             corpus.filter(F.col("vec_id") % 5 == k).coalesce(1).write.parquet(
@@ -1337,7 +1277,6 @@ def ann_index_autocompact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats = run_ivfpq_merge_stream(
             stream, path, checkpoint=f"{path}_ckpt",
-            vec_col="embedding", id_col="vec_id",
             auto_compact_max_files=3,
         )
         frag = sim.ivfpq_cell_file_counts(spark, path)
@@ -1426,29 +1365,21 @@ def ann_index_retrain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {
             r.segment: r
             for r in sim.ivfpq_drift_audit(
-                spark, path, seg,
-                vec_col="embedding", id_col="vec_id", segment_col="segment",
+                spark, path, seg, segment_col="segment"
             ).collect()  # 2 rows — bounded model-state class
         }
 
     with _scratch_index("spark_graft_ivfpq_rt_") as path:
-        sim.ivfpq_write_index(base, path, vec_col="embedding", id_col="vec_id")
-        sim.ivfpq_merge_index(
-            spark, path, delta, vec_col="embedding", id_col="vec_id"
-        )
+        sim.ivfpq_write_index(base, path)
+        sim.ivfpq_merge_index(spark, path, delta)
         a1 = audit(path)
-        sim.ivfpq_write_index(  # retrain = full rebuild, fresh model
-            corpus, path, vec_col="embedding", id_col="vec_id"
-        )
+        sim.ivfpq_write_index(corpus, path)  # retrain = full rebuild, fresh model
         a2 = audit(path)
         probe = sim.ivfpq_probe_index(
             spark, path, queries_df, corpus,
-            vec_col="embedding", id_col="vec_id",
-            k=5, n_probe=8, n_rerank=max(96, n_corpus // 8),
+            n_probe=8, n_rerank=max(96, n_corpus // 8),
         ).localCheckpoint(eager=True)
-        exact = sim.cosine_topk(
-            queries_df, corpus, vec_col="embedding", id_col="vec_id", k=5
-        )
+        exact = sim.cosine_topk(queries_df, corpus, k=5)
         n_queries = queries_df.count()
         total_hits = probe.join(
             exact, ["query_id", "neighbor_id"], "left_semi"
@@ -1572,7 +1503,7 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _scratch_index("spark_graft_ivfpq_ar_") as path:
         sim.ivfpq_write_index(
-            corpus0, path, vec_col="embedding", id_col="vec_id",
+            corpus0, path,
             n_cells=16, m=8, n_codes=128, train_rows=512,
         )
         landing = f"{path}_landing"
@@ -1586,7 +1517,6 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return run_ivfpq_merge_stream(
                 stream, path, checkpoint=f"{path}_ckpt",
-                vec_col="embedding", id_col="vec_id",
                 auto_retrain_drift_ratio=1.5,
                 retrain_corpus=retrain_corpus,
                 retrain_train_rows=512,
@@ -1598,8 +1528,7 @@ def ann_index_autoretrain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = {
                 r.segment: r
                 for r in sim.ivfpq_drift_audit(
-                    spark, path, corpus,
-                    vec_col="embedding", id_col="vec_id", scope=scope,
+                    spark, path, corpus, scope=scope
                 ).collect()  # ≤ 2 rows — bounded model-state class
             }
             return rows["all"]
@@ -1682,16 +1611,13 @@ def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q|·32 pairs regardless of corpus size."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 10)
-    cand = sim.cosine_topk(
-        queries_df, embeddings, vec_col="embedding", id_col="vec_id", k=32
-    )
+    cand = sim.cosine_topk(queries_df, embeddings, k=32)
     # materialize the reranked top-5 ONCE: three contract legs (jvm
     # agreement, candidate subset, recall hits) fan out from `rer`,
     # and without this the Arrow rerank + its window recompute per leg
     rer = dd.register_pinned(  # returned frame references rer lazily
         sim.crossencoder_rerank_topk(
-            cand, queries_df, embeddings,
-            vec_col="embedding", id_col="vec_id", k=5, dim=64,
+            cand, queries_df, embeddings
         ).localCheckpoint(eager=True)
     )
 
@@ -1830,9 +1756,7 @@ def pca_embedding_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 8
     dim = 64
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
-    proj, info = pca_fit_project(
-        embeddings, vec_col="embedding", id_col="vec_id", k=k
-    )
+    proj, info = pca_fit_project(embeddings, k=k)
     ev = info["explained_variance"]
 
     pv = proj.agg(
@@ -1917,7 +1841,7 @@ def skew_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, orders = load_tables(spark, sf_dir, "lineitem", "orders")
     l = lineitem.select(F.col("l_orderkey").alias("orderkey"), "l_quantity")
     o = orders.select(F.col("o_orderkey").alias("orderkey"), "o_orderpriority")
-    joined = sk.salted_join(l, o, ["orderkey"], buckets=8)
+    joined = sk.salted_join(l, o, ["orderkey"])
     return joined.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
         F.round(F.sum("l_quantity"), 2).alias("qty"),
@@ -1945,7 +1869,6 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem.select("l_returnflag", "l_quantity", "l_extendedprice"),
         ["l_returnflag"],
         ["l_quantity", "l_extendedprice"],
-        buckets=16,
     )
     return out.select(
         "l_returnflag",
@@ -1996,7 +1919,7 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         kind="image",
         mime="image/bmp",
     )
-    decoded = mm.decode_image(media, strict=True)
+    decoded = mm.decode_image(media)
     return decoded.select(
         "media_id",
         "height",
@@ -2050,7 +1973,7 @@ def audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         kind="audio",
         mime="audio/wav",
     )
-    decoded = mm.decode_audio(media, strict=True)
+    decoded = mm.decode_audio(media)
     return decoded.select(
         "media_id",
         "sample_rate",
@@ -2106,7 +2029,7 @@ def video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         kind="video",
         mime="video/x-msvideo",
     )
-    decoded = mm.decode_video_frames(media, every_n=2, strict=True)
+    decoded = mm.decode_video_frames(media)
     return decoded.select(
         "media_id",
         "frame_idx",
@@ -2144,8 +2067,6 @@ def stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         {"en": 0.5, "de": 0.25},
-        default_fraction=0.1,
-        salt="s1",
     ).select("doc_id", "lang")
 
 
@@ -2217,8 +2138,6 @@ def mixture_weighted_sample_sources(spark: SparkSession, sf_dir: str) -> DataFra
         "source",
         {"src0": 0.3, "src1": 0.2, "src2": 0.1},
         target_fraction=0.4,
-        default_weight=0.02,
-        salt="mix",
     ).select("doc_id", "source")
 
 
@@ -2254,7 +2173,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed as explode → (doc,term) aggregate → vocabulary aggregate →
     idf join → per-doc top-k window. Fully oracle-checked."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return tx.tfidf_top_terms(documents, "text", "doc_id", k=3)
+    return tx.tfidf_top_terms(documents, "text", "doc_id")
 
 
 @query(
@@ -2275,9 +2194,7 @@ def embedding_kmeans_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate hash-checks them instead of recording rows-only; distribution
     shape stays pytest-covered."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
-    assign = sim.kmeans_clusters(
-        embeddings, vec_col="embedding", id_col="vec_id", k=8, seed=7
-    )
+    assign = sim.kmeans_clusters(embeddings)
     sizes = assign.groupBy("cluster").agg(F.count("*").alias("size"))
     return sizes.agg(
         F.sum("size").alias("n_points"),
@@ -2384,10 +2301,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver metadata, no count job)."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
     k = max(_SEMDEDUP_K, fixture_rows(sf_dir, "embeddings") // 250)
-    out = sim.semantic_dedup(
-        embeddings, vec_col="embedding", id_col="vec_id",
-        k=k, threshold=0.3,
-    )
+    out = sim.semantic_dedup(embeddings, k=k)
     per_cluster = out.groupBy("cluster").agg(
         F.sum(F.col("keep").cast("long")).alias("_keeps"),
         F.count("*").alias("_size"),
@@ -2458,7 +2372,7 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load_tables(spark, sf_dir, "documents")
     docs = documents.select("doc_id", tx.token_count("text").alias("n_tokens"))
-    packed = pack_sequences(docs, "doc_id", "n_tokens", budget=512)
+    packed = pack_sequences(docs, "doc_id", "n_tokens")
     per_pack = packed.groupBy("pack_id").agg(
         F.count("*").alias("_pdocs"), F.sum("n_tokens").alias("_fill")
     )
@@ -2730,9 +2644,7 @@ def document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets over a narrow scan, zero shuffles; the standard
     pretraining/RAG segmentation step."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return tx.chunk_token_windows(
-        documents, "text", "doc_id", chunk_size=32, stride=16
-    )
+    return tx.chunk_token_windows(documents, "text", "doc_id")
 
 
 @query(
@@ -2823,7 +2735,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     training side never shuffles on the shingle)."""
     (documents,) = load_tables(spark, sf_dir, "documents")
     return dd.contamination_screen(
-        documents, "text", "doc_id", F.col("doc_id") % 50 == 0, n=5
+        documents, "text", "doc_id", F.col("doc_id") % 50 == 0
     )
 
 
@@ -2872,10 +2784,7 @@ def template_doc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py::template_doc_flags — three keyed shuffles,
     linear in corpus shingles, no pair join)."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return dd.template_doc_flags(
-        documents, "text", "doc_id",
-        n=5, hot_frac=0.01, hot_min_docs=5, template_ratio=0.5,
-    )
+    return dd.template_doc_flags(documents, "text", "doc_id")
 
 
 @query(
@@ -2914,9 +2823,7 @@ def embedding_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically, rmse folded left-to-right in list order in BOTH
     engines (same IEEE addition order -> identical doubles pre-round)."""
     (embeddings,) = load_tables(spark, sf_dir, "embeddings")
-    out = sim.quantize_int8_stats(
-        embeddings, vec_col="embedding", id_col="vec_id", group_col="label"
-    )
+    out = sim.quantize_int8_stats(embeddings)
     return out.select(
         F.col("grp").alias("label"),
         "n_vecs",
@@ -2995,7 +2902,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining agg per frame; PMI computed in double (long
     products would overflow at corpus scale) and rounded to 6 dp."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return tx.bigram_pmi(documents, "text", min_count=10)
+    return tx.bigram_pmi(documents, "text")
 
 
 @query(
@@ -3049,7 +2956,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     implausible-order text the unigram score misses. Index-zip
     bigrams, distinct-pair model join, one corpus scan."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    return tx.bigram_logprob_score(documents, "text", "doc_id", k=0.5)
+    return tx.bigram_logprob_score(documents, "text", "doc_id")
 
 
 @query(

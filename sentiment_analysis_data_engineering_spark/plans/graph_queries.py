@@ -81,10 +81,8 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("t").alias("s"), F.col("s").alias("t"))
     )
-    ranks = pagerank_fixed_point(
-        edges, src="s", dst="t",
-        damping=Fraction(17, 20), iterations=_PR_ITERS,
-        assume_symmetric=True,  # undirected edge list by construction
+    ranks = pagerank_fixed_point(  # symmetric by construction
+        edges, damping=Fraction(17, 20), iterations=_PR_ITERS
     )
     return ranks.select(F.col("node").alias("p_partkey"), "pr_fixed")
 
@@ -176,7 +174,7 @@ def triangle_counts_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_counts
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    out = triangle_counts(pairs, src="u", dst="v")
+    out = triangle_counts(pairs)
     return out.select(F.col("node").alias("p_partkey"), "degree", "triangles")
 
 
@@ -271,10 +269,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore_peel
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    out = kcore_peel(
-        pairs, k=_KCORE_K, rounds=_KCORE_ROUNDS, src="u", dst="v",
-        with_telemetry=True,
-    )
+    out = kcore_peel(pairs, k=_KCORE_K, rounds=_KCORE_ROUNDS)
     return out.select(
         F.col("node").alias("p_partkey"),
         "core_degree",
@@ -352,9 +347,7 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("t").alias("s"), F.col("s").alias("t"), "w")
     )
     ranks = pagerank_fixed_point(
-        edges, src="s", dst="t", weight="w",
-        damping=Fraction(17, 20), iterations=_PR_ITERS,
-        assume_symmetric=True,
+        edges, weight="w", damping=Fraction(17, 20), iterations=_PR_ITERS
     )
     return ranks.select(F.col("node").alias("p_partkey"), "pr_fixed")
 
@@ -440,7 +433,6 @@ def personalized_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_PPR_SEEDS)
     )
     ranks = personalized_pagerank_fixed_point(
-        edges, seeds, src="s", dst="t",
-        damping=Fraction(17, 20), iterations=_PR_ITERS,
+        edges, seeds, damping=Fraction(17, 20), iterations=_PR_ITERS
     )
     return ranks.select(F.col("node").alias("p_partkey"), "pr_fixed")

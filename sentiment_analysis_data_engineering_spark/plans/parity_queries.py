@@ -351,7 +351,7 @@ def nway_same_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = lineitem.groupBy(F.year("l_shipdate").cast("long").alias("year")).agg(
         F.round(F.sum("l_quantity"), 2).alias("total_qty")
     )
-    return n_way_inner_join([a, b, c], on="year", broadcast_all_but_first=True)
+    return n_way_inner_join([a, b, c], on="year")
 
 
 # --------------------------------------------------------------------------

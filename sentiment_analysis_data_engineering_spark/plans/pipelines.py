@@ -81,9 +81,7 @@ def load_macro_daily(
         F.get_json_object("oil", "$.data.price").try_cast("double").alias("oil_price"),
         F.get_json_object("gold", "$.rates.SGD").try_cast("double").alias("gold_price"),
     )
-    return idempotent_append(
-        spark, row, target, ["year", "month", "day"], partition_by=["year", "month"]
-    )
+    return idempotent_append(spark, row, target, ["year", "month", "day"])
 
 
 # --------------------------------------------------------------------------
@@ -126,10 +124,7 @@ def load_stock_daily(
         # intra-batch dedup first (the fixture carries ST4 duplicates)
         .dropDuplicates(["ticker", "year", "month", "day"])
     )
-    return idempotent_append(
-        spark, fact, target, ["ticker", "year", "month", "day"],
-        partition_by=["year", "month"],
-    )
+    return idempotent_append(spark, fact, target, ["ticker", "year", "month", "day"])
 
 
 # --------------------------------------------------------------------------
@@ -321,9 +316,7 @@ def _load_macro_joined(
     # partition layout must match the registry's declared (year, month)
     # (schemas.WAREHOUSE_SCHEMAS) — a year=-only layout would raise on
     # the managed table and silently break month pruning on paths
-    return idempotent_append(
-        spark, monthly, target, ["year", "month"], partition_by=["year", "month"]
-    )
+    return idempotent_append(spark, monthly, target, ["year", "month"])
 
 
 def load_macro_monthly(spark: SparkSession, payloads: list[str], target: str) -> int:

@@ -2,8 +2,9 @@
 
 Each registered query is a ``(spark, sf_dir) -> DataFrame`` callable
 plus (optionally) the ANSI-SQL oracle string DuckDB runs over the same
-parquet tables. Registration happens at import time of the
-``plans.parity_queries`` / ``plans.extension_queries`` modules.
+parquet tables. Registration happens at import time of the nine
+``plans/*_queries.py`` modules, each of which decorates its queries with
+``@query``; ``__spark_entry__`` imports them all.
 
 Determinism rules enforced across the registry (SURVEY.md §5.2):
 - every computed column is aliased identically in Spark and SQL;

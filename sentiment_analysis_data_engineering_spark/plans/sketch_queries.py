@@ -112,7 +112,7 @@ _CMS_W = 512
 def _cms_oracle() -> str:
     from ..operators.sketches import CMS_HASHES, CMS_P
 
-    depth = 3
+    depth = len(CMS_HASHES)
     sketch = "\n      UNION ALL\n".join(
         f"""      SELECT {i} AS row_i,
              ((({CMS_HASHES[i][0]} * user_id + {CMS_HASHES[i][1]})
@@ -176,11 +176,11 @@ def cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = events.filter(F.col("event_id") % 2 == 0)
     b2 = events.filter(F.col("event_id") % 2 == 1)
     merged = cms_merge(
-        cms_build(b1, "user_id", depth=3, width=_CMS_W),
-        cms_build(b2, "user_id", depth=3, width=_CMS_W),
+        cms_build(b1, "user_id", width=_CMS_W),
+        cms_build(b2, "user_id", width=_CMS_W),
     )
     keys = events.select("user_id").distinct()
-    est = cms_estimate(merged, keys, "user_id", depth=3, width=_CMS_W)
+    est = cms_estimate(merged, keys, "user_id", width=_CMS_W)
     exact = events.groupBy("user_id").agg(F.count("*").alias("exact_count"))
     return exact.join(est, "user_id").select(
         "user_id",

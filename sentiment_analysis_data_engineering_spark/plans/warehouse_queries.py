@@ -727,14 +727,13 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = changed.unionByName(noop).unionByName(new_keys)
     # the three branches are disjoint by construction (%7 / %11-not-%7 /
-    # +1e6 offset), so skip the validator's extra eager job
+    # +1e6 offset): one row per key, as scd2_apply requires
     return scd2_apply(
         hist,
         batch,
         ["c_custkey"],
         ["c_mktsegment", "bal_cents"],
         batch_ts="2001-01-01",
-        assume_unique_keys=True,
     )
 
 

@@ -163,38 +163,13 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _visible_files(spark: SparkSession, target: str) -> set[str]:
-    """Names of the data files directly under a path target (hidden
-    ``_``/``.`` entries and directories excluded); empty for a missing
-    path or a catalog table."""
-    if not _is_path(target):
-        return set()
-    fs, P = _hadoop_fs(spark, target)
-    root = P(target)
-    if not fs.exists(root):
-        return set()
-    return {
-        st.getPath().getName()
-        for st in fs.listStatus(root)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-    }
-
-
-def _counted_write(spark: SparkSession, df: DataFrame, target: str, write) -> int:
+def _counted_write(df: DataFrame, write) -> int:
     """Run ``write(observed_df)`` and return the number of rows it
     wrote, counted inside the write job itself (no cache, no second
-    action). Spark's unpartitioned writer commits one file from its
-    first task even when that task has no rows, so a write that counted
-    zero rows deletes the data files it added — a re-run with nothing
-    new (e.g. a replayed micro-batch) leaves the target as it was.
-    Partitioned writes of zero rows add no file in the first place."""
-    before = _visible_files(spark, target)
-    n = write_with_metrics(df, write, defaults={"n": 0}, n=F.count(F.lit(1)))["n"]
-    if n == 0:
-        fs, P = _hadoop_fs(spark, target)
-        for name in _visible_files(spark, target) - before:
-            fs.delete(P(f"{target.rstrip('/')}/{name}"), False)
-    return n
+    action). Both callers write partitioned, and a partitioned write of
+    zero rows adds no file: a re-run with nothing new (e.g. a replayed
+    micro-batch) leaves the target as it was."""
+    return write_with_metrics(df, write, defaults={"n": 0}, n=F.count(F.lit(1)))["n"]
 
 
 def append(
@@ -218,10 +193,9 @@ def idempotent_append(
     df: DataFrame,
     target: str,
     keys: Iterable[str],
-    *,
-    partition_by: list[str] | None = None,
 ) -> int:
-    """ST1/ST2 — append only rows whose key tuple is not yet in target.
+    """ST1/ST2 — append only rows whose key tuple is not yet in target,
+    partitioned by (year, month) like every warehouse table.
 
     Returns the number of rows appended. The target is read with the
     key columns of ``df``'s schema only, so the probe reads just the
@@ -236,8 +210,7 @@ def idempotent_append(
     existing = scan_or_none(spark, target, schema=key_schema)
     new_rows = df if existing is None else anti_join_new_rows(df, existing, keys)
     return _counted_write(
-        spark, new_rows, target,
-        lambda d: append(d, target, partition_by=partition_by),
+        new_rows, lambda d: append(d, target, partition_by=["year", "month"])
     )
 
 
@@ -300,8 +273,7 @@ def upsert_partitions(
         changed = df.join(F.broadcast(changed_keys), on=partition_by, how="left_semi")
 
     return _counted_write(
-        spark, changed, target,
-        lambda d: replace_partition(spark, d, target, partition_by),
+        changed, lambda d: replace_partition(spark, d, target, partition_by)
     )
 
 

@@ -19,8 +19,6 @@ def run_ivfpq_merge_stream(
     index_path: str,
     *,
     checkpoint: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     auto_compact_max_files: int | None = None,
     auto_retrain_drift_ratio: float | None = None,
     retrain_corpus: DataFrame | None = None,
@@ -102,6 +100,7 @@ def run_ivfpq_merge_stream(
     from fractions import Fraction
 
     from ..operators.similarity import (
+        ID_COL,
         ivfpq_cell_file_counts,
         ivfpq_codes,
         ivfpq_compact_index,
@@ -132,8 +131,7 @@ def run_ivfpq_merge_stream(
         rows = {
             r.segment: r
             for r in ivfpq_drift_audit(
-                spark, index_path, corpus,
-                vec_col=vec_col, id_col=id_col, scope=scope,
+                spark, index_path, corpus, scope=scope
             ).collect()  # ≤ 2 bounded rows
         }
         hit = rows.get("all")
@@ -159,9 +157,7 @@ def run_ivfpq_merge_stream(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        s = ivfpq_merge_index(
-            spark, index_path, batch_df, vec_col=vec_col, id_col=id_col
-        )
+        s = ivfpq_merge_index(spark, index_path, batch_df)
         if auto_compact_max_files is not None:
             frag = ivfpq_cell_file_counts(spark, index_path)
             worst = max(frag.values(), default=0)
@@ -209,13 +205,12 @@ def run_ivfpq_merge_stream(
                     members = (
                         retrain_corpus.join(
                             held,
-                            retrain_corpus[id_col] == held["neighbor_id"],
+                            retrain_corpus[ID_COL] == held["neighbor_id"],
                             "left_semi",
                         ).localCheckpoint(eager=True)
                     )
                     rebuilt = ivfpq_write_index(
                         members, index_path,
-                        vec_col=vec_col, id_col=id_col,
                         n_cells=meta["n_cells"], m=meta["m"],
                         n_codes=meta["n_codes"],
                         train_rows=retrain_train_rows,

@@ -29,7 +29,7 @@ def planar(spark):
 
 
 def test_pca_projection_shape_and_variance_accounting(planar):
-    proj, info = pca_fit_project(planar, vec_col="embedding", id_col="vec_id", k=3)
+    proj, info = pca_fit_project(planar, k=3)
     rows = proj.collect()
     assert len(rows) == 40
     assert all(len(r.components) == 3 for r in rows)
@@ -61,7 +61,7 @@ def test_pca_projection_shape_and_variance_accounting(planar):
 def test_pca_projection_matches_numpy(planar):
     # z = PC^T x row-by-row against numpy using the model's own loading
     # matrix — pins the transform plumbing (vector conversion, ordering)
-    proj, info = pca_fit_project(planar, vec_col="embedding", id_col="vec_id", k=2)
+    proj, info = pca_fit_project(planar, k=2)
     pc = info["pc"]
     X = {r.vec_id: np.array(r.embedding, dtype=np.float64)
          for r in planar.collect()}
@@ -73,6 +73,6 @@ def test_pca_projection_matches_numpy(planar):
 
 def test_pca_k_exceeding_rank_still_accounts(planar):
     # k = full dim: ratios must sum to ~1 and reconstruction is exact
-    proj, info = pca_fit_project(planar, vec_col="embedding", id_col="vec_id", k=6)
+    proj, info = pca_fit_project(planar, k=6)
     assert abs(sum(info["explained_variance"]) - 1) < 1e-9
     assert info["orthonormal_max_abs_err"] < 1e-8

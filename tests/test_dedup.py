@@ -39,7 +39,7 @@ def test_exact_dedup_groups_normalized_copies(corpus):
 def test_ngram_jaccard_finds_near_dup(corpus):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in dd.ngram_jaccard_pairs(corpus, "text", "doc_id", threshold=0.2).collect()
+        for r in dd.ngram_jaccard_pairs(corpus, "text", "doc_id").collect()
     }
     assert pairs[(0, 1)] == 1.0          # exact dup
     assert (0, 3) in pairs               # near dup above threshold
@@ -47,16 +47,15 @@ def test_ngram_jaccard_finds_near_dup(corpus):
     assert not any(4 in p for p in pairs)  # unrelated never pairs
 
 
-def test_minhash_lsh_recall_vs_exact(corpus):
+def test_minhash_lsh_recall_vs_exact(corpus, monkeypatch):
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.5)
     exact = {
         (r.id_a, r.id_b)
-        for r in dd.ngram_jaccard_pairs(corpus, "text", "doc_id", threshold=0.5).collect()
+        for r in dd.ngram_jaccard_pairs(corpus, "text", "doc_id").collect()
     }
     lsh = {
         (r.id_a, r.id_b)
-        for r in dd.minhash_lsh_pairs(
-            corpus, "text", "doc_id", verify_threshold=0.5
-        ).collect()
+        for r in dd.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
     }
     # banding at r=4,b=16 has ~0.5 jaccard threshold: pairs >= 0.5 must appear
     assert exact <= lsh or exact == lsh
@@ -64,25 +63,27 @@ def test_minhash_lsh_recall_vs_exact(corpus):
 
 
 def test_minhash_lsh_verified_never_false_positive(corpus):
-    out = dd.minhash_lsh_pairs(corpus, "text", "doc_id", verify_threshold=0.2).collect()
+    out = dd.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
     for r in out:
         assert r.jaccard >= 0.2
         assert not (r.id_a == 4 or r.id_b == 4)
 
 
-def test_simhash_near_dup(spark, corpus):
+def test_simhash_near_dup(spark, corpus, monkeypatch):
+    monkeypatch.setattr(dd, "MAX_HAMMING", 8)
     sh = {r.doc_id: r.simhash for r in dd.simhash(corpus, "text", "doc_id").collect()}
     assert sh[0] == sh[1]  # identical text → identical simhash
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in dd.simhash_pairs(corpus, "text", "doc_id", max_hamming=8).collect()
+        for r in dd.simhash_pairs(corpus, "text", "doc_id").collect()
     }
     assert pairs[(0, 1)] == 0
     assert (0, 3) in pairs           # near dup within hamming 8
     assert not any(4 in p for p in pairs)
 
 
-def test_embedding_cosine_pairs(spark):
+def test_embedding_cosine_pairs(spark, monkeypatch):
+    monkeypatch.setattr(dd, "COSINE_THRESHOLD", 0.95)
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.999, 0.04, 0.0, 0.0]),   # ~same direction
@@ -91,9 +92,7 @@ def test_embedding_cosine_pairs(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = {
         (r.id_a, r.id_b): r.cosine
-        for r in dd.embedding_cosine_pairs(
-            df, "embedding", "vec_id", threshold=0.95
-        ).collect()
+        for r in dd.embedding_cosine_pairs(df, "embedding", "vec_id").collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     assert len(pairs) == 1
@@ -135,24 +134,24 @@ def _clustered_vectors(n=60, dim=16, clusters=5, seed=3):
     return rows
 
 
-def test_embedding_cosine_exact_matches_brute_force(spark):
+def test_embedding_cosine_exact_matches_brute_force(spark, monkeypatch):
+    monkeypatch.setattr(dd, "COSINE_THRESHOLD", 0.3)
     df = spark.createDataFrame(
         _clustered_vectors(), "vec_id long, embedding array<float>"
     )
     expect = sorted(map(tuple, _brute_force_pairs(df, 0.3).collect()))
     got = sorted(map(tuple, dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3
+        df, "embedding", "vec_id"
     ).collect()))
     assert got == expect and len(got) > 0
 
 
-def test_embedding_cosine_exact_plan_has_no_nested_loop(spark):
+def test_embedding_cosine_exact_plan_has_no_nested_loop(spark, monkeypatch):
+    monkeypatch.setattr(dd, "COSINE_THRESHOLD", 0.3)
     df = spark.createDataFrame(
         _clustered_vectors(n=20), "vec_id long, embedding array<float>"
     )
-    out = dd.embedding_cosine_pairs(
-        df, "embedding", "vec_id", threshold=0.3
-    )
+    out = dd.embedding_cosine_pairs(df, "embedding", "vec_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -216,13 +215,11 @@ def test_stratified_hash_sample_rates(spark):
         F.when(F.col("id") % 3 == 0, "en").when(F.col("id") % 3 == 1, "de")
          .otherwise("zh").alias("lang"),
     )
-    out = sp.stratified_hash_sample(
-        df, "doc_id", "lang", {"en": 0.8, "de": 0.2}, default_fraction=0.0
-    )
+    out = sp.stratified_hash_sample(df, "doc_id", "lang", {"en": 0.8, "de": 0.2})
     rates = {r.lang: r.c for r in out.groupBy("lang").agg(F.count("*").alias("c")).collect()}
     assert 0.7 < rates["en"] / 1000 < 0.9
     assert 0.12 < rates["de"] / 1000 < 0.28
-    assert "zh" not in rates
+    assert 0.05 < rates["zh"] / 1000 < 0.15  # unlisted strata keep 10%
 
 
 # --------------------------------------------------------------------------
@@ -246,13 +243,12 @@ def hot_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_ngram_guard_bounds_hot_shingle_candidates(hot_corpus):
+def test_ngram_guard_bounds_hot_shingle_candidates(hot_corpus, monkeypatch):
     # cap 100 < 300 copies: every shingle of the hot doc exceeds the cap
     # and is dropped, so the 300²/2 hot-hot candidate pairs never form;
     # the planted near-dup pair must still surface.
-    pairs = dd.ngram_jaccard_pairs(
-        hot_corpus, "text", "doc_id", n=5, threshold=0.2, max_bucket_size=100
-    ).collect()
+    monkeypatch.setattr(dd, "MAX_BUCKET_SIZE", 100)
+    pairs = dd.ngram_jaccard_pairs(hot_corpus, "text", "doc_id").collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (1000, 1001) in ids
     assert not any(a < 300 and b < 300 for a, b in ids)
@@ -267,9 +263,7 @@ def test_lsh_bucket_guard_bounds_hot_bucket_candidates(hot_corpus, monkeypatch):
     # band; cap 100 drops those buckets, so no hot-hot pair survives
     # candidate generation, while the near-dup pair still pairs up.
     monkeypatch.setattr(dd, "MAX_BUCKET_SIZE", 100)
-    pairs = dd.minhash_lsh_pairs(
-        hot_corpus, "text", "doc_id", verify_threshold=0.2
-    ).collect()
+    pairs = dd.minhash_lsh_pairs(hot_corpus, "text", "doc_id").collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (1000, 1001) in ids
     assert not any(a < 300 and b < 300 for a, b in ids)
@@ -280,8 +274,7 @@ def test_lsh_guard_off_finds_hot_pairs_with_bounded_cap(hot_corpus):
     # pairs DO form — proving the guard (not a tokenization artifact)
     # is what bounded the candidate space above.
     pairs = dd.minhash_lsh_pairs(
-        hot_corpus.filter("doc_id < 20 or doc_id >= 1000"), "text", "doc_id",
-        verify_threshold=0.2,
+        hot_corpus.filter("doc_id < 20 or doc_id >= 1000"), "text", "doc_id"
     ).collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert (0, 1) in ids and (1000, 1001) in ids
@@ -302,7 +295,7 @@ def test_contamination_screen(spark):
     out = {
         r.doc_id: r
         for r in dd.contamination_screen(
-            docs, "text", "doc_id", F.col("doc_id") == 0, n=5
+            docs, "text", "doc_id", F.col("doc_id") == 0
         ).collect()
     }
     assert set(out) == {1, 2}  # eval doc excluded, clean doc present
@@ -323,14 +316,12 @@ def test_embedding_cosine_arrow_keeps_round_up_boundary_pairs(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = sorted(
         (r.id_a, r.id_b, r.cosine)
-        for r in dd.embedding_cosine_pairs(
-            df, "embedding", "vec_id", threshold=0.4
-        ).collect()
+        for r in dd.embedding_cosine_pairs(df, "embedding", "vec_id").collect()
     )
     assert out == [(0, 1, 0.4)]
 
 
-def test_embedding_cosine_zero_vector_pairs_with_nothing(spark):
+def test_embedding_cosine_zero_vector_pairs_with_nothing(spark, monkeypatch):
     import math
     import warnings
 
@@ -346,9 +337,8 @@ def test_embedding_cosine_zero_vector_pairs_with_nothing(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for threshold in (0.95, -1.0):
-        got = dd.embedding_cosine_pairs(
-            df, "embedding", "vec_id", threshold=threshold
-        ).collect()
+        monkeypatch.setattr(dd, "COSINE_THRESHOLD", threshold)
+        got = dd.embedding_cosine_pairs(df, "embedding", "vec_id").collect()
         assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
         assert all(r.cosine is not None and not math.isnan(r.cosine) for r in got)
 
@@ -391,10 +381,7 @@ def test_template_doc_flags(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r
-        for r in template_doc_flags(
-            df, "text", "doc_id",
-            n=5, hot_frac=0.01, hot_min_docs=5, template_ratio=0.5,
-        ).collect()
+        for r in template_doc_flags(df, "text", "doc_id").collect()
     }
     assert len(out) == 7  # every doc reported, clean ones included
     for i in range(6):    # both 5-gram shingles shared by 6 >= 5 docs
@@ -408,13 +395,12 @@ def test_template_doc_flags_short_doc_whole_text_shingle(spark):
 
     rows = [(i, "tiny doc") for i in range(5)] + [(9, "another tiny")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in template_doc_flags(
-        df, "text", "doc_id", hot_min_docs=5).collect()}
+    out = {r.doc_id: r for r in template_doc_flags(df, "text", "doc_id").collect()}
     assert out[0].n_shingles == 1 and out[0].is_template
     assert not out[9].is_template
 
 
-def test_minhash_probe_equals_monolithic_run_on_new_docs(spark, sf_dir):
+def test_minhash_probe_equals_monolithic_run_on_new_docs(spark, sf_dir, monkeypatch):
     """Incremental == monolithic: probing a new batch against an index
     built from the rest must produce exactly the full-corpus LSH pairs
     that touch a new doc (deterministic keyed hashes)."""
@@ -430,11 +416,11 @@ def test_minhash_probe_equals_monolithic_run_on_new_docs(spark, sf_dir):
     new = documents.filter(F.col("doc_id") % 10 == 0)
     old = documents.filter(F.col("doc_id") % 10 != 0)
 
+    # Jaccard 0 keeps every candidate pair through the verify
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.0)
     full = {
         (r.id_a, r.id_b, r.n_bands)
-        for r in minhash_lsh_pairs(
-            documents, "text", "doc_id", verify_threshold=None
-        ).collect()
+        for r in minhash_lsh_pairs(documents, "text", "doc_id").collect()
         if r.id_a % 10 == 0 or r.id_b % 10 == 0
     }
     release_pinned()

@@ -55,7 +55,7 @@ def test_minhash_lsh_on_degenerate_corpus(weird):
     # have NO shingles and drop out of near-dedup entirely — they must
     # not pair with each other as jaccard-1.0 "duplicates" via a shared
     # constant signature (exact_dedup is the tool that groups empties).
-    pairs = dd.minhash_lsh_pairs(weird, "text", "doc_id", verify_threshold=0.2)
+    pairs = dd.minhash_lsh_pairs(weird, "text", "doc_id")
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert got == {(4, 5)}
 
@@ -69,11 +69,11 @@ def test_empty_frame_through_pipeline(spark):
     ).count() == 0
     assert hash_sample(empty, "doc_id", 0.5).count() == 0
     docs = empty.withColumn("n_tokens", F.lit(1).cast("long"))
-    assert pack_sequences(docs, "doc_id", "n_tokens", budget=10).count() == 0
+    assert pack_sequences(docs, "doc_id", "n_tokens").count() == 0
 
 
 def test_tfidf_ignores_empty_docs(weird):
-    out = tx.tfidf_top_terms(weird, "text", "doc_id", k=2)
+    out = tx.tfidf_top_terms(weird, "text", "doc_id")
     ids = {r.doc_id for r in out.collect()}
     assert 1 not in ids and 2 not in ids and 3 not in ids
     assert {4, 5} <= ids
@@ -152,8 +152,9 @@ def test_register_pinned_tagged_and_released(spark):
     assert dd.release_pinned() == 1
 
 
-def test_template_doc_flags_survives_nulls_and_empty(spark, weird):
-    out = dd.template_doc_flags(weird, "text", "doc_id", hot_min_docs=2)
+def test_template_doc_flags_survives_nulls_and_empty(spark, weird, monkeypatch):
+    monkeypatch.setattr(dd, "HOT_MIN_DOCS", 2)
+    out = dd.template_doc_flags(weird, "text", "doc_id")
     got = {r.doc_id: r for r in out.collect()}
     assert set(got) == {1, 2, 3, 4, 5}          # every row reported, nulls too
     assert got[4].is_template and got[5].is_template  # dup pair crosses bar=2
@@ -183,8 +184,8 @@ def test_quantize_int8_empty_frame(spark):
         quantize_int8_stats,
     )
 
-    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert quantize_int8_stats(df, vec_col="embedding", id_col="vec_id").count() == 0
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>, label int")
+    assert quantize_int8_stats(df).count() == 0
 
 
 def test_sketch_ops_on_empty_frames(spark):
@@ -232,7 +233,7 @@ def test_pagerank_self_loop_only_graph(spark):
         pagerank_fixed_point,
     )
 
-    edges = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 1), (2, 2)], "s long, t long")
     got = {r.node: r.pr_fixed for r in pagerank_fixed_point(edges).collect()}
     assert got == {1: PR_SCALE // 2, 2: PR_SCALE // 2}
 
@@ -279,23 +280,24 @@ def test_brown_single_observation(spark):
     assert (r.n_fit, r.s1, r.s2, r.forecast) == (1, 42.0, 42.0, 42.0)
 
 
-def test_pq_zero_vector_query_survives(spark):
+def test_pq_zero_vector_query_survives(spark, monkeypatch):
     """A zero query vector must not crash or hijack rankings (cosine
     NULL convention sorts it below every real neighbor)."""
     from sentiment_analysis_data_engineering_spark.operators import similarity as sim
+
+    monkeypatch.setattr(sim, "PQ_M", 4)
+    monkeypatch.setattr(sim, "PQ_CODES", 8)
 
     rows = [(0, [0.0] * 8)] + [
         (i, [float((i * j) % 5 - 2) for j in range(8)]) for i in range(1, 30)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = sim.pq_cosine_topk(
-        df.filter(F.col("vec_id") < 2), df, k=3, m=4, n_codes=8, n_rerank=29
-    ).collect()
+    out = sim.pq_cosine_topk(df.filter(F.col("vec_id") < 2), df, n_rerank=29).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)
     # the real query still gets k results
-    assert len(by_q.get(1, [])) == 3
+    assert len(by_q.get(1, [])) == sim.TOP_K
 
 
 def test_wav_empty_sample_stream(spark):
@@ -306,7 +308,7 @@ def test_wav_empty_sample_stream(spark):
     df = spark.createDataFrame(
         [(1, bytearray(payload))], "media_id long, content binary"
     )
-    (r,) = mm.decode_audio(df, strict=True).collect()
+    (r,) = mm.decode_audio(df).collect()
     assert (r.n_samples, r.duration_ms, r.rms, r.zero_crossings) == (0, 0, 0.0, 0)
 
 
@@ -330,9 +332,12 @@ def test_media_decoders_empty_frame(spark):
         assert out.collect() == []
 
 
-def test_ann_empty_query_frame(spark):
+def test_ann_empty_query_frame(spark, monkeypatch):
     """An empty query frame yields zero neighbours, not an error."""
     from sentiment_analysis_data_engineering_spark.operators import similarity as sim
+
+    for name, value in (("N_CELLS", 4), ("N_PROBE", 2), ("PQ_M", 4), ("PQ_CODES", 4)):
+        monkeypatch.setattr(sim, name, value)
 
     corpus = spark.createDataFrame(
         [(i, [float((i * j) % 5 - 2) for j in range(8)]) for i in range(20)],
@@ -340,8 +345,8 @@ def test_ann_empty_query_frame(spark):
     )
     queries = corpus.filter(F.col("vec_id") < 0)
     for out in (
-        sim.ivf_cosine_topk(queries, corpus, k=3, n_centroids=4, n_probe=2),
-        sim.pq_cosine_topk(queries, corpus, k=3, m=4, n_codes=4, n_rerank=8),
+        sim.ivf_cosine_topk(queries, corpus),
+        sim.pq_cosine_topk(queries, corpus, n_rerank=8),
     ):
         assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
         assert out.collect() == []

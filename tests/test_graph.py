@@ -24,7 +24,7 @@ def _ranks(df) -> dict[int, int]:
 
 
 def test_pagerank_symmetric_pair_is_stationary(spark):
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "s long, t long")
     got = _ranks(pagerank_fixed_point(edges, iterations=4))
     # uniform is the fixed point; integer recurrence reproduces it exactly
     assert got == {1: PR_SCALE // 2, 2: PR_SCALE // 2}
@@ -36,7 +36,7 @@ def test_pagerank_path_graph_hand_computed(spark):
     # r0 = SCALE // 3 = 333_333_333_333
     # node2 receives r0(1)+r0(3); nodes 1,3 receive r0(2) // 2
     edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
+        [(1, 2), (2, 1), (2, 3), (3, 2)], "s long, t long"
     )
     got = _ranks(pagerank_fixed_point(edges, iterations=1))
     assert got == {
@@ -53,8 +53,8 @@ def test_pagerank_partition_layout_invariant(spark):
     pairs = {(rng.randint(0, 60), rng.randint(0, 60)) for _ in range(300)}
     pairs = [(a, b) for a, b in pairs if a != b]
     sym = pairs + [(b, a) for a, b in pairs]
-    e1 = spark.createDataFrame(sym, "src long, dst long").repartition(2)
-    e2 = spark.createDataFrame(sym, "src long, dst long").repartition(17)
+    e1 = spark.createDataFrame(sym, "s long, t long").repartition(2)
+    e2 = spark.createDataFrame(sym, "s long, t long").repartition(17)
     assert _ranks(pagerank_fixed_point(e1)) == _ranks(
         pagerank_fixed_point(e2)
     )
@@ -63,7 +63,7 @@ def test_pagerank_partition_layout_invariant(spark):
 def test_pagerank_mass_conservation_bound(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2), (3, 4), (4, 3), (1, 4), (4, 1)],
-        "src long, dst long",
+        "s long, t long",
     )
     iters = 3
     out = pagerank_fixed_point(edges, iterations=iters)
@@ -75,7 +75,7 @@ def test_pagerank_mass_conservation_bound(spark):
 
 
 def test_pagerank_rejects_bad_args(spark):
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "s long, t long")
     with pytest.raises(ValueError, match="iterations"):
         pagerank_fixed_point(edges, iterations=-1)
     with pytest.raises(ValueError, match="damping"):
@@ -83,14 +83,14 @@ def test_pagerank_rejects_bad_args(spark):
 
 
 def test_pagerank_empty_graph(spark):
-    edges = spark.createDataFrame([], "src long, dst long")
+    edges = spark.createDataFrame([], "s long, t long")
     assert pagerank_fixed_point(edges).count() == 0
 
 
 def test_pagerank_weight_one_equals_unweighted(spark):
     edges_w = spark.createDataFrame(
         [(1, 2, 1), (2, 1, 1), (2, 3, 1), (3, 2, 1)],
-        "src long, dst long, w long",
+        "s long, t long, w long",
     )
     a = _ranks(pagerank_fixed_point(edges_w, weight="w"))
     b = _ranks(pagerank_fixed_point(edges_w.drop("w")))
@@ -103,7 +103,7 @@ def test_pagerank_weighted_hand_computed(spark):
     # node1 <- r0(2) + r0(3); node2 <- (r0*3) div 4; node3 <- r0 div 4
     edges = spark.createDataFrame(
         [(1, 2, 3), (1, 3, 1), (2, 1, 1), (3, 1, 1)],
-        "src long, dst long, w long",
+        "s long, t long, w long",
     )
     got = _ranks(pagerank_fixed_point(edges, weight="w", iterations=1))
     assert got == {
@@ -127,7 +127,7 @@ def test_personalized_pagerank_concentrates_on_seeds(spark):
 
     pairs = [(i, i + 1) for i in range(1, 5)]
     edges = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+        pairs + [(b, a) for a, b in pairs], "s long, t long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
     got = {
@@ -152,7 +152,7 @@ def test_personalized_pagerank_hand_computed_one_iter(spark):
     # iter1: node1 <- r0(2)=0 -> teleport only = 3*SCALE//20·... ;
     # teleport(seed) = (3*SCALE) // (20*1) = 150e9
     # node2 <- r0(1) div 1 = SCALE -> 17*SCALE//20 = 850e9, teleport 0
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "s long, t long")
     seeds = spark.createDataFrame([(1,)], "s long")
     got = {
         r.node: r.pr_fixed
@@ -169,7 +169,7 @@ def test_personalized_pagerank_all_seeds_equals_global(spark):
     )
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
+        [(1, 2), (2, 1), (2, 3), (3, 2)], "s long, t long"
     )
     seeds = spark.createDataFrame([(1,), (2,), (3,)], "node long")
     per = {
@@ -185,7 +185,7 @@ def test_personalized_pagerank_ignores_absent_seeds(spark):
         personalized_pagerank_fixed_point,
     )
 
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "s long, t long")
     # seed 99 is not in the graph; seed 1 is — mass flows from 1 only,
     # split of the seed budget still counts the absent seed (|S|=2)
     seeds = spark.createDataFrame([(1,), (99,)], "node long")
@@ -217,7 +217,7 @@ def test_triangle_counts_k4(spark):
 
     # complete graph on 4 nodes: C(4,3)=4 triangles, each node in 3
     pairs = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
+    edges = spark.createDataFrame(pairs, "u long, v long")
     got = _tris(triangle_counts(edges))
     assert got == {n: (3, 3) for n in range(1, 5)}
 
@@ -228,7 +228,7 @@ def test_triangle_counts_triangle_plus_pendant(spark):
     # triangle 1-2-3 plus pendant edge 3-4: node 4 closes nothing and
     # is absent from the output; node 3's degree counts the pendant
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "u long, v long"
     )
     got = _tris(triangle_counts(edges))
     assert got == {1: (2, 1), 2: (2, 1), 3: (3, 1)}
@@ -240,10 +240,10 @@ def test_triangle_counts_canonicalizes_input(spark):
     # reversed duplicates and self-loops must not change counts
     messy = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (1, 1), (2, 2), (1, 3)],
-        "src long, dst long",
+        "u long, v long",
     )
     clean = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3)], "u long, v long"
     )
     assert _tris(triangle_counts(messy)) == _tris(triangle_counts(clean))
 
@@ -253,7 +253,7 @@ def test_triangle_counts_triangle_free_graph_is_empty(spark):
 
     # 4-cycle: no triangles at all
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1)], "src long, dst long"
+        [(1, 2), (2, 3), (3, 4), (4, 1)], "u long, v long"
     )
     assert triangle_counts(edges).count() == 0
 
@@ -265,7 +265,7 @@ def test_triangle_counts_hub_graph(spark):
     # two hub triangles; skewed-degree path exercises the orientation
     edges = spark.createDataFrame(
         [(0, i) for i in range(1, 7)] + [(1, 2), (3, 4)],
-        "src long, dst long",
+        "u long, v long",
     )
     got = _tris(triangle_counts(edges))
     assert got == {
@@ -290,7 +290,7 @@ def test_kcore_peels_pendant_chain(spark):
     # triangle 1-2-3 with a tail 3-4-5: the 2-core is the triangle,
     # but ONLY after two rounds (removing 5 drops 4's degree to 1)
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "u long, v long"
     )
     after1 = _core(kcore_peel(edges, k=2, rounds=1))
     assert set(after1) == {1, 2, 3, 4}  # 5 gone, 4 not yet
@@ -304,7 +304,7 @@ def test_kcore_zero_rounds_is_input_degrees(spark):
     from sentiment_analysis_data_engineering_spark.operators.graph import kcore_peel
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "u long, v long"
     )
     assert _core(kcore_peel(edges, k=99, rounds=0)) == {1: 2, 2: 2, 3: 3, 4: 1}
 
@@ -312,7 +312,7 @@ def test_kcore_zero_rounds_is_input_degrees(spark):
 def test_kcore_everything_peels(spark):
     from sentiment_analysis_data_engineering_spark.operators.graph import kcore_peel
 
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "u long, v long")
     assert kcore_peel(edges, k=2, rounds=3).count() == 0
 
 
@@ -321,31 +321,29 @@ def test_kcore_telemetry_pins_rounds_and_convergence(spark):
 
     # triangle + 2-tail: fixed point needs exactly 2 peel rounds
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "u long, v long"
     )
-    done = kcore_peel(edges, k=2, rounds=5, with_telemetry=True)
+    done = kcore_peel(edges, k=2, rounds=5)
     rows = done.collect()
     assert {(r.peel_rounds, r.converged) for r in rows} == {(2, True)}
     # budget exhausted mid-peel: 1 round executed, NOT converged
-    part = kcore_peel(edges, k=2, rounds=1, with_telemetry=True).collect()
+    part = kcore_peel(edges, k=2, rounds=1).collect()
     assert {(r.peel_rounds, r.converged) for r in part} == {(1, False)}
     # zero budget on a non-core input: 0 rounds, not converged
-    z = kcore_peel(edges, k=2, rounds=0, with_telemetry=True).collect()
+    z = kcore_peel(edges, k=2, rounds=0).collect()
     assert {(r.peel_rounds, r.converged) for r in z} == {(0, False)}
     # zero budget on an input that already IS the k-core: converged
     tri = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "src long, dst long"
+        [(1, 2), (2, 3), (1, 3)], "u long, v long"
     )
-    t = kcore_peel(tri, k=2, rounds=0, with_telemetry=True).collect()
+    t = kcore_peel(tri, k=2, rounds=0).collect()
     assert {(r.peel_rounds, r.converged) for r in t} == {(0, True)}
-    # telemetry off: legacy 2-column schema unchanged
-    assert kcore_peel(tri, k=2, rounds=1).columns == ["node", "core_degree"]
 
 
 def test_kcore_rejects_bad_args(spark):
     from sentiment_analysis_data_engineering_spark.operators.graph import kcore_peel
 
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2)], "u long, v long")
     with pytest.raises(ValueError, match="k must"):
         kcore_peel(edges, k=-1, rounds=1)
     with pytest.raises(ValueError, match="rounds"):

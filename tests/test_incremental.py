@@ -165,19 +165,6 @@ def test_scd2_idempotent_redelivery(spark):
     assert sorted(r.valid_from for r in twice.collect()) == ["2000-01-01", "2001-01-01"]
 
 
-def test_scd2_rejects_duplicate_batch_keys(spark):
-    import pytest as _pytest
-
-    from sentiment_analysis_data_engineering_spark.operators.incremental import scd2_apply
-
-    hist = _hist(spark, [(1, "A", 100, "2000-01-01", None, True)])
-    batch = spark.createDataFrame(
-        [(1, "A", 150), (1, "A", 160)], "k int, seg string, bal long"
-    )
-    with _pytest.raises(ValueError, match="duplicate keys"):
-        scd2_apply(hist, batch, ["k"], ["seg", "bal"], batch_ts="2001-01-01")
-
-
 def test_scd2_null_is_current_passes_through_as_closed(spark):
     from sentiment_analysis_data_engineering_spark.operators.incremental import scd2_apply
 

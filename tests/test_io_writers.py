@@ -32,27 +32,24 @@ def test_idempotent_append_skips_existing_keys(spark, tmp_table_dir):
     per-row probe loop (weekly_dag.py:420-432)."""
     target = str(tmp_table_dir / "t_idem")
     first = _mk(spark, [(2023, 5, 1, 1.0), (2023, 6, 1, 2.0)])
-    n1 = idempotent_append(spark, first, target, ["year", "month"],
-                           partition_by=["year", "month"])
+    n1 = idempotent_append(spark, first, target, ["year", "month"])
     assert n1 == 2
     # second batch half-overlaps on (year, month)
     second = _mk(spark, [(2023, 6, 15, 99.0), (2023, 7, 1, 3.0)])
-    n2 = idempotent_append(spark, second, target, ["year", "month"],
-                           partition_by=["year", "month"])
+    n2 = idempotent_append(spark, second, target, ["year", "month"])
     assert n2 == 1  # only (2023, 7) is new
     out = scan(spark, target)
     assert out.count() == 3
     keys = {(r.year, r.month) for r in out.collect()}
     assert keys == {(2023, 5), (2023, 6), (2023, 7)}
     # re-running the same batch appends nothing (idempotence)
-    assert idempotent_append(spark, second, target, ["year", "month"],
-                             partition_by=["year", "month"]) == 0
+    assert idempotent_append(spark, second, target, ["year", "month"]) == 0
 
 
 def test_idempotent_append_first_write(spark, tmp_table_dir):
     target = str(tmp_table_dir / "t_first")
     n = idempotent_append(spark, _mk(spark, [(2023, 5, 1, 1.0)]), target,
-                          ["year", "month"], partition_by=["year", "month"])
+                          ["year", "month"])
     assert n == 1
     assert scan(spark, target).count() == 1
 
@@ -68,23 +65,16 @@ def _data_files(root):
 
 def test_idempotent_append_rerun_adds_no_file(spark, tmp_table_dir):
     """Re-running a batch that is already stored writes zero rows and
-    must leave no (empty) data file behind — on a partitioned target
-    and on an unpartitioned one, whose writer commits a file from its
-    first task even when that task has no rows (the streaming replay
-    sink appends unpartitioned on every micro-batch)."""
+    must leave no (empty) data file behind."""
     batch = _mk(spark, [(2023, 5, 1, 1.0), (2023, 6, 1, 2.0)])
-    for name, partition_by in (("t_rerun_part", ["year", "month"]),
-                               ("t_rerun_flat", None)):
-        target = str(tmp_table_dir / name)
-        keys = ["year", "month", "day"]
-        assert idempotent_append(spark, batch, target, keys,
-                                 partition_by=partition_by) == 2
-        files = _data_files(target)
-        assert files
-        assert idempotent_append(spark, batch, target, keys,
-                                 partition_by=partition_by) == 0
-        assert _data_files(target) == files, name
-        assert scan(spark, target).count() == 2
+    target = str(tmp_table_dir / "t_rerun")
+    keys = ["year", "month", "day"]
+    assert idempotent_append(spark, batch, target, keys) == 2
+    files = _data_files(target)
+    assert files
+    assert idempotent_append(spark, batch, target, keys) == 0
+    assert _data_files(target) == files
+    assert scan(spark, target).count() == 2
 
 
 def test_replace_partition_touches_only_incoming(spark, tmp_table_dir):

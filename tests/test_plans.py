@@ -350,6 +350,78 @@ def _calls(trees):
                 yield name, args, {k.arg: k.value for k in call.keywords if k.arg}, unpacks
 
 
+#: The value a non-literal argument, or ``*``/``**`` unpacking, gives a
+#: parameter: it may be any value.
+_EVERY = object()
+
+
+def _value(node):
+    """The value of a literal AST node (its ``repr`` when unhashable),
+    else ``_EVERY``."""
+    import ast
+
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _EVERY
+    return v if getattr(type(v), "__hash__", None) else repr(v)
+
+
+def _functions(exported_only: bool):
+    """(package dir, modules, trees, {function name: [(module.function,
+    positional names, parameter names, {defaulted parameter: default
+    node}, FunctionDef)]}) over the package's top-level functions: those
+    named in their module's ``__all__`` when ``exported_only``, else
+    every name without a leading underscore."""
+    import ast
+
+    pkg, modules, trees = _source_trees()
+    out = {}
+    for mod in modules:
+        key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
+        names = _exports(trees[mod])
+        for fn in trees[mod].body:
+            if isinstance(fn, ast.FunctionDef) and (
+                fn.name in names if exported_only else not fn.name.startswith("_")
+            ):
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                dflt = dict(zip([x.arg for x in pos[len(pos) - len(a.defaults):]], a.defaults))
+                dflt.update({x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                             if d is not None})
+                out.setdefault(fn.name, []).append((
+                    f"{key}.{fn.name}", [x.arg for x in pos],
+                    [x.arg for x in pos + a.kwonlyargs], dflt, fn,
+                ))
+    return pkg, modules, trees, out
+
+
+def _values_taken(trees, functions) -> dict:
+    """(module.function, parameter) -> the set of values that the calls
+    in ``trees`` give each parameter of ``functions`` (``_functions``).
+    Calls match by function name. An omitted argument takes its default
+    (a non-literal default is one value of its own); a non-literal
+    argument, or ``*``/``**`` unpacking, takes ``_EVERY``."""
+    import ast
+
+    taken = {}
+    for name, args, kw, unpacks in _calls(trees):
+        for key, pos, params, dflt, _ in functions.get(name, []):
+            passed = dict(zip(pos, args)) | kw
+            for param in params:
+                if param in passed:
+                    v = _value(passed[param])
+                elif unpacks:
+                    v = _EVERY
+                elif param in dflt:
+                    v = _value(dflt[param])
+                    v = ast.dump(dflt[param]) if v is _EVERY else v
+                else:
+                    continue
+                taken.setdefault((key, param), set()).add(v)
+    return taken
+
+
 #: Exported names that no registered query, DAG task, tool or other
 #: package code references, each kept for the reason in its comment.
 _UNREACHED_EXPORTS = {
@@ -367,12 +439,6 @@ _UNREACHED_EXPORTS = {
     "operators.relational": {"multiset_equal"},
     # test reference: the multi-operator edge-case test samples with it
     "operators.sampling": {"hash_sample"},
-    # SURVEY §2 T3–T6: the reference's DAG tasks; perfbench/run.py
-    # reaches them by name through getattr, which the scan cannot follow
-    "plans.pipelines": {
-        "load_company_esg", "load_company_group", "load_financial_ratio",
-        "load_key_metrics",
-    },
 }
 
 
@@ -381,8 +447,11 @@ def test_every_export_is_reached_outside_tests():
     the package (its own module counts, its own definition does not),
     ``bench.py``, ``tools/``, ``__spark_entry__.py`` or
     ``perfbench/run.py`` — or sits on
-    ``_UNREACHED_EXPORTS`` with its reason. A name only tests reach is
-    code no query, DAG task or tool runs: delete it with its tests."""
+    ``_UNREACHED_EXPORTS`` with its reason. In a file that calls
+    ``getattr`` with a computed name, every string constant counts as a
+    use (``perfbench/run.py`` dispatches DAG tasks by name). A name only
+    tests reach is code no query, DAG task or tool runs: delete it with
+    its tests."""
     import ast
 
     pkg, modules, trees = _source_trees()
@@ -396,6 +465,11 @@ def test_every_export_is_reached_outside_tests():
                 out.add(n.attr)
             elif isinstance(n, ast.ImportFrom):
                 out.update(a.name for a in n.names)
+        if any(isinstance(n, ast.Call) and getattr(n.func, "id", None) == "getattr"
+               and len(n.args) > 1 and not isinstance(n.args[1], ast.Constant)
+               for n in ast.walk(node)):
+            out.update(n.value for n in ast.walk(node)
+                       if isinstance(n, ast.Constant) and isinstance(n.value, str))
         return out
 
     uses = {p: used(t) for p, t in trees.items()}
@@ -440,26 +514,14 @@ def test_every_option_value_is_taken_outside_tests():
     no query, DAG task or tool runs: delete it with its branch."""
     import ast
 
-    pkg, modules, trees = _source_trees()
-    every = object()
-
-    def defaults(fn) -> dict:
-        a = fn.args
-        pos = a.posonlyargs + a.args
-        out = dict(zip([x.arg for x in pos[len(pos) - len(a.defaults):]], a.defaults))
-        out.update({x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
-        return out
-
-    def options(fn) -> dict:
-        a = fn.args
-        params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    def options(fn, dflt) -> dict:
         out = {}
-        for arg, d in defaults(fn).items():
+        for arg, d in dflt.items():
             if isinstance(d, ast.Constant) and isinstance(d.value, bool):
                 out.setdefault(arg, set()).add(not d.value)
         for n in ast.walk(fn):
             if (isinstance(n, ast.Compare) and isinstance(n.left, ast.Name)
-                    and n.left.id in params and len(n.ops) == 1
+                    and len(n.ops) == 1
                     and isinstance(n.ops[0], (ast.In, ast.NotIn))
                     and isinstance(n.comparators[0], (ast.Tuple, ast.List, ast.Set))
                     and all(isinstance(e, ast.Constant) for e in n.comparators[0].elts)):
@@ -467,51 +529,25 @@ def test_every_option_value_is_taken_outside_tests():
                     e.value for e in n.comparators[0].elts)
         return out
 
-    # function name -> [(module.function, positional names, defaults, options)]
-    public = {}
-    for mod in modules:
-        key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
-        for fn in trees[mod].body:
-            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
-                opts = options(fn)
-                if opts:
-                    a = fn.args
-                    public.setdefault(fn.name, []).append((
-                        f"{key}.{fn.name}",
-                        [x.arg for x in a.posonlyargs + a.args],
-                        defaults(fn),
-                        opts,
-                    ))
-
-    taken = {}
-    for name, args, kw, unpacks in _calls(trees):
-        for key, pos, dflt, opts in public.get(name, []):
-            passed = dict(zip(pos, args)) | kw
-            for param in opts:
-                got = taken.setdefault((key, param), set())
-                if param in passed:
-                    x = passed[param]
-                    got.add(x.value if isinstance(x, ast.Constant) else every)
-                elif unpacks:
-                    got.add(every)
-                elif isinstance(dflt.get(param), ast.Constant):
-                    got.add(dflt[param].value)
+    _, _, trees, public = _functions(exported_only=False)
+    taken = _values_taken(trees, public)
 
     untaken = {}
     for defs in public.values():
-        for key, _, _, opts in defs:
-            for param, values in opts.items():
+        for key, _, params, dflt, fn in defs:
+            for param, values in options(fn, dflt).items():
                 got = taken.get((key, param), set())
-                if every not in got and values - got:
+                if param in params and _EVERY not in got and values - got:
                     untaken[(key, param)] = values - got
 
     assert untaken == _UNTAKEN_OPTIONS
 
 
-#: Defaulted parameters of exported functions that no registered query,
-#: DAG task, tool, benchmark or other package code passes, each kept
-#: for the reason in its comment: (module.function, parameter).
-_UNPASSED_PARAMETERS = {
+#: Defaulted parameters of exported functions that take one value in
+#: all of the registered queries, DAG tasks, tools, benchmark and other
+#: package code, each kept for the reason in its comment:
+#: (module.function, parameter).
+_ONE_VALUE_PARAMETERS = {
     # SURVEY §2.1 S7–S9: the reference's dataset/table DDL options
     ("catalog.analyze_table", "columns"),
     ("catalog.create_table", "location"),
@@ -529,41 +565,27 @@ _UNPASSED_PARAMETERS = {
 }
 
 
-def test_every_defaulted_parameter_is_passed_outside_tests():
+def test_every_defaulted_parameter_takes_two_values_outside_tests():
     """Every defaulted parameter of a function named in a package
-    module's ``__all__`` is passed, by keyword or position, by some
-    call outside ``tests/`` (package code, ``bench.py``, ``tools/``,
+    module's ``__all__`` takes at least two distinct values over the
+    calls outside ``tests/`` (package code, ``bench.py``, ``tools/``,
     ``__spark_entry__.py``, ``perfbench/run.py``) — or sits on
-    ``_UNPASSED_PARAMETERS`` with its reason. Calls match by function
-    name; ``*``/``**`` unpacking passes every parameter. A parameter no
-    caller passes is a knob with one value in use: fold it into the
-    body (a module constant where a guard needs a bound that tests
+    ``_ONE_VALUE_PARAMETERS`` with its reason. Calls match by function
+    name; an omitted argument takes the default, and a non-literal
+    argument or ``*``/``**`` unpacking takes every value. A parameter
+    with one value in use is a knob no caller turns: fold the value into
+    the body (a module constant where a guard needs a bound that tests
     monkeypatch) and delete the branches only its other values select."""
-    import ast
-
-    pkg, modules, trees = _source_trees()
-
-    # function name -> [(module.function, positional names, defaulted names)]
-    exported = {}
-    for mod in modules:
-        key = ".".join(mod.relative_to(pkg).with_suffix("").parts)
-        names = _exports(trees[mod])
-        for fn in trees[mod].body:
-            if isinstance(fn, ast.FunctionDef) and fn.name in names:
-                a = fn.args
-                pos = [x.arg for x in a.posonlyargs + a.args]
-                dflt = pos[len(pos) - len(a.defaults):] + [
-                    x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-                ]
-                exported.setdefault(fn.name, []).append((f"{key}.{fn.name}", pos, dflt))
-
-    unpassed = {(key, p) for defs in exported.values() for key, _, dflt in defs for p in dflt}
-    for name, args, kw, unpacks in _calls(trees):
-        for key, pos, dflt in exported.get(name, []):
-            passed = set(pos[: len(args)]) | set(kw)
-            unpassed -= {(key, p) for p in dflt if unpacks or p in passed}
-
-    assert unpassed == _UNPASSED_PARAMETERS
+    _, _, trees, exported = _functions(exported_only=True)
+    taken = _values_taken(trees, exported)
+    one_value = {
+        (key, p)
+        for defs in exported.values()
+        for key, _, _, dflt, _ in defs
+        for p in dflt
+        if _EVERY not in taken.get((key, p), ()) and len(taken.get((key, p), ())) < 2
+    }
+    assert one_value == _ONE_VALUE_PARAMETERS
 
 
 def test_driver_rows_become_frames_only_through_local_frame():
@@ -605,9 +627,7 @@ def test_crossencoder_rerank_plan_shape(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         (F.col("vec_id") + 10).alias("neighbor_id"),
     )
-    out = sim.crossencoder_rerank_topk(
-        cand, emb.filter(F.col("vec_id") < 3), emb, k=2, dim=64
-    )
+    out = sim.crossencoder_rerank_topk(cand, emb.filter(F.col("vec_id") < 3), emb)
     plan = plan_of(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan  # query vectors ride a broadcast

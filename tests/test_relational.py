@@ -45,7 +45,7 @@ def test_n_way_inner_join(spark):
         spark.createDataFrame([("2023-01", float(i))], f"date string, v{i} double")
         for i in range(9)
     ]
-    wide = n_way_inner_join(dfs, on="date", broadcast_all_but_first=True)
+    wide = n_way_inner_join(dfs, on="date")
     assert len(wide.columns) == 10  # date + 9 values
     assert wide.count() == 1
 

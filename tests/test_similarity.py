@@ -47,31 +47,28 @@ def test_lsh_recall_on_fixture_embeddings(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in sim.lsh_cosine_topk(
-            queries, emb, k=3, num_planes=12, bands=6, dim=64
-        ).collect()
+        for r in sim.lsh_cosine_topk(queries, emb, dim=64).collect()
     }
     recall = len(exact & approx) / len(exact)
     # 6-band (2-bit) multiprobe on 12 planes: generous buckets, high recall
     assert recall >= 0.6, f"LSH recall too low: {recall}"
 
 
-def test_ivf_recall_on_fixture_embeddings(spark, sf_dir):
+def test_ivf_recall_on_fixture_embeddings(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(sim, "N_CELLS", 8)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in sim.ivf_cosine_topk(
-            queries, emb, k=3, n_centroids=8, n_probe=4
-        ).collect()
+        for r in sim.ivf_cosine_topk(queries, emb).collect()
     }
     recall = len(exact & approx) / len(exact)
     # probing half the cells of a sampled quantizer: recall is high
@@ -83,11 +80,11 @@ def test_ivf_deterministic(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3)
     a = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivf_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivf_cosine_topk(queries, emb).collect()
     )
     b = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivf_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivf_cosine_topk(queries, emb).collect()
     )
     assert a == b and a
 
@@ -98,12 +95,12 @@ def test_kmeans_clusters_assigns_every_vector(spark, sf_dir):
     from sentiment_analysis_data_engineering_spark.plans.registry import load_tables
 
     (emb,) = load_tables(spark, sf_dir, "embeddings")
-    out = sim.kmeans_clusters(emb, k=8, seed=7)
+    out = sim.kmeans_clusters(emb)
     assert out.count() == emb.count()                 # total assignment
     n_clusters = out.select("cluster").distinct().count()
     assert 2 <= n_clusters <= 8                       # nondegenerate
     # assignment is a function of the vector: same call → same result
-    again = sim.kmeans_clusters(emb, k=8, seed=7)
+    again = sim.kmeans_clusters(emb)
     a = {r.vec_id: r.cluster for r in out.collect()}
     b = {r.vec_id: r.cluster for r in again.collect()}
     assert a == b
@@ -118,7 +115,8 @@ def test_semantic_dedup_fit_sample_scales_with_k(spark, sf_dir, monkeypatch):
     # count: semantic_dedup auto-raises it, so a large k with a small
     # floor still conserves every vector
     monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS", 8)
-    out = sim.semantic_dedup(emb, k=16, threshold=0.95)
+    monkeypatch.setattr(sim, "SEMDEDUP_THRESHOLD", 0.95)
+    out = sim.semantic_dedup(emb, k=16)
     assert out.count() == emb.count()
 
 
@@ -177,14 +175,12 @@ def test_signatures_arrow_matches_expression_form(spark):
     want = dict(zip(ids, _ref_signatures(V, 12)))
     got = {
         r._id: r._sig
-        for r in sim.signatures_arrow(
-            emb, "embedding", "vec_id", num_planes=12, dim=64
-        ).collect()
+        for r in sim.signatures_arrow(emb, num_planes=12, dim=64).collect()
     }
     assert got == want and len(set(want.values())) > 1
 
 
-def test_lsh_ivf_engines_agree(spark):
+def test_lsh_ivf_engines_agree(spark, monkeypatch):
     # LSH band candidates and IVF cell probes, each re-ranked exactly,
     # against a numpy reference of the same candidate rule
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -209,16 +205,18 @@ def test_lsh_ivf_engines_agree(spark):
         probes = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
         return lambda qi: np.flatnonzero(np.isin(cell, probes[qi])).tolist()
 
-    for fn, kw, candidates in (
-        (sim.lsh_cosine_topk, dict(k=3, num_planes=12, bands=6, dim=64), lsh(12, 6)),
-        (sim.ivf_cosine_topk, dict(k=3, n_centroids=8, n_probe=3), ivf(8, 3)),
+    for fn, cells, candidates in (
+        (sim.lsh_cosine_topk, {}, lsh(12, 6)),
+        (sim.ivf_cosine_topk, {"N_CELLS": 8, "N_PROBE": 3}, ivf(8, 3)),
         # more probes than cells: each query probes every cell
-        (sim.ivf_cosine_topk, dict(k=3, n_centroids=2, n_probe=4), ivf(2, 4)),
+        (sim.ivf_cosine_topk, {"N_CELLS": 2, "N_PROBE": 4}, ivf(2, 4)),
     ):
-        want = _ref_topk(ids, V, qn, candidates, kw["k"])
+        for name, value in cells.items():
+            monkeypatch.setattr(sim, name, value)
+        want = _ref_topk(ids, V, qn, candidates, sim.TOP_K)
         got = {
             (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-            for r in fn(q, emb, vec_col="embedding", id_col="vec_id", **kw).collect()
+            for r in fn(q, emb).collect()
         }
         assert {key: n for key, (n, _) in got.items()} == {
             key: n for key, (n, _) in want.items()
@@ -236,8 +234,7 @@ def test_quantize_int8_stats_bounds_and_zero_vector(spark):
         (2, [0.0, 0.0, 0.0, 0.0], "z"),   # all-zero: scale 0 -> rmse 0
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label string")
-    out = {r.grp: r for r in quantize_int8_stats(
-        df, vec_col="embedding", id_col="vec_id", group_col="label").collect()}
+    out = {r.grp: r for r in quantize_int8_stats(df).collect()}
     # int8 max-abs quantization error is bounded by scale/2 per element
     assert 0.0 <= out["a"].max_rmse <= (1.0 / 127.0) / 2 + 1e-12
     assert out["z"].avg_rmse == 0.0 and out["z"].max_rmse == 0.0
@@ -252,12 +249,13 @@ def test_quantize_int8_stats_exact_levels_lossless(spark):
     # values already on the int8 grid (scale = 1/127) round-trip exactly
     vec = [127.0 / 127.0, -64.0 / 127.0, 1.0 / 127.0, 0.0]
     df = spark.createDataFrame(
-        [(1, vec)], "vec_id long, embedding array<float>")
-    got = quantize_int8_stats(df, vec_col="embedding", id_col="vec_id").first()
-    assert got.grp == "all" and got.max_rmse == 0.0
+        [(1, vec, 0)], "vec_id long, embedding array<float>, label int")
+    got = quantize_int8_stats(df).first()
+    assert got.grp == 0 and got.max_rmse == 0.0
 
 
-def test_semantic_dedup_two_tight_clusters(spark):
+def test_semantic_dedup_two_tight_clusters(spark, monkeypatch):
+    monkeypatch.setattr(sim, "SEMDEDUP_THRESHOLD", 0.9)
     # cluster around e1: ids 1,2,3 pairwise cosine ~1 -> keep only 1;
     # cluster around e2: ids 10,11 identical -> keep only 10;
     # id 20 points elsewhere (cosine < threshold with everything) ->
@@ -276,10 +274,7 @@ def test_semantic_dedup_two_tight_clusters(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = {
         r.vec_id: r.keep
-        for r in sim.semantic_dedup(
-            df, vec_col="embedding", id_col="vec_id",
-            k=2, threshold=0.9,
-        ).collect()
+        for r in sim.semantic_dedup(df, k=2).collect()
     }
     assert out == {1: True, 2: False, 3: False, 10: True, 11: False, 20: True}
 
@@ -288,11 +283,10 @@ def test_semantic_dedup_oversized_cluster_guard(spark, monkeypatch):
     # with MAX_CLUSTER_SIZE below the cluster population, members are
     # excluded from pairing and ALL kept
     monkeypatch.setattr(sim, "MAX_CLUSTER_SIZE", 3)
+    monkeypatch.setattr(sim, "SEMDEDUP_THRESHOLD", 0.5)
     rows = [(i, [1.0, 0.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = sim.semantic_dedup(
-        df, vec_col="embedding", id_col="vec_id", k=2, threshold=0.5
-    )
+    out = sim.semantic_dedup(df, k=2)
     assert all(r.keep for r in out.collect())
     assert out.count() == 6
 
@@ -302,35 +296,32 @@ def test_pq_recall_on_fixture_embeddings(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in sim.pq_cosine_topk(
-            queries, emb, k=3, m=8, n_codes=64, n_rerank=96
-        ).collect()
+        for r in sim.pq_cosine_topk(queries, emb, n_rerank=96).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"PQ recall too low: {recall}"
 
 
-def test_pq_full_rerank_equals_exact(spark, sf_dir):
+def test_pq_full_rerank_equals_exact(spark, sf_dir, monkeypatch):
     """With n_rerank >= corpus size the exact re-rank sees every
     candidate, so PQ must return the exact top-k ID-for-ID — pins the
     ADC table indexing (a wrong codeword offset silently degrades
     recall but cannot survive this equality)."""
+    monkeypatch.setattr(sim, "PQ_CODES", 16)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3)
     n = emb.count()
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     )
     approx = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.pq_cosine_topk(
-            queries, emb, k=3, m=8, n_codes=16, n_rerank=n
-        ).collect()
+        for r in sim.pq_cosine_topk(queries, emb, n_rerank=n).collect()
     )
     assert exact == approx
 
@@ -340,19 +331,20 @@ def test_pq_deterministic(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3)
     a = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.pq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.pq_cosine_topk(queries, emb).collect()
     )
     b = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.pq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.pq_cosine_topk(queries, emb).collect()
     )
     assert a == b and a
 
 
-def test_pq_rejects_indivisible_subspaces(spark, sf_dir):
+def test_pq_rejects_indivisible_subspaces(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(sim, "PQ_M", 7)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     with pytest.raises(ValueError, match="not divisible"):
-        sim.pq_cosine_topk(emb.limit(5), emb, m=7).collect()
+        sim.pq_cosine_topk(emb.limit(5), emb).collect()
 
 
 def test_ivfpq_recall_on_fixture_embeddings(spark, sf_dir):
@@ -360,32 +352,32 @@ def test_ivfpq_recall_on_fixture_embeddings(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in sim.ivfpq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"IVF-PQ recall too low: {recall}"
 
 
-def test_ivfpq_all_cells_full_rerank_equals_exact(spark, sf_dir):
+def test_ivfpq_all_cells_full_rerank_equals_exact(spark, sf_dir, monkeypatch):
     """Probing EVERY cell with n_rerank >= corpus removes both
     approximations, so IVF-PQ must return the exact top-k — pins the
     residual table indexing and the cell-join plumbing at once."""
+    monkeypatch.setattr(sim, "N_CELLS", 8)
+    monkeypatch.setattr(sim, "N_PROBE", 8)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3)
     n = emb.count()
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     )
     approx = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_cosine_topk(
-            queries, emb, k=3, n_cells=8, n_probe=8, n_rerank=n
-        ).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb, n_rerank=n).collect()
     )
     assert exact == approx
 
@@ -395,11 +387,11 @@ def test_ivfpq_deterministic(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3)
     a = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb).collect()
     )
     b = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb).collect()
     )
     assert a == b and a
 
@@ -414,7 +406,9 @@ def _ce_ref(q, c):
     return acc
 
 
-def test_crossencoder_rerank_matches_python_reference(spark, vectors):
+def test_crossencoder_rerank_matches_python_reference(spark, vectors, monkeypatch):
+    monkeypatch.setattr(sim, "CE_DIM", 4)
+    monkeypatch.setattr(sim, "TOP_K", 3)  # 3 of each query's 5 candidates
     # candidates = all non-self pairs; the reranker's scores must match
     # the pure-Python fold exactly (rounded to the output's 6dp)
     ids = [r.vec_id for r in vectors.select("vec_id").collect()]
@@ -424,9 +418,7 @@ def test_crossencoder_rerank_matches_python_reference(spark, vectors):
         [(q, c) for q in ids for c in ids if q != c],
         "query_id long, neighbor_id long",
     )
-    out = sim.crossencoder_rerank_topk(
-        cand, vectors, vectors, k=3, dim=4
-    ).collect()
+    out = sim.crossencoder_rerank_topk(cand, vectors, vectors).collect()
     assert all(r.rank <= 3 for r in out)
     got = {(r.query_id, r.neighbor_id): r.ce_score for r in out}
     for (q, c), s in got.items():
@@ -441,7 +433,8 @@ def test_crossencoder_rerank_matches_python_reference(spark, vectors):
         assert have == want, q
 
 
-def test_crossencoder_rerank_subset_and_jvm_agreement(spark, vectors):
+def test_crossencoder_rerank_subset_and_jvm_agreement(spark, vectors, monkeypatch):
+    monkeypatch.setattr(sim, "CE_DIM", 4)
     # restrict candidates to a 2-neighbor slate per query: the reranker
     # may only reorder that slate, and the Arrow scorer must agree with
     # the JVM expression bit-for-bit (equality WITHOUT rounding slack)
@@ -449,7 +442,7 @@ def test_crossencoder_rerank_subset_and_jvm_agreement(spark, vectors):
         [(0, 10), (0, 20), (1, 2), (1, 11)],
         "query_id long, neighbor_id long",
     )
-    out = sim.crossencoder_rerank_topk(cand, vectors, vectors, k=5, dim=4)
+    out = sim.crossencoder_rerank_topk(cand, vectors, vectors)
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     qv = vectors.select(F.col("vec_id").alias("query_id"), dv.alias("_qv"))
     cv = vectors.select(
@@ -502,7 +495,7 @@ def test_ivfpq_index_probe_equals_adhoc_query(spark, sf_dir, tmp_path, monkeypat
     assert stats["n_indexed"] == emb.count()
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 12))
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
     train = sim._ivfpq_train_model
     monkeypatch.setattr(
@@ -511,7 +504,7 @@ def test_ivfpq_index_probe_equals_adhoc_query(spark, sf_dir, tmp_path, monkeypat
     )
     adhoc = sorted(
         (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 12))
-        for r in sim.ivfpq_cosine_topk(queries, emb, k=3).collect()
+        for r in sim.ivfpq_cosine_topk(queries, emb).collect()
     )
     assert probe == adhoc and probe
 
@@ -526,14 +519,14 @@ def test_ivfpq_index_fresh_session_probe(spark, sf_dir, tmp_path):
     sim.ivfpq_write_index(emb, path)
     same = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
     fresh = spark.newSession()
     emb2 = fresh.read.parquet(f"{sf_dir}/embeddings.parquet")
     q2 = emb2.filter(F.col("vec_id") < 3)
     other = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(fresh, path, q2, emb2, k=3).collect()
+        for r in sim.ivfpq_probe_index(fresh, path, q2, emb2).collect()
     )
     assert same == other and same
 
@@ -602,12 +595,12 @@ def test_ivfpq_index_merged_vectors_fully_reachable(spark, sf_dir, tmp_path):
     sim.ivfpq_merge_index(spark, path, delta)
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(queries, emb, k=3).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     )
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank)
         for r in sim.ivfpq_probe_index(
-            spark, path, queries, emb, k=3, n_probe=8, n_rerank=n
+            spark, path, queries, emb, n_probe=8, n_rerank=n
         ).collect()
     )
     assert probe == exact
@@ -633,7 +626,7 @@ def test_ivfpq_delete_ids_removes_and_probe_excludes(spark, sf_dir, tmp_path):
     )
     queries = emb.filter(F.col("vec_id") < 3)
     probe = sim.ivfpq_probe_index(
-        spark, path, queries, emb, k=5, n_probe=16, n_rerank=n_all
+        spark, path, queries, emb, n_probe=16, n_rerank=n_all
     )
     assert (
         probe.join(
@@ -735,13 +728,13 @@ def test_ivfpq_reembed_changed_vectors(spark, sf_dir, tmp_path):
     queries = merged_corpus.filter(F.col("vec_id") < 3)
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(queries, merged_corpus, k=3).collect()
+        for r in sim.cosine_topk(queries, merged_corpus, k=sim.TOP_K).collect()
     )
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank)
         for r in sim.ivfpq_probe_index(
             spark, path, queries, merged_corpus,
-            k=3, n_probe=16, n_rerank=n_all,
+            n_probe=16, n_rerank=n_all,
         ).collect()
     )
     assert probe == exact
@@ -844,7 +837,7 @@ def test_ivfpq_index_empty_merge_and_probe(spark, sf_dir, tmp_path):
     assert sorted(sim.ivfpq_codes(spark, path).inputFiles()) == before
     assert sim._snapshot(spark, path)[0] == version
     assert sorted(os.listdir(path)) == dirs
-    assert sim.ivfpq_probe_index(spark, path, empty, emb, k=3).count() == 0
+    assert sim.ivfpq_probe_index(spark, path, empty, emb).count() == 0
 
 
 def test_ivfpq_index_compaction(spark, sf_dir, tmp_path):
@@ -878,7 +871,7 @@ def test_ivfpq_index_compaction(spark, sf_dir, tmp_path):
     assert max(before_files.values()) > 1  # the merge really fragmented
     probe_before = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
 
     stats = sim.ivfpq_compact_index(spark, path)
@@ -890,7 +883,7 @@ def test_ivfpq_index_compaction(spark, sf_dir, tmp_path):
     assert set(after_files.values()) == {1}     # one file per cell
     probe_after = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
     assert probe_after == probe_before
     # idempotence: nothing left to compact
@@ -962,7 +955,7 @@ def _served_state(spark, path, queries, corpus):
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank)
         for r in sim.ivfpq_probe_index(
-            spark, path, queries, corpus, k=3
+            spark, path, queries, corpus
         ).collect()
     )
     return (
@@ -1235,13 +1228,13 @@ def test_probe_model_cache_hits_and_invalidates(spark, sf_dir, tmp_path):
     h0, m0 = sim.MODEL_CACHE_STATS["hits"], sim.MODEL_CACHE_STATS["misses"]
     r1 = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
     release_pinned()
     assert sim.MODEL_CACHE_STATS["misses"] == m0 + 1  # first read decodes
     r2 = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.ivfpq_probe_index(spark, path, queries, emb, k=3).collect()
+        for r in sim.ivfpq_probe_index(spark, path, queries, emb).collect()
     )
     release_pinned()
     assert sim.MODEL_CACHE_STATS["hits"] == h0 + 1  # second probe: no jobs
@@ -1436,7 +1429,7 @@ def test_index_verb_job_counts_stay_folded(spark, sf_dir, tmp_path):
     # validation
     assert jobs(lambda: sim.ivfpq_write_index(emb, path)) <= 10
     q = emb.filter(F.col("vec_id") < 5)
-    probe = sim.ivfpq_probe_index(spark, path, q, emb, k=3)
+    probe = sim.ivfpq_probe_index(spark, path, q, emb)
     sim.evict_model_cache(path)
     from sentiment_analysis_data_engineering_spark.operators.dedup import (
         release_pinned,

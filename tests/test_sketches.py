@@ -130,10 +130,10 @@ def test_cms_merge_law_and_one_sided_error(spark):
 
     rows = _skewed_rows(8_000, seed=17)
     df = spark.createDataFrame(rows, "k long").repartition(5)
-    whole = cms_build(df, "k", depth=3, width=256)
+    whole = cms_build(df, "k", width=256)
     merged = cms_merge(
-        cms_build(df.filter(F.col("k") % 2 == 0), "k", depth=3, width=256),
-        cms_build(df.filter(F.col("k") % 2 == 1), "k", depth=3, width=256),
+        cms_build(df.filter(F.col("k") % 2 == 0), "k", width=256),
+        cms_build(df.filter(F.col("k") % 2 == 1), "k", width=256),
     )
     assert sorted(map(tuple, whole.collect())) == sorted(
         map(tuple, merged.collect())
@@ -143,7 +143,7 @@ def test_cms_merge_law_and_one_sided_error(spark):
     keys = df.select("k").distinct()
     est = {
         r.k: r.est_count
-        for r in cms_estimate(whole, keys, "k", depth=3, width=256).collect()
+        for r in cms_estimate(whole, keys, "k", width=256).collect()
     }
     exact = {
         r.k: r.c
@@ -154,16 +154,6 @@ def test_cms_merge_law_and_one_sided_error(spark):
     # heavy keys must estimate exactly or near-exactly at this width
     hot = [k for k, c in exact.items() if c > 500]
     assert hot and all(est[k] - exact[k] < 8_000 * 0.05 for k in hot)
-
-
-def test_cms_rejects_bad_depth(spark):
-    import pytest
-
-    from sentiment_analysis_data_engineering_spark.operators.sketches import cms_build
-
-    df = spark.createDataFrame([(1,)], "k long")
-    with pytest.raises(ValueError, match="depth"):
-        cms_build(df, "k", depth=9)
 
 
 def test_bloom_exact_above_2_53_with_nulls_present(spark):

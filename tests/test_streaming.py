@@ -22,7 +22,8 @@ def test_checkpointed_restart_exactly_once_across_crash(spark, tmp_path):
     # 4 source files → 4 micro-batches at maxFilesPerTrigger=1
     src = str(tmp_path / "src")
     rows = spark.range(40).select(
-        F.col("id").alias("event_id"), (F.col("id") % 7).alias("user_id")
+        F.col("id").alias("event_id"), (F.col("id") % 7).alias("user_id"),
+        F.lit(2023).alias("year"), (F.col("id") % 3 + 1).alias("month"),
     )
     rows.repartition(4).write.parquet(src)
 
@@ -38,7 +39,7 @@ def test_checkpointed_restart_exactly_once_across_crash(spark, tmp_path):
 
     def start(batch_fn):
         stream = (
-            spark.readStream.schema("event_id long, user_id long")
+            spark.readStream.schema("event_id long, user_id long, year int, month long")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -121,14 +122,12 @@ def test_streaming_ivfpq_merge_matches_batch_and_replays(spark, sf_dir, tmp_path
     n = emb.count()
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(
-            queries, emb, vec_col="embedding", id_col="vec_id", k=3
-        ).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     )
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank)
         for r in sim.ivfpq_probe_index(
-            spark, path, queries, emb, k=3, n_probe=16, n_rerank=n
+            spark, path, queries, emb, n_probe=16, n_rerank=n
         ).collect()
     )
     assert probe == exact
@@ -181,14 +180,12 @@ def test_streaming_ivfpq_merge_auto_compacts(spark, sf_dir, tmp_path):
     n = emb.count()
     exact = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.cosine_topk(
-            queries, emb, vec_col="embedding", id_col="vec_id", k=3
-        ).collect()
+        for r in sim.cosine_topk(queries, emb, k=sim.TOP_K).collect()
     )
     probe = sorted(
         (r.query_id, r.neighbor_id, r.rank)
         for r in sim.ivfpq_probe_index(
-            spark, path, queries, emb, k=3, n_probe=16, n_rerank=n
+            spark, path, queries, emb, n_probe=16, n_rerank=n
         ).collect()
     )
     assert probe == exact

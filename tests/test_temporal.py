@@ -47,8 +47,10 @@ def test_as_of_join_tolerance(spark):
     assert out.matched is None  # 2h gap exceeds 1h tolerance
 
 
-def test_range_join_buckets_matches_inequality_join(spark, sf_dir):
-    """Bucketized range join ≡ plain inequality join on real data."""
+def test_range_join_buckets_matches_inequality_join(spark, sf_dir, monkeypatch):
+    """Bucketized range join ≡ plain inequality join on real data, with
+    buckets narrower than a window so windows span several."""
+    from sentiment_analysis_data_engineering_spark.operators import temporal
     from sentiment_analysis_data_engineering_spark.operators.temporal import (
         range_join_buckets,
     )
@@ -64,10 +66,11 @@ def test_range_join_buckets_matches_inequality_join(spark, sf_dir):
             (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("win_end"),
         )
     )
+    monkeypatch.setattr(temporal, "RANGE_BUCKET_SECONDS", 700)
     bucketed = range_join_buckets(
         events.select("user_id", "ts"), windows,
         by=["user_id"], event_ts="ts",
-        win_start="win_start", win_end="win_end", bucket_seconds=700,
+        win_start="win_start", win_end="win_end",
     ).select("window_id", "ts")
     plain = (
         events.select("user_id", "ts").alias("e")
@@ -120,7 +123,7 @@ def test_ewma_last_matches_recursive_definition(spark):
         r.user: (r.n_events, r.ewma)
         for r in ewma_last(
             df, key_col="user", ts_col="ts", value_col="v",
-            tiebreak_col="id", alpha=0.3,
+            tiebreak_col="id",
         ).collect()
     }
     # recursive: s1=10, s2=.3*20+.7*10=13, s3=.3*30+.7*13=18.1
@@ -139,10 +142,10 @@ def test_ewma_last_tiebreak_deterministic(spark):
     df = df.select("id", "user", F.col("ts").cast("timestamp").alias("ts"), "v")
     got = ewma_last(
         df, key_col="user", ts_col="ts", value_col="v",
-        tiebreak_col="id", alpha=0.5,
+        tiebreak_col="id",
     ).first()
-    # order by (ts, id): x=[0, 100] -> s = .5*100 + .5*0 = 50
-    assert abs(got.ewma - 50.0) < 1e-12
+    # order by (ts, id): x=[0, 100] -> s = .3*100 + .7*0 = 30
+    assert abs(got.ewma - 30.0) < 1e-12
 
 
 def test_forward_fill_carries_last_and_respects_leading_nulls(spark):
@@ -282,7 +285,7 @@ def test_brown_double_smoothing_matches_hand_recursion(spark):
         r.user_id: r
         for r in brown_double_smoothing(
             df, key_col="user_id", ts_col="ts", value_col="value",
-            tiebreak_col="event_id", alpha=0.3, horizon=7, lookback=64,
+            tiebreak_col="event_id",
         ).collect()
     }
     a, q = 0.3, 1.0 - 0.3
@@ -300,10 +303,13 @@ def test_brown_double_smoothing_matches_hand_recursion(spark):
     assert r.forecast > r.s1
 
 
-def test_brown_trailing_window_bounds_fit(spark):
+def test_brown_trailing_window_bounds_fit(spark, monkeypatch):
+    from sentiment_analysis_data_engineering_spark.operators import temporal
     from sentiment_analysis_data_engineering_spark.operators.temporal import (
         brown_double_smoothing,
     )
+
+    monkeypatch.setattr(temporal, "BROWN_LOOKBACK", 8)
 
     rows = [
         (1, "2024-01-01 00:00:%02d" % i, i, float(i)) for i in range(50)
@@ -313,6 +319,6 @@ def test_brown_trailing_window_bounds_fit(spark):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     out = brown_double_smoothing(
         df, key_col="user_id", ts_col="ts", value_col="value",
-        tiebreak_col="event_id", lookback=8,
+        tiebreak_col="event_id",
     ).collect()
     assert out[0].n_fit == 8  # only the trailing window is fitted

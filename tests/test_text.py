@@ -116,13 +116,15 @@ def test_repetition_signals_degenerate_docs(spark):
     assert rep.dup == 0.75 and rep.top == 1.0
 
 
-def test_chunk_token_windows(spark):
+def test_chunk_token_windows(spark, monkeypatch):
+    monkeypatch.setattr(tx, "CHUNK_SIZE", 3)
+    monkeypatch.setattr(tx, "CHUNK_STRIDE", 2)
     docs = spark.createDataFrame(
         [(1, " ".join(f"t{i}" for i in range(5))), (2, "solo")],
         "doc_id long, text string",
     )
     rows = sorted(
-        tx.chunk_token_windows(docs, "text", "doc_id", chunk_size=3, stride=2)
+        tx.chunk_token_windows(docs, "text", "doc_id")
         .collect(),
         key=lambda r: (r.doc_id, r.chunk_idx),
     )
@@ -200,7 +202,8 @@ def test_fuzzy_match_oversized_block_guard(spark, monkeypatch):
     assert out.count() == 0  # whole block dropped, not exploded
 
 
-def test_bigram_pmi_hand_computed(spark):
+def test_bigram_pmi_hand_computed(spark, monkeypatch):
+    monkeypatch.setattr(tx, "PMI_MIN_COUNT", 1)
     import math
 
     # doc1 "a b a b", doc2 "a c"
@@ -209,7 +212,7 @@ def test_bigram_pmi_hand_computed(spark):
     df = spark.createDataFrame([("a b a b",), ("a c",)], "text string")
     got = {
         (r.w1, r.w2): (r.pair_count, r.pmi)
-        for r in tx.bigram_pmi(df, "text", min_count=1).collect()
+        for r in tx.bigram_pmi(df, "text").collect()
     }
     assert got[("a", "b")][0] == 2
     assert got[("b", "a")][0] == 1
@@ -218,16 +221,18 @@ def test_bigram_pmi_hand_computed(spark):
     assert got[("a", "c")][1] == round(math.log(1 * 6 / (3 * 1)), 6)
 
 
-def test_bigram_pmi_min_count_filter(spark):
+def test_bigram_pmi_min_count_filter(spark, monkeypatch):
+    monkeypatch.setattr(tx, "PMI_MIN_COUNT", 2)
     df = spark.createDataFrame([("a b a b",), ("a c",)], "text string")
     got = {
         (r.w1, r.w2)
-        for r in tx.bigram_pmi(df, "text", min_count=2).collect()
+        for r in tx.bigram_pmi(df, "text").collect()
     }
     assert got == {("a", "b")}
 
 
-def test_bigram_pmi_short_docs_yield_no_bigrams(spark):
+def test_bigram_pmi_short_docs_yield_no_bigrams(spark, monkeypatch):
+    monkeypatch.setattr(tx, "PMI_MIN_COUNT", 1)
     # single-token and empty docs must contribute nothing (and must NOT
     # hit Spark's descending-sequence default for n < 2)
     df = spark.createDataFrame(
@@ -235,26 +240,19 @@ def test_bigram_pmi_short_docs_yield_no_bigrams(spark):
     )
     got = {
         (r.w1, r.w2): r.pair_count
-        for r in tx.bigram_pmi(df, "text", min_count=1).collect()
+        for r in tx.bigram_pmi(df, "text").collect()
     }
     assert got == {("x", "y"): 1}
 
 
-def test_bigram_pmi_normalizes_case_and_whitespace(spark):
+def test_bigram_pmi_normalizes_case_and_whitespace(spark, monkeypatch):
+    monkeypatch.setattr(tx, "PMI_MIN_COUNT", 1)
     df = spark.createDataFrame([("New  YORK",), ("new york",)], "text string")
     got = {
         (r.w1, r.w2): r.pair_count
-        for r in tx.bigram_pmi(df, "text", min_count=1).collect()
+        for r in tx.bigram_pmi(df, "text").collect()
     }
     assert got == {("new", "york"): 2}
-
-
-def test_bigram_pmi_rejects_bad_min_count(spark):
-    import pytest
-
-    df = spark.createDataFrame([("a b",)], "text string")
-    with pytest.raises(ValueError, match="min_count"):
-        tx.bigram_pmi(df, "text", min_count=0)
 
 
 def test_remove_duplicate_spans_first_occurrence_wins(spark):
