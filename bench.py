@@ -290,10 +290,7 @@ def measure(spark, qs, names, sf_dir, *, warm_dir, runs) -> dict:
         # never do on its own — the accumulated executor blocks were
         # measured inflating late-running queries ~2x vs solo runs.
         spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        spark.sparkContext._jvm.System.gc()
     return out
 
 

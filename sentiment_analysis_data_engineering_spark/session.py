@@ -31,11 +31,28 @@ entry point (tests, bench, driver contract) runs with the same stance:
   name. A warm registry pass now compiles about a dozen classes, for
   about 18 MB more metaspace. Both confs are static: a vanilla session
   keeps Spark's defaults.
+- **A small local driver runs one C2 compiler thread** — a pass of
+  the engine's short jobs spends most of its CPU in HotSpot's JIT, not
+  in tasks: on a 4-core host the JVM starts one C1 and two C2 threads,
+  and C2 took about half of a cold DAG run's CPU. With two compiler
+  threads (one C1, one C2) the tiered policy compiles newly warm
+  methods at level 2 while the C2 queue is long, so C2 spends its time
+  on the code that stays hot. The flag is set only where it was
+  measured: a ``local[N]`` master of at most 4 task threads on a host
+  of fewer than 8 processors, where HotSpot's own default is at most
+  three threads, so the flag takes away at most one C2 thread. A larger
+  master (the 8- and 32-core bench) or host keeps the JVM's default.
+  The flag goes first in ``spark.driver.extraJavaOptions``: HotSpot
+  takes the last of a repeated flag, so a caller's own
+  ``-XX:CICompilerCount`` wins, and ``spark.driver.defaultJavaOptions``
+  stays free for a site's ``spark-defaults.conf``. Executor JVMs on a
+  cluster keep the JVM's default, where long tasks repay C2's work.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -47,6 +64,15 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # The directory that holds the package: Spark appends it to the
 # workers' PYTHONPATH after its own entries.
 _PACKAGE_ROOT = str(Path(__file__).resolve().parents[1])
+
+
+def _driver_java_options(master: str, caller: str | None) -> str | None:
+    """The driver JVM's ``extraJavaOptions``: the caller's, after one C1
+    and one C2 JIT thread when the session is a ``local[N]`` one of at
+    most 4 task threads on a host of fewer than 8 processors (docstring
+    above)."""
+    small = re.fullmatch(r"local\[[1-4]\]", master) and (os.cpu_count() or 8) < 8
+    return " ".join(filter(None, ["-XX:CICompilerCount=2" if small else None, caller])) or None
 
 
 def get_spark(
@@ -62,10 +88,10 @@ def get_spark(
     left to AQE's initial value); locally we default to ``local[N]``
     with N from ``$SPARK_GRAFT_CPUS``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -99,9 +125,12 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    java = _driver_java_options(master, conf.pop("spark.driver.extraJavaOptions", None))
+    if java:
+        conf["spark.driver.extraJavaOptions"] = java
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

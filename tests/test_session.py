@@ -4,7 +4,8 @@
 which drops Spark's archives from their ``sys.path`` when the installed
 pyspark and py4j are the same code, and puts the package on their
 ``PYTHONPATH``. It also sizes the generated-class cache so that a warm
-re-run of the registered queries compiles no class again.
+re-run of the registered queries compiles no class again, and gives
+a small local driver JVM two JIT compiler threads.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import zipfile
 import pandas as pd
 
 import __spark_entry__ as entry
-from sentiment_analysis_data_engineering_spark import worker_daemon
+from sentiment_analysis_data_engineering_spark import session, worker_daemon
 from sentiment_analysis_data_engineering_spark.operators.dedup import release_pinned
 from sentiment_analysis_data_engineering_spark.operators.observe import codegen_compile_count
 
@@ -129,12 +130,31 @@ def test_get_spark_runs_python_workers_from_any_cwd():
         import sys
         sys.path.insert(0, {str(ROOT)!r})
         import __spark_entry__ as entry
-        from sentiment_analysis_data_engineering_spark.session import get_spark
+        from sentiment_analysis_data_engineering_spark.session import _driver_java_options, get_spark
 
-        spark = get_spark("any_cwd", master="local[2]", shuffle_partitions=2)
+        spark = get_spark(
+            "any_cwd", master="local[2]", shuffle_partitions=2,
+            extra_conf={{"spark.driver.extraJavaOptions": "-Dgraft.caller.option=kept"}},
+        )
         rows = entry.queries()["multimodal_decode_features"](spark, {SF0001!r}).collect()
         frame = spark.createDataFrame([(i,) for i in range(4)], "i int")
         assert rows and frame.count() == 4
+
+        # the driver JVM's JIT budget: one C1 and one C2 thread, first on
+        # its command line, so the caller's own options come after it
+        jvm = spark.sparkContext._jvm
+        management = jvm.java.lang.management.ManagementFactory
+        diagnostic = management.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+        option = diagnostic.getVMOption("CICompilerCount")
+        flag = (option.getValue(), option.getOrigin().toString())
+        args = list(management.getRuntimeMXBean().getInputArguments())
+        if _driver_java_options("local[2]", None):
+            assert flag == ("2", "VM_CREATION"), flag
+            assert args.index("-XX:CICompilerCount=2") < args.index("-Dgraft.caller.option=kept"), args
+        else:
+            assert flag[1] != "VM_CREATION", flag
+        assert jvm.java.lang.System.getProperty("graft.caller.option") == "kept"
         print("ok", len(rows))
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -144,6 +164,23 @@ def test_get_spark_runs_python_workers_from_any_cwd():
     )
     assert done.returncode == 0, done.stderr[-3000:]
     assert done.stdout.strip().splitlines()[-1].startswith("ok ")
+
+
+def test_driver_jit_flag_only_in_a_small_local_session(monkeypatch):
+    flag = "-XX:CICompilerCount=2"
+    monkeypatch.setattr(os, "cpu_count", lambda: 7)
+    assert session._driver_java_options("local[4]", None) == flag
+    # the caller's options come after the flag: HotSpot takes the last
+    # of a repeated flag, so their own -XX:CICompilerCount wins
+    assert session._driver_java_options("local[1]", "-XX:CICompilerCount=3") == (
+        f"{flag} -XX:CICompilerCount=3"
+    )
+    for master in ("local[5]", "local[8]", "local[32]", "local[*]", "local", "yarn"):
+        assert session._driver_java_options(master, None) is None
+        assert session._driver_java_options(master, "-Xss4m") == "-Xss4m"
+    # 8 processors and up: HotSpot's default starts more than three threads
+    monkeypatch.setattr(os, "cpu_count", lambda: 8)
+    assert session._driver_java_options("local[4]", "-Xss4m") == "-Xss4m"
 
 
 #: the benchmark's query mix: one pass over it at sf0.001 compiles 100
